@@ -125,6 +125,11 @@ private[graft] object ControlPlane {
     spark.conf.getOption("graft.ann.mutationTimeoutSec")
       .map(_.toLong).getOrElse(86400L)
 
+  /** The job properties `setJobGroup` sets, saved and restored around
+    * each [[parLegs]] leg. */
+  private val jobProps = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel")
+
   /**
    * Run independent legs CONCURRENTLY on a dedicated bounded pool and
    * JOIN THEM ALL before returning — the one shared leg-runner under
@@ -140,19 +145,26 @@ private[graft] object ControlPlane {
    *    teardown (`shutdownNow` alone only interrupts the thread; a
    *    submitted Spark job would keep executing);
    *  - on timeout the group is cancelled and the legs are given a
-   *    bounded grace to unwind; a leg wedged in a non-interruptible
-   *    non-Spark call past that is the one residual orphan case, and
-   *    the loud TimeoutException names it;
-   *  - result ORDER is input order, and the first failure (in input
-   *    order) rethrows — unions/sums and the oracle hash are
-   *    byte-identical to the sequential form (spec-asserted).
+   *    bounded grace to unwind. If every leg then finished, the call
+   *    returns or rethrows as if in time, except that a failure which
+   *    first appeared after the timeout cancel (a leg the cancel
+   *    killed) surfaces as a TimeoutException caused by it. A leg
+   *    wedged in a non-interruptible non-Spark call past the grace is
+   *    the one residual orphan case, and the loud TimeoutException
+   *    names it;
+   *  - result ORDER is input order, and the first failure IN TIME (the
+   *    one that cancelled the group) rethrows — unions/sums and the
+   *    oracle hash are byte-identical to the sequential form
+   *    (spec-asserted).
    *
    * Dedicated pool, not the JVM-global ExecutionContext (r11 advice):
    * legs BLOCK on Spark actions, and blocking futures on the shared
    * fork-join default can starve every other library using it. Job
-   * group/description properties are saved and restored around each
-   * leg so nested parLegs (a routed build inside a CDC batch) cannot
-   * erase the outer call's group on a reused pool thread.
+   * group/description properties are saved before each leg and
+   * restored in a `finally` so nested parLegs (a routed build inside a
+   * CDC batch) cannot erase the outer call's group on a reused pool
+   * thread; `setJobGroup` runs inside the leg's `Try`, so a throw from
+   * it is that leg's recorded failure, never an unrecorded escape.
    */
   private[graft] def parLegs[A, B](spark: SparkSession, items: Seq[A],
       maxThreads: Int, timeoutSec: Long, what: String)(f: A => B): Seq[B] =
@@ -178,15 +190,14 @@ private[graft] object ControlPlane {
       try {
         val legs = items.map { a =>
           Future {
-            val prevGroup = sc.getLocalProperty("spark.jobGroup.id")
-            val prevDesc = sc.getLocalProperty("spark.job.description")
-            val prevIoc = sc.getLocalProperty("spark.job.interruptOnCancel")
-            sc.setJobGroup(group, s"graft $what leg",
-              interruptOnCancel = true)
-            val r = Try(f(a))
-            sc.setLocalProperty("spark.jobGroup.id", prevGroup)
-            sc.setLocalProperty("spark.job.description", prevDesc)
-            sc.setLocalProperty("spark.job.interruptOnCancel", prevIoc)
+            val prev = jobProps.map(sc.getLocalProperty)
+            val r = try Try {
+              sc.setJobGroup(group, s"graft $what leg",
+                interruptOnCancel = true)
+              f(a)
+            } finally jobProps.zip(prev).foreach {
+              case (k, v) => sc.setLocalProperty(k, v)
+            }
             r.failed.foreach { t =>
               if (firstFailure.compareAndSet(null, t))
                 sc.cancelJobGroupAndFutureJobs(group)
@@ -212,10 +223,14 @@ private[graft] object ControlPlane {
           done = Try(Await.ready(seq, Duration(250L, "ms"))).isSuccess
         }
         if (!done) {
+          val failedInTime = firstFailure.get() != null
           sc.cancelJobGroupAndFutureJobs(group)
           Try(Await.ready(seq, Duration(30L, "s")))
-          throw new TimeoutException(
+          val timedOut = new TimeoutException(
             s"graft $what legs did not finish within $timeoutSec s")
+          if (!seq.isCompleted) throw timedOut
+          if (!failedInTime && firstFailure.get() != null)
+            throw timedOut.initCause(firstFailure.get())
         }
         val all = seq.value.get.get
         Option(firstFailure.get()).foreach(throw _)

@@ -34,6 +34,11 @@ import org.apache.spark.sql.functions._
  */
 object Merge {
 
+  /** The token both multi-non-D refusals carry ("two surviving changes
+    * for one key"): the partitioned merge's pre-merge check and the
+    * whole-snapshot merge's guard riding the generation write. */
+  val MultiNonDToken = "GRAFT_MULTI_NON_D"
+
   /** The op domain is CLOSED: 'I'/'U'/'D', non-null, case-sensitive.
     * Anything else raises at execution on the offending row — the CDC
     * failure modes this kills are a lowercase 'd' silently acting as
@@ -208,8 +213,9 @@ object Merge {
       .groupBy(col(key)).agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1).limit(1).collect()
     require(multiNonD.isEmpty,
-      s"changes carry multiple non-D rows for one '$key' — a partition " +
-        "move must be sent as D(old partition) + I(new partition)")
+      s"changes carry multiple non-D rows for one '$key' " +
+        s"[$MultiNonDToken] — a partition move must be sent as " +
+        "D(old partition) + I(new partition)")
     val dataSchema = changes.drop(opCol)
     if (manifestCommit || ManifestCommit.exists(fs, dir))
       mergeManifest(spark, dir, fs, changes, key, partCol, opCol,
@@ -614,9 +620,9 @@ object Merge {
       changes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else changes0
     val guardMsg =
-      s"changes carry multiple non-D rows for one '$key' — compact the " +
-        "batch to at most one surviving change per key " +
-        "(CdcMaterializer.latestSnapshot) before merging"
+      s"changes carry multiple non-D rows for one '$key' " +
+        s"[$MultiNonDToken] — compact the batch to at most one " +
+        "surviving change per key (CdcMaterializer.latestSnapshot) before merging"
     try {
       // at most one SURVIVING copy per key (mergeBatch's documented
       // contract, enforced where a store commit makes the corruption
@@ -676,7 +682,7 @@ object Merge {
             catch { case _: Throwable => () }
           }
           throw new IllegalArgumentException(
-            s"requirement failed: $guardMsg")
+            s"requirement failed: $guardMsg", e)
       }
       // post-flip: the folded sidecar files are inert (version rule) —
       // best-effort removal; a crash here is healed by the next fold
@@ -684,13 +690,15 @@ object Merge {
     } finally if (cachedHere) { changes.unpersist(); () }
   }
 
-  /** Does this failure chain carry the riding multi-non-D guard? */
+  /** Does this failure chain carry the riding multi-non-D guard? The
+    * guard's error reaches the driver only as message text (a
+    * `raise_error` inside the write job), so it is matched on the
+    * sentinel token, never on the prose around it. */
   private def guardTripped(t: Throwable): Boolean = {
     var cur = t
     var depth = 0
     while (cur != null && depth < 20) {
-      if (Option(cur.getMessage)
-          .exists(_.contains("multiple non-D rows"))) return true
+      if (Option(cur.getMessage).exists(_.contains(MultiNonDToken))) return true
       cur = cur.getCause
       depth += 1
     }

@@ -71,4 +71,29 @@ class ControlPlaneSpec extends SparkSpec {
     // ...and the sibling died by cancellation, not by completing
     assert(sec < 15.0, f"sibling leg was not cancelled ($sec%.1f s)")
   }
+
+  test("legs that finish inside the timeout grace return normally; a leg " +
+    "the timeout cancel kills surfaces as a TimeoutException caused by it") {
+    // plain driver-side sleeps: nothing for the cancel to kill, so both
+    // legs finish ~1 s into the 30 s grace and the call returns
+    val out = ControlPlane.parLegs(spark, Seq(1, 2), 2, 1L, "spec") {
+      i => Thread.sleep(2000L); i * 10 }
+    assert(out == Seq(10, 20))
+    // a Spark action still running at the deadline is cancelled and
+    // unwinds inside the grace: the timeout, not the cancellation
+    // error, is what the caller sees, with the leg's failure as cause
+    val t0 = System.nanoTime()
+    val thrown = intercept[java.util.concurrent.TimeoutException] {
+      ControlPlane.parLegs(spark, Seq(0, 1), 2, 1L, "spec") { i =>
+        if (i == 1) {
+          val slow = udf { (x: Long) => Thread.sleep(500L); x }
+          spark.range(200).repartition(200)
+            .select(sum(slow(col("id")))).collect()
+        }
+        ()
+      }
+    }
+    assert(thrown.getCause != null)
+    assert((System.nanoTime() - t0) / 1e9 < 15.0)
+  }
 }

@@ -222,4 +222,28 @@ class MergeTimeTravelSpec extends SparkSpec {
     assert(Merge.readSnapshot(spark, dir).orderBy("k")
       .as[(Long, String)].collect().toSeq === Seq((1L, "a2"), (2L, "b")))
   }
+
+  test("multi-non-D refusals carry the sentinel token and keep the write's failure as cause") {
+    val dir = tmp("dupguard-token")
+    def c(rows: (Long, String, String)*) = rows.toDF("k", "op", "name")
+    Merge.mergeWholeManifest(spark, dir, c((1L, "I", "a")), "k")
+    val whole = intercept[IllegalArgumentException] {
+      Merge.mergeWholeManifest(spark, dir, c((1L, "U", "x"), (1L, "U", "y")), "k")
+    }
+    assert(whole.getMessage.contains(Merge.MultiNonDToken))
+    // the riding guard raised inside the write job: that failure, not
+    // a fresh exception with no history, is the refusal's cause
+    val causes = Iterator.iterate[Throwable](whole.getCause)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.nonEmpty)
+    assert(causes.exists(t => t.getMessage != null &&
+      t.getMessage.contains(Merge.MultiNonDToken)))
+    val partDir = tmp("dupguard-token-part")
+    val part = intercept[IllegalArgumentException] {
+      Merge.mergePartitioned(spark, partDir,
+        Seq((1L, "I", "a", "p1"), (1L, "I", "b", "p2")).toDF("k", "op", "name", "part"),
+        "k", "part")
+    }
+    assert(part.getMessage.contains(Merge.MultiNonDToken))
+  }
 }
