@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterBridge
 import org.apache.spark.sql.functions._
 
 /**
@@ -167,9 +168,9 @@ object Merge {
       opCol: String = "op", manifestCommit: Boolean = false): Seq[String] = {
     // this function runs 3+ actions over the change set (touched
     // collect, duplicate guard, the merge write) — cache it for the
-    // duration unless the caller already did (MergeSink persists its
-    // compacted batch; a direct caller with expensive lineage should
-    // not pay it three times)
+    // duration unless the caller already did (MergeSink's compacted
+    // batch arrives uncached and is cached here; a direct caller with
+    // expensive lineage should not pay it three times)
     val cachedHere =
       changes0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val changes = if (cachedHere)
@@ -564,7 +565,30 @@ object Merge {
     if (st.live.forall(_.contains("/")))
       spark.read.option("basePath", data.toString)
         .parquet(st.live.map(e => new Path(data, e).toString): _*)
-    else spark.read.parquet(new Path(data, st.live.head).toString)
+    else readGeneration(spark, new Path(data, st.live.head))
+  }
+
+  /** Read one WHOLE generation dir with its schema taken, on the
+    * driver, from one part file's footer — the schema
+    * `spark.read.parquet` would infer (every part file of a generation
+    * is written by one job under one schema), without the inference
+    * job it submits. A generation holding no data file, or missing
+    * altogether, keeps Spark's own refusal: the plain read fails
+    * before scanning anything. */
+  private[graft] def readGeneration(spark: SparkSession,
+      gen: Path): DataFrame = {
+    val fs = gen.getFileSystem(spark.sessionState.newHadoopConf())
+    val listed =
+      try fs.listStatus(gen).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val part = listed.find { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+    part.flatMap(f => ParquetFooterBridge.readSchema(spark, Seq(f))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(gen.toString)
+      case None         => spark.read.parquet(gen.toString)
+    }
   }
 
   /** Newest retained commit that actually lists generations. Drained
@@ -602,7 +626,7 @@ object Merge {
     * the merged snapshot once into an immutable generation dir at its
     * final path, then flip the commit pointer ([[ManifestCommit]]). */
   def mergeWholeManifest(spark: SparkSession, snapshotDir: String,
-      changes0: DataFrame, key: String,
+      changes: DataFrame, key: String,
       opCol: String = "op"): Unit = {
     // NO ControlPlane scope here, deliberately (r17 A/B): unlike the
     // id-set mutation paths, the merge's full-outer join and the
@@ -611,83 +635,75 @@ object Merge {
     // actual merged bytes, and turning it off measurably inflated the
     // file count and the write (q123: jobs 41→20 but wall +40% and
     // +3 MB written). The change set is evaluated once, by the
-    // generation write — no separate guard action; cache it only for
-    // callers that were already sharing it (the old guard+merge
-    // double-evaluation is gone, r17).
-    val cachedHere =
-      changes0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val changes = if (cachedHere)
-      changes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else changes0
+    // generation write — no separate guard action, so nothing here
+    // caches it: a persist would only add its own fill job.
     val guardMsg =
       s"changes carry multiple non-D rows for one '$key' " +
         s"[$MultiNonDToken] — compact the batch to at most one " +
         "surviving change per key (CdcMaterializer.latestSnapshot) before merging"
-    try {
-      // at most one SURVIVING copy per key (mergeBatch's documented
-      // contract, enforced where a store commit makes the corruption
-      // durable): two non-D rows for one key would fan the full-outer
-      // join out into a duplicate-keyed snapshot — the silent failure
-      // mode of a dim delta delivered twice or an uncompacted CDC
-      // tail. A D+I pair stays legal (delete-then-reinsert collapses
-      // to one surviving row). The guard RIDES THE GENERATION WRITE
-      // (r17): a per-key non-D count windowed over the change side —
-      // co-partitioned with the merge join, so no extra exchange —
-      // raises from the write job on the first violation, replacing
-      // the separate pre-commit guard action that cost one driver
-      // round-trip per commit (guide §1.2). The pointer flips only
-      // after a fully successful write, so a refused batch leaves the
-      // store untouched exactly as before; the partial staged
-      // generation is ordinary debris the next preamble GC clears.
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
-      val guarded = changes
-        .withColumn("__nnd",
-          sum(when(col(opCol) =!= "D", 1L).otherwise(0L)).over(w))
-        .withColumn(opCol, when(col("__nnd") > 1,
-          raise_error(lit(guardMsg))).otherwise(col(opCol)))
-        .drop("__nnd")
-      var pinnedTombs: Array[org.apache.hadoop.fs.Path] = Array.empty
-      var stagedGen: String = null
-      try commitWholeGeneration(spark, snapshotDir) { (genPath, st) =>
-        stagedGen = genPath
-        val data = ManifestCommit.dataDir(new Path(snapshotDir))
-        val target0 = st.filter(_.live.nonEmpty)
-          .map(s => spark.read.parquet(new Path(data, s.live.head).toString))
-          .getOrElse(changes.filter(lit(false)).drop(opCol))
-        // fold APPLICABLE deletion-vector tombstones into the
-        // generation being written (the subtraction rides a rewrite
-        // that was happening anyway): this is what lets a change row
-        // re-assert a previously deleted key — the merge wins over the
-        // tombstone, instead of the key staying silently hidden and
-        // then being destroyed by the next compact
-        val (target, pinned) =
-          DeletionVectors.foldInto(spark, snapshotDir, target0)
-        pinnedTombs = pinned
-        mergeBatch(target, guarded, key, opCol)
-          .write.mode("overwrite").parquet(genPath)
-      } catch {
-        // surface the riding guard as the same pre-commit refusal it
-        // always was (spec-pinned type + message), unwrapped from the
-        // write job's failure chain — and remove OUR partial staged
-        // generation first: a deterministic refusal is not a crash,
-        // and leaving the dir would trip the next commit's concurrent-
-        // writer guard until the staging grace expires (best-effort;
-        // if the delete itself fails, the store is in exactly the
-        // state a died writer leaves and heals the same way)
-        case e: Throwable if guardTripped(e) =>
-          if (stagedGen != null) {
-            val fs = new Path(snapshotDir)
-              .getFileSystem(spark.sessionState.newHadoopConf())
-            try { fs.delete(new Path(stagedGen), true); () }
-            catch { case _: Throwable => () }
-          }
-          throw new IllegalArgumentException(
-            s"requirement failed: $guardMsg", e)
-      }
-      // post-flip: the folded sidecar files are inert (version rule) —
-      // best-effort removal; a crash here is healed by the next fold
-      DeletionVectors.clearPinned(spark, snapshotDir, pinnedTombs)
-    } finally if (cachedHere) { changes.unpersist(); () }
+    // at most one SURVIVING copy per key (mergeBatch's documented
+    // contract, enforced where a store commit makes the corruption
+    // durable): two non-D rows for one key would fan the full-outer
+    // join out into a duplicate-keyed snapshot — the silent failure
+    // mode of a dim delta delivered twice or an uncompacted CDC
+    // tail. A D+I pair stays legal (delete-then-reinsert collapses
+    // to one surviving row). The guard RIDES THE GENERATION WRITE
+    // (r17): a per-key non-D count windowed over the change side —
+    // co-partitioned with the merge join, so no extra exchange —
+    // raises from the write job on the first violation, replacing
+    // the separate pre-commit guard action that cost one driver
+    // round-trip per commit (guide §1.2). The pointer flips only
+    // after a fully successful write, so a refused batch leaves the
+    // store untouched exactly as before; the partial staged
+    // generation is ordinary debris the next preamble GC clears.
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
+    val guarded = changes
+      .withColumn("__nnd",
+        sum(when(col(opCol) =!= "D", 1L).otherwise(0L)).over(w))
+      .withColumn(opCol, when(col("__nnd") > 1,
+        raise_error(lit(guardMsg))).otherwise(col(opCol)))
+      .drop("__nnd")
+    var pinnedTombs: Array[org.apache.hadoop.fs.Path] = Array.empty
+    var stagedGen: String = null
+    try commitWholeGeneration(spark, snapshotDir) { (genPath, st) =>
+      stagedGen = genPath
+      val data = ManifestCommit.dataDir(new Path(snapshotDir))
+      val target0 = st.filter(_.live.nonEmpty)
+        .map(s => readGeneration(spark, new Path(data, s.live.head)))
+        .getOrElse(changes.filter(lit(false)).drop(opCol))
+      // fold APPLICABLE deletion-vector tombstones into the
+      // generation being written (the subtraction rides a rewrite
+      // that was happening anyway): this is what lets a change row
+      // re-assert a previously deleted key — the merge wins over the
+      // tombstone, instead of the key staying silently hidden and
+      // then being destroyed by the next compact
+      val (target, pinned) =
+        DeletionVectors.foldInto(spark, snapshotDir, target0)
+      pinnedTombs = pinned
+      mergeBatch(target, guarded, key, opCol)
+        .write.mode("overwrite").parquet(genPath)
+    } catch {
+      // surface the riding guard as the same pre-commit refusal it
+      // always was (spec-pinned type + message), unwrapped from the
+      // write job's failure chain — and remove OUR partial staged
+      // generation first: a deterministic refusal is not a crash,
+      // and leaving the dir would trip the next commit's concurrent-
+      // writer guard until the staging grace expires (best-effort;
+      // if the delete itself fails, the store is in exactly the
+      // state a died writer leaves and heals the same way)
+      case e: Throwable if guardTripped(e) =>
+        if (stagedGen != null) {
+          val fs = new Path(snapshotDir)
+            .getFileSystem(spark.sessionState.newHadoopConf())
+          try { fs.delete(new Path(stagedGen), true); () }
+          catch { case _: Throwable => () }
+        }
+        throw new IllegalArgumentException(
+          s"requirement failed: $guardMsg", e)
+    }
+    // post-flip: the folded sidecar files are inert (version rule) —
+    // best-effort removal; a crash here is healed by the next fold
+    DeletionVectors.clearPinned(spark, snapshotDir, pinnedTombs)
   }
 
   /** Does this failure chain carry the riding multi-non-D guard? The

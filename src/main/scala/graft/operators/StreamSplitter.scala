@@ -27,10 +27,14 @@ object StreamSplitter {
    * (reference README.md:257, 260-263).
    */
   def demux(env: DataFrame, schemaName: String, tableName: String): DataFrame =
-    env.filter(
-      schemaNameCol === schemaName &&
+    env.filter(demuxPredicate(schemaName, tableName))
+
+  /** [[demux]]'s row predicate, for callers that count or flag one
+    * table's records inside a wider pass instead of filtering to them. */
+  def demuxPredicate(schemaName: String, tableName: String): Column =
+    schemaNameCol === schemaName &&
       tableNameCol === tableName &&
-      col("data").isNotNull)
+      col("data").isNotNull
 
   /**
    * P1 — flatten: `data.*` to top level plus exactly one metadata field,

@@ -23,9 +23,10 @@ import graft.operators.{Constraints, Merge, Rollup, StreamSplitter}
  *     of the clean envelopes, late-binds its payload schema
  *     (`from_json`), maps DMS operations to MERGE ops
  *     (load/insert→I, update→U, delete→D), and upserts into a standing
- *     manifest-committed snapshot via [[MergeSink.applyBatch]] —
- *     intra-batch multi-versions compact by event time, re-delivered
- *     batches re-apply idempotently;
+ *     manifest-committed snapshot via [[MergeSink.recover]] +
+ *     [[MergeSink.applyChanges]] — intra-batch multi-versions compact
+ *     by event time, re-delivered batches re-apply idempotently, and a
+ *     table the batch carries no row for runs recovery only;
  *  4. a standing ops-counter rollup (the DMS console counters,
  *     image/image3.png, as STANDING STATE): per-(table, operation) row
  *     counts fold through [[RollupStream.foldBatch]]'s checkpoint-
@@ -150,6 +151,16 @@ object IngestPipeline {
       .when(operation === DmsEnvelope.OpUpdate, lit("U"))
       .otherwise(lit("I"))
 
+  /** The envelopes table `t`'s merge lane takes: the demux predicate
+    * (the reference F1 surface) narrowed to `record-type = data` —
+    * demux's data-not-null leg admits a control record that CARRIES
+    * data (DDL info), which is no upsert and would land in the
+    * snapshot as a junk row. The lane's filter, its per-batch count
+    * and its payload_key check all use this one predicate. */
+  private def laneRows(t: TableSink): org.apache.spark.sql.Column =
+    StreamSplitter.demuxPredicate(t.schemaName, t.tableName) &&
+      col("metadata.`record-type`") === DmsEnvelope.RecordTypeData
+
   def start(raw: DataFrame, cfg: Config,
       trigger: Trigger = Trigger.AvailableNow(),
       onBatch: BatchMetric => Unit = _ => ()): StreamingQuery = {
@@ -185,15 +196,11 @@ object IngestPipeline {
           // malformedPayload predicates: a CONTROL record carrying
           // non-null data (DDL info) is not an upsert candidate — it
           // must land and count, not quarantine for lacking a merge
-          // key it was never meant to carry (ADVICE r15); the merge
-          // lane below filters the same way, so it can't reach the
+          // key it was never meant to carry (ADVICE r15); laneRows is
+          // also the merge lane's filter, so it can't reach the
           // snapshot either
           cfg.tables.map(t => (s"payload_key:${t.tableName}",
-            StreamSplitter.schemaNameCol === t.schemaName &&
-              StreamSplitter.tableNameCol === t.tableName &&
-              col("metadata.`record-type`") ===
-                DmsEnvelope.RecordTypeData &&
-              col("data").isNotNull &&
+            laneRows(t) &&
               from_json(col("data"), t.dataSchema)
                 .getField(t.key).isNull)) ++
           cfg.vectorStores.map(v => (s"payload_parse:${v.table}",
@@ -234,6 +241,19 @@ object IngestPipeline {
             .option("compression", "gzip")
             .partitionBy("ingest_date").json(cfg.quarantineDir)
           val tLand = (System.nanoTime() - tLand0) / 1000000
+          // one aggregate job over the cached batch: the three
+          // counters (input derives) plus each table's merge-lane row
+          // count — the same clean + laneRows predicate the lane
+          // filters by — so an idle table below costs recovery only,
+          // no emptiness probe job
+          val m = flagged.agg(
+            count(lit(1)).as("n"),
+            (coalesce(sum(when(size(col("violated")) > 0, 1L)
+              .otherwise(0L)), lit(0L)).as("bad") +:
+              cfg.tables.zipWithIndex.map { case (t, i) =>
+                count(when(size(col("violated")) === 0 && laneRows(t),
+                  true)).as(s"lane$i")
+              }): _*).head()
           // 3. per-table standing snapshots — CONCURRENT, bounded:
           // each table merges into its own snapshot dir (no shared
           // state; the merge path mutates no session conf), each job is
@@ -258,30 +278,24 @@ object IngestPipeline {
             scala.concurrent.ExecutionContext.fromExecutor(pool)
           try {
             val settled = scala.concurrent.Await.result(
-              scala.concurrent.Future.traverse(cfg.tables) { t =>
-                scala.concurrent.Future {
-                  // record-type=data only — demux's data-not-null leg
-                  // (the reference F1 surface, unchanged) admits a
-                  // control record that CARRIES data; with the
-                  // payload_key check now scoped past control records,
-                  // an unfiltered merge lane would upsert that DDL
-                  // payload as a junk row
-                  val changes = StreamSplitter
-                    .demux(clean, t.schemaName, t.tableName)
-                    .filter(col("metadata.`record-type`") ===
-                      DmsEnvelope.RecordTypeData)
-                    .select(
-                      from_json(col("data"), t.dataSchema).as("__d"),
-                      mergeOp(col("metadata.operation")).as("op"),
-                      col("event_ts").as("__seq"))
-                    .select(col("__d.*"), col("op"), col("__seq"))
-                  // no isEmpty guard: applyBatch runs crash recovery
-                  // FIRST and then handles the empty batch itself —
-                  // guarding here would both duplicate the job and
-                  // skip the recovery
-                  MergeSink.applyBatch(spark, changes,
-                    s"${cfg.snapshotRoot}/${t.tableName}", t.key, "op",
-                    "__seq", manifestCommit = true)
+              scala.concurrent.Future.traverse(cfg.tables.zipWithIndex) {
+                case (t, i) => scala.concurrent.Future {
+                  // MergeSink.applyBatch's recover → isEmpty → apply,
+                  // with the count above standing in for the probe:
+                  // crash recovery runs for EVERY table, the merge only
+                  // for tables this batch carries rows for
+                  val dir = s"${cfg.snapshotRoot}/${t.tableName}"
+                  MergeSink.recover(spark, dir)
+                  if (m.getLong(2 + i) > 0) {
+                    val changes = clean.filter(laneRows(t))
+                      .select(
+                        from_json(col("data"), t.dataSchema).as("__d"),
+                        mergeOp(col("metadata.operation")).as("op"),
+                        col("event_ts").as("__seq"))
+                      .select(col("__d.*"), col("op"), col("__seq"))
+                    MergeSink.applyChanges(spark, changes, dir, t.key,
+                      "op", "__seq", manifestCommit = true)
+                  }
                 }.transform(scala.util.Success(_)) // settle, don't fail-fast
               }, scala.concurrent.duration.Duration.Inf)
             settled.foreach(_.get) // every merge finished; now rethrow
@@ -323,11 +337,6 @@ object IngestPipeline {
               sg.bands, sg.shingleN, sg.compactEvery)
           }
           val tStore = (System.nanoTime() - tStore0) / 1000000
-          // one aggregate job for all three counters (input derives)
-          val m = flagged.agg(
-            count(lit(1)).as("n"),
-            coalesce(sum(when(size(col("violated")) > 0, 1L)
-              .otherwise(0L)), lit(0L)).as("bad")).head()
           onBatch(BatchMetric(batchId,
             input = m.getLong(0),
             clean = m.getLong(0) - m.getLong(1),

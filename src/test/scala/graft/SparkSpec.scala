@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,4 +41,30 @@ trait SparkSpec extends AnyFunSuite {
       q.stop()
       fail(s"streaming query did not terminate within $timeoutMs ms")
     }
+
+  /** Spark jobs `body` submits, counted per job group by a listener; a
+    * marker job afterwards flushes the (ordered, asynchronous) listener
+    * queue before the count is read. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(s"$group-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(s"$group-marker"), "listener queue did not drain")
+      groups.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -1,0 +1,168 @@
+package graft.operators
+
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.SparkSpec
+import graft.streaming.MergeSink
+
+/** Whole manifest generations are read with their schema taken on the
+  * driver from one part file's footer ([[Merge.readGeneration]]). That
+  * schema must be exactly what `spark.read.parquet` infers — nullability
+  * included — for every column shape a snapshot can hold, and the
+  * reads and merges over such snapshots submit only the jobs that move
+  * data. */
+class GenerationReadSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def tmp(prefix: String) =
+    Files.createTempDirectory(prefix).toString + "/snap"
+
+  private val wideSchema = StructType(Seq(
+    StructField("k", LongType, nullable = false),
+    StructField("op", StringType),
+    StructField("amount", DecimalType(18, 2)),
+    StructField("day", DateType),
+    StructField("ts", TimestampType),
+    StructField("ts_ntz", TimestampNTZType),
+    StructField("blob", BinaryType),
+    StructField("addr", StructType(Seq(
+      StructField("city", StringType, nullable = false),
+      StructField("geo", StructType(Seq(
+        StructField("lat", DoubleType), StructField("lon", DoubleType))))))),
+    StructField("items", ArrayType(StructType(Seq(
+      StructField("sku", StringType), StructField("qty", IntegerType))),
+      containsNull = false)),
+    StructField("attrs", MapType(StringType, IntegerType))))
+
+  private def wideRow(k: Long, op: String): Row = Row(k, op,
+    new java.math.BigDecimal(s"$k.25"),
+    java.sql.Date.valueOf("2019-11-13"),
+    java.sql.Timestamp.valueOf("2019-11-13 09:59:08.059"),
+    java.time.LocalDateTime.of(2019, 11, 13, 9, 59, 8),
+    Array[Byte](1, 2, k.toByte),
+    Row(s"c$k", Row(1.5, -2.5)),
+    Seq(Row("a", 1), Row("b", 2)),
+    Map("x" -> k.toInt))
+
+  private def wide(rows: Row*): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), wideSchema)
+
+  private def liveGen(dir: String): Path = {
+    val d = new Path(dir)
+    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
+    new Path(ManifestCommit.dataDir(d), ManifestCommit.read(fs, d).get.live.head)
+  }
+
+  private def version(dir: String): Long = Merge.snapshotVersions(spark, dir).last
+
+  test("footer schema ≡ spark.read.parquet's inferred schema, nullability included, over every column shape") {
+    val base = Files.createTempDirectory("gen-read").toString
+    // non-nullable fields, decimals, dates, both timestamp kinds, binary,
+    // nested structs, arrays of structs and maps, as one generation
+    val full = s"$base/full"
+    wide(wideRow(1L, "I"), wideRow(2L, "U"), wideRow(3L, "I"))
+      .drop("op").write.parquet(full)
+    // a zero-row generation still carries one footer
+    val empty = s"$base/empty"
+    wide().drop("op").write.parquet(empty)
+    // the columns lit()/expressions produce non-nullable in the write
+    val exprs = s"$base/exprs"
+    spark.range(5).select(col("id"), lit(1).as("one"),
+      struct(lit("x").as("s"), col("id").as("i")).as("st"),
+      array(lit(1.0)).as("arr")).write.parquet(exprs)
+    Seq(full, empty, exprs).foreach { g =>
+      val viaFooter = Merge.readGeneration(spark, new Path(g))
+      val viaInference = spark.read.parquet(g)
+      assert(viaFooter.schema === viaInference.schema, g)
+      assert(viaFooter.schema.json === viaInference.schema.json, g)
+      def rows(df: DataFrame) = // JSON: binary and map values compare by content
+        df.select(to_json(struct(col("*")))).as[String].collect().sorted.toSeq
+      assert(rows(viaFooter) === rows(viaInference), g)
+    }
+    assert(Merge.readGeneration(spark, new Path(empty)).count() === 0)
+  }
+
+  test("whole-manifest snapshots read with the inferred schema, drained snapshots included") {
+    val dir = tmp("gen-read-snap")
+    Merge.mergeWholeManifest(spark, dir, wide(wideRow(1L, "I"), wideRow(2L, "I")), "k")
+    val inferred = spark.read.parquet(liveGen(dir).toString).schema
+    assert(Merge.readSnapshot(spark, dir).schema === inferred)
+    assert(Merge.readSnapshotAt(spark, dir, version(dir)).schema === inferred)
+    assert(Merge.readSnapshot(spark, dir).select("k").as[Long].collect().toSet ===
+      Set(1L, 2L))
+    // every row deleted: the live generation holds zero rows and is
+    // still read through its footer
+    Merge.mergeWholeManifest(spark, dir, wide(wideRow(1L, "D"), wideRow(2L, "D")), "k")
+    assert(Merge.readSnapshot(spark, dir).schema === inferred)
+    assert(Merge.readSnapshot(spark, dir).count() === 0)
+    // a drained commit (empty live set) resolves its schema through
+    // the newest retained commit that still lists a generation
+    val d = new Path(dir)
+    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
+    ManifestCommit.write(fs, d, ManifestCommit.State(version(dir) + 1, Nil))
+    assert(ManifestCommit.read(fs, d).get.live.isEmpty)
+    val drained = Merge.readSnapshot(spark, dir)
+    assert(drained.schema === inferred)
+    assert(drained.count() === 0)
+    // and the next merge onto the drained snapshot keeps it readable
+    Merge.mergeWholeManifest(spark, dir, wide(wideRow(3L, "I")), "k")
+    assert(Merge.readSnapshot(spark, dir).schema === inferred)
+    assert(Merge.readSnapshot(spark, dir).select("k").as[Long].collect().toSeq ===
+      Seq(3L))
+  }
+
+  test("a generation with no data file, or no dir at all, keeps Spark's own refusal") {
+    val dir = tmp("gen-read-nofile")
+    Merge.mergeWholeManifest(spark, dir, Seq((1L, "I", "a")).toDF("k", "op", "name"), "k")
+    val gen = liveGen(dir)
+    val fs = gen.getFileSystem(spark.sessionState.newHadoopConf())
+    def sameRefusal(): Unit = {
+      val expected = intercept[AnalysisException](spark.read.parquet(gen.toString))
+      val direct = intercept[AnalysisException](Merge.readGeneration(spark, gen))
+      val viaSnapshot = intercept[AnalysisException](Merge.readSnapshot(spark, dir))
+      Seq(direct, viaSnapshot).foreach { e =>
+        assert(e.getCondition === expected.getCondition)
+        assert(e.getMessage === expected.getMessage)
+      }
+    }
+    fs.listStatus(gen).map(_.getPath)
+      .filterNot(_.getName.startsWith("_")).foreach(fs.delete(_, false))
+    sameRefusal() // UNABLE_TO_INFER_SCHEMA
+    fs.delete(gen, true)
+    sameRefusal() // PATH_NOT_FOUND
+  }
+
+  test("job pins: snapshot read 1, whole-manifest merge 3, MergeSink batch 4 (probe + 3)") {
+    val dir = tmp("gen-read-jobs")
+    Merge.mergeWholeManifest(spark, dir, wide(wideRow(1L, "I"), wideRow(2L, "I")), "k")
+    // the read: the scan alone, no footer-inference job
+    assert(jobsOf { Merge.readSnapshot(spark, dir).collect(); () } === 1)
+    // the merge of an uncached change set: the change-side map (the
+    // riding guard's window), the target map and the generation write
+    // — no cache fill job
+    assert(jobsOf {
+      Merge.mergeWholeManifest(spark, dir, wide(wideRow(2L, "U"), wideRow(3L, "I")), "k")
+    } === 3)
+    // the streaming sink's batch: the emptiness probe, the compaction
+    // map, the target map and the generation write
+    val sink = tmp("gen-read-sink")
+    def batch(rows: (Long, String, String, Long)*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2)).toDF("k", "op", "name", "seq")
+    MergeSink.applyBatch(spark, batch((1L, "I", "a", 1L), (2L, "I", "b", 1L)),
+      sink, "k", "op", "seq", manifestCommit = true)
+    val before = version(sink)
+    assert(jobsOf {
+      MergeSink.applyBatch(spark,
+        batch((1L, "U", "a1", 2L), (1L, "U", "a2", 3L), (3L, "I", "c", 2L)),
+        sink, "k", "op", "seq", manifestCommit = true)
+    } === 4)
+    assert(version(sink) === before + 1)
+    assert(Merge.readSnapshot(spark, sink).orderBy("k").as[(Long, String)]
+      .collect().toSeq === Seq((1L, "a2"), (2L, "b"), (3L, "c")))
+  }
+}

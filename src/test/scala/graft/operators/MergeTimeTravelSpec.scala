@@ -217,6 +217,22 @@ class MergeTimeTravelSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("multiple non-D rows"))
     assert(Merge.readSnapshot(spark, dir).count() === 2)
+    // the guard rides the generation write over the UNCACHED change
+    // set, so it must fire however the duplicates look: two
+    // byte-identical non-D rows, and duplicates for a key the target
+    // lacks (no target row on its side of the join) — each refused
+    // with the sentinel token, the commit version unmoved
+    val v0 = Merge.snapshotVersions(spark, dir).last
+    Seq(c((1L, "U", "x"), (1L, "U", "x")), c((7L, "I", "p"), (7L, "I", "q")))
+      .foreach { dup =>
+        val r = intercept[IllegalArgumentException] {
+          Merge.mergeWholeManifest(spark, dir, dup, "k")
+        }
+        assert(r.getMessage.contains(Merge.MultiNonDToken))
+        assert(Merge.snapshotVersions(spark, dir).last === v0)
+      }
+    assert(Merge.readSnapshot(spark, dir).orderBy("k")
+      .as[(Long, String)].collect().toSeq === Seq((1L, "a"), (2L, "b")))
     // delete-then-reinsert in one batch: exactly one surviving copy
     Merge.mergeWholeManifest(spark, dir, c((1L, "D", "a"), (1L, "I", "a2")), "k")
     assert(Merge.readSnapshot(spark, dir).orderBy("k")

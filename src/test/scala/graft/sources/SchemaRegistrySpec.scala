@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -49,32 +48,6 @@ class SchemaRegistrySpec extends SparkSpec {
     Row(null, meta("conflict", rt = "control")),
     Row(null, meta("control_only", rt = "control"))
   ), 4)
-
-  /** Spark jobs `body` submits, counted per job group by a listener; a
-    * marker job afterwards flushes the (ordered, asynchronous) listener
-    * queue before the count is read. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"schema-registry-${java.util.UUID.randomUUID()}"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(s"$group-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains(s"$group-marker"), "listener queue did not drain")
-      groups.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
 
   // raw envelopes: data is a JSON STRING (streaming-safe form)
   private def raw = spark.createDataFrame(

@@ -46,7 +46,9 @@ class IngestPipelineSpec extends SparkSpec {
     line(7, "person", "insert", -9L))
 
   private def run(root: String, backlog: String,
-      metrics: ArrayBuffer[IngestPipeline.BatchMetric]): IngestPipeline.Config = {
+      metrics: ArrayBuffer[IngestPipeline.BatchMetric],
+      tables: Seq[String] = Seq("person"),
+      perTrigger: Int = 3): IngestPipeline.Config = {
     val cfg = IngestPipeline.Config(
       landingDir = s"$root/landing",
       quarantineDir = s"$root/quarantine",
@@ -55,13 +57,14 @@ class IngestPipelineSpec extends SparkSpec {
           coalesce(get_json_object(col("data"), "$.ID").cast("long") >= 0,
             lit(false)))),
       snapshotRoot = s"$root/snapshots",
-      tables = Seq(IngestPipeline.TableSink(
-        "dms_sample", "person", personSchema, "ID")),
+      tables = tables.map(tb =>
+        IngestPipeline.TableSink("dms_sample", tb, personSchema, "ID")),
       opsRollupDir = s"$root/ops",
       checkpoint = s"$root/ckpt")
     val raw = spark.readStream.format("graft-kinesis-sim")
       .option("path", backlog).option("shards", "2")
-      .option("maxRecordsPerTrigger", "3") // forces ≥3 micro-batches
+      // the default 3 forces ≥3 micro-batches
+      .option("maxRecordsPerTrigger", perTrigger.toString)
       .option("keyRegex", "\"ID\": (-?[0-9]+)")
       .load()
       .select(col("data").as("value"))
@@ -172,6 +175,51 @@ class IngestPipelineSpec extends SparkSpec {
     assert(IngestPipeline.readSnapshot(spark, cfg, "person")
       .select("ID", "val").as[(Long, String)].collect().toSet ===
       Set((1L, "v0"), (3L, "v2")))
+  }
+
+  test("an idle table in a batch: no commit, rows intact, and a parked rename-mode snapshot is still recovered") {
+    val root = Files.createTempDirectory("pipe-idle").toString
+    val snaps = s"$root/snapshots"
+    // `idle` already holds a standing manifest snapshot
+    MergeSink.applyBatch(spark,
+      Seq((5L, "v-old", "I", 1L)).toDF("ID", "val", "op", "__seq"),
+      s"$snaps/idle", "ID", "op", "__seq", manifestCommit = true)
+    val idleVersions = Merge.snapshotVersions(spark, s"$snaps/idle")
+    // `parked` is what a rename-mode crash between park and promote
+    // leaves behind: `parked.old` and no live dir
+    Seq((7L, "v-parked")).toDF("ID", "val").write.parquet(s"$snaps/parked.old")
+    // one batch: person data, only a control record for idle, nothing
+    // at all for parked
+    val ls = Seq(
+      line(0, "person", "load", 1L),
+      line(1, "idle", "create-table", 0L, rt = "control"),
+      line(2, "person", "insert", 2L))
+    val backlog = Files.createTempFile("pipe-idle", ".jsonl")
+    Files.write(backlog, ls.mkString("\n").getBytes("UTF-8"))
+    val metrics = ArrayBuffer.empty[IngestPipeline.BatchMetric]
+    val cfg = run(root, backlog.toString, metrics,
+      tables = Seq("person", "idle", "parked"), perTrigger = 100)
+    assert(metrics.size === 1)
+    assert(metrics.head.clean === ls.size)
+    assert(IngestPipeline.readSnapshot(spark, cfg, "person")
+      .select("ID", "val").as[(Long, String)].collect().toSet ===
+      Set((1L, "v0"), (2L, "v2")))
+    // the idle table: no new commit, its rows read back unchanged
+    assert(Merge.snapshotVersions(spark, s"$snaps/idle") === idleVersions)
+    assert(IngestPipeline.readSnapshot(spark, cfg, "idle")
+      .select("ID", "val").as[(Long, String)].collect().toSet ===
+      Set((5L, "v-old")))
+    // the parked snapshot: restored by recovery in this batch, though
+    // the batch carried no row for it
+    val fs = new org.apache.hadoop.fs.Path(snaps)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$snaps/parked.old")))
+    assert(spark.read.parquet(s"$snaps/parked").as[(Long, String)]
+      .collect().toSet === Set((7L, "v-parked")))
+    assert(IngestPipeline.opCounts(spark, cfg.opsRollupDir)
+      .as[(String, String, Long)].collect().toSet === Set(
+        ("person", "load", 1L), ("person", "insert", 1L),
+        ("idle", "create-table", 1L)))
   }
 
   test("concurrent per-table merges ≡ the serial loop (multi-table batch)") {
