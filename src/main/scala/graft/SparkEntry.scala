@@ -1695,23 +1695,27 @@ object SparkEntry {
         .orderBy(col("l_returnflag"))
     }),
 
-    // partition-scoped MERGE: build a lang-partitioned documents
-    // snapshot, apply a derived I/U/D change set through
-    // Merge.mergePartitioned — only the touched lang partitions are
-    // read and swapped (untouched dirs never open; MergeSinkSpec
-    // asserts their files byte-identical) — then read the snapshot
-    // back. The oracle replays the merge arbitration over the original
-    // parquet, so the result checks BOTH merge semantics AND the
-    // partitioned write/swap/read round trip. text travels as md5:
-    // content fidelity at hash size.
+    // partition-scoped MERGE: seed a lang-partitioned documents
+    // snapshot through Merge.mergePartitioned (every doc as op = 'I'),
+    // apply a derived I/U/D change set the same way — only the touched
+    // lang partitions are read and committed (untouched generations
+    // never open; MergeSinkSpec asserts their files byte-identical) —
+    // then read the snapshot back through its commit. The oracle
+    // replays the merge arbitration over the original parquet, so the
+    // result checks BOTH merge semantics AND the partitioned
+    // write/commit/read round trip. text travels as md5: content
+    // fidelity at hash size. The snapshot rebuilds from scratch each
+    // run (dir wiped first, the q112 discipline).
     "q101_merge_partitioned" -> ((s, dir) => {
-      val snap = new java.io.File(sys.props("java.io.tmpdir"),
+      val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_merge_docs_${Integer.toHexString(dir.hashCode)}_$jvmToken")
-        .getAbsolutePath
+      deleteRecursively(root)
+      val snap = root.getAbsolutePath
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("n_chars"))
-      docs.write.mode("overwrite").partitionBy("lang").parquet(snap)
+      Merge.mergePartitioned(s, snap, docs.withColumn("op", lit("I")),
+        "doc_id", "lang", "op")
       val changes = docs
         .filter(col("doc_id") % 7 === 0 || col("doc_id") % 11 === 0)
         .select(col("doc_id"),
@@ -1724,7 +1728,7 @@ object SparkEntry {
             lit("I").as("op"), col("text"), lit("xx").as("lang"),
             lit("synthetic").as("source"), col("n_chars")))
       Merge.mergePartitioned(s, snap, changes, "doc_id", "lang", "op")
-      s.read.parquet(snap)
+      Merge.readSnapshot(s, snap)
         .select(col("doc_id"), col("lang"), col("source"),
           col("n_chars").cast("long").as("n_chars"),
           md5(col("text")).as("text_md5"))
@@ -1907,9 +1911,9 @@ object SparkEntry {
     }),
 
     // the object-store-safe MERGE commit protocol driven end-to-end:
-    // the q94 change set applied through MergeSink.applyBatch with
-    // manifestCommit = true — immutable generation dirs + one pointer
-    // file, NO renames anywhere — in two batches (the base as inserts,
+    // the q94 change set applied through MergeSink.applyBatch —
+    // immutable generation dirs + one pointer file, NO renames
+    // anywhere — in two batches (the base as inserts,
     // then the I/U/D set), read back through the manifest pointer.
     // Same arbitration, same oracle as q94: the commit protocol must
     // be invisible to results. Re-runs are idempotent (I/U collapse to
@@ -1934,10 +1938,8 @@ object SparkEntry {
             lit("I").as("op"), lit(2L).as("seq"),
             concat(col("c_name"), lit("_new")).as("c_name"),
             lit(0.0).as("c_acctbal")))
-      streaming.MergeSink.applyBatch(s, base, snap, "c_custkey", "op",
-        "seq", manifestCommit = true)
-      streaming.MergeSink.applyBatch(s, changes, snap, "c_custkey", "op",
-        "seq", manifestCommit = true)
+      streaming.MergeSink.applyBatch(s, base, snap, "c_custkey", "op", "seq")
+      streaming.MergeSink.applyBatch(s, changes, snap, "c_custkey", "op", "seq")
       Merge.readSnapshot(s, snap)
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
         .orderBy(col("c_custkey"))
@@ -1994,10 +1996,8 @@ object SparkEntry {
             lit("I").as("op"), lit(2L).as("seq"),
             concat(col("c_name"), lit("_new")).as("c_name"),
             lit(0.0).as("c_acctbal")))
-      streaming.MergeSink.applyBatch(s, base, snap, "c_custkey", "op",
-        "seq", manifestCommit = true)
-      streaming.MergeSink.applyBatch(s, changes, snap, "c_custkey", "op",
-        "seq", manifestCommit = true)
+      streaming.MergeSink.applyBatch(s, base, snap, "c_custkey", "op", "seq")
+      streaming.MergeSink.applyBatch(s, changes, snap, "c_custkey", "op", "seq")
       val vOld = Merge.snapshotVersions(s, snap).head
       val old = Merge.readSnapshotAt(s, snap, vOld)
         .select(col("c_custkey").as("k_old"), col("c_name").as("name_old"),
@@ -2033,13 +2033,13 @@ object SparkEntry {
       streaming.MergeSink.applyBatch(s,
         cust.select(col("c_custkey"), lit("I").as("op"), lit(1L).as("seq"),
           col("c_name"), col("c_acctbal")),
-        snap, "c_custkey", "op", "seq", manifestCommit = true)
+        snap, "c_custkey", "op", "seq")
       streaming.MergeSink.applyBatch(s,
         cust.filter(col("c_custkey") % 5 === 0)
           .select(col("c_custkey"), lit("U").as("op"), lit(2L).as("seq"),
             concat(col("c_name"), lit("_r2")).as("c_name"),
             (col("c_acctbal") * 2.0).as("c_acctbal")),
-        snap, "c_custkey", "op", "seq", manifestCommit = true)
+        snap, "c_custkey", "op", "seq")
       s.sql(s"""SELECT c_custkey, c_name, c_acctbal
                 FROM graft_snapshot('$snap', 1)
                 ORDER BY c_custkey""")

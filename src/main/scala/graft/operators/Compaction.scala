@@ -20,10 +20,9 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
  * coalescing the whole table through ONE task (the exact OOM hazard
  * this job replaces) before failing at the swap.
  *
- * Swap protocol (the [[graft.streaming.MergeSink]] park discipline —
- * each step one rename, atomic on HDFS/local): park the live dir as a
- * dot-prefixed sibling, promote the staged rewrite, drop the parked
- * dir. A crash between park and promote leaves no live dir but an
+ * Swap protocol (each step one rename, atomic on HDFS/local): park
+ * the live dir as a dot-prefixed sibling, promote the staged rewrite,
+ * drop the parked dir. A crash between park and promote leaves no live dir but an
  * intact parked one; the recovery preamble of the NEXT run (or any
  * manual rename) restores it — the data is never in a half-state. On
  * object stores where rename is copy, prefer the manifest-committed

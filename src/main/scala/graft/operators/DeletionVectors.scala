@@ -69,18 +69,18 @@ object DeletionVectors {
 
   /** Logical delete: append the keys to the tombstone sidecar, stamped
     * with the live manifest version. Cost ∝ keys; no snapshot data is
-    * opened. WHOLE-snapshot manifest stores ONLY: a rename-mode sink
-    * swaps the whole snapshot dir per batch (destroying the sidecar),
-    * and a partition-scoped manifest merge bumps the version without
-    * folding (inerting every pending tombstone) — both guarded below. */
+    * opened. WHOLE-snapshot manifest stores ONLY: a directory with no
+    * commit has no version to stamp, and a partition-scoped merge
+    * bumps the version without folding (inerting every pending
+    * tombstone) — both guarded below. */
   def delete(spark: SparkSession, snapshotDir: String, keys: DataFrame,
       keyCol: String): Unit = {
     val dir = new Path(snapshotDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     require(ManifestCommit.exists(fs, dir),
-      s"deletion vectors need a manifest snapshot at $snapshotDir — a " +
-        "rename-mode sink's whole-dir swap would destroy the tombstone " +
-        "sidecar on its next batch; commit with manifestCommit = true")
+      s"deletion vectors need a manifest snapshot at $snapshotDir — " +
+        "a directory no merge has committed to has no version to stamp " +
+        "tombstones with; build it through MergeSink or Merge first")
     // WHOLE-snapshot manifests only (live entries carry no '/'): only
     // mergeWholeManifest folds tombstones into the generation it writes.
     // A partition-scoped merge bumps the version WITHOUT folding — every

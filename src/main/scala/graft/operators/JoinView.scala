@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
  *    from-scratch alternative of scanning facts AND shuffling the
  *    whole corpus through the join).
  *
- * Commits ride the MERGE protocols: whole-manifest by default, or —
+ * Commits ride the MERGE protocol: whole-manifest by default, or —
  * when `Spec.partCol` names a fact-side partition column —
- * [[Merge.mergePartitioned]] with manifest commits, so a fold
+ * [[Merge.mergePartitioned]], so a fold
  * rewrites only the touched partitions (the 100 TB cost model; an
  * un-partitioned whole-manifest fold rewrites the view per commit,
  * fine for group-count-sized views, wrong for corpus-sized ones).
@@ -107,8 +107,7 @@ object JoinView {
   private def commit(spark: SparkSession, storeDir: String,
       changes: DataFrame, spec: Spec): Unit = spec.partCol match {
     case Some(pc) =>
-      Merge.mergePartitioned(spark, storeDir, changes, spec.factKey, pc,
-        manifestCommit = true)
+      Merge.mergePartitioned(spark, storeDir, changes, spec.factKey, pc)
       ()
     case None =>
       Merge.mergeWholeManifest(spark, storeDir, changes, spec.factKey)

@@ -4,12 +4,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /**
  * Pointer-file commit protocol for [[Merge]] / [[graft.streaming.MergeSink]]
- * snapshots on filesystems WITHOUT atomic directory rename — i.e. object
- * stores, the reference pipeline's actual substrate
- * (`/root/reference/README.md:76` lands data on S3): an S3 "directory
- * rename" is a non-atomic per-object copy+delete, so the park/promote
- * swap that is safe on HDFS can tear there. This protocol never
- * renames and never overwrites:
+ * snapshots, safe on filesystems WITHOUT atomic directory rename — i.e.
+ * object stores, the reference pipeline's actual substrate
+ * (the reference README.md:76 lands data on S3): an S3 "directory
+ * rename" is a non-atomic per-object copy+delete, so a rename-based
+ * swap can tear there. This protocol never renames and never
+ * overwrites, and it is the only one the merges use:
  *
  *  - data lives in IMMUTABLE generation dirs, written once at their
  *    final path: `<dir>/data/g-<v>-<nonce>` (whole-snapshot mode) or
@@ -38,8 +38,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  *    and the lost-pointer fallback commit resolves to dirs that still
  *    exist; [[graft.operators.Merge.vacuum]] trims explicitly.
  *
- * Single writer per snapshot (the same assumption the rename protocol
- * makes — foreachBatch serializes batches). A VIOLATION is detected
+ * Single writer per snapshot (foreachBatch serializes batches). A VIOLATION is detected
  * loudly rather than corrupting silently: writers pre-check their
  * target generation path after the preamble GC, compare the live
  * version again between staging and the flip ([[requireUnchanged]]),
@@ -50,8 +49,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * Delta on S3 needs a LogStore with conditional puts.) Readers racing
  * a commit may see the previous generation until they re-resolve; a
  * reader holding paths into a superseded generation across a later
- * cleanup must retry, the same exposure the rename swap has with a
- * dropped parked dir.
+ * cleanup must retry.
  */
 private[graft] object ManifestCommit {
 

@@ -121,9 +121,9 @@ object Merge {
    *
    * Plan shape: one bounded collect of the DISTINCT changed partition
    * values (catalog-scale metadata, like replayAll's partition list), a
-   * partition-PRUNED scan of the snapshot (`partCol IN touched` reaches
-   * the file index — only touched directories list), one full-outer
-   * merge, one staged partitioned write, then per-partition rename swaps.
+   * read of ONLY the touched partitions' live generations, one
+   * full-outer merge, one generation write per touched partition, then
+   * one commit-file flip.
    *
    * Contract (relaxing [[mergeBatch]]'s one-change-per-key to
    * one-change-per-(key, partition)):
@@ -140,32 +140,19 @@ object Merge {
    *    (a D must say which partition its key lives in; that is what
    *    makes pruning sound).
    *
-   * Commit protocol — two modes:
-   *  - rename (default): park the live leaf dir under a dot-prefixed
-   *    (hidden, so partition discovery never sees it) sibling, promote
-   *    the staged dir, drop the parked one. Each step is one rename —
-   *    atomic on HDFS/local. A crash mid-swap leaves a parked dir with
-   *    no live dir; the recovery preamble of the NEXT application
-   *    restores it, and the re-delivered batch re-applies idempotently
-   *    (I/U collapse to upsert; D of an absent key is a no-op).
-   *  - manifest (`manifestCommit = true`, or auto-detected from an
-   *    existing manifest snapshot): the object-store-safe protocol —
-   *    no renames anywhere. Touched partitions write ONCE into
-   *    immutable generation dirs at their final paths
-   *    (`data/<leaf>/g-<v>`), then one small commit file flips the
-   *    snapshot ([[ManifestCommit]]). Read such snapshots through
-   *    [[readSnapshot]].
-   *
-   * Either way the snapshot read is PRUNED at the listing level: only
-   * the touched leaf directories are handed to the reader (basePath +
-   * explicit paths), so untouched partitions' directories are neither
-   * listed nor read. (In rename mode the root's immediate children are
-   * listed once for the flat-layout guard — one metadata page, not the
-   * per-partition recursive discovery a whole-table read would do.)
+   * Commit protocol ([[ManifestCommit]], object-store-safe — no rename
+   * anywhere): touched partitions write ONCE into immutable generation
+   * dirs at their final paths (`data/<leaf>/g-<v>`), then one small
+   * commit file flips the snapshot. Recovery is resolving the newest
+   * whole commit; the next merge's preamble GC clears crash debris.
+   * Read such snapshots through [[readSnapshot]]. The snapshot read is
+   * PRUNED at the listing level: only the touched generation dirs are
+   * handed to the reader (basePath + explicit paths), so untouched
+   * partitions are neither listed nor read.
    */
   def mergePartitioned(spark: SparkSession, snapshotDir: String,
       changes0: DataFrame, key: String, partCol: String,
-      opCol: String = "op", manifestCommit: Boolean = false): Seq[String] = {
+      opCol: String = "op"): Seq[String] = {
     // this function runs 3+ actions over the change set (touched
     // collect, duplicate guard, the merge write) — cache it for the
     // duration unless the caller already did (MergeSink's compacted
@@ -177,13 +164,13 @@ object Merge {
       changes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else changes0
     try mergePartitionedCached(spark, snapshotDir, changes, key, partCol,
-      opCol, manifestCommit)
+      opCol)
     finally if (cachedHere) { changes.unpersist(); () }
   }
 
   private def mergePartitionedCached(spark: SparkSession,
       snapshotDir: String, changes: DataFrame, key: String, partCol: String,
-      opCol: String, manifestCommit: Boolean): Seq[String] = {
+      opCol: String): Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(snapshotDir)
     val fs = dir.getFileSystem(conf)
@@ -200,10 +187,9 @@ object Merge {
       s"changes carry rows with null '$partCol' — every change (D included) " +
         "must name its partition")
     val touched = touchedRaw.flatten.sorted
-    // '' is rejected like null: the dynamic-partition writer folds the
+    // '' is rejected like null: Spark's partitioned writers fold the
     // empty string into the null partition (__HIVE_DEFAULT_PARTITION__),
-    // so the swap would look for 'partCol=' (never staged) and read it
-    // as partition-fully-deleted — silently dropping the merged rows.
+    // so 'partCol=' cannot round-trip a Hive partition path.
     require(!touched.contains(""),
       s"changes carry rows with empty-string '$partCol' — '' cannot " +
         "round-trip through a Hive partition path; use a sentinel value")
@@ -217,13 +203,8 @@ object Merge {
       s"changes carry multiple non-D rows for one '$key' " +
         s"[$MultiNonDToken] — a partition move must be sent as " +
         "D(old partition) + I(new partition)")
-    val dataSchema = changes.drop(opCol)
-    if (manifestCommit || ManifestCommit.exists(fs, dir))
-      mergeManifest(spark, dir, fs, changes, key, partCol, opCol,
-        dataSchema, touched, leafName)
-    else
-      mergeRenames(spark, dir, fs, changes, key, partCol, opCol,
-        dataSchema, touched, leafName)
+    mergeManifest(spark, dir, fs, changes, key, partCol, opCol,
+      changes.drop(opCol), touched, leafName)
   }
 
   /** Partition-scoped merges are schema-RIGID: the change set must
@@ -247,93 +228,8 @@ object Merge {
         "run a whole-snapshot mergeBatchEvolve rewrite first")
   }
 
-  /** Rename-swap commit (HDFS/local — atomic dir renames). */
-  private def mergeRenames(spark: SparkSession, dir: Path,
-      fs: org.apache.hadoop.fs.FileSystem, changes: DataFrame, key: String,
-      partCol: String, opCol: String, dataSchema: DataFrame,
-      touched: Seq[String], leafName: String => String): Seq[String] = {
-    // OCC is a MANIFEST-commit capability (the rebase needs immutable
-    // generations + an atomic pointer flip to reason about winners);
-    // the park/promote rename swap has neither, so a user who set the
-    // conf expecting concurrent writers here must hear that it does
-    // not apply rather than discover it in interleaved renames
-    if (ManifestCommit.occEnabled(spark))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"spark.graft.merge.occ is set but snapshot $dir uses the " +
-          "rename-swap layout — optimistic concurrency applies to " +
-          "manifest-commit snapshots only; this merge remains " +
-          "single-writer (rebuild with manifestCommit = true to get OCC)")
-    def renameOrDie(a: Path, b: Path): Unit =
-      require(fs.rename(a, b), s"rename $a -> $b failed")
-    def parkedName(v: String): String = ".merge_old_" + leafName(v)
-    // recovery: restore any partition parked by a crashed previous swap
-    recoverParkedPartitions(spark, dir.toString)
-    val children = if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty
-    val visible = children.filterNot(st =>
-      st.getPath.getName.startsWith(".") || st.getPath.getName.startsWith("_"))
-    // a FLAT (unpartitioned) snapshot must fail loudly, not read as
-    // "no live partitions": treating its files as absent would merge
-    // against empty and the swap would bury the existing data — the
-    // silent-loss failure mode. Migrate the layout (one partitioned
-    // rewrite) before switching a sink to partitioned mode.
-    require(!visible.exists(_.isFile),
-      s"snapshot at $dir is not Hive-partitioned on '$partCol' " +
-        "(flat data files found) — partition-scoped merge needs a " +
-        "partitioned layout; rewrite the snapshot partitioned first")
-    // …and it must be partitioned on THIS column: a mismatched partCol
-    // would make every touchedLive lookup miss, merge against empty,
-    // and write a second partition scheme beside the old one —
-    // duplicated keys plus an unreadable mixed layout
-    val leafPrefix = ExternalCatalogUtils.escapePathName(partCol) + "="
-    visible.filter(_.isDirectory).foreach { st =>
-      val n = st.getPath.getName
-      require(n.startsWith(leafPrefix),
-        s"snapshot at $dir is partitioned on " +
-          s"'${n.takeWhile(_ != '=')}', not '$partCol'")
-    }
-    // pruned scan: ONLY the touched leaf dirs are handed to the reader
-    // (basePath keeps the partition column parsed from the path), so no
-    // other partition directory is ever listed — at catalog-scale
-    // partition counts the listing cost follows the batch, not the table
-    val touchedLive = touched.map(v => new Path(dir, leafName(v)))
-      .filter(fs.exists)
-    val target =
-      if (touchedLive.nonEmpty) {
-        // the snapshot's OWN schema (never forced to the change set's):
-        // schema drift fails the rigid check loudly instead of silently
-        // dropping columns in the rewrite
-        val t0 = spark.read.option("basePath", dir.toString)
-          .parquet(touchedLive.map(_.toString): _*)
-        requireRigidColumns(dataSchema.columns.toSeq, t0.columns.toSeq, dir)
-        t0.select(dataSchema.columns.map(col): _*)
-      } else {
-        // all-new partitions: an existing leaf's schema still governs
-        visible.find(_.isDirectory).foreach { st =>
-          requireRigidColumns(dataSchema.columns.toSeq,
-            spark.read.option("basePath", dir.toString)
-              .parquet(st.getPath.toString).columns.toSeq, dir)
-        }
-        dataSchema.filter(lit(false))
-      }
-    val merged = mergeBatch(target, changes, key, opCol)
-    val stage = new Path(dir.getParent, dir.getName + ".stage")
-    fs.delete(stage, true)
-    merged.write.mode("overwrite").partitionBy(partCol).parquet(stage.toString)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    touched.foreach { v =>
-      val live = new Path(dir, leafName(v))
-      val parked = new Path(dir, parkedName(v))
-      val staged = new Path(stage, leafName(v))
-      if (fs.exists(live)) renameOrDie(live, parked)
-      // absent staged dir = every row of this partition was deleted
-      if (fs.exists(staged)) renameOrDie(staged, live)
-      fs.delete(parked, true)
-    }
-    fs.delete(stage, true)
-    touched
-  }
-
-  /** Manifest commit (object stores — no renames; see [[ManifestCommit]]). */
+  /** The partition-scoped commit: generations + pointer flip, no
+    * rename (see [[ManifestCommit]]). */
   private def mergeManifest(spark: SparkSession, dir: Path,
       fs: org.apache.hadoop.fs.FileSystem, changes: DataFrame, key: String,
       partCol: String, opCol: String, dataSchema: DataFrame,
@@ -351,7 +247,9 @@ object Merge {
         "partition-scope merged; rebuild it partitioned")
     val data = ManifestCommit.dataDir(dir)
     val liveMap: Map[String, String] = ManifestCommit.liveLeafMap(st)
-    // partitioned on THIS column (see the rename-mode twin)
+    // …and partitioned on THIS column: a mismatched partCol would make
+    // every touched lookup miss, merge against empty, and commit a
+    // second partition scheme beside the old one — duplicated keys
     val leafPrefix = ExternalCatalogUtils.escapePathName(partCol) + "="
     liveMap.keys.foreach { l =>
       require(l.startsWith(leafPrefix),
@@ -362,12 +260,15 @@ object Merge {
       .map(g => new Path(new Path(data, leafName(v)), g)))
     val target =
       if (touchedLive.nonEmpty) {
-        // snapshot's OWN schema + the rigid check (see rename twin)
+        // the snapshot's OWN schema (never forced to the change set's):
+        // schema drift fails the rigid check loudly instead of silently
+        // dropping columns in the rewrite
         val t0 = spark.read.option("basePath", data.toString)
           .parquet(touchedLive.map(_.toString): _*)
         requireRigidColumns(dataSchema.columns.toSeq, t0.columns.toSeq, dir)
         t0.select(dataSchema.columns.map(col): _*)
       } else {
+        // all-new partitions: an existing leaf's schema still governs
         liveMap.headOption.foreach { case (leaf, gen) =>
           requireRigidColumns(dataSchema.columns.toSeq,
             spark.read.option("basePath", data.toString)
@@ -534,8 +435,8 @@ object Merge {
   /** Read a [[mergePartitioned]]/[[graft.streaming.MergeSink]] snapshot,
     * resolving through the manifest when one exists (manifest-committed
     * snapshots MUST be read this way — a raw directory read would see
-    * every generation). Falls through to a plain parquet read for
-    * rename-layout snapshots, so callers can use it unconditionally. */
+    * every generation). A directory no merge has committed to reads
+    * as plain parquet, so callers can use it unconditionally. */
   def readSnapshot(spark: SparkSession, snapshotDir: String): DataFrame = {
     val dir = new Path(snapshotDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
@@ -552,8 +453,8 @@ object Merge {
       // drained snapshot (a batch deleted every remaining row): keep
       // the SCHEMA by resolving an empty read through the newest
       // retained commit that still lists generations — downstream
-      // .select / typed .as keep working, matching what the rename
-      // path and the empty-target branch preserve. Only when no
+      // .select / typed .as keep working, matching what the
+      // empty-target branch preserves. Only when no
       // predecessor survives retention is there genuinely no schema
       // anywhere on disk.
       val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
@@ -603,9 +504,10 @@ object Merge {
       .flatMap(v => ManifestCommit.readVersion(fs, dir, v))
       .find(_.live.nonEmpty)
 
-  /** Refuse to bolt a manifest onto a rename-layout snapshot: the
-    * manifest read would resolve to nothing and the existing leaf dirs
-    * would be silently shadowed — migrate with one rewrite first. */
+  /** Refuse to commit into a directory that already holds data but no
+    * commit (plain parquet written by something other than a merge):
+    * the manifest read would resolve to the new generations only and
+    * the existing files would be silently shadowed. */
   private[graft] def requireManifestLayout(
       fs: org.apache.hadoop.fs.FileSystem, dir: Path,
       st: Option[ManifestCommit.State]): Unit =
@@ -615,16 +517,16 @@ object Merge {
         n == "data" || n.startsWith(".") || n.startsWith("_")
       }
       require(stray.isEmpty,
-        s"snapshot at $dir holds non-manifest content — migrate the " +
-          "rename-layout snapshot before enabling manifest commits")
+        s"snapshot at $dir holds non-manifest content (data but no " +
+          "commit file) — merges commit only through the manifest; " +
+          "merge the rows into a fresh snapshot dir as op = 'I' changes")
     }
 
-  /** Whole-snapshot manifest merge — the object-store-safe analog of
-    * the park/promote whole-snapshot swap, shared with
-    * [[graft.streaming.MergeSink]] so the gc → read → layout-guard →
-    * generation-write → commit → gc protocol lives in ONE place: write
-    * the merged snapshot once into an immutable generation dir at its
-    * final path, then flip the commit pointer ([[ManifestCommit]]). */
+  /** Whole-snapshot merge, shared with [[graft.streaming.MergeSink]]
+    * so the gc → read → layout-guard → generation-write → commit → gc
+    * protocol lives in ONE place: write the merged snapshot once into
+    * an immutable generation dir at its final path, then flip the
+    * commit pointer ([[ManifestCommit]]). */
   def mergeWholeManifest(spark: SparkSession, snapshotDir: String,
       changes: DataFrame, key: String,
       opCol: String = "op"): Unit = {
@@ -791,7 +693,8 @@ object Merge {
   /** Commit versions of a manifest snapshot still readable through
     * [[readSnapshotAt]], ascending — the retention window
     * (`spark.graft.merge.retainCommits`, default 2) bounds how far
-    * back this reaches. Empty for rename-layout snapshots. */
+    * back this reaches. Empty for a directory no merge has committed
+    * to. */
   def snapshotVersions(spark: SparkSession, snapshotDir: String): Seq[Long] = {
     val dir = new Path(snapshotDir)
     ManifestCommit.versions(
@@ -826,28 +729,5 @@ object Merge {
     ManifestCommit.gc(
       dir.getFileSystem(spark.sessionState.newHadoopConf()), dir, keepLast,
       ManifestCommit.stagedGrace(spark))
-  }
-
-  /** Restore partitions parked (`.merge_old_*`) by a crashed
-    * [[mergePartitioned]] swap. Called by mergePartitioned's own
-    * preamble AND by [[graft.streaming.MergeSink.applyBatch]] before
-    * EITHER merge mode runs — a snapshot crashed mid-swap in
-    * partitioned mode must be whole again even if the next application
-    * is configured unpartitioned (mode is a config change; recovery
-    * must not depend on it). */
-  private[graft] def recoverParkedPartitions(spark: SparkSession,
-      snapshotDir: String): Unit = {
-    val dir = new Path(snapshotDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(".merge_old_")) {
-        val live = new Path(dir, n.stripPrefix(".merge_old_"))
-        if (!fs.exists(live))
-          require(fs.rename(st.getPath, live),
-            s"recovery rename ${st.getPath} -> $live failed")
-        else fs.delete(st.getPath, true) // stale park: crash after promote
-      }
-    }
   }
 }

@@ -23,10 +23,10 @@ import graft.operators.{Constraints, Merge, Rollup, StreamSplitter}
  *     of the clean envelopes, late-binds its payload schema
  *     (`from_json`), maps DMS operations to MERGE ops
  *     (load/insert→I, update→U, delete→D), and upserts into a standing
- *     manifest-committed snapshot via [[MergeSink.recover]] +
- *     [[MergeSink.applyChanges]] — intra-batch multi-versions compact
- *     by event time, re-delivered batches re-apply idempotently, and a
- *     table the batch carries no row for runs recovery only;
+ *     manifest-committed snapshot via [[MergeSink.applyChanges]] —
+ *     intra-batch multi-versions compact by event time, re-delivered
+ *     batches re-apply idempotently, and a table the batch carries no
+ *     row for is not touched at all;
  *  4. a standing ops-counter rollup (the DMS console counters,
  *     image/image3.png, as STANDING STATE): per-(table, operation) row
  *     counts fold through [[RollupStream.foldBatch]]'s checkpoint-
@@ -244,8 +244,8 @@ object IngestPipeline {
           // one aggregate job over the cached batch: the three
           // counters (input derives) plus each table's merge-lane row
           // count — the same clean + laneRows predicate the lane
-          // filters by — so an idle table below costs recovery only,
-          // no emptiness probe job
+          // filters by — so an idle table below costs nothing, no
+          // emptiness probe job
           val m = flagged.agg(
             count(lit(1)).as("n"),
             (coalesce(sum(when(size(col("violated")) > 0, 1L)
@@ -280,12 +280,9 @@ object IngestPipeline {
             val settled = scala.concurrent.Await.result(
               scala.concurrent.Future.traverse(cfg.tables.zipWithIndex) {
                 case (t, i) => scala.concurrent.Future {
-                  // MergeSink.applyBatch's recover → isEmpty → apply,
-                  // with the count above standing in for the probe:
-                  // crash recovery runs for EVERY table, the merge only
-                  // for tables this batch carries rows for
-                  val dir = s"${cfg.snapshotRoot}/${t.tableName}"
-                  MergeSink.recover(spark, dir)
+                  // MergeSink.applyBatch's isEmpty → apply, with the
+                  // count above standing in for the probe: only tables
+                  // this batch carries rows for merge
                   if (m.getLong(2 + i) > 0) {
                     val changes = clean.filter(laneRows(t))
                       .select(
@@ -293,8 +290,9 @@ object IngestPipeline {
                         mergeOp(col("metadata.operation")).as("op"),
                         col("event_ts").as("__seq"))
                       .select(col("__d.*"), col("op"), col("__seq"))
-                    MergeSink.applyChanges(spark, changes, dir, t.key,
-                      "op", "__seq", manifestCommit = true)
+                    MergeSink.applyChanges(spark, changes,
+                      s"${cfg.snapshotRoot}/${t.tableName}", t.key, "op",
+                      "__seq")
                   }
                 }.transform(scala.util.Success(_)) // settle, don't fail-fast
               }, scala.concurrent.duration.Duration.Inf)

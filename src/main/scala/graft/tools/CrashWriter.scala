@@ -85,7 +85,7 @@ object CrashWriter {
       case "seed" =>
         graft.streaming.MergeSink.applyBatch(spark,
           Seq((1L, "I", "a", 1.0, 1L)).toDF("k", "op", "name", "bal", "seq"),
-          dir, "k", "op", "seq", manifestCommit = true)
+          dir, "k", "op", "seq")
         spark.stop()
       case "die-staged" =>
         graft.operators.Merge.commitWholeGeneration(spark, dir) {
@@ -116,7 +116,7 @@ object CrashWriter {
         // cleanup work the crash leaves for the next preamble
         graft.streaming.MergeSink.applyBatch(spark,
           Seq((2L, "I", "b", 2.0, 2L)).toDF("k", "op", "name", "bal", "seq"),
-          dir, "k", "op", "seq", manifestCommit = true)
+          dir, "k", "op", "seq")
         val retain = ManifestCommit.retention(spark)
         val grace = ManifestCommit.stagedGrace(spark)
         ManifestCommit.gc(fs, p, retain, grace)

@@ -141,7 +141,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("tvf-snap").toString + "/snap"
     graft.streaming.MergeSink.applyBatch(spark,
       Seq((1L, "I", "a", 1L), (2L, "I", "b", 2L)).toDF("k", "op", "name", "seq"),
-      dir, "k", "op", "seq", manifestCommit = true)
+      dir, "k", "op", "seq")
     graft.streaming.MergeSink.applyBatch(spark,
       Seq((1L, "U", "a2", 3L)).toDF("k", "op", "name", "seq"),
       dir, "k", "op", "seq")
@@ -200,7 +200,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("tvf-snap2").toString + "/snap"
     graft.streaming.MergeSink.applyBatch(spark,
       Seq((7L, "I", "x", 1L)).toDF("k", "op", "name", "seq"),
-      dir, "k", "op", "seq", manifestCommit = true)
+      dir, "k", "op", "seq")
     // SparkSpec's shared session registered GraftFunctions at build time
     assert(spark.sql(s"SELECT name FROM graft_snapshot('$dir', 1)")
       .as[String].head() === "x")
@@ -253,7 +253,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val bare = root + "/bare"
     graft.streaming.MergeSink.applyBatch(spark,
       Seq((1L, "I", 1L)).toDF("k", "op", "seq"),
-      bare, "k", "op", "seq", manifestCommit = true)
+      bare, "k", "op", "seq")
     val noSpec = intercept[Exception] {
       ext.sql(s"SELECT * FROM graft_rollup('$bare')").collect()
     }

@@ -154,7 +154,7 @@ class DeletionVectorsSpec extends SparkSpec {
 
   test("delete refuses a rename-layout snapshot (the sidecar would be destroyed)") {
     val dir = tmp("dv-rename") + "/snap"
-    // a rename-mode MergeSink snapshot: plain parquet dir, no manifest
+    // a plain parquet dir no merge has committed to: no manifest
     (1L to 5L).toDF("k").write.parquet(dir)
     val e = intercept[IllegalArgumentException] {
       DeletionVectors.delete(spark, dir, Seq(1L).toDF("k"), "k")
@@ -167,7 +167,7 @@ class DeletionVectorsSpec extends SparkSpec {
     Merge.mergePartitioned(spark, dir,
       Seq((1L, "a", "p1", "I"), (2L, "b", "p2", "I"))
         .toDF("k", "v", "part", "op"),
-      "k", "part", manifestCommit = true)
+      "k", "part")
     // a partition-scoped merge bumps the manifest version WITHOUT
     // folding tombstones — every pending delete would go inert and the
     // keys would silently reappear; delete() must refuse up front

@@ -154,12 +154,12 @@ class GenerationReadSpec extends SparkSpec {
     def batch(rows: (Long, String, String, Long)*) = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2)).toDF("k", "op", "name", "seq")
     MergeSink.applyBatch(spark, batch((1L, "I", "a", 1L), (2L, "I", "b", 1L)),
-      sink, "k", "op", "seq", manifestCommit = true)
+      sink, "k", "op", "seq")
     val before = version(sink)
     assert(jobsOf {
       MergeSink.applyBatch(spark,
         batch((1L, "U", "a1", 2L), (1L, "U", "a2", 3L), (3L, "I", "c", 2L)),
-        sink, "k", "op", "seq", manifestCommit = true)
+        sink, "k", "op", "seq")
     } === 4)
     assert(version(sink) === before + 1)
     assert(Merge.readSnapshot(spark, sink).orderBy("k").as[(Long, String)]

@@ -110,14 +110,14 @@ class MergeCrashSpec extends SparkSpec {
     // debris is indistinguishable from a live concurrent writer)...
     val boom = intercept[IllegalArgumentException] {
       MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
-        "k", "op", "seq", manifestCommit = true)
+        "k", "op", "seq")
     }
     assert(boom.getMessage.contains("concurrent writer"))
     // ...and once the debris ages past the grace (what wall-clock does
     // for real), the re-delivered batch GCs it and commits
     ageDebris(dir)
     MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
-      "k", "op", "seq", manifestCommit = true)
+      "k", "op", "seq")
     assert(state(dir) === Seq((1L, "a", 1.0), (2L, "b", 2.0)))
     assert(!genDirs(dir).exists(orphans.contains),
       s"dead stage must be reclaimed: ${genDirs(dir)}")
@@ -126,7 +126,7 @@ class MergeCrashSpec extends SparkSpec {
   test("death mid-writeGen: partial stage is debris; restart recovers and commits") {
     val dir = tmp("crash-midwrite")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true) // v1
+      "k", "op", "seq") // v1
     // the writer dies halfway through staging v2: some files landed,
     // no commit file was ever written
     val boom = intercept[RuntimeException] {
@@ -161,7 +161,7 @@ class MergeCrashSpec extends SparkSpec {
   test("death mid-pointer-write: torn commit is skipped; re-delivery heals it") {
     val dir = tmp("crash-midflip")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true) // v1
+      "k", "op", "seq") // v1
     val fs = fsOf(dir)
     // v2 staged FULLY, then the process died while uploading the
     // commit object: content is present but the trailer never landed
@@ -189,7 +189,7 @@ class MergeCrashSpec extends SparkSpec {
     // generation is cleanup work that a crash could leave behind; a
     // LATER writer's preamble does it instead)
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true)
+      "k", "op", "seq")
     MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
       "k", "op", "seq")
     MergeSink.applyBatch(spark, b((3L, "I", "c", 3.0, 3L)), dir,
@@ -206,7 +206,7 @@ class MergeCrashSpec extends SparkSpec {
   test("fresh crash debris aborts a too-early restart loudly, then ages out") {
     val dir = tmp("crash-grace")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true) // v1
+      "k", "op", "seq") // v1
     intercept[RuntimeException] {
       Merge.commitWholeGeneration(spark, dir) { (genPath, _) =>
         Seq((2L, "half", 2.0)).toDF("k", "name", "bal")
@@ -233,7 +233,7 @@ class MergeCrashSpec extends SparkSpec {
   test("a peer's GC spares a fresh stage; with the gate off the loss is loud, not silent") {
     val dir = tmp("crash-gcrace")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true) // v1
+      "k", "op", "seq") // v1
     val fs = fsOf(dir)
     val p = new Path(dir)
     // graceful peer: a preamble GC (grace on) while our stage is fresh
@@ -320,7 +320,7 @@ class MergeCrashSpec extends SparkSpec {
   test("gc grace-gates a fresh torn commit above live; aged or superseded ones reclaim") {
     val dir = tmp("crash-gcflip")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true) // v1 live
+      "k", "op", "seq") // v1 live
     val fs = fsOf(dir)
     val p = new Path(dir)
     val torn = new Path(dir, "_graft_commit-000000000002")
@@ -356,7 +356,7 @@ class MergeCrashSpec extends SparkSpec {
   test("gc spares a racing peer's COMPLETED commit above a STALE live pointer — pointer AND generations") {
     val dir = tmp("crash-gcrace2")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true) // v1 live
+      "k", "op", "seq") // v1 live
     val realFs = fsOf(dir)
     val p = new Path(dir)
     val gen2 = ManifestCommit.stagedGenName(2L)
@@ -407,7 +407,7 @@ class MergeCrashSpec extends SparkSpec {
   test("write() read-back verify: a commit that vanishes mid-flip fails loudly, not silently") {
     val dir = tmp("crash-flipverify")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true)
+      "k", "op", "seq")
     val fs = fsOf(dir)
     val p = new Path(dir)
     // a hostile actor (peer GC with the gate off) deletes the commit
@@ -443,7 +443,7 @@ class MergeCrashSpec extends SparkSpec {
   test("vacuum reclaims aged orphaned nonce dirs, spares fresh ones") {
     val dir = tmp("crash-vacuum")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true)
+      "k", "op", "seq")
     val fs = fsOf(dir)
     val data = ManifestCommit.dataDir(new Path(dir))
     // two orphaned stages from dead writers: one old, one fresh

@@ -128,7 +128,7 @@ class MergeOccSpec extends SparkSpec {
       dir,
       Seq((1L, "I", "a", "en"), (2L, "I", "b", "de"))
         .toDF("k", "op", "name", "lang"),
-      "k", "lang", manifestCommit = true)
+      "k", "lang")
 
   /** A peer commit State: current live entries with `leaf` repointed
     * to `gen` (whose parquet the caller stages beforehand). */

@@ -32,7 +32,7 @@ class MergeTimeTravelSpec extends SparkSpec {
   test("default retention: one step of time travel; older versions fail loudly") {
     val dir = tmp("tt-default")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true)
+      "k", "op", "seq")
     MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
       "k", "op", "seq")
     MergeSink.applyBatch(spark, b((1L, "U", "a2", 1.5, 3L)), dir,
@@ -52,7 +52,7 @@ class MergeTimeTravelSpec extends SparkSpec {
     try {
       val dir = tmp("tt-deep")
       MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-        "k", "op", "seq", manifestCommit = true)
+        "k", "op", "seq")
       MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
         "k", "op", "seq")
       MergeSink.applyBatch(spark, b((1L, "D", "a", 0.0, 3L)), dir,
@@ -69,7 +69,7 @@ class MergeTimeTravelSpec extends SparkSpec {
     try {
       val dir = tmp("tt-vacuum")
       MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-        "k", "op", "seq", manifestCommit = true)
+        "k", "op", "seq")
       MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
         "k", "op", "seq")
       MergeSink.applyBatch(spark, b((1L, "U", "a2", 1.5, 3L)), dir,
@@ -91,7 +91,7 @@ class MergeTimeTravelSpec extends SparkSpec {
   test("lost live pointer falls back to a predecessor whose generations still exist") {
     val dir = tmp("tt-fallback")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true)
+      "k", "op", "seq")
     MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
       "k", "op", "seq")
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -108,8 +108,7 @@ class MergeTimeTravelSpec extends SparkSpec {
     val dir = tmp("tt-part")
     val b1 = Seq((1L, "I", "a", "en", 1L), (2L, "I", "b", "de", 2L))
       .toDF("k", "op", "name", "lang", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"),
-      manifestCommit = true)
+    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"))
     val b2 = Seq((1L, "U", "a2", "en", 3L))
       .toDF("k", "op", "name", "lang", "seq")
     MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq", Some("lang"))
@@ -134,7 +133,7 @@ class MergeTimeTravelSpec extends SparkSpec {
   test("fsck: healthy is silent; torn commits, missing and orphan generations are named") {
     val dir = tmp("fsck")
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true)
+      "k", "op", "seq")
     MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
       "k", "op", "seq")
     assert(Merge.fsck(spark, dir).count() === 0)
@@ -174,7 +173,7 @@ class MergeTimeTravelSpec extends SparkSpec {
     val dir = tmp("tt-race")
     import org.apache.spark.sql.functions.lit
     MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq", manifestCommit = true) // v1
+      "k", "op", "seq") // v1
     // writer B passes its preamble (sees v1, targets v2); writer A
     // commits v2 while B is still staging — the expected-version
     // compare before B's pointer flip must fail B loudly

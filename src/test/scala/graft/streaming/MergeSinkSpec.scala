@@ -50,18 +50,29 @@ class FlakyOpenFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 /** The maintained snapshot must equal "apply every change in seq order"
   * after any batch arrival pattern, and re-applying a batch must be a
-  * no-op (foreachBatch re-delivery safety). */
+  * no-op (foreachBatch re-delivery safety). Snapshots live on
+  * [[NoRenameFs]] wherever the test allows it, so each case also shows
+  * the commit never renames a directory. */
 class MergeSinkSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String) =
     Files.createTempDirectory(prefix).toString
 
+  /** snapshot path on the rename-forbidding filesystem */
+  private def noRenameDir(prefix: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.norename.impl", classOf[NoRenameFs].getName)
+    "norename://" + tmp(prefix) + "/snap"
+  }
+
+  private def snapshot(dir: String) = Merge.readSnapshot(spark, dir)
+
   test("streaming upsert maintains latest-by-key across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String, String, Double, Long)]
     val changes = mem.toDF().toDF("k", "op", "name", "bal", "seq")
-    val dir = tmp("mergesink") + "/snap"
+    val dir = noRenameDir("mergesink")
     val q = MergeSink.mergeInto(changes, dir, "k", "op", "seq",
       checkpoint = tmp("mergesink-ckpt"),
       trigger = Trigger.ProcessingTime(0))
@@ -69,7 +80,7 @@ class MergeSinkSpec extends SparkSpec {
     mem.addData((1L, "I", "a", 1.0, 1L), (2L, "I", "b", 2.0, 2L),
       (2L, "U", "b2", 2.5, 3L))
     q.processAllAvailable()
-    val s1 = spark.read.parquet(dir).orderBy("k")
+    val s1 = snapshot(dir).orderBy("k")
       .as[(Long, String, Double)].collect().toSeq
     assert(s1 === Seq((1L, "a", 1.0), (2L, "b2", 2.5)))
     // batch 2: delete one key, update the other, insert a third
@@ -77,62 +88,24 @@ class MergeSinkSpec extends SparkSpec {
       (3L, "I", "c", 9.0, 6L))
     q.processAllAvailable()
     q.stop()
-    val s2 = spark.read.parquet(dir).orderBy("k")
+    val s2 = snapshot(dir).orderBy("k")
       .as[(Long, String, Double)].collect().toSeq
     assert(s2 === Seq((2L, "b3", 3.0), (3L, "c", 9.0)))
   }
 
   test("re-applying the same batch is idempotent (re-delivery safety)") {
-    val dir = tmp("mergesink-idem") + "/snap"
+    val dir = noRenameDir("mergesink-idem")
     val batch = Seq((1L, "I", "a", 1.0, 1L), (2L, "I", "b", 2.0, 2L))
       .toDF("k", "op", "name", "bal", "seq")
     MergeSink.applyBatch(spark, batch, dir, "k", "op", "seq")
-    val once = spark.read.parquet(dir).orderBy("k").collect().toSeq
+    val once = snapshot(dir).orderBy("k").collect().toSeq
     MergeSink.applyBatch(spark, batch, dir, "k", "op", "seq")
-    val twice = spark.read.parquet(dir).orderBy("k").collect().toSeq
+    val twice = snapshot(dir).orderBy("k").collect().toSeq
     assert(once === twice)
   }
 
-  test("crash between the two swap renames is recovered: parked snapshot restored, batch re-applied") {
-    val dir = tmp("mergesink-crash") + "/snap"
-    val b1 = Seq((1L, "I", "a", 1.0, 1L), (2L, "I", "b", 2.0, 2L))
-      .toDF("k", "op", "name", "bal", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq")
-    // simulate dying after `rename(cur, old)` and before `rename(next, cur)`:
-    // the live dir is gone, only the parked copy exists
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val cur = new org.apache.hadoop.fs.Path(dir)
-    val old = new org.apache.hadoop.fs.Path(cur.getParent, cur.getName + ".old")
-    assert(fs.rename(cur, old))
-    // restart: the batch is re-delivered; recovery must restore the
-    // snapshot first, then the merge applies on top of it
-    val b2 = Seq((2L, "U", "b2", 3.0, 3L)).toDF("k", "op", "name", "bal", "seq")
-    MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq")
-    val got = spark.read.parquet(dir).orderBy("k")
-      .as[(Long, String, Double)].collect().toSeq
-    assert(got === Seq((1L, "a", 1.0), (2L, "b2", 3.0)))
-    assert(!fs.exists(old))
-  }
-
-  test("an EMPTY re-delivered batch still runs crash recovery first") {
-    val dir = tmp("mergesink-emptyrec") + "/snap"
-    val b1 = Seq((1L, "I", "a", 1.0, 1L)).toDF("k", "op", "name", "bal", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val cur = new org.apache.hadoop.fs.Path(dir)
-    val old = new org.apache.hadoop.fs.Path(cur.getParent, cur.getName + ".old")
-    assert(fs.rename(cur, old)) // crash window: parked, no live dir
-    // the next application's first batch carries nothing — "restored
-    // at the top of the NEXT application" must hold regardless
-    MergeSink.applyBatch(spark, b1.limit(0), dir, "k", "op", "seq")
-    assert(fs.exists(cur) && !fs.exists(old))
-    assert(spark.read.parquet(dir).count() === 1)
-  }
-
   test("partition-scoped merge is schema-rigid and layout-checked, never silently lossy") {
-    val dir = tmp("mergesink-rigid") + "/snap"
+    val dir = noRenameDir("mergesink-rigid")
     val b1 = Seq((1L, "I", "a", 9.0, "en", 1L), (2L, "I", "b", 8.0, "de", 2L))
       .toDF("k", "op", "name", "bal", "lang", "seq")
     MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"))
@@ -165,13 +138,34 @@ class MergeSinkSpec extends SparkSpec {
     assert(e3.getMessage.contains("not 'tenant'"), e3.getMessage)
 
     // and the snapshot is untouched by all three rejections
-    assert(spark.read.parquet(dir).orderBy("k")
+    assert(snapshot(dir).orderBy("k")
       .select("k", "name", "bal")
       .as[(Long, String, Double)].collect().toSeq ===
       Seq((1L, "a", 9.0), (2L, "b", 8.0)))
   }
 
-  /** (path, mtime, size) of every data file under a partition dir —
+  test("a directory already holding plain parquet is refused, never shadowed by a first commit") {
+    // data written by something other than a merge carries no commit
+    // file; a first commit beside it would resolve to the new
+    // generation alone and silently hide every existing row
+    val dir = noRenameDir("mergesink-plain")
+    Seq((1L, "a", "en"), (2L, "b", "de")).toDF("k", "name", "lang")
+      .write.partitionBy("lang").parquet(dir)
+    val b = Seq((1L, "U", "a2", "en", 3L)).toDF("k", "op", "name", "lang", "seq")
+    Seq(Some("lang"), None).foreach { pc =>
+      val e = intercept[IllegalArgumentException] {
+        MergeSink.applyBatch(spark, b, dir, "k", "op", "seq", pc)
+      }
+      assert(e.getMessage.contains("non-manifest content"), e.getMessage)
+    }
+    // nothing committed, nothing lost: the plain rows read as before
+    assert(Merge.snapshotVersions(spark, dir).isEmpty)
+    assert(spark.read.parquet(dir).select("k", "name", "lang").orderBy("k")
+      .as[(Long, String, String)].collect().toSeq ===
+      Seq((1L, "a", "en"), (2L, "b", "de")))
+  }
+
+  /** (path, mtime, size) of every data file under a generation dir —
     * byte-identity evidence that the dir was never rewritten. */
   private def fileSig(dir: String): Seq[(String, Long, Long)] = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -181,108 +175,59 @@ class MergeSinkSpec extends SparkSpec {
       .sortBy(_._1)
   }
 
-  test("partition-scoped merge touches only the changed partitions; untouched files byte-identical") {
-    val dir = tmp("mergesink-part") + "/snap"
-    // first batch through the partitioned path: creates the snapshot
-    val b1 = Seq(
-      (1L, "I", "a", "en", 1L), (2L, "I", "b", "en", 2L),
-      (3L, "I", "c", "de", 3L), (4L, "I", "d", "fr", 4L))
-      .toDF("k", "op", "name", "lang", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"))
-    val deBefore = fileSig(s"$dir/lang=de")
-    val frBefore = fileSig(s"$dir/lang=fr")
-    // second batch touches ONLY lang=en: update, delete, insert
-    val b2 = Seq(
-      (1L, "U", "a2", "en", 5L), (2L, "D", "b", "en", 6L),
-      (9L, "I", "z", "en", 7L))
-      .toDF("k", "op", "name", "lang", "seq")
-    MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq", Some("lang"))
-    val got = spark.read.parquet(dir)
-      .select("k", "name", "lang").orderBy("k")
-      .as[(Long, String, String)].collect().toSeq
-    assert(got === Seq((1L, "a2", "en"), (3L, "c", "de"),
-      (4L, "d", "fr"), (9L, "z", "en")))
-    // de/fr were neither read nor written: same files, same mtimes/sizes
-    assert(fileSig(s"$dir/lang=de") === deBefore)
-    assert(fileSig(s"$dir/lang=fr") === frBefore)
+  /** partition leaf (e.g. `lang=de`) → its live generation name */
+  private def liveLeaves(dir: String): Map[String, String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    graft.operators.ManifestCommit.liveLeafMap(graft.operators.ManifestCommit
+      .read(p.getFileSystem(spark.sessionState.newHadoopConf()), p))
   }
 
-  test("partition-scoped merge: deleting every row of a partition removes its directory") {
-    val dir = tmp("mergesink-partdel") + "/snap"
-    val b1 = Seq((1L, "I", "a", "en", 1L), (2L, "I", "b", "de", 2L))
-      .toDF("k", "op", "name", "lang", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"))
-    val b2 = Seq((2L, "D", "b", "de", 3L)).toDF("k", "op", "name", "lang", "seq")
-    MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq", Some("lang"))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/lang=de")))
-    val got = spark.read.parquet(dir).select("k").as[Long].collect().toSeq
-    assert(got === Seq(1L))
-  }
-
-  test("partition-scoped crash between park and promote is recovered") {
-    val dir = tmp("mergesink-partcrash") + "/snap"
-    val b1 = Seq((1L, "I", "a", "en", 1L), (2L, "I", "b", "de", 2L))
-      .toDF("k", "op", "name", "lang", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"))
-    // simulate dying after parking lang=en and before promoting staged:
-    // live dir gone, hidden parked dir present (invisible to readers)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val live = new org.apache.hadoop.fs.Path(s"$dir/lang=en")
-    val parked = new org.apache.hadoop.fs.Path(s"$dir/.merge_old_lang=en")
-    assert(fs.rename(live, parked))
-    assert(spark.read.parquet(dir).count() === 1) // reader sees de only
-    // restart: re-delivered batch recovers the parked partition first
-    val b2 = Seq((1L, "U", "a2", "en", 3L)).toDF("k", "op", "name", "lang", "seq")
-    MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq", Some("lang"))
-    val got = spark.read.parquet(dir)
-      .select("k", "name").orderBy("k").as[(Long, String)].collect().toSeq
-    assert(got === Seq((1L, "a2"), (2L, "b")))
-    assert(!fs.exists(parked))
-  }
+  private def liveGen(dir: String, leaf: String): String =
+    s"$dir/data/$leaf/${liveLeaves(dir)(leaf)}"
 
   test("streaming mergeInto with partitionCol routes batches through the partition-scoped path") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String, String, String, Long)]
     val changes = mem.toDF().toDF("k", "op", "name", "lang", "seq")
-    val dir = tmp("mergesink-stream-part") + "/snap"
+    val dir = noRenameDir("mergesink-stream-part")
     val q = MergeSink.mergeInto(changes, dir, "k", "op", "seq",
       checkpoint = tmp("mergesink-stream-part-ckpt"),
       trigger = Trigger.ProcessingTime(0), partitionCol = Some("lang"))
     mem.addData((1L, "I", "a", "en", 1L), (2L, "I", "b", "de", 2L))
     q.processAllAvailable()
-    val deBefore = fileSig(s"$dir/lang=de")
+    val deGen = liveGen(dir, "lang=de")
+    val deBefore = fileSig(deGen)
     mem.addData((1L, "U", "a2", "en", 3L), (3L, "I", "c", "en", 4L))
     q.processAllAvailable()
     q.stop()
-    val got = spark.read.parquet(dir)
+    val got = snapshot(dir)
       .select("k", "name", "lang").orderBy("k")
       .as[(Long, String, String)].collect().toSeq
     assert(got === Seq((1L, "a2", "en"), (2L, "b", "de"), (3L, "c", "en")))
-    // the de partition was untouched by batch 2
-    assert(fileSig(s"$dir/lang=de") === deBefore)
+    // the de partition was untouched by batch 2: same live generation,
+    // same files
+    assert(liveGen(dir, "lang=de") === deGen)
+    assert(fileSig(deGen) === deBefore)
   }
 
   test("partition values with filesystem-hostile characters round-trip the swap") {
     // '=' , '/' and space must escape in the partition dir name exactly
-    // the way Spark's own writer escapes them, or the swap renames the
-    // wrong directory
-    val dir = tmp("mergesink-partesc") + "/snap"
+    // the way Spark's own writer escapes them, or the commit names a
+    // generation under the wrong partition directory
+    val dir = noRenameDir("mergesink-partesc")
     val b1 = Seq((1L, "I", "a", "e n=/x", 1L), (2L, "I", "b", "de", 2L))
       .toDF("k", "op", "name", "lang", "seq")
     MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"))
     val b2 = Seq((1L, "U", "a2", "e n=/x", 3L)).toDF("k", "op", "name", "lang", "seq")
     MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq", Some("lang"))
-    val got = spark.read.parquet(dir)
+    val got = snapshot(dir)
       .select("k", "name", "lang").orderBy("k")
       .as[(Long, String, String)].collect().toSeq
     assert(got === Seq((1L, "a2", "e n=/x"), (2L, "b", "de")))
   }
 
   test("a null partition value in the change set is rejected, not dropped") {
-    val dir = tmp("mergesink-partnull") + "/snap"
+    val dir = noRenameDir("mergesink-partnull")
     val b = Seq((1L, "I", "a", null.asInstanceOf[String], 1L))
       .toDF("k", "op", "name", "lang", "seq")
     val e = intercept[IllegalArgumentException] {
@@ -292,11 +237,11 @@ class MergeSinkSpec extends SparkSpec {
   }
 
   test("an empty-string partition value is rejected like null, not silently lost") {
-    // Spark's dynamic-partition writer folds '' into the null partition
-    // (__HIVE_DEFAULT_PARTITION__), so the swap would look for 'lang='
-    // (never staged) and read it as partition-fully-deleted — the merged
-    // rows would vanish while the batch reported success
-    val dir = tmp("mergesink-partempty") + "/snap"
+    // Spark's partitioned writers fold '' into the null partition
+    // (__HIVE_DEFAULT_PARTITION__), so 'lang=' cannot round-trip a
+    // partition path — the merged rows would land where no read finds
+    // them while the batch reported success
+    val dir = noRenameDir("mergesink-partempty")
     val b = Seq((1L, "I", "a", "", 1L)).toDF("k", "op", "name", "lang", "seq")
     val e = intercept[IllegalArgumentException] {
       MergeSink.applyBatch(spark, b, dir, "k", "op", "seq", Some("lang"))
@@ -304,36 +249,8 @@ class MergeSinkSpec extends SparkSpec {
     assert(e.getMessage.contains("empty-string 'lang'"))
   }
 
-  test("a whole-snapshot park from a crashed unpartitioned swap recovers before a partitioned merge") {
-    // crash simulation: snapshot parked at <dir>.old, live dir missing —
-    // the unpartitioned swap's mid-crash state. A restart that switched
-    // to partitionCol mode must FIRST restore the park (recovery cannot
-    // depend on the configured mode), then refuse the flat layout loudly
-    // instead of merging against empty and burying the restored data.
-    val base = tmp("mergesink-modeswitch")
-    val dir = base + "/snap"
-    val b1 = Seq((1L, "I", "a", "en", 1L), (2L, "I", "b", "de", 2L))
-      .toDF("k", "op", "name", "lang", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", None) // unpartitioned
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".old"))) // simulate the crash window
-    val b2 = Seq((1L, "U", "a2", "en", 3L)).toDF("k", "op", "name", "lang", "seq")
-    val e = intercept[IllegalArgumentException] {
-      MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq", Some("lang"))
-    }
-    assert(e.getMessage.contains("not Hive-partitioned"))
-    // the parked snapshot was restored BEFORE the refusal — nothing lost
-    val got = spark.read.parquet(dir)
-      .select("k", "name", "lang").orderBy("k")
-      .as[(Long, String, String)].collect().toSeq
-    assert(got === Seq((1L, "a", "en"), (2L, "b", "de")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".old")))
-  }
-
   test("a partition move (D old + I new in one batch) relocates the key") {
-    val dir = tmp("mergesink-partmove") + "/snap"
+    val dir = noRenameDir("mergesink-partmove")
     val b1 = Seq((1L, "I", "a", "en", 1L), (2L, "I", "b", "de", 2L))
       .toDF("k", "op", "name", "lang", "seq")
     MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"))
@@ -342,17 +259,16 @@ class MergeSinkSpec extends SparkSpec {
     val b2 = Seq((2L, "D", "b", "de", 3L), (2L, "I", "b2", "en", 4L))
       .toDF("k", "op", "name", "lang", "seq")
     MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq", Some("lang"))
-    val got = spark.read.parquet(dir)
+    val got = snapshot(dir)
       .select("k", "name", "lang").orderBy("k")
       .as[(Long, String, String)].collect().toSeq
     assert(got === Seq((1L, "a", "en"), (2L, "b2", "en")))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/lang=de")))
+    // the emptied partition dropped out of the live commit
+    assert(liveLeaves(dir).keySet === Set("lang=en"))
   }
 
   test("two non-D rows for one key across partitions are rejected, not duplicated") {
-    val dir = tmp("mergesink-partdup") + "/snap"
+    val dir = noRenameDir("mergesink-partdup")
     val b = Seq((1L, "I", "a", "en", 1L), (1L, "I", "a2", "de", 2L))
       .toDF("k", "op", "name", "lang", "seq")
     val e = intercept[IllegalArgumentException] {
@@ -361,25 +277,16 @@ class MergeSinkSpec extends SparkSpec {
     assert(e.getMessage.contains("partition move"))
   }
 
-  // ---- manifest-commit protocol (object-store simulation) ----
-
-  /** snapshot path on the rename-forbidding filesystem */
-  private def noRenameDir(prefix: String): String = {
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.norename.impl", classOf[NoRenameFs].getName)
-    "norename://" + tmp(prefix) + "/snap"
-  }
+  // ---- commit protocol: crash debris, layout modes, store faults ----
 
   test("manifest commit: whole-snapshot merge without a single rename") {
     val dir = noRenameDir("mergesink-manifest")
     val b1 = Seq((1L, "I", "a", 1.0, 1L), (2L, "I", "b", 2.0, 2L))
       .toDF("k", "op", "name", "bal", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq",
-      manifestCommit = true)
+    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq")
     val s1 = graft.operators.Merge.readSnapshot(spark, dir).orderBy("k")
       .as[(Long, String, Double)].collect().toSeq
     assert(s1 === Seq((1L, "a", 1.0), (2L, "b", 2.0)))
-    // second batch auto-detects the manifest (no flag needed)
     val b2 = Seq((1L, "D", "a", 0.0, 3L), (2L, "U", "b2", 3.0, 4L),
       (3L, "I", "c", 9.0, 5L)).toDF("k", "op", "name", "bal", "seq")
     MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq")
@@ -396,8 +303,7 @@ class MergeSinkSpec extends SparkSpec {
   test("manifest commit: torn commit file and orphan generation are recovered") {
     val dir = noRenameDir("mergesink-manifest-crash")
     val b1 = Seq((1L, "I", "a", 1.0, 1L)).toDF("k", "op", "name", "bal", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq",
-      manifestCommit = true)
+    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq")
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     // simulate a crash mid-batch-2: a fully staged generation exists but
@@ -429,14 +335,48 @@ class MergeSinkSpec extends SparkSpec {
     assert(got === Seq((1L, "a", 1.0), (2L, "b", 2.0)))
   }
 
+  test("partition-scoped crash between generation write and commit flip is recovered") {
+    val dir = noRenameDir("mergesink-partcrash")
+    val b1 = Seq((1L, "I", "a", "en", 1L), (2L, "I", "b", "de", 2L))
+      .toDF("k", "op", "name", "lang", "seq")
+    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"))
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // simulate dying mid-batch-2: lang=en's new generation is staged and
+    // the commit file naming it tore half-way (no trailer)
+    val orphan = s"$dir/data/lang=en/g-000000000002-dead"
+    Seq((1L, "half")).toDF("k", "name").write.parquet(orphan)
+    val torn = fs.create(
+      new org.apache.hadoop.fs.Path(dir + "/_graft_commit-000000000002"), false)
+    torn.write("graft-commit v1 2\nlang=en/g-000000000002-dead\n".getBytes("UTF-8"))
+    torn.close()
+    // age the debris past the staged-grace window, as real crash debris
+    // is by the time the batch is re-delivered
+    def age(q: org.apache.hadoop.fs.Path): Unit = {
+      fs.setTimes(q, System.currentTimeMillis() - 600000L, -1L)
+      if (fs.getFileStatus(q).isDirectory)
+        fs.listStatus(q).foreach(c => age(c.getPath))
+    }
+    age(new org.apache.hadoop.fs.Path(orphan))
+    age(new org.apache.hadoop.fs.Path(dir + "/_graft_commit-000000000002"))
+    // readers still resolve the last whole commit
+    assert(snapshot(dir).select("k", "name").orderBy("k")
+      .as[(Long, String)].collect().toSeq === Seq((1L, "a"), (2L, "b")))
+    // re-delivered batch 2: the preamble GC clears the debris, then applies
+    val b2 = Seq((1L, "U", "a2", "en", 3L)).toDF("k", "op", "name", "lang", "seq")
+    MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq", Some("lang"))
+    assert(snapshot(dir).select("k", "name").orderBy("k")
+      .as[(Long, String)].collect().toSeq === Seq((1L, "a2"), (2L, "b")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(orphan)))
+  }
+
   test("manifest commit: partition-scoped merge, untouched generation byte-identical, moves and full-deletes work") {
     val dir = noRenameDir("mergesink-manifest-part")
     val b1 = Seq(
       (1L, "I", "a", "en", 1L), (2L, "I", "b", "de", 2L),
       (3L, "I", "c", "de", 3L))
       .toDF("k", "op", "name", "lang", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"),
-      manifestCommit = true)
+    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"))
     // resolve v1's actual (writer-unique) generation dir name under de
     val deGen = {
       val p = new org.apache.hadoop.fs.Path(s"$dir/data/lang=de")
@@ -480,8 +420,7 @@ class MergeSinkSpec extends SparkSpec {
     val dir = tmp("mergesink-drain") + "/snap"
     val b1 = Seq((1L, "I", "a", "en", 1L), (2L, "I", "b", "de", 2L))
       .toDF("k", "op", "name", "lang", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"),
-      manifestCommit = true)
+    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq", Some("lang"))
     // a batch deletes EVERY remaining row of every live partition
     val b2 = Seq((1L, "D", "a", "en", 3L), (2L, "D", "b", "de", 4L))
       .toDF("k", "op", "name", "lang", "seq")
@@ -516,8 +455,7 @@ class MergeSinkSpec extends SparkSpec {
       .set("fs.flakyopen.impl", classOf[FlakyOpenFs].getName)
     val dir = "flakyopen://" + tmp("mergesink-flaky") + "/snap"
     val b1 = Seq((1L, "I", "a", 1.0, 1L)).toDF("k", "op", "name", "bal", "seq")
-    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq",
-      manifestCommit = true)
+    MergeSink.applyBatch(spark, b1, dir, "k", "op", "seq")
     val b2 = Seq((2L, "I", "b", 2.0, 2L)).toDF("k", "op", "name", "bal", "seq")
     MergeSink.applyBatch(spark, b2, dir, "k", "op", "seq")
     FlakyOpenFs.failCommitOpens = true
@@ -540,13 +478,13 @@ class MergeSinkSpec extends SparkSpec {
   }
 
   test("intra-batch multi-versions compact by seq before merging") {
-    val dir = tmp("mergesink-seq") + "/snap"
+    val dir = noRenameDir("mergesink-seq")
     // same key three times in one batch; highest seq (a delete) wins
     val batch = Seq((1L, "I", "a", 1.0, 10L), (1L, "U", "a2", 2.0, 11L),
       (1L, "D", "a2", 0.0, 12L), (2L, "I", "b", 5.0, 1L))
       .toDF("k", "op", "name", "bal", "seq")
     MergeSink.applyBatch(spark, batch, dir, "k", "op", "seq")
-    val got = spark.read.parquet(dir).orderBy("k")
+    val got = snapshot(dir).orderBy("k")
       .as[(Long, String, Double)].collect().toSeq
     assert(got === Seq((2L, "b", 5.0)))
   }
