@@ -176,18 +176,13 @@ object Bucketing {
     * concurrent MUTATION deletes mid-read fails loudly under the
     * strict-reads contract every mutation enforces
     * ([[requireStrictFileReads]]); mutations themselves are
-    * single-writer, so their own prunedScans never race a writer. */
+    * single-writer, so their own prunedScans never race a writer.
+    *
+    * The selectivity guard's boundary is measured in SCALING.md's
+    * "Bucket-pruned location" and "The location crossover at 10M
+    * docs" sections. */
   def prunedScan(spark: SparkSession, table: String,
-      bucketRows: DataFrame): DataFrame =
-    prunedScanImpl(spark, table, bucketRows, guard = true)
-
-  /** [[prunedScan]] with the selectivity guard optionally bypassed —
-    * measurement access for `tools/SigStoreCost`'s location
-    * head-to-head (the guard encodes a measured boundary; the tool
-    * must be able to time the raw mechanism on BOTH sides of it).
-    * Production callers use [[prunedScan]]. */
-  private[graft] def prunedScanImpl(spark: SparkSession, table: String,
-      bucketRows: DataFrame, guard: Boolean): DataFrame = {
+      bucketRows: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table))
@@ -219,7 +214,7 @@ object Bucketing {
     // with the gap growing in the corpus while the pruned term stays
     // batch-proportional. The half-the-buckets boundary separated
     // win from loss at every measured point.
-    if (guard && wanted.size * 2 >= spec.numBuckets)
+    if (wanted.size * 2 >= spec.numBuckets)
       return spark.table(table)
     val fsys = new org.apache.hadoop.fs.Path(meta.location)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

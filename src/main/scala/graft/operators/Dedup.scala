@@ -1233,8 +1233,8 @@ object Dedup {
     * drops by ~2^(64/(r+1)) on RANDOM keys (~556× at radius 6). Real
     * corpora cluster below that: measured 23.7× at sf0.1 (5.14M →
     * 217k candidates) and 20.8× at sf1 (56.2M → 2.71M) at radius 6 —
-    * see SCALING.md §SimHash; `graft.tools.SimhashVolume` reproduces
-    * the numbers. */
+    * see SCALING.md §SimHash; [[Dedup.simhashCandidateVolume]]
+    * reproduces the numbers. */
   private[operators] def simhashSignatures128(df: DataFrame,
       idCol: String, textCol: String,
       portable: Boolean = false): DataFrame = {

@@ -106,7 +106,26 @@ private[graft] object ManifestCommit {
     }
   }
 
-  private def commitName(v: Long): String = f"$Prefix$v%012d"
+  def commitName(v: Long): String = f"$Prefix$v%012d"
+
+  /** Generation dirs under `<dir>/data`, committed or not, relative to
+    * it (`g-…` or `<leaf>/g-…`), sorted. */
+  def generationDirs(fs: FileSystem, dir: Path): Seq[String] = {
+    val data = dataDir(dir)
+    def dirs(p: Path): Seq[String] =
+      fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+    if (!fs.exists(data)) return Nil
+    dirs(data).flatMap { n =>
+      if (n.startsWith("g-")) Seq(n)
+      else dirs(new Path(data, n)).filter(_.startsWith("g-")).map(n + "/" + _)
+    }.sorted
+  }
+
+  /** The version a generation dir name (`g-<v>` or `g-<v>-<nonce>`,
+    * optionally under a leaf) was staged for. */
+  def generationVersion(rel: String): Long =
+    rel.substring(rel.lastIndexOf('/') + 1).stripPrefix("g-")
+      .takeWhile(_.isDigit).toLong
 
   def exists(fs: FileSystem, dir: Path): Boolean =
     fs.exists(dir) &&

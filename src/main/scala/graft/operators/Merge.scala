@@ -40,6 +40,11 @@ object Merge {
     * whole-snapshot merge's guard riding the generation write. */
   val MultiNonDToken = "GRAFT_MULTI_NON_D"
 
+  /** The token [[readSnapshot]]'s refusal carries for a snapshot dir
+    * that holds staged generations but no whole commit: its writer died
+    * before the first commit landed, so nothing there is readable. */
+  val NoCommitToken = "GRAFT_NO_COMMIT"
+
   /** The op domain is CLOSED: 'I'/'U'/'D', non-null, case-sensitive.
     * Anything else raises at execution on the offending row — the CDC
     * failure modes this kills are a lowercase 'd' silently acting as
@@ -435,14 +440,25 @@ object Merge {
   /** Read a [[mergePartitioned]]/[[graft.streaming.MergeSink]] snapshot,
     * resolving through the manifest when one exists (manifest-committed
     * snapshots MUST be read this way — a raw directory read would see
-    * every generation). A directory no merge has committed to reads
-    * as plain parquet, so callers can use it unconditionally. */
+    * every generation). A directory no merge has touched reads as
+    * plain parquet, so callers can use it unconditionally; one holding
+    * generations but no whole commit is refused with [[NoCommitToken]]. */
   def readSnapshot(spark: SparkSession, snapshotDir: String): DataFrame = {
     val dir = new Path(snapshotDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     ManifestCommit.read(fs, dir) match {
       case Some(st) => resolveState(spark, dir, st)
-      case None     => spark.read.parquet(snapshotDir)
+      case None =>
+        val staged = ManifestCommit.generationDirs(fs, dir)
+        if (staged.nonEmpty) {
+          val first = staged.map(ManifestCommit.generationVersion).min
+          throw new IllegalStateException(
+            s"[$NoCommitToken] snapshot at $dir has no commit: " +
+              s"${ManifestCommit.commitName(first)} never landed for the " +
+              s"staged generation(s) ${staged.mkString(", ")} — its " +
+              "writer died before the first commit; re-run the merge")
+        }
+        spark.read.parquet(snapshotDir)
     }
   }
 

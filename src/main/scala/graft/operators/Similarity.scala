@@ -2479,8 +2479,9 @@ object Similarity {
    * size, not the corpus (the incremental-maintenance contract; cost
    * measured vs full rebuild in SCALING.md).
    *
-   * Convergence is over REPEATED applications, not one shot
-   * (tools.SplitCost measures the trajectory): 2-means on a hot shard
+   * Convergence is over REPEATED applications, not one shot (the
+   * measured trajectory is SCALING.md's "Hot-shard rebalance"
+   * entry): 2-means on a hot shard
    * holding a dominant cluster plus a minority cluster settles on the
    * cluster separation — it PEELS the minority first, and only a later
    * split bisects the dominant mass. Each call costs ∝ the then-hot

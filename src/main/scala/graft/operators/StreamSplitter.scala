@@ -81,12 +81,7 @@ object StreamSplitter {
    */
   def splitAll(env: DataFrame, outDir: String,
       mode: SaveMode = SaveMode.Overwrite): Unit =
-    env.filter(col("data").isNotNull)
-      .withColumn("schema_name", schemaNameCol)
-      .withColumn("table_name", tableNameCol)
-      .write.mode(mode)
-      .partitionBy("schema_name", "table_name")
-      .parquet(outDir)
+    writeSplit(env, outDir, mode)
 
   /**
    * Idempotent replay of part of the stream (backfill story): with
@@ -98,15 +93,10 @@ object StreamSplitter {
    * between replaying 100 GB and rewriting 100 TB.
    */
   def replayAll(env: DataFrame, outDir: String): Unit =
-    env.filter(col("data").isNotNull)
-      .withColumn("schema_name", schemaNameCol)
-      .withColumn("table_name", tableNameCol)
-      .write.mode(SaveMode.Overwrite)
-      // per-write option, NOT the session conf: concurrent writers on
-      // the same session must not inherit dynamic-overwrite semantics
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("schema_name", "table_name")
-      .parquet(outDir)
+    // per-write option, NOT the session conf: concurrent writers on
+    // the same session must not inherit dynamic-overwrite semantics
+    writeSplit(env, outDir, SaveMode.Overwrite,
+      Map("partitionOverwriteMode" -> "dynamic"))
 
   /**
    * [[splitAll]] with pipeline observability: an `Observation` collects
@@ -122,14 +112,21 @@ object StreamSplitter {
       count(col("data")).as("n_kept"),
       sum(when(col("data").isNull, 1L).otherwise(0L)).as("n_controls_dropped"),
       approx_count_distinct(tableNameCol).as("n_tables"))
-    observed.filter(col("data").isNotNull)
-      .withColumn("schema_name", schemaNameCol)
-      .withColumn("table_name", tableNameCol)
-      .write.mode(mode)
-      .partitionBy("schema_name", "table_name")
-      .parquet(outDir)
+    writeSplit(observed, outDir, mode)
     obs.get
   }
+
+  /** The one split write behind [[splitAll]], [[replayAll]] and
+    * [[splitAllObserved]]: control records dropped, every row written
+    * under its hive partition (schema_name, table_name). */
+  private def writeSplit(env: DataFrame, outDir: String, mode: SaveMode,
+      options: Map[String, String] = Map.empty): Unit =
+    env.filter(col("data").isNotNull)
+      .withColumn("schema_name", schemaNameCol)
+      .withColumn("table_name", tableNameCol)
+      .write.mode(mode).options(options)
+      .partitionBy("schema_name", "table_name")
+      .parquet(outDir)
 
   /**
    * Drift-tolerant read of a split table (SURVEY §7.3 risk 4): appended

@@ -137,6 +137,25 @@ class GenerationReadSpec extends SparkSpec {
     sameRefusal() // PATH_NOT_FOUND
   }
 
+  test("a dir whose first commit never landed is refused with NoCommitToken; plain parquet still reads") {
+    val rows = Seq((1L, "I"), (2L, "I")).toDF("k", "op")
+    val whole = tmp("gen-read-nocommit")
+    rows.write.parquet(new Path(ManifestCommit.dataDir(new Path(whole)),
+      ManifestCommit.genName(1) + "-dead").toString)
+    val parted = tmp("gen-read-nocommit-part")
+    rows.write.parquet(new Path(ManifestCommit.dataDir(new Path(parted)),
+      "p=a/" + ManifestCommit.genName(1) + "-dead").toString)
+    Seq(whole, parted).foreach { dir =>
+      assert(Merge.snapshotVersions(spark, dir).isEmpty)
+      val e = intercept[IllegalStateException](Merge.readSnapshot(spark, dir))
+      assert(e.getMessage.contains(Merge.NoCommitToken))
+      assert(e.getMessage.contains(ManifestCommit.commitName(1)))
+    }
+    val plain = tmp("gen-read-plain")
+    rows.write.parquet(plain)
+    assert(Merge.readSnapshot(spark, plain).count() === 2)
+  }
+
   test("job pins: snapshot read 1, whole-manifest merge 3, MergeSink batch 4 (probe + 3)") {
     val dir = tmp("gen-read-jobs")
     Merge.mergeWholeManifest(spark, dir, wide(wideRow(1L, "I"), wideRow(2L, "I")), "k")

@@ -1,0 +1,33 @@
+package graft.tools
+
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+import graft.sources.Tables
+
+/** The profiler's collector: per-phase job counts are exactly the jobs
+  * each body submits, and the collector itself costs no job. */
+class ProfileSpec extends SparkSpec {
+
+  test("collector: per-phase job counts equal jobsOf; registering it adds 0 jobs") {
+    def scan(): Unit = { Tables.load(spark, sf0001, "orders").count(); () }
+    def agg(): Unit = Tables.load(spark, sf0001, "orders")
+      .groupBy("o_custkey").agg(sum("o_totalprice"))
+      .write.format("noop").mode("overwrite").save()
+    val expected = Seq(jobsOf(scan()), jobsOf(agg()))
+    assert(expected.forall(_ > 0))
+    var c: Profile.Collector = null
+    assert(jobsOf { c = new Profile.Collector(spark) } === 0)
+    try {
+      assert(Seq(jobsOf(scan()), jobsOf(agg())) === expected)
+      c.phase("scan")(scan())
+      c.phase("agg")(agg())
+      val phases = c.take()
+      assert(phases.map(_.name) === Seq("scan", "agg"))
+      assert(phases.map(_.jobs) === expected)
+      assert(phases.map(_.sites.map(_._2.toLong).sum) === expected)
+      assert(phases(1).shuffleWriteMB > 0)
+      assert(c.take().isEmpty)
+    } finally c.close()
+  }
+}

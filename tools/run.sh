@@ -4,6 +4,8 @@
 # SPARK_DRIVER_MEM, defaulting to build.sbt's 8g.
 #   tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/vfy
 #   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 tools/run.sh graft.Bench
+#   SPARK_GRAFT_SF_DIR=<sfDir> tools/run.sh graft.tools.Profile \
+#     q11_events_json lifecycle:q139
 repo="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 exec java -XX:+IgnoreUnrecognizedVMOptions \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
