@@ -39,10 +39,29 @@ object SparkEntry {
     }))
     tok
   }
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(); ()
   }
+
+  /** Drop every table of the current database whose name holds `marker`
+    * and delete the warehouse entries whose name holds it (a bucketed
+    * signature store's `<table>__dlog` op log is a warehouse sibling,
+    * not a table). */
+  private[graft] def dropScratch(spark: SparkSession, marker: String): Unit = {
+    spark.catalog.listTables().collect().map(_.name).filter(_.contains(marker))
+      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(wh))
+      fs.listStatus(wh).map(_.getPath).filter(_.getName.contains(marker))
+        .foreach(fs.delete(_, true))
+  }
+
+  /** Drop the catalog tables this JVM's queries created (their names
+    * carry the per-JVM token), so repeated runs do not grow the
+    * warehouse. */
+  def dropScratchTables(spark: SparkSession): Unit = dropScratch(spark, jvmToken)
 
   /** (doc_id, entropy): exact char-frequency entropy — explode →
     * (doc, char) count → bounded sorted fold. The one definition behind

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterBridge
 import org.apache.spark.sql.functions._
+import scala.collection.parallel.CollectionConverters._
 
 /**
  * Batch MERGE: apply a keyed change set (op ∈ I/U/D) onto a snapshot in
@@ -538,27 +539,104 @@ object Merge {
           "merge the rows into a fresh snapshot dir as op = 'I' changes")
     }
 
-  /** Whole-snapshot merge, shared with [[graft.streaming.MergeSink]]
-    * so the gc → read → layout-guard → generation-write → commit → gc
-    * protocol lives in ONE place: write the merged snapshot once into
-    * an immutable generation dir at its final path, then flip the
-    * commit pointer ([[ManifestCommit]]). */
+  /** One whole-snapshot MERGE of [[mergeWholeManifests]]: `changes`
+    * (at most one surviving change per key) onto the snapshot at
+    * `snapshotDir`. */
+  final case class WholeMerge(snapshotDir: String, changes: DataFrame,
+      key: String, opCol: String = "op")
+
+  /** [[mergeWholeManifests]] over one snapshot. */
   def mergeWholeManifest(spark: SparkSession, snapshotDir: String,
       changes: DataFrame, key: String,
-      opCol: String = "op"): Unit = {
-    // NO ControlPlane scope here, deliberately (r17 A/B): unlike the
-    // id-set mutation paths, the merge's full-outer join and the
-    // generation write ARE the data plane of this store family — AQE's
-    // runtime coalescing sizes the written generation's files from the
-    // actual merged bytes, and turning it off measurably inflated the
-    // file count and the write (q123: jobs 41→20 but wall +40% and
-    // +3 MB written). The change set is evaluated once, by the
-    // generation write — no separate guard action, so nothing here
-    // caches it: a persist would only add its own fill job.
-    val guardMsg =
-      s"changes carry multiple non-D rows for one '$key' " +
-        s"[$MultiNonDToken] — compact the batch to at most one " +
-        "surviving change per key (CdcMaterializer.latestSnapshot) before merging"
+      opCol: String = "op"): Unit =
+    mergeWholeManifests(spark, Seq(WholeMerge(snapshotDir, changes, key, opCol)))
+
+  /** Whole-snapshot merges, shared with [[graft.streaming.MergeSink]],
+    * [[graft.streaming.IngestPipeline]], [[JoinView]] and
+    * [[DeletionVectors]]: every input is staged ([[stageWhole]]), all
+    * merged snapshots are written into their immutable generation dirs
+    * by ONE Spark job ([[GenerationWriter.writeAll]]), then each commit
+    * pointer flips ([[flipWhole]]) — one job for any number of
+    * snapshots, no rename anywhere.
+    *
+    * A refused or failed write flips NO snapshot: a multi-non-D guard
+    * trip in any input surfaces as the `IllegalArgumentException`
+    * carrying [[MultiNonDToken]], and every snapshot keeps its version.
+    * A flip that fails part-way leaves the snapshots flipped before it
+    * committed and the rest unmoved. Either way every generation this
+    * call staged whose commit file never landed is deleted before the
+    * failure rethrows (one whose commit landed may be live, and is
+    * left to the grace-gated gc) — a deterministic refusal is not a crash, and leftover
+    * stages would trip the next commit's concurrent-writer guard until
+    * the staging grace expires (best-effort; a failed delete leaves the
+    * state a died writer leaves, which heals the same way). Each merge
+    * is idempotent, so re-running the whole set converges. */
+  def mergeWholeManifests(spark: SparkSession, merges: Seq[WholeMerge]): Unit = {
+    // the AQE-off write sizes each generation from its plan's sized
+    // leaves (the live generation and the change side), so r17's
+    // AQE-off file inflation (q123) does not recur: a merge within the
+    // advisory partition size runs as one task writing one part file,
+    // a larger one gets one part file per advisory size. The change
+    // set is evaluated once, by the generation write — no separate
+    // guard action, so nothing here caches it: a persist would only
+    // add its own fill job.
+    val staged = scala.collection.mutable.ArrayBuffer.empty[
+      (StagedWhole, DataFrame, String, Array[Path])]
+    var flipped = 0
+    try {
+      // staging writes nothing: the gc, the live generation's footer
+      // read and the frame's analysis are local work, done side by side
+      staged ++= merges.par.map { m =>
+        val s = stageWhole(spark, m.snapshotDir)
+        val (frame, pinned) = mergedWhole(spark, m, s)
+        (s, frame, guardMessage(m.key), pinned)
+      }.seq
+      GenerationWriter.writeAll(spark, staged.toSeq.map { case (s, f, _, _) =>
+        (f, s.genPath.toString) })
+      // `flipped` counts the snapshots whose commit write started
+      staged.foreach { case (s, _, _, _) =>
+        flipWhole(spark, s, committing = () => flipped += 1) }
+    } catch {
+      case e: Throwable =>
+        // the generations before the failing flip are live; the failing
+        // flip's may be too once its commit file exists (the write can
+        // fail after the file landed, e.g. on its read-back or the
+        // post-commit gc, and a file that cannot be checked counts as
+        // landed); every other staged generation is unreferenced
+        staged.zipWithIndex.foreach { case ((s, _, _, _), i) =>
+          if (i >= flipped || (i == flipped - 1 && !commitLanded(s)))
+            try { s.fs.delete(s.genPath, true); () }
+            catch { case _: Throwable => () }
+        }
+        // surface the riding guard as the same pre-commit refusal it
+        // always was (spec-pinned type + message), unwrapped from the
+        // write job's failure chain
+        if (guardTripped(e)) {
+          val msg = staged.map(_._3).find(m => chainHas(e, m))
+            .getOrElse(staged.head._3)
+          throw new IllegalArgumentException(s"requirement failed: $msg", e)
+        }
+        throw e
+    }
+    // post-flip: the folded sidecar files are inert (version rule) —
+    // best-effort removal; a crash here is healed by the next fold
+    staged.foreach { case (s, _, _, pinned) =>
+      DeletionVectors.clearPinned(spark, s.dir.toString, pinned) }
+  }
+
+  private def commitLanded(s: StagedWhole): Boolean =
+    try s.fs.exists(new Path(s.dir, ManifestCommit.commitName(s.version)))
+    catch { case _: Throwable => true }
+
+  private def guardMessage(key: String): String =
+    s"changes carry multiple non-D rows for one '$key' " +
+      s"[$MultiNonDToken] — compact the batch to at most one " +
+      "surviving change per key (CdcMaterializer.latestSnapshot) before merging"
+
+  /** The merged snapshot one [[WholeMerge]] writes into its staged
+    * generation, with the deletion-vector sidecar files it folded. */
+  private def mergedWhole(spark: SparkSession, m: WholeMerge,
+      s: StagedWhole): (DataFrame, Array[Path]) = {
     // at most one SURVIVING copy per key (mergeBatch's documented
     // contract, enforced where a store commit makes the corruption
     // durable): two non-D rows for one key would fan the full-outer
@@ -568,96 +646,60 @@ object Merge {
     // to one surviving row). The guard RIDES THE GENERATION WRITE
     // (r17): a per-key non-D count windowed over the change side —
     // co-partitioned with the merge join, so no extra exchange —
-    // raises from the write job on the first violation, replacing
-    // the separate pre-commit guard action that cost one driver
-    // round-trip per commit (guide §1.2). The pointer flips only
-    // after a fully successful write, so a refused batch leaves the
-    // store untouched exactly as before; the partial staged
-    // generation is ordinary debris the next preamble GC clears.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
-    val guarded = changes
+    // raises from the write job on the first violation. The pointer
+    // flips only after a fully successful write, so a refused batch
+    // leaves the store untouched.
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(m.key))
+    val guarded = m.changes
       .withColumn("__nnd",
-        sum(when(col(opCol) =!= "D", 1L).otherwise(0L)).over(w))
-      .withColumn(opCol, when(col("__nnd") > 1,
-        raise_error(lit(guardMsg))).otherwise(col(opCol)))
+        sum(when(col(m.opCol) =!= "D", 1L).otherwise(0L)).over(w))
+      .withColumn(m.opCol, when(col("__nnd") > 1,
+        raise_error(lit(guardMessage(m.key)))).otherwise(col(m.opCol)))
       .drop("__nnd")
-    var pinnedTombs: Array[org.apache.hadoop.fs.Path] = Array.empty
-    var stagedGen: String = null
-    try commitWholeGeneration(spark, snapshotDir) { (genPath, st) =>
-      stagedGen = genPath
-      val data = ManifestCommit.dataDir(new Path(snapshotDir))
-      val target0 = st.filter(_.live.nonEmpty)
-        .map(s => readGeneration(spark, new Path(data, s.live.head)))
-        .getOrElse(changes.filter(lit(false)).drop(opCol))
-      // fold APPLICABLE deletion-vector tombstones into the
-      // generation being written (the subtraction rides a rewrite
-      // that was happening anyway): this is what lets a change row
-      // re-assert a previously deleted key — the merge wins over the
-      // tombstone, instead of the key staying silently hidden and
-      // then being destroyed by the next compact
-      val (target, pinned) =
-        DeletionVectors.foldInto(spark, snapshotDir, target0)
-      pinnedTombs = pinned
-      mergeBatch(target, guarded, key, opCol)
-        .write.mode("overwrite").parquet(genPath)
-    } catch {
-      // surface the riding guard as the same pre-commit refusal it
-      // always was (spec-pinned type + message), unwrapped from the
-      // write job's failure chain — and remove OUR partial staged
-      // generation first: a deterministic refusal is not a crash,
-      // and leaving the dir would trip the next commit's concurrent-
-      // writer guard until the staging grace expires (best-effort;
-      // if the delete itself fails, the store is in exactly the
-      // state a died writer leaves and heals the same way)
-      case e: Throwable if guardTripped(e) =>
-        if (stagedGen != null) {
-          val fs = new Path(snapshotDir)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          try { fs.delete(new Path(stagedGen), true); () }
-          catch { case _: Throwable => () }
-        }
-        throw new IllegalArgumentException(
-          s"requirement failed: $guardMsg", e)
-    }
-    // post-flip: the folded sidecar files are inert (version rule) —
-    // best-effort removal; a crash here is healed by the next fold
-    DeletionVectors.clearPinned(spark, snapshotDir, pinnedTombs)
+    val data = ManifestCommit.dataDir(s.dir)
+    val target0 = s.st.filter(_.live.nonEmpty)
+      .map(st => readGeneration(spark, new Path(data, st.live.head)))
+      .getOrElse(m.changes.filter(lit(false)).drop(m.opCol))
+    // fold APPLICABLE deletion-vector tombstones into the generation
+    // being written (the subtraction rides a rewrite that was happening
+    // anyway): this is what lets a change row re-assert a previously
+    // deleted key — the merge wins over the tombstone, instead of the
+    // key staying silently hidden and then being destroyed by the next
+    // compact
+    val (target, pinned) =
+      DeletionVectors.foldInto(spark, s.dir.toString, target0)
+    (mergeBatch(target, guarded, m.key, m.opCol), pinned)
   }
 
   /** Does this failure chain carry the riding multi-non-D guard? The
     * guard's error reaches the driver only as message text (a
     * `raise_error` inside the write job), so it is matched on the
     * sentinel token, never on the prose around it. */
-  private def guardTripped(t: Throwable): Boolean = {
-    var cur = t
-    var depth = 0
-    while (cur != null && depth < 20) {
-      if (Option(cur.getMessage).exists(_.contains(MultiNonDToken))) return true
-      cur = cur.getCause
-      depth += 1
-    }
-    false
+  private def guardTripped(t: Throwable): Boolean = chainHas(t, MultiNonDToken)
+
+  private def chainHas(t: Throwable, text: String): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(20)
+      .exists(c => Option(c.getMessage).exists(_.contains(text)))
+
+  /** A whole-snapshot generation staged for writing: the snapshot `dir`,
+    * the pre-commit state `st` (to read the live generation from), and
+    * the writer-unique generation dir `genPath` nothing has written yet. */
+  private[graft] final case class StagedWhole(dir: Path,
+      fs: org.apache.hadoop.fs.FileSystem, st: Option[ManifestCommit.State],
+      genPath: Path) {
+    /** The version this generation commits as. */
+    def version: Long = st.map(_.version + 1).getOrElse(1L)
   }
 
-  /** The whole-snapshot manifest-commit tail — gc → read → layout
-    * guards → generation write → pointer flip → post-commit gc — in
-    * ONE place, shared by [[mergeWholeManifest]] and the standing-state
-    * stores ([[Rollup]] and everything built on it): a protocol fix
-    * lands once, and every store gets the layout guards. `writeGen`
-    * receives a writer-unique STAGING path plus the pre-commit state
-    * (to read the live generation); the staged dir is promoted to the
-    * final generation path only after the expected-version re-check
-    * passes, and the pointer flips only after that — a crash or a lost
-    * race at any point leaves the old commit live and the next
-    * preamble GC clears the staging debris. */
-  private[graft] def commitWholeGeneration(spark: SparkSession,
-      snapshotDir: String, tag: Option[String] = None)(
-      writeGen: (String, Option[ManifestCommit.State]) => Unit): Unit = {
+  /** The whole-snapshot manifest-commit head — gc → read → layout guards
+    * → concurrent-writer guard 1 → a writer-unique generation name —
+    * shared by [[mergeWholeManifests]] and [[commitWholeGeneration]]. */
+  private[graft] def stageWhole(spark: SparkSession,
+      snapshotDir: String): StagedWhole = {
     val dir = new Path(snapshotDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val retain = ManifestCommit.retention(spark)
-    val grace = ManifestCommit.stagedGrace(spark)
-    ManifestCommit.gc(fs, dir, retain, grace)
+    ManifestCommit.gc(fs, dir, ManifestCommit.retention(spark),
+      ManifestCommit.stagedGrace(spark))
     val st = ManifestCommit.read(fs, dir)
     requireManifestLayout(fs, dir, st)
     require(newestNonEmptyState(fs, dir).forall(_.live.forall(!_.contains("/"))),
@@ -675,24 +717,50 @@ object Merge {
     // the generation is written ONCE at its final, WRITER-UNIQUE path
     // (g-<v>-<nonce>): this writer's bytes never touch a path another
     // writer — committed or staging — may own, so a racing loser can
-    // never clobber the winner's generation; the loser fails below and
-    // its unreferenced dir becomes GC debris. No rename anywhere.
-    val gen = ManifestCommit.stagedGenName(newVer)
-    val genPath = new Path(ManifestCommit.dataDir(dir), gen)
-    writeGen(genPath.toString, st)
+    // never clobber the winner's generation; the loser fails in
+    // flipWhole and its unreferenced dir becomes GC debris
+    StagedWhole(dir, fs, st, new Path(ManifestCommit.dataDir(dir),
+      ManifestCommit.stagedGenName(newVer)))
+  }
+
+  /** The whole-snapshot manifest-commit tail, run once the staged
+    * generation is written — staged-file listing → expected-version
+    * re-check → intact re-check → the commit file's exclusive create →
+    * post-commit gc. A lost race or a peer's GC interference fails
+    * loudly here and leaves the old commit live. `committing` runs just
+    * before the commit write: past it, the staged generation may be
+    * live even if this call throws. */
+  private[graft] def flipWhole(spark: SparkSession, s: StagedWhole,
+      tag: Option[String] = None, committing: () => Unit = () => ()): Unit = {
     // the staged files as written — re-checked below so GC
     // interference from a racing peer fails THIS commit loudly
     // instead of publishing a generation with missing files
-    val stagedFiles = ManifestCommit.dataFileListing(fs, genPath)
+    val stagedFiles = ManifestCommit.dataFileListing(s.fs, s.genPath)
     // multi-writer guard 2: expected-version compare before the flip;
     // guard 3 is the commit file's own exclusive create
-    ManifestCommit.requireUnchanged(fs, dir, st)
-    ManifestCommit.requireIntact(fs, dir, genPath, stagedFiles)
-    ManifestCommit.write(fs, dir,
-      ManifestCommit.State(newVer, Seq(gen), tag))
+    ManifestCommit.requireUnchanged(s.fs, s.dir, s.st)
+    ManifestCommit.requireIntact(s.fs, s.dir, s.genPath, stagedFiles)
+    committing()
+    ManifestCommit.write(s.fs, s.dir,
+      ManifestCommit.State(s.version, Seq(s.genPath.getName), tag))
     // post-commit cleanup beyond retention (best-effort — a crash here
     // is repaired by the next preamble GC)
-    ManifestCommit.gc(fs, dir, retain, grace)
+    ManifestCommit.gc(s.fs, s.dir, ManifestCommit.retention(spark),
+      ManifestCommit.stagedGrace(spark))
+  }
+
+  /** [[stageWhole]] → `writeGen` → [[flipWhole]] for a store that writes
+    * its own generation (the standing-state stores: [[Rollup]] and
+    * everything built on it). `writeGen` receives the writer-unique
+    * generation path plus the pre-commit state (to read the live
+    * generation); a crash or a lost race at any point leaves the old
+    * commit live and the next preamble GC clears the staging debris. */
+  private[graft] def commitWholeGeneration(spark: SparkSession,
+      snapshotDir: String, tag: Option[String] = None)(
+      writeGen: (String, Option[ManifestCommit.State]) => Unit): Unit = {
+    val s = stageWhole(spark, snapshotDir)
+    writeGen(s.genPath.toString, s.st)
+    flipWhole(spark, s, tag)
   }
 
   /** Read-only integrity audit of a manifest snapshot (any store that

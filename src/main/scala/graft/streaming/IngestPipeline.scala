@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -23,8 +24,9 @@ import graft.operators.{Constraints, Merge, Rollup, StreamSplitter}
  *     of the clean envelopes, late-binds its payload schema
  *     (`from_json`), maps DMS operations to MERGE ops
  *     (load/insert→I, update→U, delete→D), and upserts into a standing
- *     manifest-committed snapshot via [[MergeSink.applyChanges]] —
- *     intra-batch multi-versions compact by event time, re-delivered
+ *     manifest-committed snapshot ([[MergeSink.compactWhole]] →
+ *     [[Merge.mergeWholeManifests]]) — intra-batch multi-versions
+ *     compact by event time, re-delivered
  *     batches re-apply idempotently, and a table the batch carries no
  *     row for is not touched at all;
  *  4. a standing ops-counter rollup (the DMS console counters,
@@ -50,6 +52,16 @@ import graft.operators.{Constraints, Merge, Rollup, StreamSplitter}
  * idempotent by their own commit protocols and only the landing
  * append can duplicate — the same bound [[StreamingDemux
  * .landWithContract]] documents.
+ *
+ * Jobs: one aggregate job counts the batch and each table's lane rows,
+ * so an idle table costs nothing; then every non-idle table's merge —
+ * compaction, join and generation write, for all tables — runs as ONE
+ * Spark job ([[graft.operators.GenerationWriter]]; a table whose live
+ * snapshot and batch fit the advisory partition size merges in one
+ * task, with no shuffle), and each table's commit file flips after it. A refused or failed merge
+ * write flips no table at all (the idempotent batch retry re-runs
+ * them all); a flip that fails part-way leaves the tables flipped
+ * before it committed, which the retry re-applies idempotently.
  *
  * [[start]] reports a [[BatchMetric]] per micro-batch (rows in/clean/
  * quarantined + wall millis) through a callback — the latency/
@@ -106,21 +118,18 @@ object IngestPipeline {
       tables: Seq[TableSink],
       opsRollupDir: String,
       checkpoint: String,
-      /** Concurrent per-table merge jobs per micro-batch. Each table's
-        * merge touches only its own snapshot dir and is batch-sized, so
-        * with the reference's 16 tables a serial loop leaves the
-        * cluster idle between 16 small jobs — batch latency grows
-        * linearly in table count for no reason. The bounded pool (the
-        * [[graft.operators.Merge.mergePartitioned]] write-pool pattern)
-        * overlaps them; 1 restores the serial behavior. */
+      /** Unread: a micro-batch merges every table in one Spark job, so
+        * there is no merge fan-out left to size. Kept only so existing
+        * callers that pass it still compile; it goes with the next
+        * change to those callers. */
+      @deprecated("unread: every table merges in one Spark job", "0.1.0")
       mergeParallelism: Int = 4,
       /** Store-maintenance lanes (r14): vector/signature stores kept
         * current by the SAME stream that lands, quarantines, merges
         * and counts — the reference's S2→S6 chain maintaining ANN +
         * dedup state in one pass. The lanes run SERIALLY after the
         * snapshot merges (each store family is single-writer by
-        * contract; the merges' thread pool must not overlap a store
-        * mutation with itself on retry). Clean envelopes only: a
+        * contract). Clean envelopes only: a
         * quarantined row never reaches a store — including rows whose
         * PAYLOAD fails the lane's `from_json` (null id): those are
         * flagged `payload_parse:<table>` and quarantined up front,
@@ -131,8 +140,8 @@ object IngestPipeline {
       bucketedSignatureStores: Seq[BucketedSignatureStoreLane] = Nil)
 
   /** Per-batch instrumentation; the stage millis decompose `millis`
-    * into the three sinks (landing+quarantine writes, the per-table
-    * merge fan-out, the rollup fold) — the breakdown a table-count
+    * into the sinks (landing+quarantine writes, the one-job per-table
+    * merge, the rollup fold, the store lanes) — the breakdown a table-count
     * latency profile reads (tools/PipelineDemo prints their p50s). */
   final case class BatchMetric(batchId: Long, input: Long, clean: Long,
       quarantined: Long, millis: Long,
@@ -254,50 +263,29 @@ object IngestPipeline {
                 count(when(size(col("violated")) === 0 && laneRows(t),
                   true)).as(s"lane$i")
               }): _*).head()
-          // 3. per-table standing snapshots — CONCURRENT, bounded:
-          // each table merges into its own snapshot dir (no shared
-          // state; the merge path mutates no session conf), each job is
-          // batch-sized, and a serial loop would grow batch latency
-          // linearly in table count while the cluster idles between
-          // jobs. Failures propagate AFTER every sibling settles: each
-          // future is lifted to a Try and the full set is awaited
-          // before the first failure rethrows — aborting on the first
-          // error while siblings still run would let zombie merges
-          // outlive the batch and race the restarted batch's re-runs
-          // on the same snapshot dirs (the exact single-writer
-          // violation the manifest guards exist to catch). The batch
-          // then aborts before the idempotency marker and the retry
-          // re-runs every table (each merge is idempotent by its own
-          // commit protocol).
-          require(cfg.mergeParallelism >= 1,
-            s"mergeParallelism must be >= 1, got ${cfg.mergeParallelism}")
+          // 3. per-table standing snapshots: every table this batch
+          // carries rows for (the count above stands in for
+          // MergeSink.applyBatch's emptiness probe) merges in ONE Spark
+          // job, then each table's commit flips. A refused or failed
+          // write flips no table; the batch then aborts before the
+          // idempotency marker and the retry re-runs every table (each
+          // merge is idempotent by its own commit protocol).
           val tMerge0 = System.nanoTime()
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.max(1, math.min(cfg.mergeParallelism, cfg.tables.size)))
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          try {
-            val settled = scala.concurrent.Await.result(
-              scala.concurrent.Future.traverse(cfg.tables.zipWithIndex) {
-                case (t, i) => scala.concurrent.Future {
-                  // MergeSink.applyBatch's isEmpty → apply, with the
-                  // count above standing in for the probe: only tables
-                  // this batch carries rows for merge
-                  if (m.getLong(2 + i) > 0) {
-                    val changes = clean.filter(laneRows(t))
-                      .select(
-                        from_json(col("data"), t.dataSchema).as("__d"),
-                        mergeOp(col("metadata.operation")).as("op"),
-                        col("event_ts").as("__seq"))
-                      .select(col("__d.*"), col("op"), col("__seq"))
-                    MergeSink.applyChanges(spark, changes,
-                      s"${cfg.snapshotRoot}/${t.tableName}", t.key, "op",
-                      "__seq")
-                  }
-                }.transform(scala.util.Success(_)) // settle, don't fail-fast
-              }, scala.concurrent.duration.Duration.Inf)
-            settled.foreach(_.get) // every merge finished; now rethrow
-          } finally pool.shutdown()
+          // the lanes start from the cached batch itself: a frame over
+          // `clean`'s plan would re-check the whole parse-and-flag plan
+          // (one from_json per table) at every Dataset op of every lane
+          val cached = PlanBridge.ofRows(spark, clean.queryExecution.withCachedData)
+          Merge.mergeWholeManifests(spark, cfg.tables.zipWithIndex.collect {
+            case (t, i) if m.getLong(2 + i) > 0 =>
+              val changes = cached.filter(laneRows(t))
+                .select(
+                  from_json(col("data"), t.dataSchema).as("__d"),
+                  mergeOp(col("metadata.operation")).as("op"),
+                  col("event_ts").as("__seq"))
+                .select(col("__d.*"), col("op"), col("__seq"))
+              Merge.WholeMerge(s"${cfg.snapshotRoot}/${t.tableName}",
+                MergeSink.compactWhole(changes, t.key, "__seq"), t.key, "op")
+          })
           val tMerge = (System.nanoTime() - tMerge0) / 1000000
           // 4. standing ops counters (exact under re-delivery: tagged)
           val tRoll0 = System.nanoTime()

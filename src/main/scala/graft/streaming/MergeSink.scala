@@ -37,12 +37,15 @@ import graft.operators.Merge
  * double application.
  *
  * Jobs: a non-empty whole-snapshot batch costs [[applyBatch]]'s
- * emptiness probe plus the three jobs the merge needs — the compaction
- * map, the target map and the generation write (the live generation's
- * schema comes from a footer read on the driver, and nothing is cached
- * for a single use). [[IngestPipeline]] already knows each table's row
- * count from its batch aggregate, so it calls [[applyChanges]] directly
- * and pays no probe.
+ * emptiness probe plus ONE write job — compaction and join run inside
+ * the generation write ([[graft.operators.GenerationWriter]]; as one
+ * task with no shuffle when the snapshot and the batch fit the
+ * advisory partition size); the live generation's schema
+ * comes from one footer read, no job, and nothing is cached for a
+ * single use. [[IngestPipeline]] already knows each table's row count
+ * from its batch aggregate, so it pays no probe, and it merges every
+ * non-idle table of a micro-batch in that one job
+ * ([[graft.operators.Merge.mergeWholeManifests]] over [[compactWhole]]).
  *
  * Commit protocol: [[graft.operators.ManifestCommit]] generations only —
  * no rename anywhere, so the sink is safe on object stores, where a
@@ -99,22 +102,31 @@ object MergeSink {
     // Not persisted here: the whole-snapshot merge evaluates it once
     // (the generation write), and mergePartitioned caches its uncached
     // input itself for its several actions.
-    val dataCols = batch.columns.toSeq.filterNot(c => c == key || c == seqCol)
     partitionCol match {
       // partition-scoped path (the 100 TB form): merge + rewrite ONLY
       // the partitions the batch touches; untouched partitions are
       // never read or written — per-batch cost ∝ changes, not ∝ table
       case Some(pc) =>
-        val rest = dataCols.filterNot(_ == pc)
+        val rest = batch.columns.toSeq
+          .filterNot(c => c == key || c == seqCol || c == pc)
         val compacted = batch.groupBy(col(key), col(pc))
           .agg(max_by(struct(rest.map(col): _*), col(seqCol)).as("__p"))
           .select(col(key) +: col(pc) +: rest.map(c => col(s"__p.$c").as(c)): _*)
         Merge.mergePartitioned(spark, snapshotDir, compacted, key, pc, opCol)
       case None =>
-        val compacted = batch.groupBy(col(key))
-          .agg(max_by(struct(dataCols.map(col): _*), col(seqCol)).as("__p"))
-          .select(col(key) +: dataCols.map(c => col(s"__p.$c").as(c)): _*)
-        Merge.mergeWholeManifest(spark, snapshotDir, compacted, key, opCol)
+        Merge.mergeWholeManifest(spark, snapshotDir,
+          compactWhole(batch, key, seqCol), key, opCol)
     }
+  }
+
+  /** A whole-snapshot batch compacted to its latest (by `seqCol`)
+    * change per key, `seqCol` dropped: the change set
+    * [[graft.operators.Merge.mergeWholeManifests]] takes. */
+  private[graft] def compactWhole(batch: DataFrame, key: String,
+      seqCol: String): DataFrame = {
+    val dataCols = batch.columns.toSeq.filterNot(c => c == key || c == seqCol)
+    batch.groupBy(col(key))
+      .agg(max_by(struct(dataCols.map(col): _*), col(seqCol)).as("__p"))
+      .select(col(key) +: dataCols.map(c => col(s"__p.$c").as(c)): _*)
   }
 }

@@ -18,13 +18,11 @@ import graft.streaming.IngestPipeline
  * SCALING.md's streaming section records.
  *
  * Usage: runMain graft.tools.PipelineDemo
- *          [nRecords] [maxPerTrigger] [nTables] [mergeParallelism]
- *          [withStores]
+ *          [nRecords] [maxPerTrigger] [nTables] [withStores]
  *
  * `nTables` CDC sink tables (named after the reference's dms_sample
  * schema — 16 = the full reference layout, image/image3.png) share the
- * backlog; `mergeParallelism` sets the per-batch merge fan-out (1 =
- * the serial loop, for before/after latency comparison).
+ * backlog; every non-idle table of a batch merges in one Spark job.
  * `withStores` = 1 (r14) turns the STORE-MAINTENANCE lanes on: ~20% of
  * the backlog becomes embeddings/documents CDC events (I/U/D), the
  * pipeline maintains a pre-built ANN store and dedup signature history
@@ -35,7 +33,7 @@ import graft.streaming.IngestPipeline
  * audit + a deleted doc stays excluded).
  *
  * Prints one JSON line:
- * `{"records":N,"tables":T,"merge_parallelism":M,"batches":B,
+ * `{"records":N,"tables":T,"batches":B,
  *   "wall_s":…,"records_per_s":…,"batch_ms":{"p50":…,"p95":…,"max":…},
  *   "stage_p50_ms":{"land":…,"merge":…,"rollup":…},"clean":…,
  *   "quarantined":…,"snapshot_ok":bool,"ops_ok":bool}`
@@ -53,14 +51,19 @@ object PipelineDemo {
     "mlb_data", "nfl_data", "nfl_stadium_data", "seat_level")
 
   def main(args: Array[String]): Unit = {
+    // the 5-argument form ([mergeParallelism] before [withStores]) is
+    // gone; refuse it rather than read its parallelism as withStores
+    require(args.size <= 4,
+      "usage: PipelineDemo [nRecords] [maxPerTrigger] [nTables] [withStores]" +
+        " (the [mergeParallelism] argument was removed)")
     val n = args.headOption.map(_.toInt).getOrElse(20000)
     val perTrigger = args.lift(1).map(_.toInt).getOrElse(2000)
     val nTables = args.lift(2).map(_.toInt).getOrElse(1)
-    val mergePar = args.lift(3).map(_.toInt).getOrElse(4)
     // 0 = no store lanes; 1 = dir-store lanes (r14); 2 = the SCALE
     // dedup layout — the signature lane runs against a BUCKETED store
     // (r15: IngestPipeline.BucketedSignatureStoreLane)
-    val storesMode = args.lift(4).map(_.toInt).getOrElse(0)
+    val storesMode = args.lift(3).map(_.toInt).getOrElse(0)
+    require(storesMode >= 0 && storesMode <= 2, s"withStores in 0..2, got $storesMode")
     val withStores = storesMode >= 1
     val bucketedSig = storesMode == 2
     require(nTables >= 1 && nTables <= refTables.size,
@@ -206,7 +209,6 @@ object PipelineDemo {
         "dms_sample", tb, personSchema, "ID")),
       opsRollupDir = s"$root/ops",
       checkpoint = s"$root/ckpt",
-      mergeParallelism = mergePar,
       vectorStores = if (withStores)
         Seq(IngestPipeline.VectorStoreLane(annDir)) else Nil,
       signatureStores = if (withStores && !bucketedSig)
@@ -362,7 +364,7 @@ object PipelineDemo {
     val clean = ms0.map(_.clean).sum
     val bad = ms0.map(_.quarantined).sum
     println(
-      f"""{"records":$n,"tables":$nTables,"merge_parallelism":$mergePar,""" +
+      f"""{"records":$n,"tables":$nTables,""" +
         f""""batches":${ms0.size},"wall_s":$wallS%.1f,""" +
         f""""records_per_s":${n / wallS}%.0f,"batch_ms":{"p50":${pct(0.5)}%.0f,""" +
         f""""p95":${pct(0.95)}%.0f,"max":${if (ms.isEmpty) 0.0 else ms.last}%.0f},""" +

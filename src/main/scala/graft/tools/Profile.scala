@@ -170,17 +170,21 @@ object Profile {
     spark.stop()
   }
 
-  /** Phase-by-phase replicas of the lifecycle queries, by query id. */
-  private val lifecycles
+  /** Phase-by-phase replicas of the lifecycle queries, by query id; each
+    * removes the store it built when it ends. */
+  private[tools] val lifecycles
       : Map[String, (SparkSession, String, Collector) => Unit] =
     Map("q136" -> q136, "q139" -> q139, "q142" -> q142)
 
-  private def tmpStore(tag: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_profile_${tag}_${System.nanoTime()}").getAbsolutePath
+  /** `body` over a fresh store dir under `java.io.tmpdir`, deleted after. */
+  private def withTmpStore(tag: String)(body: String => Unit): Unit = {
+    val store = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_profile_${tag}_${System.nanoTime()}")
+    try body(store.getAbsolutePath) finally SparkEntry.deleteRecursively(store)
+  }
 
-  private def q136(spark: SparkSession, dir: String, c: Collector): Unit = {
-    val store = tmpStore("q136")
+  private def q136(spark: SparkSession, dir: String, c: Collector): Unit =
+    withTmpStore("q136") { store =>
     val e = graft.sources.Tables.load(spark, dir, "embeddings")
     c.phase("buildRoutedIvfStore") {
       Similarity.buildRoutedIvfStore(e, store, shards = 2, nlist = 4,
@@ -208,8 +212,8 @@ object Profile {
     }
   }
 
-  private def q139(spark: SparkSession, dir: String, c: Collector): Unit = {
-    val store = tmpStore("q139")
+  private def q139(spark: SparkSession, dir: String, c: Collector): Unit =
+    withTmpStore("q139") { store =>
     val e = graft.sources.Tables.load(spark, dir, "embeddings")
     c.phase("buildRoutedIvfStore") {
       Similarity.buildRoutedIvfStore(e.filter(col("vec_id") % 5 =!= 4),
@@ -245,6 +249,12 @@ object Profile {
 
   private def q142(spark: SparkSession, dir: String, c: Collector): Unit = {
     val table = s"graft_profile142_${System.nanoTime()}"
+    try q142Phases(spark, dir, c, table)
+    finally SparkEntry.dropScratch(spark, table)
+  }
+
+  private def q142Phases(spark: SparkSession, dir: String, c: Collector,
+      table: String): Unit = {
     val docs = graft.sources.Tables.load(spark, dir, "documents")
     val history = docs.filter(col("doc_id") % 3 =!= 0)
     c.phase("buildSignatureStoreBucketed") {

@@ -15,6 +15,25 @@ object PlanBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /**
+   * A child of `spark` (`newSession()`: same SparkContext, catalog and
+   * CacheManager) whose SQL conf is the caller's plus `overrides`, so a
+   * step can plan under its own execution mode without touching the
+   * caller's conf. Frames rebind to it through [[ofRows]]; temp views
+   * and session UDFs do not carry over, but an analyzed plan already
+   * holds them resolved.
+   */
+  def childSession(spark: SparkSession,
+      overrides: (String, String)*): SparkSession = {
+    val parent = spark.asInstanceOf[classic.SparkSession]
+    val child = parent.newSession()
+    val conf = child.sessionState.conf
+    (parent.sessionState.conf.getAllConfs ++ overrides).foreach {
+      case (k, v) => conf.setConfString(k, v)
+    }
+    child
+  }
+
+  /**
    * A fresh SparkSession on an existing SparkContext with the given
    * extensions applied — what `builder().withExtensions` can't do once
    * a default session exists (getOrCreate returns it unchanged). Used

@@ -156,19 +156,19 @@ class GenerationReadSpec extends SparkSpec {
     assert(Merge.readSnapshot(spark, plain).count() === 2)
   }
 
-  test("job pins: snapshot read 1, whole-manifest merge 3, MergeSink batch 4 (probe + 3)") {
+  test("job pins: snapshot read 1, whole-manifest merge 1, MergeSink batch 2 (probe + write)") {
     val dir = tmp("gen-read-jobs")
     Merge.mergeWholeManifest(spark, dir, wide(wideRow(1L, "I"), wideRow(2L, "I")), "k")
     // the read: the scan alone, no footer-inference job
     assert(jobsOf { Merge.readSnapshot(spark, dir).collect(); () } === 1)
-    // the merge of an uncached change set: the change-side map (the
-    // riding guard's window), the target map and the generation write
-    // — no cache fill job
+    // the merge of an uncached change set: ONE job — the change-side
+    // map (the riding guard's window) and the target map are stages of
+    // the generation write; no cache fill job
     assert(jobsOf {
       Merge.mergeWholeManifest(spark, dir, wide(wideRow(2L, "U"), wideRow(3L, "I")), "k")
-    } === 3)
-    // the streaming sink's batch: the emptiness probe, the compaction
-    // map, the target map and the generation write
+    } === 1)
+    // the streaming sink's batch: the emptiness probe and the one write
+    // job (compaction and target maps as its stages)
     val sink = tmp("gen-read-sink")
     def batch(rows: (Long, String, String, Long)*) = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2)).toDF("k", "op", "name", "seq")
@@ -179,7 +179,7 @@ class GenerationReadSpec extends SparkSpec {
       MergeSink.applyBatch(spark,
         batch((1L, "U", "a1", 2L), (1L, "U", "a2", 3L), (3L, "I", "c", 2L)),
         sink, "k", "op", "seq")
-    } === 4)
+    } === 2)
     assert(version(sink) === before + 1)
     assert(Merge.readSnapshot(spark, sink).orderBy("k").as[(Long, String)]
       .collect().toSeq === Seq((1L, "a2"), (2L, "b"), (3L, "c")))

@@ -4,11 +4,13 @@ import java.nio.file.Files
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.graft.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.operators.{Constraints, Merge}
+import graft.operators.{Constraints, GenerationWriter, Merge}
 
 /** The end-to-end pipeline (source → contract → landing/quarantine →
   * per-table merge snapshots → standing ops counters) sustains multiple
@@ -181,17 +183,18 @@ class IngestPipelineSpec extends SparkSpec {
   test("snapshots on a filesystem that forbids directory renames: multi-batch run ≡ latest-per-key") {
     // the paper lands on S3, where a directory rename is a non-atomic
     // copy: every per-table snapshot commit must go through without
-    // one. Only the snapshots live on NoRenameFs — the checkpoint and
-    // the ops rollup stay local (the rollup's spec sidecar still
-    // commits by a file rename)
+    // one — no rename at all, not even inside a committer's
+    // `_temporary` dir. Only the snapshots live on StrictNoRenameFs —
+    // the checkpoint and the ops rollup stay local (the rollup's spec
+    // sidecar still commits by a file rename)
     spark.sparkContext.hadoopConfiguration
-      .set("fs.norename.impl", classOf[NoRenameFs].getName)
+      .set("fs.strictnorename.impl", classOf[StrictNoRenameFs].getName)
     val backlog = Files.createTempFile("pipe-norename", ".jsonl")
     Files.write(backlog, lines.mkString("\n").getBytes("UTF-8"))
     val root = Files.createTempDirectory("pipe-norename").toString
     val metrics = ArrayBuffer.empty[IngestPipeline.BatchMetric]
     val cfg = run(root, backlog.toString, metrics,
-      snapshotRoot = Some(s"norename://$root/snapshots"))
+      snapshotRoot = Some(s"strictnorename://$root/snapshots"))
     assert(metrics.size >= 2)
     assert(metrics.map(_.input).sum === lines.size)
     // latest per key over the clean data rows, in event order: key 1's
@@ -238,59 +241,89 @@ class IngestPipelineSpec extends SparkSpec {
         ("idle", "create-table", 1L)))
   }
 
-  test("concurrent per-table merges ≡ the serial loop (multi-table batch)") {
-    // 4 tables, interleaved I/U/D ops in one backlog: the bounded-pool
-    // merge fan-out must land byte-equivalent snapshots and counters
-    // to mergeParallelism = 1 (each table's merge is independent; the
-    // pool only overlaps them)
-    val tables = (0 until 4).map(i => s"tab$i")
-    val ls = tables.zipWithIndex.flatMap { case (tb, ti) => Seq(
-      line(ti * 4, tb, "load", 1L),
-      line(ti * 4 + 1, tb, "load", 2L),
-      line(ti * 4 + 2, tb, "update", 1L),
-      line(ti * 4 + 3, tb, "delete", 2L))
-    }
+  // 4 tables, interleaved I/U/D ops in one backlog
+  private val multiTables = (0 until 4).map(i => s"tab$i")
+  private val multiLines = multiTables.zipWithIndex.flatMap { case (tb, ti) => Seq(
+    line(ti * 4, tb, "load", 1L),
+    line(ti * 4 + 1, tb, "load", 2L),
+    line(ti * 4 + 2, tb, "update", 1L),
+    line(ti * 4 + 3, tb, "delete", 2L))
+  }
+
+  test("one-job multi-table merge ≡ per-table MergeSink.applyChanges (multi-table batch)") {
+    // every table merges in one write job per micro-batch: the
+    // snapshots must equal each table's changes applied on its own
+    // through MergeSink.applyChanges (each table's merge is
+    // independent; the shared job only groups them)
     val backlog = Files.createTempFile("pipe-par", ".jsonl")
-    Files.write(backlog, ls.mkString("\n").getBytes("UTF-8"))
-    def runWith(parallelism: Int): (String, IngestPipeline.Config) = {
-      val root = Files.createTempDirectory(s"pipe-par$parallelism").toString
-      val cfg = IngestPipeline.Config(
-        landingDir = s"$root/landing",
-        quarantineDir = s"$root/quarantine",
-        checks = Seq(Constraints.Predicate("valid_id",
-          col("data").isNull ||
-            coalesce(get_json_object(col("data"), "$.ID").cast("long") >= 0,
-              lit(false)))),
-        snapshotRoot = s"$root/snapshots",
-        tables = tables.map(tb =>
-          IngestPipeline.TableSink("dms_sample", tb, personSchema, "ID")),
-        opsRollupDir = s"$root/ops",
-        checkpoint = s"$root/ckpt",
-        mergeParallelism = parallelism)
-      val raw = spark.readStream.format("graft-kinesis-sim")
-        .option("path", backlog.toString).option("shards", "2")
-        .option("maxRecordsPerTrigger", "6")
-        .option("keyRegex", "\"ID\": (-?[0-9]+)")
-        .load()
-        .select(col("data").as("value"))
-      val q = IngestPipeline.start(raw, cfg)
-      awaitDrained(q, 120000)
-      (root, cfg)
+    Files.write(backlog, multiLines.mkString("\n").getBytes("UTF-8"))
+    val root = Files.createTempDirectory("pipe-par").toString
+    val cfg = run(root, backlog.toString,
+      ArrayBuffer.empty[IngestPipeline.BatchMetric],
+      tables = multiTables, perTrigger = 6)
+    val ref = Files.createTempDirectory("pipe-par-ref").toString
+    multiTables.zipWithIndex.foreach { case (tb, ti) =>
+      val base = ti * 4
+      MergeSink.applyChanges(spark, Seq(
+          (1L, s"v$base", "I", 0L), (2L, s"v${base + 1}", "I", 1L),
+          (1L, s"v${base + 2}", "U", 2L), (2L, s"v${base + 3}", "D", 3L))
+        .toDF("ID", "val", "op", "__seq"), s"$ref/$tb", "ID", "op", "__seq")
     }
-    val (_, serial) = runWith(1)
-    val (_, par) = runWith(4)
-    tables.foreach { tb =>
-      val s = IngestPipeline.readSnapshot(spark, serial, tb)
+    multiTables.foreach { tb =>
+      val s = Merge.readSnapshot(spark, s"$ref/$tb")
         .select("ID", "val").as[(Long, String)].collect().toSet
-      val p = IngestPipeline.readSnapshot(spark, par, tb)
+      val p = IngestPipeline.readSnapshot(spark, cfg, tb)
         .select("ID", "val").as[(Long, String)].collect().toSet
       assert(p === s, s"table $tb diverged")
-      assert(p === Set((1L, "v" + (tables.indexOf(tb) * 4 + 2))))
+      assert(p === Set((1L, "v" + (multiTables.indexOf(tb) * 4 + 2))))
     }
-    assert(IngestPipeline.opCounts(spark, par.opsRollupDir)
+    assert(IngestPipeline.opCounts(spark, cfg.opsRollupDir)
       .as[(String, String, Long)].collect().toSet ===
-      IngestPipeline.opCounts(spark, serial.opsRollupDir)
-        .as[(String, String, Long)].collect().toSet)
+      multiTables.flatMap(tb => Seq((tb, "load", 2L), (tb, "update", 1L),
+        (tb, "delete", 1L))).toSet)
+  }
+
+  test("a 4-table batch runs its merges in exactly 1 Spark job, over the persisted batch") {
+    val backlog = Files.createTempFile("pipe-onejob", ".jsonl")
+    Files.write(backlog, multiLines.mkString("\n").getBytes("UTF-8"))
+    // one batch with 1 and with 4 merging tables: per job, whether it
+    // runs the generation write and whether its stages read a
+    // persisted RDD
+    def jobsOfBatch(tables: Seq[String]): Seq[(Boolean, Boolean)] = {
+      val root = Files.createTempDirectory("pipe-onejob").toString
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Boolean)]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          val rdds = e.stageInfos.flatMap(_.rddInfos)
+          jobs.add((rdds.exists(_.name == GenerationWriter.RddName),
+            rdds.exists(_.storageLevel.isValid)))
+          ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val metrics = ArrayBuffer.empty[IngestPipeline.BatchMetric]
+      val cfg = try run(root, backlog.toString, metrics, tables = tables,
+        perTrigger = 100)
+      finally {
+        ListenerBusBridge.waitUntilEmpty(spark.sparkContext, 30000)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(metrics.size === 1)
+      tables.foreach { tb =>
+        assert(IngestPipeline.readSnapshot(spark, cfg, tb)
+          .select("ID", "val").as[(Long, String)].collect().toSet ===
+          Set((1L, "v" + (multiTables.indexOf(tb) * 4 + 2))))
+      }
+      jobs.toArray(Array.empty[(Boolean, Boolean)]).toSeq
+    }
+    val one = jobsOfBatch(multiTables.take(1))
+    val four = jobsOfBatch(multiTables)
+    // the merges of all four tables are one write job, reading the
+    // pipeline's persisted batch rather than the source
+    assert(four.count(_._1) === 1)
+    assert(four.filter(_._1).forall(_._2))
+    // and three more merging tables add no job at all
+    assert(four.size === one.size)
   }
 
   // ---- store-maintenance lanes across a multi-epoch reshard (r14) ----

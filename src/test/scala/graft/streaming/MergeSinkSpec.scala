@@ -30,6 +30,18 @@ class NoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
         s"rename forbidden by NoRenameFs (object-store simulation): $src -> $dst")
 }
 
+/** An object store for every writer: no rename at all, not even of a
+  * committer's `_temporary` files (which [[NoRenameFs]] still allows for
+  * the writers that commit through Spark's output committer). */
+class StrictNoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "strictnorename"
+  override def getUri: java.net.URI = java.net.URI.create("strictnorename:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    throw new java.io.IOException(
+      s"rename forbidden by StrictNoRenameFs (object-store simulation): $src -> $dst")
+}
+
 /** Simulates an object store having a transient bad moment: while
   * `failCommitOpens` is set, opening a manifest commit file throws —
   * the S3 503/throttle case. Everything else (writes, lists, data

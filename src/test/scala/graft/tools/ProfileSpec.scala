@@ -30,4 +30,18 @@ class ProfileSpec extends SparkSpec {
       assert(c.take().isEmpty)
     } finally c.close()
   }
+
+  test("lifecycle:q142 leaves the catalog's table list and the warehouse as it found them") {
+    def tables() = spark.catalog.listTables().collect().map(_.name).toSet
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sessionState.newHadoopConf())
+    def entries() =
+      if (fs.exists(wh)) fs.listStatus(wh).map(_.getPath.getName).toSet else Set.empty[String]
+    val (t0, w0) = (tables(), entries())
+    val c = new Profile.Collector(spark)
+    try Profile.lifecycles("q142")(spark, sf0001, c) finally c.close()
+    assert(c.take().map(_.name).contains("applySigCdcBatch b1"))
+    assert(tables() === t0)
+    assert(entries() === w0)
+  }
 }
