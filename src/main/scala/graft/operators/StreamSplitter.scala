@@ -48,10 +48,11 @@ object StreamSplitter {
    * demux, flatten, compact, write hive-partitioned Parquet
    * (reference README.md:244-309).
    *
-   * `compactTo` reproduces R1 (`repartition(1)`, README.md:304) but via
-   * `coalesce` — same single-file output without the full shuffle the
-   * reference pays (README.md:299 warns about exactly that OOM risk).
-   * Pass `compactTo = 0` to skip compaction and let AQE size partitions.
+   * Compaction (R1, the reference's `repartition(1)`, README.md:304) is
+   * [[writeSplit]]'s rebalance, on `partitionKeys` when given: the scan
+   * and demux keep the input's tasks, and a large table still splits
+   * into several files (one task, as `repartition(1)` gives, can OOM:
+   * README.md:299).
    */
   def splitOne(
       env: DataFrame,
@@ -59,10 +60,9 @@ object StreamSplitter {
       tableName: String,
       outDir: String,
       partitionKeys: Seq[String] = Nil,
-      compactTo: Int = 1,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val flat0 = flatten(demux(env, schemaName, tableName))
-    val flat  = if (compactTo > 0) flat0.coalesce(compactTo) else flat0
+    val flat = flatten(demux(env, schemaName, tableName))
+      .hint("rebalance", partitionKeys.map(col): _*)
     val w = flat.write.mode(mode)
     val wp = if (partitionKeys.nonEmpty) w.partitionBy(partitionKeys: _*) else w
     wp.parquet(s"$outDir/$schemaName/$tableName")
@@ -78,6 +78,7 @@ object StreamSplitter {
    * `data` stays a struct column here because the per-table payload
    * schemas differ; readers project `data.*` per table directory, or use
    * [[ChoiceResolver]] for the union view.
+   * Each table directory gets one file per call ([[writeSplit]]).
    */
   def splitAll(env: DataFrame, outDir: String,
       mode: SaveMode = SaveMode.Overwrite): Unit =
@@ -116,14 +117,25 @@ object StreamSplitter {
     obs.get
   }
 
-  /** The one split write behind [[splitAll]], [[replayAll]] and
-    * [[splitAllObserved]]: control records dropped, every row written
-    * under its hive partition (schema_name, table_name). */
+  /**
+   * The one split write behind [[splitAll]], [[replayAll]] and
+   * [[splitAllObserved]]: control records dropped, every row written
+   * under its hive partition (schema_name, table_name).
+   *
+   * A rebalance on the partition columns puts each table in one write
+   * task, so a write leaves one file per table, not one per read task
+   * (each repeating the footer and mostly-null chunks of the union
+   * `data` struct). Under AQE small tables share a task and a table over
+   * `spark.sql.adaptive.advisoryPartitionSizeInBytes` splits into
+   * several files. An `observe` on the input, below the exchange, still
+   * counts every input row.
+   */
   private def writeSplit(env: DataFrame, outDir: String, mode: SaveMode,
       options: Map[String, String] = Map.empty): Unit =
     env.filter(col("data").isNotNull)
       .withColumn("schema_name", schemaNameCol)
       .withColumn("table_name", tableNameCol)
+      .hint("rebalance", col("schema_name"), col("table_name"))
       .write.mode(mode).options(options)
       .partitionBy("schema_name", "table_name")
       .parquet(outDir)
@@ -171,11 +183,12 @@ object StreamSplitter {
    */
   def registerSplitTable(spark: org.apache.spark.sql.SparkSession,
       outDir: String, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+    // bound, not spliced into SQL: a `'` is legal in paths and S3 keys
+    spark.sql("DROP TABLE IF EXISTS IDENTIFIER(:t)", Map("t" -> table))
     // schema (incl. the two partition columns) inferred from the layout;
     // recoverPartitions registers each discovered (schema_name,
     // table_name) directory in the catalog (MSCK REPAIR analog).
-    spark.sql(s"CREATE TABLE $table USING PARQUET LOCATION '$outDir'")
+    spark.catalog.createTable(table, "parquet", Map("path" -> outDir))
     spark.catalog.recoverPartitions(table)
   }
 

@@ -28,6 +28,29 @@ class StreamSplitterSpec extends SparkSpec {
       Row(Row(1, "x", "y", "z"), meta("seat"))
     )), schema)
 
+  /** 4 input partitions, each holding 2 person rows, 1 seat row and
+    * 1 control record: every read task sees both tables. */
+  private def spread = spark.createDataFrame(
+    spark.sparkContext.parallelize((0 until 4).flatMap(p => Seq(
+      Row(Row(100 + 2 * p, s"P${2 * p}", "L", "F"), meta("person")),
+      Row(Row(101 + 2 * p, s"P${2 * p + 1}", "L", "F"), meta("person")),
+      Row(Row(200 + p, s"S$p", "L", "F"), meta("seat")),
+      Row(null, meta("person", rt = "control", op = "create-table")))), 4),
+    schema)
+
+  /** part files per hive leaf of a split, keyed by `schema_name=…/table_name=…` */
+  private def partFiles(dir: String): Map[String, Seq[java.io.File]] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("schema_name="))
+      .flatMap(s => s.listFiles().filter(_.isDirectory).map(t =>
+        s"${s.getName}/${t.getName}" -> t.listFiles().toSeq
+          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+          .sortBy(_.getName)))
+      .toMap
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(String, Int, String)] =
+    df.select(col("table_name"), col("data.ID"), col("data.full_name"))
+      .as[(String, Int, String)].collect().toSeq.sorted
+
   test("demux keeps only the table's data records (F1)") {
     val out = StreamSplitter.demux(fixture, "dms_sample", "person")
     assert(out.count() === 2)
@@ -196,5 +219,59 @@ class StreamSplitterSpec extends SparkSpec {
     assert(m("n_controls_dropped") === 1L)
     assert(m("n_tables").asInstanceOf[Long] >= 2L)
     assert(spark.read.parquet(dir).count() === 3)
+  }
+
+  test("splitAll writes one part file per table partition, not one per read task") {
+    assert(spread.rdd.getNumPartitions === 4)
+    val dir = java.nio.file.Files.createTempDirectory("split-onefile").toString
+    StreamSplitter.splitAll(spread, dir)
+    val leaves = partFiles(dir)
+    assert(leaves.keySet === Set("schema_name=dms_sample/table_name=person",
+      "schema_name=dms_sample/table_name=seat"))
+    leaves.foreach { case (leaf, files) => assert(files.size === 1, leaf) }
+    val expected = spread.filter(col("data").isNotNull)
+      .withColumn("table_name", StreamSplitter.tableNameCol)
+    assert(rowsOf(spark.read.parquet(dir)) === rowsOf(expected))
+    assert(rowsOf(expected).size === 12)
+  }
+
+  test("splitAllObserved counts exactly over a multi-partition input") {
+    val dir = java.nio.file.Files.createTempDirectory("observed-spread").toString
+    val m = StreamSplitter.splitAllObserved(spread, dir)
+    assert(m("n_input") === 16L)
+    assert(m("n_kept") === 12L)
+    assert(m("n_controls_dropped") === 4L)
+    assert(spark.read.parquet(dir).count() === 12)
+    partFiles(dir).foreach { case (leaf, files) => assert(files.size === 1, leaf) }
+  }
+
+  test("replayAll rewrites the replayed partition as one file, the rest byte-identical") {
+    val dir = java.nio.file.Files.createTempDirectory("replay-onefile").toString
+    StreamSplitter.splitAll(spread, dir)
+    val seatLeaf = "schema_name=dms_sample/table_name=seat"
+    val before = partFiles(dir)(seatLeaf).map(f =>
+      f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+    // replay person only, still spread over 4 read tasks
+    StreamSplitter.replayAll(spread.filter(StreamSplitter.tableNameCol === "person"), dir)
+    val after = partFiles(dir)
+    assert(after("schema_name=dms_sample/table_name=person").size === 1)
+    assert(after(seatLeaf).map(f =>
+      f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq) === before)
+    assert(spark.read.parquet(dir).filter(col("table_name") === "person").count() === 8)
+  }
+
+  test("registerSplitTable accepts a directory whose path holds a quote") {
+    val base = java.nio.file.Files.createTempDirectory("o'brien").toString
+    val dir = s"$base/split"
+    StreamSplitter.splitAll(fixture, dir)
+    StreamSplitter.registerSplitTable(spark, dir, "cdc_split_quoted")
+    try {
+      assert(spark.sql("SELECT count(*) FROM cdc_split_quoted " +
+        "WHERE table_name = 'person'").head().getLong(0) === 2L)
+      assert(spark.sql("SHOW PARTITIONS cdc_split_quoted").count() === 2)
+      // re-registration drops the old entry first
+      StreamSplitter.registerSplitTable(spark, dir, "cdc_split_quoted")
+      assert(spark.table("cdc_split_quoted").count() === 3)
+    } finally spark.sql("DROP TABLE IF EXISTS cdc_split_quoted")
   }
 }

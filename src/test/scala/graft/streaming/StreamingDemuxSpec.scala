@@ -20,7 +20,8 @@ class StreamingDemuxSpec extends SparkSpec {
 
   test("streaming split: micro-batches demux to per-table hive dirs") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[String]
+    // 4 source partitions, so every read task of a batch sees both tables
+    val mem = MemoryStream[String](4)
     val out = java.nio.file.Files.createTempDirectory("streamsplit").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
     // AvailableNow snapshots offsets at start — enqueue before starting
@@ -28,15 +29,27 @@ class StreamingDemuxSpec extends SparkSpec {
       envJson("person", 1, "2019-11-13T09:59:08.059607Z"),
       envJson("person", 2, "2019-11-13T09:59:09.000000Z"),
       envJson("seat", 3, "2019-11-13T09:59:10.000000Z"),
-      envJson("person", 0, "2019-11-13T09:58:00.000000Z", control = true))
+      envJson("person", 0, "2019-11-13T09:58:00.000000Z", control = true),
+      envJson("person", 4, "2019-11-13T09:59:11.000000Z"),
+      envJson("seat", 5, "2019-11-13T09:59:12.000000Z"),
+      envJson("seat", 6, "2019-11-13T09:59:13.000000Z"),
+      envJson("person", 7, "2019-11-13T09:59:14.000000Z"))
     val q = StreamingDemux.splitStream(
       StreamingDemux.parseEnvelopes(mem.toDF()), out, ckpt,
       trigger = Trigger.AvailableNow())
     awaitDrained(q, 60000)
     val split = spark.read.parquet(out)
-    assert(split.count() === 3) // control dropped
-    assert(split.filter(col("table_name") === "person").count() === 2)
-    assert(split.filter(col("table_name") === "seat").count() === 1)
+    assert(split.count() === 7) // control dropped
+    assert(split.filter(col("table_name") === "person").count() === 4)
+    assert(split.filter(col("table_name") === "seat").count() === 3)
+    // at most one new file per table per micro-batch
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    assert(batches >= 1)
+    Seq("person", "seat").foreach { t =>
+      val files = new java.io.File(s"$out/schema_name=dms_sample/table_name=$t")
+        .listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files >= 1 && files <= batches, s"$t: $files files over $batches batches")
+    }
   }
 
   test("windowed per-table op counts with watermark") {
