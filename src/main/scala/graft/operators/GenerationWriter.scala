@@ -18,11 +18,12 @@ import scala.collection.parallel.CollectionConverters._
 
 /**
  * Many manifest generations, each with its own schema, written by ONE
- * Spark job. Every input is planned with AQE off (AQE's `execute()` runs
- * each shuffle stage as its own job), so all inputs' stages hang off one
- * result stage and Spark's DAG scheduler runs them as one group: a
- * micro-batch's per-table merges pay the job floor once, not once per
- * table.
+ * Spark job: the writer of every merge and rollup generation. Every
+ * input is planned with AQE off (AQE's `execute()` runs each shuffle
+ * stage as its own job), so all inputs' stages hang off one result
+ * stage and Spark's DAG scheduler runs them as one group: a
+ * micro-batch's per-table merges, or a partitioned merge's touched
+ * partitions, pay the job floor once, not once per generation.
  *
  * Sizing, from an existing conf (`spark.sql.adaptive
  * .advisoryPartitionSizeInBytes`, "advisory" below) and the leaves'

@@ -220,7 +220,7 @@ private[graft] object ManifestCommit {
     * _temporary files even when the dir mtime has gone stale).
     * Plain listStatus recursion — `listFiles(recursive)` resolves
     * LocatedFileStatus permissions through the raw local FS, which
-    * breaks under custom-scheme FS wrappers (the NoRenameFs specs)
+    * breaks under custom-scheme FS wrappers (the StrictNoRenameFs specs)
     * and buys nothing on a generation-sized tree. */
   private def newestMTime(fs: FileSystem, p: Path): Long =
     try {

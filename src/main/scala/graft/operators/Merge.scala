@@ -37,8 +37,8 @@ import scala.collection.parallel.CollectionConverters._
 object Merge {
 
   /** The token both multi-non-D refusals carry ("two surviving changes
-    * for one key"): the partitioned merge's pre-merge check and the
-    * whole-snapshot merge's guard riding the generation write. */
+    * for one key"): one guard, riding the partitioned merge's count job
+    * and the whole-snapshot merge's generation write. */
   val MultiNonDToken = "GRAFT_MULTI_NON_D"
 
   /** The token [[readSnapshot]]'s refusal carries for a snapshot dir
@@ -128,8 +128,10 @@ object Merge {
    * Plan shape: one bounded collect of the DISTINCT changed partition
    * values (catalog-scale metadata, like replayAll's partition list), a
    * read of ONLY the touched partitions' live generations, one
-   * full-outer merge, one generation write per touched partition, then
-   * one commit-file flip.
+   * full-outer merge counted per partition (the multi-non-D guard
+   * raises there, before anything is staged), ONE job writing every
+   * touched partition's generation ([[GenerationWriter.writeAll]], so
+   * `spark.speculation=true` is refused), then one commit-file flip.
    *
    * Contract (relaxing [[mergeBatch]]'s one-change-per-key to
    * one-change-per-(key, partition)):
@@ -159,11 +161,11 @@ object Merge {
   def mergePartitioned(spark: SparkSession, snapshotDir: String,
       changes0: DataFrame, key: String, partCol: String,
       opCol: String = "op"): Seq[String] = {
-    // this function runs 3+ actions over the change set (touched
-    // collect, duplicate guard, the merge write) — cache it for the
-    // duration unless the caller already did (MergeSink's compacted
+    // this function runs two actions over the change set (the touched
+    // collect and the merged set's per-partition count) — cache it for
+    // the duration unless the caller already did (MergeSink's compacted
     // batch arrives uncached and is cached here; a direct caller with
-    // expensive lineage should not pay it three times)
+    // expensive lineage should not pay it twice)
     val cachedHere =
       changes0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val changes = if (cachedHere)
@@ -200,15 +202,6 @@ object Merge {
       s"changes carry rows with empty-string '$partCol' — '' cannot " +
         "round-trip through a Hive partition path; use a sentinel value")
     require(touched.nonEmpty, "changes carry no partition values")
-    // at most one SURVIVING copy per key: a D+I pair (partition move) is
-    // fine, but two non-D rows would merge into two partitions at once
-    val multiNonD = changes.filter(col(opCol) =!= "D")
-      .groupBy(col(key)).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1).limit(1).collect()
-    require(multiNonD.isEmpty,
-      s"changes carry multiple non-D rows for one '$key' " +
-        s"[$MultiNonDToken] — a partition move must be sent as " +
-        "D(old partition) + I(new partition)")
     mergeManifest(spark, dir, fs, changes, key, partCol, opCol,
       changes.drop(opCol), touched, leafName)
   }
@@ -283,7 +276,12 @@ object Merge {
         }
         dataSchema.filter(lit(false))
       }
-    val merged = mergeBatch(target, changes, key, opCol)
+    // a D+I pair (partition move) is fine, but two non-D rows would
+    // merge into two partitions at once
+    val guardMsg = guardMessage(key,
+      "a partition move must be sent as D(old partition) + I(new partition)")
+    val merged = mergeBatch(target,
+        withMultiNonDGuard(changes, key, opCol, guardMsg), key, opCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val newVer = st.map(_.version + 1).getOrElse(1L)
@@ -307,40 +305,26 @@ object Merge {
       // touched leaf stages under it, the commit records it per leaf
       val gen = ManifestCommit.stagedGenName(newVer)
       // partitions whose merged content is empty (every row deleted)
-      // drop out of the manifest instead of staging an empty dir
-      val counts = merged.groupBy(col(partCol).cast("string").as("__p"))
-        .count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // drop out of the manifest instead of staging an empty dir; the
+      // guard refuses here, before anything is staged
+      val counts =
+        try merged.groupBy(col(partCol).cast("string").as("__p"))
+          .count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        catch { case e: Throwable if guardTripped(e) => throw multiNonD(guardMsg, e) }
       val nonEmpty = touched.filter(v => counts.getOrElse(v, 0L) > 0L)
       // each touched partition writes ONCE into its final immutable,
       // WRITER-UNIQUE home (leaf/g-<v>-<nonce>) — no staging dir, no
       // rename, and no path a racing writer may own (see
-      // commitWholeGeneration). One small job per touched partition
-      // (they run concurrently, bounded); the per-job overhead is the
-      // price of never asking the store for a directory rename. Each
-      // job filters the PERSISTED merged set — cached-batch min/max
-      // pruning keeps that cheap when partCol clusters the cache; at
-      // very large touched-partition counts (hundreds+) prefer
-      // splitting the batch into fewer-partition chunks upstream.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(8, nonEmpty.size)))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.traverse(nonEmpty) { v =>
-            scala.concurrent.Future {
-              merged.filter(col(partCol).cast("string") === v).drop(partCol)
-                .write.mode("overwrite")
-                .parquet(new Path(new Path(data, leafName(v)), gen).toString)
-            }
-          }, scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
+      // commitWholeGeneration). One job writes every touched
+      // partition, each a filter of the PERSISTED merged set
+      val stagedPaths = nonEmpty.map(v => new Path(new Path(data, leafName(v)), gen))
+      GenerationWriter.writeAll(spark, nonEmpty.zip(stagedPaths).map { case (v, p) =>
+        merged.filter(col(partCol).cast("string") === v).drop(partCol) -> p.toString })
       val ourLeaves = touched.map(leafName).toSet
       // the staged files as written — re-checked below (requireIntact)
       // so a peer's GC reclaiming a stage mid-commit fails THIS writer
       // loudly instead of publishing generations with missing files
-      val stagedPaths = nonEmpty.map(v => new Path(new Path(data, leafName(v)), gen))
       val stagedListings = stagedPaths.map(p =>
         p -> ManifestCommit.dataFileListing(fs, p))
       // multi-writer guards 2+3: expected-version compare, then the
@@ -589,7 +573,7 @@ object Merge {
       staged ++= merges.par.map { m =>
         val s = stageWhole(spark, m.snapshotDir)
         val (frame, pinned) = mergedWhole(spark, m, s)
-        (s, frame, guardMessage(m.key), pinned)
+        (s, frame, guardMessage(m.key, CompactFirst), pinned)
       }.seq
       GenerationWriter.writeAll(spark, staged.toSeq.map { case (s, f, _, _) =>
         (f, s.genPath.toString) })
@@ -611,11 +595,9 @@ object Merge {
         // surface the riding guard as the same pre-commit refusal it
         // always was (spec-pinned type + message), unwrapped from the
         // write job's failure chain
-        if (guardTripped(e)) {
-          val msg = staged.map(_._3).find(m => chainHas(e, m))
-            .getOrElse(staged.head._3)
-          throw new IllegalArgumentException(s"requirement failed: $msg", e)
-        }
+        if (guardTripped(e))
+          throw multiNonD(staged.map(_._3).find(m => chainHas(e, m))
+            .getOrElse(staged.head._3), e)
         throw e
     }
     // post-flip: the folded sidecar files are inert (version rule) —
@@ -628,34 +610,41 @@ object Merge {
     try s.fs.exists(new Path(s.dir, ManifestCommit.commitName(s.version)))
     catch { case _: Throwable => true }
 
-  private def guardMessage(key: String): String =
-    s"changes carry multiple non-D rows for one '$key' " +
-      s"[$MultiNonDToken] — compact the batch to at most one " +
-      "surviving change per key (CdcMaterializer.latestSnapshot) before merging"
+  /** `changes` with the multi-non-D guard riding its evaluation: at
+    * most one SURVIVING copy per key ([[mergeBatch]]'s contract). Two
+    * non-D rows for one key would fan the full-outer join out into a
+    * duplicate-keyed snapshot (a dim delta delivered twice, an
+    * uncompacted CDC tail); a D+I pair stays legal. A per-key non-D
+    * count windowed over the change side — co-partitioned with the merge
+    * join, so no extra exchange — raises `msg` from the first job that
+    * evaluates the merge, before any commit flips. */
+  private def withMultiNonDGuard(changes: DataFrame, key: String,
+      opCol: String, msg: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
+    changes
+      .withColumn("__nnd",
+        sum(when(col(opCol) =!= "D", 1L).otherwise(0L)).over(w))
+      .withColumn(opCol, when(col("__nnd") > 1,
+        raise_error(lit(msg))).otherwise(col(opCol)))
+      .drop("__nnd")
+  }
+
+  /** The guard's job failure `cause` as the `require` it stands for. */
+  private def multiNonD(msg: String, cause: Throwable): IllegalArgumentException =
+    new IllegalArgumentException(s"requirement failed: $msg", cause)
+
+  private def guardMessage(key: String, fix: String): String =
+    s"changes carry multiple non-D rows for one '$key' [$MultiNonDToken] — $fix"
+
+  private val CompactFirst = "compact the batch to at most one surviving " +
+    "change per key (CdcMaterializer.latestSnapshot) before merging"
 
   /** The merged snapshot one [[WholeMerge]] writes into its staged
     * generation, with the deletion-vector sidecar files it folded. */
   private def mergedWhole(spark: SparkSession, m: WholeMerge,
       s: StagedWhole): (DataFrame, Array[Path]) = {
-    // at most one SURVIVING copy per key (mergeBatch's documented
-    // contract, enforced where a store commit makes the corruption
-    // durable): two non-D rows for one key would fan the full-outer
-    // join out into a duplicate-keyed snapshot — the silent failure
-    // mode of a dim delta delivered twice or an uncompacted CDC
-    // tail. A D+I pair stays legal (delete-then-reinsert collapses
-    // to one surviving row). The guard RIDES THE GENERATION WRITE
-    // (r17): a per-key non-D count windowed over the change side —
-    // co-partitioned with the merge join, so no extra exchange —
-    // raises from the write job on the first violation. The pointer
-    // flips only after a fully successful write, so a refused batch
-    // leaves the store untouched.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(m.key))
-    val guarded = m.changes
-      .withColumn("__nnd",
-        sum(when(col(m.opCol) =!= "D", 1L).otherwise(0L)).over(w))
-      .withColumn(m.opCol, when(col("__nnd") > 1,
-        raise_error(lit(guardMessage(m.key)))).otherwise(col(m.opCol)))
-      .drop("__nnd")
+    val guarded = withMultiNonDGuard(m.changes, m.key, m.opCol,
+      guardMessage(m.key, CompactFirst))
     val data = ManifestCommit.dataDir(s.dir)
     val target0 = s.st.filter(_.live.nonEmpty)
       .map(st => readGeneration(spark, new Path(data, st.live.head)))

@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
  * is ALGEBRAIC — its state (count, sum, per-column non-null count,
  * min, max) merges associatively — so the rollup stores one narrow
  * state row per group and each refresh aggregates only the new batch
- * (one map-side-combined shuffle of batch-sized data) plus the state
+ * (one map-side-combined aggregate of batch-sized data) plus the state
  * table (group-count-sized, usually orders of magnitude smaller than
- * the batch). The fold never touches raw history: cost ∝ batch +
- * |groups|, independent of corpus age.
+ * the batch), in one Spark job. The fold never touches raw history:
+ * cost ∝ batch + |groups|, independent of corpus age.
  *
  * Sums go through DECIMAL(38,2) — exact and order-invariant, so a
  * fold-in-any-order history equals the from-scratch build bit-for-bit
@@ -390,12 +390,14 @@ object Rollup {
     * tail ([[Merge.commitWholeGeneration]] — no renames,
     * object-store-safe; a crash mid-commit leaves the old pointer
     * live and the next preamble GC clears the orphan generation; the
-    * layout guards run here too). The new state reads from the OLD
-    * generation's immutable files while writing the new dir, so there
-    * is no overwrite-while-reading hazard. */
+    * layout guards run here too). [[GenerationWriter.writeAll]] writes
+    * it as ONE job — aggregate, state merge and write — with no
+    * committer, so `spark.speculation=true` is refused. The new state
+    * reads from the OLD generation's immutable files while writing the
+    * new dir, so there is no overwrite-while-reading hazard. */
   private def commit(spark: SparkSession, storeDir: String,
       newState: DataFrame, tag: Option[String] = None): Unit =
     Merge.commitWholeGeneration(spark, storeDir, tag) { (genPath, _) =>
-      newState.write.mode("overwrite").parquet(genPath)
+      GenerationWriter.writeAll(spark, Seq(newState -> genPath))
     }
 }

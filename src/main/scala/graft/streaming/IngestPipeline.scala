@@ -58,10 +58,12 @@ import graft.operators.{Constraints, Merge, Rollup, StreamSplitter}
  * compaction, join and generation write, for all tables — runs as ONE
  * Spark job ([[graft.operators.GenerationWriter]]; a table whose live
  * snapshot and batch fit the advisory partition size merges in one
- * task, with no shuffle), and each table's commit file flips after it. A refused or failed merge
- * write flips no table at all (the idempotent batch retry re-runs
- * them all); a flip that fails part-way leaves the tables flipped
- * before it committed, which the retry re-applies idempotently.
+ * task, with no shuffle), and each table's commit file flips after it.
+ * A refused or failed merge write flips no table at all (the
+ * idempotent batch retry re-runs them all); a flip that fails part-way
+ * leaves the tables flipped before it committed, which the retry
+ * re-applies idempotently. The ops rollup folds in one more job,
+ * skipped when the batch has no clean row.
  *
  * [[start]] reports a [[BatchMetric]] per micro-batch (rows in/clean/
  * quarantined + wall millis) through a callback — the latency/
@@ -287,14 +289,16 @@ object IngestPipeline {
                 MergeSink.compactWhole(changes, t.key, "__seq"), t.key, "op")
           })
           val tMerge = (System.nanoTime() - tMerge0) / 1000000
-          // 4. standing ops counters (exact under re-delivery: tagged)
+          // 4. standing ops counters (exact under re-delivery: tagged),
+          // skipped by the count above when no row is clean
           val tRoll0 = System.nanoTime()
-          val ops = clean.select(
-            col("metadata.`table-name`").as("table_name"),
-            col("metadata.operation").as("operation"),
-            lit(1L).as("n"))
-          RollupStream.foldBatch(spark, ops, batchId, cfg.opsRollupDir,
-            opsSpec, token)
+          val cleanRows = m.getLong(0) - m.getLong(1)
+          if (cleanRows > 0)
+            RollupStream.foldBatch(spark, cached.select(
+                col("metadata.`table-name`").as("table_name"),
+                col("metadata.operation").as("operation"),
+                lit(1L).as("n")),
+              batchId, cfg.opsRollupDir, opsSpec, token)
           val tRoll = (System.nanoTime() - tRoll0) / 1000000
           // 5. store-maintenance lanes (r14): the same clean envelopes
           // keep the ANN and dedup stores current — serial, each store
@@ -325,7 +329,7 @@ object IngestPipeline {
           val tStore = (System.nanoTime() - tStore0) / 1000000
           onBatch(BatchMetric(batchId,
             input = m.getLong(0),
-            clean = m.getLong(0) - m.getLong(1),
+            clean = cleanRows,
             quarantined = m.getLong(1),
             millis = (System.nanoTime() - t0) / 1000000,
             landMillis = tLand, mergeMillis = tMerge,

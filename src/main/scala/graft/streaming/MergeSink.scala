@@ -46,6 +46,8 @@ import graft.operators.Merge
  * from its batch aggregate, so it pays no probe, and it merges every
  * non-idle table of a micro-batch in that one job
  * ([[graft.operators.Merge.mergeWholeManifests]] over [[compactWhole]]).
+ * A `partitionCol` batch writes every touched partition in ONE job
+ * through the same writer, however many partitions it touches.
  *
  * Commit protocol: [[graft.operators.ManifestCommit]] generations only —
  * no rename anywhere, so the sink is safe on object stores, where a

@@ -14,8 +14,8 @@ import graft.operators.Rollup
  * so the serving aggregate is always one narrow-table read behind the
  * stream head — the aggregation analog of [[MergeSink]] (snapshots),
  * [[NearDupStream]] (signature admission) and [[AnnIngestStream]]
- * (vector ingest). Per-batch cost is one map-side-combined shuffle of
- * batch-sized data plus the group-count-sized state table; raw history
+ * (vector ingest). Per-batch cost is one job aggregating batch-sized
+ * data plus the group-count-sized state table; raw history
  * is never re-read, which is what makes a continuously-refreshed
  * corpus-wide report affordable at 100 TB.
  *
@@ -57,16 +57,16 @@ object RollupStream {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, batch, batchId, storeDir, spec, token)
+        if (!batch.isEmpty) foldBatch(spark, batch, batchId, storeDir, spec, token)
       }
       .start()
   }
 
-  /** One micro-batch (factored out for re-delivery tests). */
+  /** One NON-EMPTY micro-batch (factored out for re-delivery tests);
+    * callers skip empty ones, so the fold pays no emptiness probe. */
   private[streaming] def foldBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, storeDir: String, spec: Rollup.Spec,
       token: String): Unit = {
-    if (batch.isEmpty) return
     if (alreadyFolded(spark, storeDir, token, batchId)) return
     val tag = Some(s"$token-$batchId")
     if (Rollup.exists(spark, storeDir))

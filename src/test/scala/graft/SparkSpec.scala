@@ -45,15 +45,21 @@ trait SparkSpec extends AnyFunSuite {
   /** Spark jobs `body` submits, counted per job group by a listener; a
     * marker job afterwards flushes the (ordered, asynchronous) listener
     * queue before the count is read. */
-  def jobsOf(body: => Unit): Int = {
+  def jobsOf(body: => Unit): Int = jobStartsOf(body).size
+
+  /** The start events of the Spark jobs `body` submits, in order (see
+    * [[jobsOf]]). */
+  def jobStartsOf(body: => Unit): Seq[SparkListenerJobStart] = {
     val sc = spark.sparkContext
     val group = s"jobs-of-${java.util.UUID.randomUUID()}"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkListenerJobStart)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
+          .foreach(g => starts.add(g -> e))
     }
+    def seen(g: String) = starts.toArray(Array.empty[(String, SparkListenerJobStart)])
+      .collect { case (`g`, e) => e }.toSeq
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "counted")
@@ -61,10 +67,10 @@ trait SparkSpec extends AnyFunSuite {
       sc.setJobGroup(s"$group-marker", "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(s"$group-marker") && System.nanoTime() < deadline)
+      while (seen(s"$group-marker").isEmpty && System.nanoTime() < deadline)
         Thread.sleep(10)
-      assert(groups.contains(s"$group-marker"), "listener queue did not drain")
-      groups.toArray.count(_ == group)
+      assert(seen(s"$group-marker").nonEmpty, "listener queue did not drain")
+      seen(group)
     } finally sc.removeSparkListener(listener)
   }
 }

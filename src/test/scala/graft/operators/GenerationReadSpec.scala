@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -183,5 +184,63 @@ class GenerationReadSpec extends SparkSpec {
     assert(version(sink) === before + 1)
     assert(Merge.readSnapshot(spark, sink).orderBy("k").as[(Long, String)]
       .collect().toSeq === Seq((1L, "a2"), (2L, "b"), (3L, "c")))
+  }
+
+  test("job pin: Rollup.fold runs 1 job (aggregate, state merge and write together)") {
+    val store = tmp("gen-read-rollup")
+    val spec = Rollup.Spec(keys = Seq("table_name", "operation"), sums = Seq("n"))
+    def ops(rows: (String, String)*) =
+      rows.map { case (t, o) => (t, o, 1L) }.toDF("table_name", "operation", "n")
+    Rollup.init(spark, store, ops("a" -> "insert", "b" -> "update"), spec)
+    assert(jobsOf {
+      Rollup.fold(spark, store, ops("a" -> "insert", "c" -> "delete"), spec)
+    } === 1)
+    assert(Rollup.finalized(Rollup.read(spark, store), spec)
+      .select("table_name", "operation", "n_rows").as[(String, String, Long)]
+      .collect().toSet ===
+      Set(("a", "insert", 2L), ("b", "update", 1L), ("c", "delete", 1L)))
+  }
+
+  test("job pin: mergePartitioned runs as many jobs for 4 touched partitions as for 1, one of them the generation write") {
+    // both change sets: 4 rows over 2 input partitions, so only the
+    // number of touched partitions differs
+    def changes(rows: (Long, String, String, String)*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2)).toDF("k", "op", "name", "part")
+    val seed = (0 until 8).map(i => (i.toLong, "I", s"v$i", s"p${i % 4}"))
+    def seeded(prefix: String): String = {
+      val dir = tmp(prefix)
+      Merge.mergePartitioned(spark, dir, changes(seed: _*), "k", "part")
+      dir
+    }
+    val (d1, d4) = (seeded("gen-read-part1"), seeded("gen-read-part4"))
+    val inP0 = Seq(0L, 4L, 8L, 12L)
+    val one = jobStartsOf {
+      Merge.mergePartitioned(spark, d1,
+        changes(inP0.map(k => (k, if (k < 8L) "U" else "I", s"x$k", "p0")): _*),
+        "k", "part")
+    }
+    val four = jobStartsOf {
+      Merge.mergePartitioned(spark, d4,
+        changes((0 until 4).map(i => (i.toLong, "U", s"x$i", s"p$i")): _*), "k", "part")
+    }
+    def writes(jobs: Seq[SparkListenerJobStart]): Int = jobs.count(
+      _.stageInfos.exists(_.rddInfos.exists(_.name == GenerationWriter.RddName)))
+    assert(writes(one) === 1)
+    assert(writes(four) === 1)
+    assert(four.size === one.size)
+    def rows(dir: String) = Merge.readSnapshot(spark, dir)
+      .select("k", "name", "part").as[(Long, String, String)].collect().toSet
+    val base = seed.map { case (k, _, n, p) => k -> (n, p) }.toMap
+    assert(rows(d1) === (base ++ inP0.map(k => k -> (s"x$k", "p0")))
+      .map { case (k, (n, p)) => (k, n, p) }.toSet)
+    assert(rows(d4) === (base ++ (0L until 4L).map(k => k -> (s"x$k", s"p$k")))
+      .map { case (k, (n, p)) => (k, n, p) }.toSet)
+    // and each rewritten partition's generation is one part file
+    val d = new Path(d4)
+    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
+    ManifestCommit.read(fs, d).get.live.foreach { leafGen =>
+      assert(fs.listStatus(new Path(ManifestCommit.dataDir(d), leafGen))
+        .count(_.getPath.getName.startsWith("part-")) === 1, leafGen)
+    }
   }
 }

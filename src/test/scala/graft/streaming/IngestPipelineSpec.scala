@@ -318,12 +318,18 @@ class IngestPipelineSpec extends SparkSpec {
     }
     val one = jobsOfBatch(multiTables.take(1))
     val four = jobsOfBatch(multiTables)
-    // the merges of all four tables are one write job, reading the
-    // pipeline's persisted batch rather than the source
-    assert(four.count(_._1) === 1)
+    // two generation-write jobs, each reading the pipeline's persisted
+    // batch rather than the source: the merges of all four tables are
+    // one, the ops rollup's fold the other
+    assert(one.count(_._1) === 2)
+    assert(four.count(_._1) === 2)
     assert(four.filter(_._1).forall(_._2))
     // and three more merging tables add no job at all
     assert(four.size === one.size)
+    // the whole batch: the landing write (which fills the batch cache),
+    // the quarantine write, the count aggregate's two jobs, the merge
+    // write and the ops rollup's one fold job — no emptiness probe
+    assert(one.size === 6)
   }
 
   // ---- store-maintenance lanes across a multi-epoch reshard (r14) ----

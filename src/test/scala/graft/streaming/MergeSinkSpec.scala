@@ -9,30 +9,11 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.operators.Merge
 
-/** Local filesystem that FORBIDS directory renames outside the output
-  * committer's `_temporary` staging — the object-store simulation for
-  * the manifest-commit tests: on S3 a directory rename is a non-atomic
-  * copy, so a commit protocol is object-store-safe only if it never
-  * renames. (Committer-internal `_temporary` renames are exempt because
-  * a real object-store deployment swaps the committer itself — e.g.
-  * the S3A magic committer — which is orthogonal to the snapshot-swap
-  * protocol under test.) */
-class NoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getScheme: String = "norename"
-  override def getUri: java.net.URI = java.net.URI.create("norename:///")
-  override def rename(src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Boolean =
-    if (src.toUri.getPath.contains("_temporary") ||
-        dst.toUri.getPath.contains("_temporary"))
-      super.rename(src, dst)
-    else
-      throw new java.io.IOException(
-        s"rename forbidden by NoRenameFs (object-store simulation): $src -> $dst")
-}
-
-/** An object store for every writer: no rename at all, not even of a
-  * committer's `_temporary` files (which [[NoRenameFs]] still allows for
-  * the writers that commit through Spark's output committer). */
+/** A local filesystem that forbids every rename — the object-store
+  * simulation for the manifest-commit tests: on S3 a directory rename
+  * is a non-atomic copy, so a commit protocol is object-store-safe only
+  * if it never renames. No exemption either for an output committer's
+  * `_temporary` files: every snapshot writer commits without one. */
 class StrictNoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "strictnorename"
   override def getUri: java.net.URI = java.net.URI.create("strictnorename:///")
@@ -63,8 +44,8 @@ class FlakyOpenFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 /** The maintained snapshot must equal "apply every change in seq order"
   * after any batch arrival pattern, and re-applying a batch must be a
   * no-op (foreachBatch re-delivery safety). Snapshots live on
-  * [[NoRenameFs]] wherever the test allows it, so each case also shows
-  * the commit never renames a directory. */
+  * [[StrictNoRenameFs]] wherever the test allows it, so each case also
+  * shows the commit never renames anything. */
 class MergeSinkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -74,9 +55,14 @@ class MergeSinkSpec extends SparkSpec {
   /** snapshot path on the rename-forbidding filesystem */
   private def noRenameDir(prefix: String): String = {
     spark.sparkContext.hadoopConfiguration
-      .set("fs.norename.impl", classOf[NoRenameFs].getName)
-    "norename://" + tmp(prefix) + "/snap"
+      .set("fs.strictnorename.impl", classOf[StrictNoRenameFs].getName)
+    "strictnorename://" + tmp(prefix) + "/snap"
   }
+
+  /** the same directory on the plain local filesystem, for fixtures
+    * written through Spark's committer (which renames) */
+  private def local(dir: String): String =
+    "file://" + dir.stripPrefix("strictnorename://")
 
   private def snapshot(dir: String) = Merge.readSnapshot(spark, dir)
 
@@ -162,7 +148,7 @@ class MergeSinkSpec extends SparkSpec {
     // generation alone and silently hide every existing row
     val dir = noRenameDir("mergesink-plain")
     Seq((1L, "a", "en"), (2L, "b", "de")).toDF("k", "name", "lang")
-      .write.partitionBy("lang").parquet(dir)
+      .write.partitionBy("lang").parquet(local(dir))
     val b = Seq((1L, "U", "a2", "en", 3L)).toDF("k", "op", "name", "lang", "seq")
     Seq(Some("lang"), None).foreach { pc =>
       val e = intercept[IllegalArgumentException] {
@@ -357,7 +343,7 @@ class MergeSinkSpec extends SparkSpec {
     // simulate dying mid-batch-2: lang=en's new generation is staged and
     // the commit file naming it tore half-way (no trailer)
     val orphan = s"$dir/data/lang=en/g-000000000002-dead"
-    Seq((1L, "half")).toDF("k", "name").write.parquet(orphan)
+    Seq((1L, "half")).toDF("k", "name").write.parquet(local(orphan))
     val torn = fs.create(
       new org.apache.hadoop.fs.Path(dir + "/_graft_commit-000000000002"), false)
     torn.write("graft-commit v1 2\nlang=en/g-000000000002-dead\n".getBytes("UTF-8"))
