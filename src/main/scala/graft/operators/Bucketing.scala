@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.PlanBridge
 
 /**
  * Bucketed (pre-shuffled) tables — the co-located-join layout for
@@ -119,27 +120,25 @@ object Bucketing {
     // file-split bins (multiple buckets per task = multiple files per
     // bucket, the debris this op exists to remove). Forcing the
     // bucketed scan makes partition i carry exactly bucket i, and the
-    // one-per-bucket file count follows (spec-asserted).
-    val autoScan = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val saved = spark.conf.get(autoScan, "true")
-    spark.conf.set(autoScan, "false")
-    try {
-      val src = exclude match {
-        case Some((ids, key)) => spark.table(table).join(
-          org.apache.spark.sql.functions.broadcast(
-            ids.select(col(ids.columns.head).as(key))),
-          Seq(key), "left_anti")
-        case None => spark.table(table)
-      }
-      val w = src
-        .repartition(spec.numBuckets, bcols.map(col): _*)
-        .write.mode("overwrite").format(meta.provider.getOrElse("parquet"))
-        .bucketBy(spec.numBuckets, bcols.head, bcols.tail: _*)
-      val ws = if (spec.sortColumnNames.nonEmpty)
-        w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-      else w
-      ws.saveAsTable(tmp)
-    } finally spark.conf.set(autoScan, saved)
+    // one-per-bucket file count follows (spec-asserted). The write
+    // plans in a clone with the rule off; `spark`'s conf is untouched.
+    val noAutoScan = PlanBridge.childSession(spark,
+      "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
+    val src = exclude match {
+      case Some((ids, key)) => spark.table(table).join(
+        org.apache.spark.sql.functions.broadcast(
+          ids.select(col(ids.columns.head).as(key))),
+        Seq(key), "left_anti")
+      case None => spark.table(table)
+    }
+    val w = ControlPlane.rebind(noAutoScan, src)
+      .repartition(spec.numBuckets, bcols.map(col): _*)
+      .write.mode("overwrite").format(meta.provider.getOrElse("parquet"))
+      .bucketBy(spec.numBuckets, bcols.head, bcols.tail: _*)
+    val ws = if (spec.sortColumnNames.nonEmpty)
+      w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
+    else w
+    ws.saveAsTable(tmp)
     spark.sql(s"DROP TABLE $table")
     spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
   }

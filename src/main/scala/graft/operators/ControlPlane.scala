@@ -1,14 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.internal.SQLConf
 
 /**
- * Control-plane execution scope for the store MUTATION paths — the
- * CDC dispatches, deletes, upserts, reclaims and compactions whose
+ * Control-plane execution for the store MUTATION paths — the CDC
+ * dispatches, deletes, upserts, reclaims and compactions whose
  * per-micro-batch cost is DRIVER ACTIONS over batch-sized frames
- * (id sets, tombstone logs, file-targeted rewrites), not data volume.
+ * (id sets, tombstone logs, file-targeted rewrites), not data volume —
+ * and for every merge and rollup generation write
+ * ([[GenerationWriter]]).
  *
- * Inside the scope, adaptive query execution is disabled: AQE's
+ * These steps plan with adaptive query execution disabled: AQE's
  * architecture materializes one query STAGE at a time and re-plans
  * between stages, which is the right trade for data-plane queries
  * (runtime coalescing, skew splits, join re-selection over unknown
@@ -26,87 +30,82 @@ import org.apache.spark.sql.SparkSession
  * cadence at 100 TB, while AQE's benefits on these steps are ~nil
  * (nothing to coalesce or re-join on a batch-sized exchange).
  *
- * Scoping (r17): the toggle is session-level (Spark has no per-action
- * conf), guarded by a REENTRANT COUNTED scope per session — the first
- * entry saves and clears the flag, the LAST exit restores it, and the
- * count makes concurrent top-level scopes from different threads of
- * one session compose instead of racing the get/set/restore (the r16
- * form was safe only by the single-writer convention; the counted
- * guard turns it into an invariant, spec-pinned). Nesting on one
- * thread costs one increment. Data-plane work (builds, searches,
- * audits, admission queries) runs OUTSIDE the scope and keeps AQE. A
- * concurrent data-plane query on the SAME session during a mutation's
- * scope still reads the flag off — a perf-only effect (AQE never
- * changes results), inherent to the session-level conf.
+ * They run in a child of the caller's session ([[session]]) whose
+ * conf carries the mode, so the caller's own conf is never touched and
+ * a concurrent data-plane query on it keeps AQE. Data-plane work
+ * (builds, searches, audits, admission queries) runs in the caller's
+ * session.
  */
 private[graft] object ControlPlane {
 
-  private val AqeKey = "spark.sql.adaptive.enabled"
-  private val ListKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+  /** The child's conf on top of the caller's: AQE off, and a listing
+    * threshold of 128. A mutation's multi-path reads are PRUNED by
+    * construction — loc-index bucket dirs (B, default 64), sig-store
+    * bucket files, `list_id IN` partitions (≤ nlist) — and Spark's
+    * default threshold (32) turns each such read's leaf listing into a
+    * DISTRIBUTED JOB: one more scheduler round-trip per read per shard
+    * per micro-batch (measured ~280 ms per loc lookup on the r17 CDC
+    * trace) to list a few dozen directories the driver can page
+    * through in milliseconds. Data-plane scans of genuinely wide
+    * layouts keep the distributed listing, and stores bucketed wider
+    * than 128 fall back to it automatically. */
+  private val overrides = Map(
+    SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false",
+    SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key -> "128")
 
-  /** Listing threshold inside a mutation scope (default 128, conf
-    * `graft.mutation.listingThreshold`): a mutation's multi-path reads
-    * are PRUNED by construction — loc-index bucket dirs (B, default
-    * 64), sig-store bucket files, `list_id IN` partitions (≤ nlist) —
-    * and Spark's default threshold (32) turns each such read's leaf
-    * listing into a DISTRIBUTED JOB: one more scheduler round-trip per
-    * read per shard per micro-batch (measured ~280 ms per loc lookup
-    * on the r17 CDC trace) to list a few dozen directories the driver
-    * can page through in milliseconds. Raised only INSIDE the scope:
-    * data-plane scans of genuinely wide layouts keep the distributed
-    * listing. Stores bucketed wider than this threshold fall back to
-    * the distributed listing automatically — the conf exists so a
-    * deployment with such stores (or slow object-store metadata) can
-    * tune the crossover. */
-  private def listingThreshold(spark: SparkSession): String =
-    spark.conf.getOption("graft.mutation.listingThreshold")
-      .getOrElse("128")
+  private val children =
+    new java.util.WeakHashMap[SparkSession, (Map[String, String], SparkSession)]()
 
-  /** Per-session reentrant scope state. Weak keys: foreachBatch hands
-    * mutation entry points per-batch session CLONES — a strong map
-    * would pin every clone for the process lifetime. */
-  private final class Scope {
-    var depth = 0
-    var saved: Seq[(String, Option[String])] = Nil
-  }
-  private val scopes =
-    new java.util.WeakHashMap[SparkSession, Scope]
-
-  private def scopeOf(spark: SparkSession): Scope = scopes.synchronized {
-    val cur = scopes.get(spark)
-    if (cur != null) cur
-    else { val n = new Scope; scopes.put(spark, n); n }
-  }
-
-  def apply[A](spark: SparkSession)(f: => A): A = {
-    val s = scopeOf(spark)
-    s.synchronized {
-      if (s.depth == 0) {
-        val wanted = Seq(AqeKey -> "false",
-          ListKey -> listingThreshold(spark))
-        s.saved = Nil
-        wanted.foreach { case (k, v) =>
-          val prev = spark.conf.getOption(k)
-          if (!prev.contains(v)) {
-            s.saved = s.saved :+ (k -> prev)
-            spark.conf.set(k, v)
-          }
+  /** The session control-plane steps plan in: `spark` itself when its
+    * conf already carries the overrides (a child, or a nested entry
+    * handed one), else a child of it (`PlanBridge.childSession`:
+    * shared SparkContext, catalog and CacheManager). One child is kept
+    * per caller session and reused while the caller's conf is
+    * unchanged (a changed conf gets a new child; a child is never
+    * mutated), so a stream does not build a new session state every
+    * micro-batch. Weak keys: foreachBatch hands entry points the
+    * stream's session clones. */
+  def session(spark: SparkSession): SparkSession = {
+    val conf = spark.sessionState.conf.getAllConfs
+    if (overrides.forall { case (k, v) => conf.get(k).contains(v) }) spark
+    else children.synchronized {
+      val want = conf ++ overrides
+      Option(children.get(spark)).collect { case (c, s) if c == want => s }
+        .getOrElse {
+          val child = PlanBridge.childSession(spark, overrides.toSeq: _*)
+          children.put(spark, (want, child))
+          child
         }
-      }
-      s.depth += 1
-    }
-    try f
-    finally s.synchronized {
-      s.depth -= 1
-      if (s.depth == 0) {
-        s.saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-        s.saved = Nil
-      }
     }
   }
+
+  /** `df` rebound to `child`, to be planned there; a frame over a
+    * persisted Dataset still scans its cache (the CacheManager is
+    * shared). */
+  def rebind(child: SparkSession, df: DataFrame): DataFrame =
+    PlanBridge.ofRows(child, df.queryExecution.analyzed)
+
+  /** Run a mutation in [[session]]`(spark)`. Each session keeps its
+    * own cache of resolved catalog relations (their file listings), so
+    * a top-level entry drops the child's — the caller may have written
+    * a table since the child last read it — and the caller's is
+    * dropped when the body returns or throws, so the caller reads what
+    * the mutation wrote. A nested entry (handed the child) runs as is. */
+  def apply[A](spark: SparkSession)(f: SparkSession => A): A = {
+    val child = session(spark)
+    if (child eq spark) f(spark)
+    else {
+      child.sessionState.catalog.invalidateAllCachedTables()
+      try f(child)
+      finally spark.sessionState.catalog.invalidateAllCachedTables()
+    }
+  }
+
+  /** [[apply]] for a mutation over a caller frame, handed to `f`
+    * rebound to the child. */
+  def apply[A](spark: SparkSession, df: DataFrame)(
+      f: (SparkSession, DataFrame) => A): A =
+    apply(spark) { child => f(child, rebind(child, df)) }
 
   /** Await bound for the SEARCH-path per-shard candidate preps — tiny
     * metadata reads and bounded collects, where a shard wedged past

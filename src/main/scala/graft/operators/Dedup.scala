@@ -274,7 +274,7 @@ object Dedup {
    * tombstoned) file nothing. Returns the number of new tombstones.
    */
   def deleteSignatures(spark: SparkSession, ids: DataFrame,
-      storeDir: String): Long = ControlPlane(spark) {
+      storeDir: String): Long = ControlPlane(spark, ids) { (spark, ids) =>
     import org.apache.spark.storage.StorageLevel
     TombstoneLog.maybeFold(spark, deletedSigsPath(storeDir), "id")
     // one log read serves the dead-set AND the append's seq
@@ -328,7 +328,7 @@ object Dedup {
    * Returns the number of ids reclaimed.
    */
   def reclaimSignatureTombstones(spark: SparkSession, ids: DataFrame,
-      storeDir: String): Long = ControlPlane(spark) {
+      storeDir: String): Long = ControlPlane(spark, ids) { (spark, ids) =>
     import org.apache.spark.storage.StorageLevel
     TombstoneLog.maybeFold(spark, deletedSigsPath(storeDir), "id")
     // one log read serves the dead-set AND the revive append's seq
@@ -399,7 +399,8 @@ object Dedup {
   def upsertSignatures(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, storeDir: String,
       numHashes: Int = 64, shingleN: Int = 5,
-      portable: Boolean = false): Unit = ControlPlane(spark) {
+      portable: Boolean = false): Unit =
+      ControlPlane(spark, batch) { (spark, batch) =>
     val ids = batch.select(col(idCol).as("id"))
     deleteSignatures(spark, ids, storeDir)
     reclaimSignatureTombstones(spark, ids, storeDir)
@@ -414,7 +415,8 @@ object Dedup {
     * draw-family gate intact. */
   def upsertWideSimhashSignatures(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, storeDir: String,
-      portable: Boolean = false): Unit = ControlPlane(spark) {
+      portable: Boolean = false): Unit =
+      ControlPlane(spark, batch) { (spark, batch) =>
     requireWideDraws(spark, storeDir, portable, "upsertWideSimhashSignatures")
     val ids = batch.select(col(idCol).as("id"))
     deleteSignatures(spark, ids, storeDir)
@@ -442,7 +444,7 @@ object Dedup {
    */
   def compactSignatureStoreDir(spark: SparkSession,
       storeDir: String, fileThreshold: Int = 8): Unit =
-      ControlPlane(spark) {
+      ControlPlane(spark) { spark =>
     val root = new org.apache.hadoop.fs.Path(storeDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(storeDir + "__compact")
@@ -684,7 +686,7 @@ object Dedup {
     * mutated id without the full compaction. Returns the new
     * tombstone count. */
   def deleteSignaturesBucketed(spark: SparkSession, ids: DataFrame,
-      table: String): Long = ControlPlane(spark) {
+      table: String): Long = ControlPlane(spark, ids) { (spark, ids) =>
     import org.apache.spark.storage.StorageLevel
     Bucketing.requireStrictFileReads(spark, "deleteSignaturesBucketed")
     val dlog = bucketedDlogPath(spark, table)
@@ -752,7 +754,7 @@ object Dedup {
     * full-scan location, always correct. Returns ids reclaimed. */
   def reclaimSignatureTombstonesBucketed(spark: SparkSession,
       ids: DataFrame, table: String, numHashes: Int = 64,
-      bands: Int = 8): Long = ControlPlane(spark) {
+      bands: Int = 8): Long = ControlPlane(spark, ids) { (spark, ids) =>
     import org.apache.spark.storage.StorageLevel
     Bucketing.requireStrictFileReads(spark,
       "reclaimSignatureTombstonesBucketed")
@@ -828,7 +830,7 @@ object Dedup {
   def upsertSignaturesBucketed(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, table: String, buckets: Int,
       numHashes: Int = 64, bands: Int = 8,
-      shingleN: Int = 5): Unit = ControlPlane(spark) {
+      shingleN: Int = 5): Unit = ControlPlane(spark, batch) { (spark, batch) =>
     val ids = batch.select(col(idCol).as("id"))
     deleteSignaturesBucketed(spark, ids, table)
     reclaimSignatureTombstonesBucketed(spark, ids, table, numHashes,
@@ -857,12 +859,14 @@ object Dedup {
       textCol: String = "text", opCol: String = "op",
       seqCol: String = "seq", numHashes: Int = 64, shingleN: Int = 5,
       portable: Boolean = false): (Long, Long, Long) =
+    ControlPlane(spark, batch) { (spark, batch) =>
     dispatchSigCdc(spark, batch, idCol, textCol, opCol, seqCol,
       "applySigCdcBatch",
       del = ids => deleteSignatures(spark, ids, storeDir),
       reclaim = ids => reclaimSignatureTombstones(spark, ids, storeDir),
       append = rows => appendSignatures(spark, rows, "doc_id", "text",
         storeDir, numHashes, shingleN, portable))
+    }
 
   /** [[applySigCdcBatch]] for a BUCKETED store
     * ([[buildSignatureStoreBucketed]]) — the same terminal-op
@@ -881,6 +885,7 @@ object Dedup {
       textCol: String = "text", opCol: String = "op",
       seqCol: String = "seq", numHashes: Int = 64, bands: Int = 8,
       shingleN: Int = 5): (Long, Long, Long) =
+    ControlPlane(spark, batch) { (spark, batch) =>
     dispatchSigCdc(spark, batch, idCol, textCol, opCol, seqCol,
       "applySigCdcBatchBucketed",
       del = ids => deleteSignaturesBucketed(spark, ids, table),
@@ -888,6 +893,7 @@ object Dedup {
         table, numHashes, bands),
       append = rows => appendSignaturesBucketed(spark, rows, "doc_id",
         "text", table, buckets, numHashes, bands, shingleN))
+    }
 
   /** The shared CDC dispatch core: resolve ONE terminal op per id
     * (latest seq wins; same-seq ties D > U > I — conservative
@@ -932,8 +938,7 @@ object Dedup {
       idCol: String, textCol: String, opCol: String, seqCol: String,
       caller: String, del: DataFrame => Unit, reclaim: DataFrame => Unit,
       append: DataFrame => Unit,
-      gateIU: () => Unit = () => ()): (Long, Long, Long) =
-      ControlPlane(spark) {
+      gateIU: () => Unit = () => ()): (Long, Long, Long) = {
     import org.apache.spark.storage.StorageLevel
     val rank = when(col("op") === "D", 2)
       .when(col("op") === "U", 1)
@@ -1110,7 +1115,7 @@ object Dedup {
     * correct, a re-run completes the reclaim). Run from the
     * maintenance writer, not concurrently with an admission append. */
   def compactSignatureStore(spark: SparkSession, table: String): Unit =
-      ControlPlane(spark) {
+      ControlPlane(spark) { spark =>
     val dead = readDeletedBucketed(spark, table).map((_, "id"))
     Bucketing.compactTable(spark, s"${table}_bands", dead)
     Bucketing.compactTable(spark, s"${table}_sigs", dead)
@@ -1564,7 +1569,8 @@ object Dedup {
     * location prunes directly), then R records re-open the ids.
     * Returns ids reclaimed. */
   def reclaimWideSimhashTombstonesBucketed(spark: SparkSession,
-      ids: DataFrame, table: String): Long = ControlPlane(spark) {
+      ids: DataFrame, table: String): Long =
+      ControlPlane(spark, ids) { (spark, ids) =>
     Bucketing.requireStrictFileReads(spark,
       "reclaimWideSimhashTombstonesBucketed")
     val dlog = bucketedDlogPath(spark, table)
@@ -1615,7 +1621,7 @@ object Dedup {
   def upsertWideSimhashSignaturesBucketed(spark: SparkSession,
       batch: DataFrame, idCol: String, textCol: String, table: String,
       buckets: Int, portable: Boolean = false): Unit =
-      ControlPlane(spark) {
+      ControlPlane(spark, batch) { (spark, batch) =>
     requireWideDrawsBucketed(spark, table, portable,
       "upsertWideSimhashSignaturesBucketed")
     val ids = batch.select(col(idCol).as("id"))
@@ -1634,6 +1640,7 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       opCol: String = "op", seqCol: String = "seq",
       portable: Boolean = false): (Long, Long, Long) =
+    ControlPlane(spark, batch) { (spark, batch) =>
     dispatchSigCdc(spark, batch, idCol, textCol, opCol, seqCol,
       "applyWideSimhashCdcBatchBucketed",
       del = ids => deleteSignaturesBucketed(spark, ids, table),
@@ -1647,6 +1654,7 @@ object Dedup {
       // takedown's validity does not depend on the hash config.
       gateIU = () => requireWideDrawsBucketed(spark, table, portable,
         "applyWideSimhashCdcBatchBucketed"))
+    }
 
   /** [[simhashWideIncremental]] against the bucketed store: identical
     * pair semantics; the store side reads its write-time bucket
@@ -1692,7 +1700,7 @@ object Dedup {
     * `<table>_meta` is untouched: the draw family is a property of
     * the hash config, not of which rows live. */
   def compactWideSimhashStoreBucketed(spark: SparkSession,
-      table: String): Unit = ControlPlane(spark) {
+      table: String): Unit = ControlPlane(spark) { spark =>
     val dead = readDeletedBucketed(spark, table).map((_, "id"))
     Bucketing.compactTable(spark, s"${table}_sigs", dead)
     if (dead.isDefined) {

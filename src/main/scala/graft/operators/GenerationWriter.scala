@@ -19,9 +19,10 @@ import scala.collection.parallel.CollectionConverters._
 /**
  * Many manifest generations, each with its own schema, written by ONE
  * Spark job: the writer of every merge and rollup generation. Every
- * input is planned with AQE off (AQE's `execute()` runs each shuffle
- * stage as its own job), so all inputs' stages hang off one result
- * stage and Spark's DAG scheduler runs them as one group: a
+ * input is planned in the control-plane child session
+ * ([[ControlPlane.session]]), whose AQE is off (AQE's `execute()` runs
+ * each shuffle stage as its own job), so all inputs' stages hang off
+ * one result stage and Spark's DAG scheduler runs them as one group: a
  * micro-batch's per-table merges, or a partitioned merge's touched
  * partitions, pay the job floor once, not once per generation.
  *
@@ -65,32 +66,6 @@ private[graft] object GenerationWriter {
     * in listeners and the UI. */
   val RddName = "GenerationWriter.writeAll"
 
-  private val children =
-    new java.util.WeakHashMap[SparkSession, (Map[String, String], SparkSession)]()
-
-  /** The child session inputs are planned in: the caller's conf with
-    * AQE off; the caller's session is never touched. One child is kept
-    * per caller session and reused while the caller's conf is
-    * unchanged (a changed conf gets a new child; a child is never
-    * mutated), so a stream does not build a new session state every
-    * micro-batch. */
-  def session(spark: SparkSession): SparkSession = children.synchronized {
-    val aqeOff = SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false"
-    val conf = spark.sessionState.conf.getAllConfs + aqeOff
-    Option(children.get(spark)).collect { case (c, s) if c == conf => s }
-      .getOrElse {
-        val child = PlanBridge.childSession(spark, aqeOff)
-        children.put(spark, (conf, child))
-        child
-      }
-  }
-
-  /** `df` rebound to `child`, to be planned there; a frame over a
-    * persisted Dataset still scans its cache (the CacheManager is
-    * shared). */
-  def plan(child: SparkSession, df: DataFrame): QueryExecution =
-    PlanBridge.ofRows(child, df.queryExecution.analyzed).queryExecution
-
   /** `df` planned in `child` as it is written, with its partition
     * count: one task when every leaf is sized and their sum fits
     * `advisory`, else the plan as is and ⌈sized leaf bytes / advisory⌉
@@ -105,7 +80,7 @@ private[graft] object GenerationWriter {
       (PlanBridge.ofRows(child, cached.transformUp {
         case l: LeafNode => Repartition(1, shuffle = false, l)
       }).queryExecution, 1)
-    else (plan(child, df),
+    else (ControlPlane.rebind(child, df).queryExecution,
       ((bytes + advisory - 1) / advisory).max(1).min(Int.MaxValue).toInt)
   }
 
@@ -115,7 +90,7 @@ private[graft] object GenerationWriter {
       require(!spark.sparkContext.getConf.getBoolean("spark.speculation", false),
         "GenerationWriter writes deterministic file names, which a " +
           "speculative duplicate attempt would race: set spark.speculation=false")
-      val child = session(spark)
+      val child = ControlPlane.session(spark)
       SQLExecution.withSQLConfPropagated(child.asInstanceOf[classic.SparkSession]) {
         run(child, inputs)
       }

@@ -1213,7 +1213,7 @@ object Similarity {
    * NEW tombstones filed.
    */
   def deleteFromIvfStore(spark: SparkSession, ids: DataFrame,
-      storeDir: String): Long = ControlPlane(spark) {
+      storeDir: String): Long = ControlPlane(spark, ids) { (spark, ids) =>
     import org.apache.spark.storage.StorageLevel
     val want = ids.select(col(ids.columns.head).as("item_id")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1303,7 +1303,7 @@ object Similarity {
    * without a standing D would be meaningless and is never written).
    */
   def reclaimTombstones(spark: SparkSession, ids: DataFrame,
-      storeDir: String): Long = ControlPlane(spark) {
+      storeDir: String): Long = ControlPlane(spark, ids) { (spark, ids) =>
     import org.apache.spark.storage.StorageLevel
     TombstoneLog.maybeFold(spark, deletedPath(storeDir), "item_id")
     // one log read serves the dead-set AND both appends' seqs
@@ -1429,7 +1429,8 @@ object Similarity {
    * ([[applyCdcBatch]] does exactly that).
    */
   def upsertIntoIvfStore(spark: SparkSession, newVecs: DataFrame,
-      storeDir: String): Unit = ControlPlane(spark) {
+      storeDir: String): Unit =
+      ControlPlane(spark, newVecs) { (spark, newVecs) =>
     upsertPrepOne(spark, newVecs.select(newVecs.columns.head), storeDir)
     appendToIvfStore(spark, newVecs, storeDir)
   }
@@ -1565,7 +1566,7 @@ object Similarity {
    * there in between. Returns the number of new tombstones.
    */
   def deleteFromShardedIvfStore(spark: SparkSession, ids: DataFrame,
-      storeDir: String): Long = ControlPlane(spark) {
+      storeDir: String): Long = ControlPlane(spark, ids) { (spark, ids) =>
     val sh = readShardCount(spark, storeDir)
     val routed = isRoutedStore(spark, storeDir)
     if (routed) requireNoStagedSplit(spark, storeDir)
@@ -1595,7 +1596,8 @@ object Similarity {
    * writer, like every store mutation.
    */
   def upsertIntoShardedIvfStore(spark: SparkSession, newVecs: DataFrame,
-      storeDir: String): Unit = ControlPlane(spark) {
+      storeDir: String): Unit =
+      ControlPlane(spark, newVecs) { (spark, newVecs) =>
     val sh = readShardCount(spark, storeDir)
     val routed = isRoutedStore(spark, storeDir)
     if (routed) requireNoStagedSplit(spark, storeDir)
@@ -1641,7 +1643,7 @@ object Similarity {
       storeDir: String, idCol: String = "vec_id",
       vecCol: String = "embedding", opCol: String = "op",
       seqCol: String = "seq"): (Long, Long, Long) =
-      ControlPlane(spark) {
+      ControlPlane(spark, batch) { (spark, batch) =>
     import org.apache.spark.storage.StorageLevel
     // op rank breaks same-seq ties: D > U > I
     val rank = when(col("op") === "D", 2)
@@ -1773,7 +1775,7 @@ object Similarity {
    * re-run completes the reclaim.
    */
   def compactIvfStore(spark: SparkSession, storeDir: String): Unit =
-      ControlPlane(spark) {
+      ControlPlane(spark) { spark =>
     val rootFs = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dead = readDeleted(spark, storeDir)
@@ -2522,12 +2524,12 @@ object Similarity {
    */
   def splitHotShard(spark: SparkSession, storeDir: String,
       shard: Int = -1, splitIters: Int = 4, nlist: Int = 0,
-      iters: Int = 0): Int = ControlPlane(spark) {
-    // inside the mutation scope (r17): the split's joins are
+      iters: Int = 0): Int = ControlPlane(spark) { spark =>
+    // in the control-plane session: the split's joins are
     // broadcast-pinned (tombstone antis, re-delivery antis) and its
     // aggregates are hot-shard-bounded — AQE's per-stage
     // materialization is pure driver latency here, the same argument
-    // and measurement as the CDC scopes (ControlPlane scaladoc)
+    // and measurement as the CDC mutations (ControlPlane scaladoc)
     val staged = stageSplit(spark, storeDir, shard, splitIters, nlist, iters)
     val fs = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2731,7 +2733,7 @@ object Similarity {
     * Safe to call repeatedly; each death window lands in one of the
     * two cases. Real-process death coverage: SplitCrashSpec. */
   def resumeSplitHotShard(spark: SparkSession,
-      storeDir: String): Int = ControlPlane(spark) {
+      storeDir: String): Int = ControlPlane(spark) { spark =>
     val fs = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = splitStagingDir(storeDir)
@@ -2782,8 +2784,8 @@ object Similarity {
    */
   def mergeColdShards(spark: SparkSession, storeDir: String,
       a: Int = -1, b: Int = -1, nlist: Int = 0,
-      iters: Int = 0): Int = ControlPlane(spark) {
-    // mutation scope: same argument as splitHotShard
+      iters: Int = 0): Int = ControlPlane(spark) { spark =>
+    // control-plane session: same argument as splitHotShard
     val staged = stageMerge(spark, storeDir, a, b, nlist, iters)
     val fs = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2952,7 +2954,7 @@ object Similarity {
     * store was never touched (debris removed, re-run the merge); with
     * the marker, [[applyMergeStaging]] re-applies idempotently. */
   def resumeMergeColdShards(spark: SparkSession,
-      storeDir: String): Int = ControlPlane(spark) {
+      storeDir: String): Int = ControlPlane(spark) { spark =>
     val fs = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = mergeStagingDir(storeDir)

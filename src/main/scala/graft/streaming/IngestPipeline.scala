@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.model.DmsEnvelope
-import graft.operators.{Constraints, Merge, Rollup, StreamSplitter}
+import graft.operators.{Constraints, ControlPlane, Merge, Rollup, StreamSplitter}
 
 /**
  * The reference's END-TO-END story as ONE continuous pipeline
@@ -256,15 +256,18 @@ object IngestPipeline {
           // counters (input derives) plus each table's merge-lane row
           // count — the same clean + laneRows predicate the lane
           // filters by — so an idle table below costs nothing, no
-          // emptiness probe job
-          val m = flagged.agg(
+          // emptiness probe job. It plans in the control-plane session
+          // (AQE off), where its partial-aggregate stage is not a job
+          // of its own
+          val counts = flagged.agg(
             count(lit(1)).as("n"),
             (coalesce(sum(when(size(col("violated")) > 0, 1L)
               .otherwise(0L)), lit(0L)).as("bad") +:
               cfg.tables.zipWithIndex.map { case (t, i) =>
                 count(when(size(col("violated")) === 0 && laneRows(t),
                   true)).as(s"lane$i")
-              }): _*).head()
+              }): _*)
+          val m = ControlPlane.rebind(ControlPlane.session(spark), counts).head()
           // 3. per-table standing snapshots: every table this batch
           // carries rows for (the count above stands in for
           // MergeSink.applyBatch's emptiness probe) merges in ONE Spark

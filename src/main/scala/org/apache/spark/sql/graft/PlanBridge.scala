@@ -15,21 +15,17 @@ object PlanBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /**
-   * A child of `spark` (`newSession()`: same SparkContext, catalog and
-   * CacheManager) whose SQL conf is the caller's plus `overrides`, so a
-   * step can plan under its own execution mode without touching the
-   * caller's conf. Frames rebind to it through [[ofRows]]; temp views
-   * and session UDFs do not carry over, but an analyzed plan already
-   * holds them resolved.
+   * A child of `spark` (`cloneSession()`: same SparkContext, catalog and
+   * CacheManager; a copy of its conf, session functions and temp views)
+   * whose SQL conf is the caller's plus `overrides`, so a step can plan
+   * under its own execution mode without touching the caller's conf.
+   * Frames rebind to it through [[ofRows]]. What the caller registers
+   * after the clone does not carry over.
    */
   def childSession(spark: SparkSession,
       overrides: (String, String)*): SparkSession = {
-    val parent = spark.asInstanceOf[classic.SparkSession]
-    val child = parent.newSession()
-    val conf = child.sessionState.conf
-    (parent.sessionState.conf.getAllConfs ++ overrides).foreach {
-      case (k, v) => conf.setConfString(k, v)
-    }
+    val child = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    overrides.foreach { case (k, v) => child.sessionState.conf.setConfString(k, v) }
     child
   }
 

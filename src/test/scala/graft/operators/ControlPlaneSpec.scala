@@ -1,39 +1,82 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
-/** The r17 concurrency invariants: the reentrant counted AQE scope
-  * and the cancelling, no-orphan leg runner under every per-shard /
-  * per-table concurrent mutation loop. */
+/** The control-plane session (AQE off in a child, the caller's conf
+  * untouched, relation caches dropped at the boundary) and the
+  * cancelling, no-orphan leg runner under every per-shard / per-table
+  * concurrent mutation loop. */
 class ControlPlaneSpec extends SparkSpec {
+  import spark.implicits._
 
   private val Key = "spark.sql.adaptive.enabled"
 
-  test("two CONCURRENT top-level mutation scopes + a nested one " +
-    "compose: AQE off inside all, restored exactly once after the " +
-    "last exit") {
+  private def adaptive(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]
+
+  test("two CONCURRENT mutations plan without AQE while the caller's conf " +
+    "and a caller query keep it") {
     spark.conf.set(Key, "true")
     val insideOff = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val callerOn = new java.util.concurrent.atomic.AtomicBoolean(true)
     val barrier = new java.util.concurrent.CyclicBarrier(2)
-    def leg(): Unit = ControlPlane(spark) {
-      barrier.await() // both threads INSIDE their scope at once
-      if (spark.conf.get(Key) != "false") insideOff.set(false)
-      ControlPlane(spark) { // nested scope: a composed mutation
-        if (spark.conf.get(Key) != "false") insideOff.set(false)
-      }
-      // nested exit must NOT restore while this scope is still open
-      if (spark.conf.get(Key) != "false") insideOff.set(false)
-      barrier.await() // hold both scopes open until both checked
+    def leg(): Unit = ControlPlane(spark, spark.range(8).toDF("id")) {
+      (child, ids) =>
+        barrier.await() // both threads inside a mutation at once
+        if (adaptive(ids.groupBy("id").count()) ||
+          adaptive(child.range(8).groupBy("id").count()))
+          insideOff.set(false)
+        // a nested entry handed the child runs in that same child
+        ControlPlane(child) { s => if (!(s eq child)) insideOff.set(false) }
+        if (spark.conf.get(Key) != "true" ||
+          !adaptive(spark.range(8).groupBy("id").count()))
+          callerOn.set(false)
+        barrier.await() // hold both mutations open until both checked
     }
     val t = new Thread(() => leg())
     t.start()
     leg()
     t.join(30000)
     assert(!t.isAlive)
-    assert(insideOff.get(), "AQE was not off inside an open scope")
-    assert(spark.conf.get(Key) == "true",
-      "last scope exit must restore the saved value")
+    assert(insideOff.get(), "a mutation body planned with AQE")
+    assert(callerOn.get(), "the caller lost AQE during a mutation")
+  }
+
+  test("a caller relation resolved before a mutation reads what it wrote") {
+    val table = "cp_reclaim"
+    def drop(): Unit = Seq("_sigs", "_bands", "_deleted")
+      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $table$s"))
+    drop()
+    val docs = (0L until 8L).map(i => (i, s"control plane document $i " +
+      s"alpha$i beta$i gamma$i delta$i")).toDF("doc_id", "text")
+    Dedup.buildSignatureStoreBucketed(docs, "doc_id", "text", table,
+      buckets = 4, numHashes = 64, bands = 8, shingleN = 5)
+    try {
+      val sigs = s"${table}_sigs"
+      assert(Dedup.deleteSignaturesBucketed(spark, Seq(3L).toDF("doc_id"),
+        table) === 1L)
+      // resolves (and caches) the caller's relation and its listing
+      assert(spark.table(sigs).count() === 8L)
+      assert(Dedup.reclaimSignatureTombstonesBucketed(spark,
+        Seq(3L).toDF("doc_id"), table, numHashes = 64, bands = 8) === 1L)
+      assert(spark.table(sigs).count() === 7L)
+      assert(spark.table(sigs).filter(col("id") === 3L).isEmpty)
+    } finally drop()
+  }
+
+  test("a mutation reads rows the caller appended since the last mutation") {
+    val table = "cp_append"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    Seq(1L, 2L).toDF("id").write.format("parquet").saveAsTable(table)
+    try {
+      def seen(): Long = ControlPlane(spark) { child => child.table(table).count() }
+      assert(seen() === 2L)
+      Seq(3L).toDF("id").write.mode("append").format("parquet").saveAsTable(table)
+      assert(seen() === 3L)
+    } finally { spark.sql(s"DROP TABLE IF EXISTS $table"); () }
   }
 
   test("parLegs preserves input order and joins every leg") {

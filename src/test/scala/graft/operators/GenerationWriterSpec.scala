@@ -105,8 +105,8 @@ class GenerationWriterSpec extends SparkSpec {
       batch.count()
       val changes = MergeSink.compactWhole(batch.filter(col("k") > 0), "k", "seq")
       val target = Seq((3L, "t")).toDF("k", "name")
-      val plan = GenerationWriter.plan(GenerationWriter.session(spark),
-        Merge.mergeBatch(target, changes, "k")).executedPlan
+      val plan = ControlPlane.rebind(ControlPlane.session(spark),
+        Merge.mergeBatch(target, changes, "k")).queryExecution.executedPlan
       assert(plan.collect { case s: InMemoryTableScanExec => s }.nonEmpty)
       assert(plan.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty)
     } finally { batch.unpersist(); () }

@@ -327,9 +327,11 @@ class IngestPipelineSpec extends SparkSpec {
     // and three more merging tables add no job at all
     assert(four.size === one.size)
     // the whole batch: the landing write (which fills the batch cache),
-    // the quarantine write, the count aggregate's two jobs, the merge
-    // write and the ops rollup's one fold job — no emptiness probe
-    assert(one.size === 6)
+    // the quarantine write, the count aggregate (one job: it plans
+    // without AQE, so its partial-aggregate stage is no job of its
+    // own), the merge write and the ops rollup's one fold job — no
+    // emptiness probe
+    assert(one.size === 5)
   }
 
   // ---- store-maintenance lanes across a multi-epoch reshard (r14) ----
