@@ -50,10 +50,6 @@ object VectorFunctions {
     * encode projection (see [[graft.functions.expressions.UnitVector]]). */
   def unitVec(v: Column): Column = GraftFunctions.graftUnitVec(v)
 
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v))
-
   /**
    * Random-hyperplane (SimHash) LSH bucket id for a vector: `bits` sign
    * bits against pseudo-random hyperplanes derived deterministically from

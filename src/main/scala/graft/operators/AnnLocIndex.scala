@@ -81,8 +81,9 @@ private[graft] object AnnLocIndex {
     * debris like `_temporary/0/task.../part-*.parquet`, whose leaf
     * looks committed — counting it would send a genuinely empty store
     * past the guard into the "unable to infer schema" failure the
-    * guard exists to prevent (ADVICE r15). */
-  private def hasDataFiles(f: org.apache.hadoop.fs.FileSystem,
+    * guard exists to prevent (ADVICE r15). Also the rebalance resumes'
+    * test for a whole one-file record. */
+  private[operators] def hasDataFiles(f: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Boolean = {
     if (!f.exists(dir)) return false
     def committed(p: org.apache.hadoop.fs.Path): Boolean = {
@@ -146,6 +147,7 @@ private[graft] object AnnLocIndex {
   def append(spark: SparkSession, rows: DataFrame,
       storeDir: String): Unit =
     buckets(spark, storeDir).foreach { b =>
+      ControlPlane.dropDeadJobOutput(spark, locPath(storeDir))
       rows.select(col("item_id"), col("list_id"),
           bucketOf(col("item_id"), b).as("bucket"))
         .write.mode("append").partitionBy("bucket")

@@ -358,20 +358,9 @@ object Bucketing {
     // this call is about to delete
     val survivors = survivors0.exceptAll(rest)
       .localCheckpoint(true)
-    appendSurvivors(spark, table, survivors)
-    deleteOriginals(spark, table, affected)
-    affected.length
-  }
-
-  /** Reclaim step 2 (split from [[reclaimFromTable]] so the crash
-    * fixture can drive a REAL JVM to each window — the same discipline
-    * as the split/merge death modes): append the materialized
-    * survivors through the table's own bucket+sort spec. */
-  private[graft] def appendSurvivors(spark: SparkSession, table: String,
-      survivors: DataFrame): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.get
+    val fsys = new org.apache.hadoop.fs.Path(meta.location)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ControlPlane.dropDeadJobOutput(spark, meta.location.toString)
     val w = survivors.write.mode("append")
       .format(meta.provider.getOrElse("parquet"))
       .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
@@ -379,45 +368,9 @@ object Bucketing {
     (if (spec.sortColumnNames.nonEmpty)
        w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
      else w).saveAsTable(table)
-  }
-
-  /** Reclaim step 3: delete the rewritten originals (up to `limit`
-    * files — the crash fixture's mid-delete window), then refresh the
-    * relation's cached listing. */
-  private[graft] def deleteOriginals(spark: SparkSession, table: String,
-      affected: Array[String], limit: Int = Int.MaxValue): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val fsys = new org.apache.hadoop.fs.Path(meta.location)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    affected.take(limit).foreach(u => fsys.delete(
+    affected.foreach(u => fsys.delete(
       new org.apache.hadoop.fs.Path(new java.net.URI(u)), false))
     spark.catalog.refreshTable(table) // listing cached pre-delete
-  }
-
-  /** Reclaim steps 0–1 for the crash fixture: the exact location +
-    * survivor computation [[reclaimFromTable]] runs, returned
-    * materialized but NOT applied (affected files + checkpointed
-    * survivors), so a real process can append and then die at a
-    * chosen point. Production callers use [[reclaimFromTable]]. */
-  private[graft] def planReclaimForCrashFixture(spark: SparkSession,
-      table: String, target: DataFrame, key: String)
-      : (Array[String], DataFrame) = {
-    import org.apache.spark.sql.functions._
-    val want = broadcast(target.select(col(target.columns.head).as(key)))
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val rows = spark.table(table).withColumn("_f", input_file_name())
-    val affected = rows.join(want, Seq(key), "left_semi")
-      .select("_f").distinct().collect().map(_.getString(0))
-    val affRows = spark.read.schema(spark.table(table).schema)
-      .format(meta.provider.getOrElse("parquet"))
-      .load(affected.toIndexedSeq: _*)
-    val survivors0 = affRows.join(want, Seq(key), "left_anti")
-    val affKeys = survivors0.select(key).distinct()
-    val rest = rows.filter(!col("_f").isin(affected.toSeq: _*))
-      .join(broadcast(affKeys), Seq(key), "left_semi")
-      .select(survivors0.columns.map(col).toIndexedSeq: _*)
-    (affected, survivors0.exceptAll(rest).localCheckpoint(true))
+    affected.length
   }
 }

@@ -252,4 +252,19 @@ private[graft] object ControlPlane {
       "table-leg")(g => g())
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
   }
+
+  /** Deletes what a write job into `dir` that died inside its commit
+    * left under `dir/_temporary`: its committed task output, which the
+    * next job commit into `dir` would publish as well (a second copy
+    * of the dead job's rows). Every append into an existing store dir
+    * calls this first; a store has one writer at a time. */
+  def dropDeadJobOutput(spark: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir, "_temporary")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
+  /** [[dropDeadJobOutput]] for catalog table `table`'s location. */
+  def dropDeadJobOutputOf(spark: SparkSession, table: String): Unit =
+    dropDeadJobOutput(spark, spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).location.toString)
 }

@@ -215,7 +215,8 @@ object Dedup {
   def appendSignatures(spark: SparkSession, admitted: DataFrame,
       idCol: String, textCol: String, storeDir: String,
       numHashes: Int = 64, shingleN: Int = 5,
-      portable: Boolean = false): Unit =
+      portable: Boolean = false): Unit = {
+    ControlPlane.dropDeadJobOutput(spark, storeDir)
     // first anti: re-delivery (physical ids, so a tombstoned id's
     // standing row is never doubled); second anti: takedown wins —
     // a deleted id re-enters only after compaction reclaims it
@@ -226,6 +227,7 @@ object Dedup {
           "left_anti"),
       storeDir)
       .write.mode("append").parquet(storeDir)
+  }
 
   // ---- Item-level delete for the signature stores (tombstones) -----
 
@@ -1082,6 +1084,8 @@ object Dedup {
       // band rows on re-delivery, which the admission query's distinct
       // absorbs, whereas the reverse order would leave PERMANENTLY
       // missing band rows (sigs present ⇒ anti join drops the docs).
+      Seq("bands", "sigs").foreach(t =>
+        ControlPlane.dropDeadJobOutputOf(spark, s"${table}_$t"))
       bandedIndex(fresh, bands, rows, portable = false)
         .write.mode("append").format("parquet")
         .bucketBy(buckets, "band", "bucket").sortBy("band", "bucket")
@@ -1099,7 +1103,7 @@ object Dedup {
       // right after the call (the audit, the spec's assertions) would
       // read the pre-append listing — found by the streamed bucketed
       // CDC spec the moment the anti was routed. Same lesson
-      // deleteOriginals already encodes for the delete side.
+      // reclaimFromTable already encodes for the delete side.
       spark.catalog.refreshTable(s"${table}_bands")
       spark.catalog.refreshTable(s"${table}_sigs")
     } finally fresh.unpersist()
@@ -1413,6 +1417,7 @@ object Dedup {
       idCol: String, textCol: String, storeDir: String,
       portable: Boolean = false): Unit = {
     requireWideDraws(spark, storeDir, portable, "appendWideSimhashSignatures")
+    ControlPlane.dropDeadJobOutput(spark, storeDir)
     // physical-id anti (re-delivery) + tombstone anti (takedown wins)
     // — see appendSignatures
     minusDeletedSigs(spark,
@@ -1600,6 +1605,7 @@ object Dedup {
       "appendWideSimhashSignaturesBucketed")
     Bucketing.requireStrictFileReads(spark,
       "appendWideSimhashSignaturesBucketed")
+    ControlPlane.dropDeadJobOutputOf(spark, s"${table}_sigs")
     // guarded bucket-pruned anti — the r16 location crossover, same
     // as appendSignaturesBucketed
     minusDeletedBucketed(spark,

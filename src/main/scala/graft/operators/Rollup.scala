@@ -180,14 +180,6 @@ object Rollup {
     writeSpec(spark, storeDir, spec)
   }
 
-  /** The idempotency tag the LIVE commit carries, if any — what a
-    * re-delivered streaming micro-batch checks before folding. */
-  def liveTag(spark: SparkSession, storeDir: String): Option[String] = {
-    val dir = new Path(storeDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    ManifestCommit.read(fs, dir).flatMap(_.tag)
-  }
-
   /** The idempotency tags of EVERY retained commit (live + history),
     * newest first. A re-delivery guard that checks only the live tag
     * is erased by any interleaved writer (a manual backfill fold, a

@@ -757,6 +757,8 @@ object Similarity {
       // the mutation floor IS job count (SCALING.md r14).
       def freshEnc = fresh("encoded")
         .select("item_id", "item_vec", "list_id")
+      Seq("encoded", "codes").foreach(t =>
+        ControlPlane.dropDeadJobOutput(spark, s"$storeDir/$t"))
       AnnLocIndex.append(spark,
         freshEnc.select("item_id", "list_id"), storeDir)
       freshEnc
@@ -1953,11 +1955,17 @@ object Similarity {
     // absent record = never built OR a rebuild crashed mid-way (the
     // build invalidates it first, restores it last) — fail loudly
     // instead of letting a reader guess a shard count
-    require(fs.exists(p),
-      s"sharded store $storeDir has no sharding record — either it was " +
-        "never built or a rebuild crashed mid-way (the record is " +
-        "invalidated first and restored last); re-run the build")
-    spark.read.parquet(p.toString).collect().head.getInt(0)
+    val why = "either it was never built or a mutation crashed mid-way " +
+      "(the record is invalidated first and restored last)"
+    require(fs.exists(p), s"sharded store $storeDir has no sharding record — $why")
+    // a record whose write died before its data landed fails as loudly
+    // and as typed as an absent one
+    try spark.read.parquet(p.toString).collect().head.getInt(0)
+    catch {
+      case _: org.apache.spark.sql.AnalysisException =>
+        throw new IllegalArgumentException(
+          s"sharded store $storeDir: the sharding record is unreadable — $why")
+    }
   }
 
   /** Shard dirs that were actually built (the hash can leave a shard
@@ -2701,7 +2709,7 @@ object Similarity {
       if (fs.exists(p)) {
         val slice = spark.read.parquet(p.toString)
         val dir = s"$storeDir/shard=$j"
-        if (fs.exists(new org.apache.hadoop.fs.Path(dir + "/centroids")))
+        if (AnnLocIndex.hasDataFiles(fs, new org.apache.hadoop.fs.Path(dir + "/centroids")))
           // a straggler whose global argmax moved to an untouched
           // shard — filed with that shard's STORED quantizer
           appendToIvfStore(spark, slice, dir)
@@ -2739,7 +2747,9 @@ object Similarity {
     val staging = splitStagingDir(storeDir)
     require(fs.exists(new org.apache.hadoop.fs.Path(staging)),
       s"routed store $storeDir: no staged split to resume")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(staging + "/meta"))) {
+    // the `meta` marker is whole once its one data file is in: a
+    // death inside its write leaves no data file
+    if (!AnnLocIndex.hasDataFiles(fs, new org.apache.hadoop.fs.Path(staging + "/meta"))) {
       fs.delete(new org.apache.hadoop.fs.Path(staging), true)
       throw new IllegalStateException(
         s"routed store $storeDir: the staged split died before its " +
@@ -2935,7 +2945,7 @@ object Similarity {
       if (fs.exists(p)) {
         val slice = spark.read.parquet(p.toString)
         val dir = s"$storeDir/shard=$j"
-        if (fs.exists(new org.apache.hadoop.fs.Path(dir + "/centroids")))
+        if (AnnLocIndex.hasDataFiles(fs, new org.apache.hadoop.fs.Path(dir + "/centroids")))
           appendToIvfStore(spark, slice, dir)
         else
           buildIvfStore(slice, dir, nlist, iters, m, ksub, dim)
@@ -2960,7 +2970,9 @@ object Similarity {
     val staging = mergeStagingDir(storeDir)
     require(fs.exists(new org.apache.hadoop.fs.Path(staging)),
       s"routed store $storeDir: no staged merge to resume")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(staging + "/meta"))) {
+    // the `meta` marker is whole once its one data file is in: a
+    // death inside its write leaves no data file
+    if (!AnnLocIndex.hasDataFiles(fs, new org.apache.hadoop.fs.Path(staging + "/meta"))) {
       fs.delete(new org.apache.hadoop.fs.Path(staging), true)
       throw new IllegalStateException(
         s"routed store $storeDir: the staged merge died before its " +

@@ -123,9 +123,15 @@ private[graft] object TombstoneLog {
     * the snapshot and these writes. */
   def append(spark: SparkSession, ids: DataFrame, path: String,
       idCol: String, op: String, seq: Long): Unit =
-    ids.withColumn("seq", lit(seq))
-      .withColumn("op", lit(op))
-      .coalesce(1).write.mode("append").parquet(path)
+    write(spark, ids.withColumn("seq", lit(seq)).withColumn("op", lit(op)),
+      path)
+
+  /** Every write into the log: one file of records. */
+  private def write(spark: SparkSession, records: DataFrame,
+      path: String): Unit = {
+    ControlPlane.dropDeadJobOutput(spark, path)
+    records.coalesce(1).write.mode("append").parquet(path)
+  }
 
   /** Fold the log once its committed FILE count passes the threshold
     * (`spark.graft.tombstoneLogFoldFiles`, default 64): APPEND one
@@ -155,8 +161,8 @@ private[graft] object TombstoneLog {
     if (before.length <= threshold) return
     resolvedOps(spark, path, idCol) match {
       case Some(d) =>
-        d.withColumn("seq", lit(nextSeq(spark, path, idCol)))
-          .coalesce(1).write.mode("append").parquet(path)
+        write(spark, d.withColumn("seq", lit(nextSeq(spark, path, idCol))),
+          path)
       case None => return
     }
     // the checkpoint is committed — everything written before it is
@@ -189,10 +195,9 @@ private[graft] object TombstoneLog {
     if (before.nonEmpty) {
       read(spark, path, idCol) match {
         case Some(log) =>
-          log.select(idCol).distinct()
+          write(spark, log.select(idCol).distinct()
             .withColumn("seq", lit(nextSeq(spark, path, idCol)))
-            .withColumn("op", lit("R"))
-            .coalesce(1).write.mode("append").parquet(path)
+            .withColumn("op", lit("R")), path)
         case None => // unreadable = nothing committed; fall through
       }
       val ckpt = committed.filterNot(before.contains).toSet

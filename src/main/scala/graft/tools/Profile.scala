@@ -57,11 +57,14 @@ object Profile {
 
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
-      // the result stage's name IS the action's short call site
+      // the result stage's name IS the action's short call site; it
+      // is created after its parents, so it has the highest stage id
+      // (stageInfos comes from a set: its order says nothing)
       val label = Option(js.properties)
         .flatMap(p => Option(p.getProperty("spark.job.description")))
         .filter(_.nonEmpty)
-        .orElse(js.stageInfos.lastOption.map(_.name)).getOrElse("?")
+        .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name))
+        .getOrElse("?")
       started.put(js.jobId, (System.nanoTime(), label))
     }
 

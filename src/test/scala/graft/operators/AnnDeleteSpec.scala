@@ -151,7 +151,7 @@ class AnnDeleteSpec extends SparkSpec {
 
   test("routed store: delete locates by membership (post-split safe); search, calibration, and split all compose with tombstones") {
     val dir = tmpStore("anndelrt")
-    val fixture = graft.tools.CrashWriter.splitFixture(spark)
+    val fixture = CrashFixtures.splitFixture(spark)
     val sh = Similarity.buildRoutedIvfStore(fixture, dir, shards = 2,
       nlist = 2, dim = 8, superIters = 3)
     val queries = fixture.filter(col("vec_id") < 6)
@@ -187,7 +187,7 @@ class AnnDeleteSpec extends SparkSpec {
 
   test("takedown wins STORE-WIDE on a routed store: a re-delivered insert routing to a DIFFERENT shard than its tombstone still drops") {
     val dir = tmpStore("anndelxshard")
-    val fixture = graft.tools.CrashWriter.splitFixture(spark)
+    val fixture = CrashFixtures.splitFixture(spark)
     val sh = Similarity.buildRoutedIvfStore(fixture, dir, shards = 2,
       nlist = 2, dim = 8, superIters = 3)
     // id 0 lives in cluster 0's shard; tombstone it there
@@ -227,7 +227,7 @@ class AnnDeleteSpec extends SparkSpec {
 
   test("deletes refuse to run over a staged split — resume would resurrect them from the staging") {
     val dir = tmpStore("anndelstg")
-    val fixture = graft.tools.CrashWriter.splitFixture(spark)
+    val fixture = CrashFixtures.splitFixture(spark)
     Similarity.buildRoutedIvfStore(fixture, dir, shards = 2, nlist = 2,
       dim = 8, superIters = 3)
     Similarity.stageSplit(spark, dir)

@@ -120,7 +120,7 @@ class AnnUpsertSpec extends SparkSpec {
 
   test("routed store: upsert re-files the replacement by the CURRENT router — membership moves, no duplicates") {
     val dir = tmpStore("annupsrt")
-    val fixture = graft.tools.CrashWriter.splitFixture(spark)
+    val fixture = CrashFixtures.splitFixture(spark)
     val sh = Similarity.buildRoutedIvfStore(fixture, dir, shards = 2,
       nlist = 2, dim = 8, superIters = 3)
     // replace a handful of vectors with a DIFFERENT item's vector
@@ -262,7 +262,7 @@ class AnnUpsertSpec extends SparkSpec {
 
   test("applyCdcBatch over a staged rebalance: loud at the FIRST lane, nothing applied, and the retry after resume converges") {
     val dir = tmpStore("anncdcstaged")
-    val fixture = graft.tools.CrashWriter.splitFixture(spark)
+    val fixture = CrashFixtures.splitFixture(spark)
     Similarity.buildRoutedIvfStore(fixture, dir, shards = 2, nlist = 2,
       dim = 8, superIters = 3)
     // a crashed split: staging present past its point of no return

@@ -2,13 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{CrashPoint, SparkSpec}
 import graft.sources.Tables
 
 /** Bucketed layout must actually eliminate the exchanges: join and
   * aggregation on the bucket key plan shuffle-free, and bucket-key
   * equality filters prune to one bucket's files. */
 class BucketingSpec extends SparkSpec {
+  CrashPoint.install(spark)
 
   private def withSmj[A](f: => A): A = {
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
@@ -324,13 +325,20 @@ class BucketingSpec extends SparkSpec {
     Bucketing.writeBucketed(b, "win_b", "k", 4)
     try {
       val target = Seq(3L, 17L).toDF("k")
-      // drive win_a into the MID-WINDOW state: survivors appended,
-      // originals not yet deleted (the crash fixture's split steps —
-      // exactly the state a reader can observe between reclaim's two
-      // mutations)
-      val (affected, survivors) =
-        Bucketing.planReclaimForCrashFixture(spark, "win_a", target, "k")
-      Bucketing.appendSurvivors(spark, "win_a", survivors)
+      // the files holding the targets: the ones the reclaim rewrites
+      val affected = spark.table("win_a").withColumn("_f", input_file_name())
+        .filter(col("k").isin(3L, 17L)).select("_f").distinct()
+        .as[String].collect()
+      // kill the real reclaim in its MID-WINDOW state: survivors
+      // appended, its first delete of an original failing — exactly
+      // the state a reader can observe between reclaim's two mutations
+      val winA = new CrashPoint.Fixture(CrashPoint.relocate(spark, "win_a"))
+      val firstDelete = CrashPoint.windows(winA.rehearse(
+          Bucketing.reclaimFromTable(spark, "win_a", target, "k")))
+        .find(_.kind == "delete").get
+      spark.catalog.refreshTable("win_a")
+      assert(CrashPoint.crashAt(spark, firstDelete)(
+        Bucketing.reclaimFromTable(spark, "win_a", target, "k")).isFailure)
       spark.catalog.refreshTable("win_a")
       // which keys now stand twice: the affected buckets' rows minus
       // the targets (their original copy + the appended survivor copy)
@@ -355,16 +363,20 @@ class BucketingSpec extends SparkSpec {
             s"key $k joined $c times (dup expected: ${dupKeys(k)})")
         }
       }
-      // the delete completes the reclaim: the join is exact, targets gone
-      Bucketing.deleteOriginals(spark, "win_a", affected)
+      // the re-run completes the reclaim (its full-row anti appends
+      // nothing again): the join is exact, targets gone
+      assert(Bucketing.reclaimFromTable(spark, "win_a", target, "k") ===
+        affected.length)
       withSmj {
         val j = Bucketing.colocatedJoin(spark, "win_a", "win_b", "k")
         assert(!j.queryExecution.executedPlan.toString.contains("Exchange"))
         assert(j.groupBy("k").count().as[(Long, Long)].collect().toMap ===
           (0L until 64L).filterNot(Set(3L, 17L)).map(_ -> 1L).toMap)
       }
-    } finally Seq("win_a", "win_b")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    } finally Seq("win_a", "win_b").foreach { t =>
+      CrashPoint.unrelocate(spark, t)
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
   }
 
   test("prunedScan: a standing plan pins the listing-time snapshot — files appended after the call are invisible to it and visible to a fresh call") {

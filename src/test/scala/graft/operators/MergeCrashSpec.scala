@@ -3,21 +3,30 @@ package graft.operators
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.scalatest.exceptions.TestFailedException
 
-import graft.SparkSpec
+import graft.{ChildJvm, CrashPoint, SparkSpec}
+import graft.CrashPoint.Call
 import graft.streaming.MergeSink
+import graft.tools.CrashWriter
 
 /** Abrupt-death recovery for the manifest commit protocol — the 100 TB
   * failure mode #1 is a writer process dying mid-anything, so every
   * death point must leave readers on committed state and let a
   * restarted writer proceed (after the staged-grace window for debris
-  * that still looks in-flight):
+  * that still looks in-flight). The deaths are the calls of one real
+  * whole-manifest `MergeSink.applyBatch` ([[CrashPoint]]), each killed
+  * in turn:
   *
-  *  1. death mid-`writeGen` — a partial generation dir, no commit file;
-  *  2. death mid-pointer-write — a torn commit file above the live one;
+  *  1. death mid-`writeGen` — the generation's task dies at its one
+  *     part file's create, so nothing of it lands;
+  *  2. death at the commit create — a whole stage no commit names;
   *  3. death after the flip, before post-commit cleanup — superseded
   *     generations linger;
-  *  4. the staged-grace gate itself: fresh crash debris aborts a
+  *  4. death mid-pointer-write — a torn commit file above the live
+  *     one (a torn write inside one file is no call boundary: built
+  *     directly here, and by a real JVM in `CrashWriter die-torn`);
+  *  5. the staged-grace gate itself: fresh crash debris aborts a
   *     restart LOUDLY (indistinguishable from a live concurrent
   *     writer) until it ages; a peer's GC never reclaims a fresh
   *     stage, and when the gate is off the [[ManifestCommit
@@ -26,6 +35,7 @@ import graft.streaming.MergeSink
   */
 class MergeCrashSpec extends SparkSpec {
   import spark.implicits._
+  CrashPoint.install(spark)
 
   private def tmp(prefix: String) =
     Files.createTempDirectory(prefix).toString + "/snap"
@@ -62,30 +72,6 @@ class MergeCrashSpec extends SparkSpec {
       .foreach(c => fs.setTimes(c.getPath, old, -1L))
   }
 
-  /** run CrashWriter in a REAL separate JVM (halt(137) means a
-    * genuinely dead process — no shutdown hooks, no finally blocks). */
-  private def runCrashWriter(dir: String, mode: String): Int = {
-    val addOpens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-      "java.io", "java.net", "java.nio", "java.util",
-      "java.util.concurrent", "java.util.concurrent.atomic",
-      "sun.nio.ch", "sun.nio.cs", "sun.security.action",
-      "sun.util.calendar").flatMap(p =>
-      Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val cmd = Seq("java", "-XX:+IgnoreUnrecognizedVMOptions") ++
-      addOpens ++ Seq("-Xmx2g", "-cp", sys.props("java.class.path"),
-      "graft.tools.CrashWriter", dir, mode)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    val p = pb.start()
-    // drain output so the child can't block on a full pipe
-    val drain = new Thread(() => {
-      val buf = new Array[Byte](8192)
-      while (p.getInputStream.read(buf) >= 0) ()
-    })
-    drain.setDaemon(true); drain.start()
-    p.waitFor()
-  }
-
   private def genDirs(dir: String): Set[String] = {
     val fs = fsOf(dir)
     val data = ManifestCommit.dataDir(new Path(dir))
@@ -94,59 +80,112 @@ class MergeCrashSpec extends SparkSpec {
       .filter(_.startsWith("g-")).toSet
   }
 
+  private val v2 = Seq((1L, "a", 1.0), (2L, "b", 2.0))
+  private val v3 = v2 :+ ((3L, "c", 3.0))
+
+  /** A snapshot at v2 (retention 2: v1's commit and generation are
+    * exactly what v3's post-commit cleanup reclaims), the calls of
+    * one clean v3 commit over it (`CrashWriter.ops("merge-commit")`),
+    * and its crash windows. */
+  private lazy val (local, snap, windows) = {
+    val local = tmp("crash-enum")
+    val snap = new CrashPoint.Fixture(local)
+    MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), local,
+      "k", "op", "seq")
+    MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), local,
+      "k", "op", "seq")
+    val calls = snap.rehearse(commitV3(CrashPoint.uri(local)))
+    (local, snap, CrashPoint.windows(calls))
+  }
+  private def dir = CrashPoint.uri(local)
+  private def commitV3(d: String): Unit = CrashWriter.ops("merge-commit")(spark, d)
+
+  /** the generation write's part-file create, in its task */
+  private lazy val midWriteGen = CrashPoint.find(windows, "create",
+    "/snap/data/g-000000000003-*/part-")
+  /** the commit file's create: the generation is whole, nothing names it */
+  private lazy val staged = CrashPoint.find(windows, "create",
+    "/snap/_graft_commit-000000000003")
+  /** the first cleanup delete after the flip */
+  private lazy val postFlip = windows(windows.indexOf(staged) + 1)
+
+  /** Dies at `at`: in a real JVM halted there (halt(137)) when
+    * `real`, after checking that it leaves the files the in-process
+    * death at the same call leaves; else in-process only. */
+  private def dieAt(at: Call, real: Boolean): Unit = {
+    snap.restore()
+    assert(CrashPoint.crashAt(spark, at)(commitV3(dir)).isFailure)
+    if (real) {
+      assert(!at.onExecutor)
+      val inProcess = CrashPoint.listing(local)
+      snap.restore()
+      val child = ChildJvm.start(Seq(dir, "die-at", "merge-commit"),
+        CrashPoint.haltProps(at))
+      assert(child.waitFor() === 137, child.tail)
+      assert(CrashPoint.listing(local) === inProcess)
+    }
+  }
+
+  test("death at every enumerated call of a whole-manifest commit: readers stay on committed state, the re-delivered batch commits after the grace window") {
+    assert(postFlip.kind == "delete" &&
+      postFlip.path.endsWith("/snap/_graft_commit-000000000001"), postFlip)
+    windows.foreach { w =>
+      snap.restore()
+      try {
+        assert(CrashPoint.crashAt(spark, w)(commitV3(dir)).isFailure)
+        // readers: committed state only, whichever side of the flip
+        val flipped = windows.indexOf(w) > windows.indexOf(staged)
+        assert(state(dir) === (if (flipped) v3 else v2))
+        ageDebris(dir)
+        commitV3(dir) // the re-delivery: idempotent when v3 landed
+        assert(state(dir) === v3)
+        assert(Merge.fsck(spark, dir).collect().isEmpty)
+      } catch {
+        case e: TestFailedException => throw e.modifyMessage(
+          _.map(m => s"crash at $w: $m"))
+        case e: Exception => fail(s"crash at $w: $e", e)
+      }
+    }
+  }
+
   test("REAL process death (halt mid-stage in a separate JVM): readers unaffected, restart recovers, GC reclaims") {
-    val dir = tmp("crash-realproc")
-    def run(mode: String): Int = runCrashWriter(dir, mode)
-    assert(run("seed") === 0)
-    assert(state(dir) === Seq((1L, "a", 1.0)))
     // the writer REALLY dies — halt(137), no shutdown hooks — with
-    // v2's generation fully staged and no commit file
-    assert(run("die-staged") === 137)
-    val orphans = genDirs(dir).filter(_.startsWith("g-000000000002"))
+    // v3's generation fully staged and no commit file
+    dieAt(staged, real = true)
+    val orphans = genDirs(dir).filter(_.startsWith("g-000000000003"))
     assert(orphans.size === 1, s"expected one dead stage: ${genDirs(dir)}")
     // readers see only committed state — the dead stage is invisible
-    assert(state(dir) === Seq((1L, "a", 1.0)))
+    assert(state(dir) === v2)
     // a restarted writer within the grace window aborts LOUDLY (the
     // debris is indistinguishable from a live concurrent writer)...
-    val boom = intercept[IllegalArgumentException] {
-      MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
-        "k", "op", "seq")
-    }
+    val boom = intercept[IllegalArgumentException](commitV3(dir))
     assert(boom.getMessage.contains("concurrent writer"))
     // ...and once the debris ages past the grace (what wall-clock does
     // for real), the re-delivered batch GCs it and commits
     ageDebris(dir)
-    MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
-      "k", "op", "seq")
-    assert(state(dir) === Seq((1L, "a", 1.0), (2L, "b", 2.0)))
+    commitV3(dir)
+    assert(state(dir) === v3)
     assert(!genDirs(dir).exists(orphans.contains),
       s"dead stage must be reclaimed: ${genDirs(dir)}")
   }
 
   test("death mid-writeGen: partial stage is debris; restart recovers and commits") {
-    val dir = tmp("crash-midwrite")
-    MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq") // v1
-    // the writer dies halfway through staging v2: some files landed,
-    // no commit file was ever written
-    val boom = intercept[RuntimeException] {
-      Merge.commitWholeGeneration(spark, dir) { (genPath, _) =>
-        Seq((2L, "half", 2.0)).toDF("k", "name", "bal")
-          .write.mode("overwrite").parquet(genPath)
-        throw new RuntimeException("simulated process death mid-write")
-      }
-    }
-    assert(boom.getMessage.contains("death"))
-    // readers: only committed state, the debris is invisible
-    assert(state(dir) === Seq((1L, "a", 1.0)))
-    assert(genDirs(dir).size === 2) // v1 live + v2 debris
-    // restart after the grace window (real debris is old by then)
-    ageDebris(dir)
-    MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
-      "k", "op", "seq")
-    assert(state(dir) === Seq((1L, "a", 1.0), (2L, "b", 2.0)))
-    // the crashed stage was reclaimed by the preamble GC — what
-    // remains is exactly the retained commits' generations
+    snap.restore()
+    // the writer dies inside staging v3, at its task's part-file
+    // create: the generation's one file is written by that task alone
+    // (no `_temporary`, no rename), so no call boundary leaves a part
+    // of it — the stage is absent here and whole at the commit create
+    assert(midWriteGen.onExecutor)
+    assert(CrashPoint.crashAt(spark, midWriteGen)(commitV3(dir)).isFailure)
+    // readers: only committed state
+    assert(state(dir) === v2)
+    assert(genDirs(dir).size === 2) // v1, v2 retained, nothing of v3
+    // with nothing of v3 staged there is no debris for the grace gate
+    // to wait on: the restart commits at once, and what remains is
+    // exactly the retained commits' generations (the aged-debris GC
+    // is the enumeration's `staged` window, above)
+    commitV3(dir)
+    assert(state(dir) === v3)
     val fs = fsOf(dir)
     val live = ManifestCommit.read(fs, new Path(dir)).get.live.toSet
     assert(genDirs(dir).forall(g =>
@@ -182,52 +221,37 @@ class MergeCrashSpec extends SparkSpec {
     assert(Merge.snapshotVersions(spark, dir).max === 2L)
   }
 
+
   test("death after flip, before cleanup: history lingers then GCs; state is the committed one") {
-    val dir = tmp("crash-postflip")
-    // three versions; the post-commit cleanup after v3 "never ran"
-    // (simulated by vacuum-less writes — retention keeps 2, so v1's
-    // generation is cleanup work that a crash could leave behind; a
-    // LATER writer's preamble does it instead)
-    MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
+    snap.restore()
+    assert(CrashPoint.crashAt(spark, postFlip)(commitV3(dir)).isFailure)
+    // the flip happened: readers see v3, and v1 (beyond retention 2)
+    // is cleanup work the crash left behind
+    assert(state(dir) === v3)
+    assert(Merge.snapshotVersions(spark, dir) === Seq(1L, 2L, 3L))
+    assert(genDirs(dir).size === 3)
+    // the next writer's preamble does the cleanup instead (committed =
+    // referenced-by-dropped-commit dirs reclaim with NO age gate)
+    MergeSink.applyBatch(spark, b((4L, "I", "d", 4.0, 4L)), dir,
       "k", "op", "seq")
-    MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
-      "k", "op", "seq")
-    MergeSink.applyBatch(spark, b((3L, "I", "c", 3.0, 3L)), dir,
-      "k", "op", "seq")
-    assert(state(dir) ===
-      Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)))
-    // only the retained window's generations remain — the preamble of
-    // each later batch completed the crashed cleanup's work (committed
-    // = referenced-by-dropped-commit dirs reclaim with NO age gate)
-    assert(Merge.snapshotVersions(spark, dir) === Seq(2L, 3L))
+    assert(state(dir) === v3 :+ ((4L, "d", 4.0)))
+    assert(Merge.snapshotVersions(spark, dir) === Seq(3L, 4L))
     assert(genDirs(dir).size === 2)
   }
 
   test("fresh crash debris aborts a too-early restart loudly, then ages out") {
-    val dir = tmp("crash-grace")
-    MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
-      "k", "op", "seq") // v1
-    intercept[RuntimeException] {
-      Merge.commitWholeGeneration(spark, dir) { (genPath, _) =>
-        Seq((2L, "half", 2.0)).toDF("k", "name", "bal")
-          .write.mode("overwrite").parquet(genPath)
-        throw new RuntimeException("simulated process death mid-write")
-      }
-    }
+    snap.restore()
+    assert(CrashPoint.crashAt(spark, staged)(commitV3(dir)).isFailure)
     // within the grace window the debris is indistinguishable from a
     // live concurrent writer's stage — the restart must NOT delete it
     // and must abort on the version probe instead
-    val e = intercept[IllegalArgumentException] {
-      MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
-        "k", "op", "seq")
-    }
+    val e = intercept[IllegalArgumentException](commitV3(dir))
     assert(e.getMessage.contains("concurrent writer"))
-    assert(state(dir) === Seq((1L, "a", 1.0))) // nothing was harmed
+    assert(state(dir) === v2) // nothing was harmed
     // after the window (debris mtime ages), the same batch proceeds
     ageDebris(dir)
-    MergeSink.applyBatch(spark, b((2L, "I", "b", 2.0, 2L)), dir,
-      "k", "op", "seq")
-    assert(state(dir) === Seq((1L, "a", 1.0), (2L, "b", 2.0)))
+    commitV3(dir)
+    assert(state(dir) === v3)
   }
 
   test("a peer's GC spares a fresh stage; with the gate off the loss is loud, not silent") {
@@ -265,10 +289,11 @@ class MergeCrashSpec extends SparkSpec {
 
   test("REAL process death mid-pointer-flip (die-torn): torn commit skipped, grace-gated, re-delivery heals") {
     val dir = tmp("crash-realtorn")
-    assert(runCrashWriter(dir, "seed") === 0)
+    MergeSink.applyBatch(spark, b((1L, "I", "a", 1.0, 1L)), dir,
+      "k", "op", "seq") // v1
     // the writer REALLY dies while the commit object is uploading:
     // header + entries flushed, trailer never lands
-    assert(runCrashWriter(dir, "die-torn") === 137)
+    assert(ChildJvm.run(Seq(dir, "die-torn")) === 137)
     val fs = fsOf(dir)
     val tornFile = new Path(dir, "_graft_commit-000000000002")
     assert(fs.exists(tornFile), "the torn pointer bytes must be on disk")
@@ -294,15 +319,13 @@ class MergeCrashSpec extends SparkSpec {
   }
 
   test("REAL process death post-flip (die-postflip): committed state live, lingering history GCs on next batch") {
-    val dir = tmp("crash-realpostflip")
-    assert(runCrashWriter(dir, "seed") === 0)
-    // v2 commits normally, v3 flips and the process dies BEFORE the
-    // post-commit cleanup GC
-    assert(runCrashWriter(dir, "die-postflip") === 137)
+    // v3 flips and the writer dies at the post-commit cleanup's first
+    // delete (in-process: the manifest commit's real-JVM death is the
+    // mid-stage one above, and die-torn below)
+    dieAt(postFlip, real = false)
     val fs = fsOf(dir)
     // the flip happened: readers see v3's content immediately
-    assert(state(dir) ===
-      Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)))
+    assert(state(dir) === v3)
     // the crash left cleanup work: v1's commit file (beyond retention
     // 2) is still present
     assert(fs.exists(new Path(dir, "_graft_commit-000000000001")),
@@ -313,8 +336,7 @@ class MergeCrashSpec extends SparkSpec {
       "k", "op", "seq")
     assert(!fs.exists(new Path(dir, "_graft_commit-000000000001")))
     assert(Merge.snapshotVersions(spark, dir) === Seq(3L, 4L))
-    assert(state(dir) === Seq((1L, "a", 1.0), (2L, "b", 2.0),
-      (3L, "c", 3.0), (4L, "d", 4.0)))
+    assert(state(dir) === v3 :+ ((4L, "d", 4.0)))
   }
 
   test("gc grace-gates a fresh torn commit above live; aged or superseded ones reclaim") {

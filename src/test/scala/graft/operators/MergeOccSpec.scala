@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{ChildJvm, SparkSpec}
 
 /** Injects a racing peer's COMMIT into the exact window between a
   * writer's staged generations and its pointer flip: the first
@@ -348,36 +348,8 @@ class MergeOccSpec extends SparkSpec {
   test("TWO REAL writer processes race on disjoint partitions: every batch lands, fsck clean") {
     val dir = tmp("occ-real") + "/snap"
     seed(dir)
-    val outputs = new java.util.concurrent.ConcurrentHashMap[String, StringBuilder]()
-    def launch(part: String, n: Int): Process = {
-      val addOpens = Seq("java.lang", "java.lang.invoke",
-        "java.lang.reflect", "java.io", "java.net", "java.nio",
-        "java.util", "java.util.concurrent",
-        "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-        "sun.security.action", "sun.util.calendar").flatMap(p =>
-        Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-      val cmd = Seq("java", "-XX:+IgnoreUnrecognizedVMOptions") ++
-        addOpens ++ Seq("-Xmx2g", "-cp", sys.props("java.class.path"),
-        "graft.tools.CrashWriter", dir, "occ-loop", part, n.toString)
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectErrorStream(true)
-      val p = pb.start()
-      val sb = new StringBuilder
-      outputs.put(part, sb)
-      val drain = new Thread(() => {
-        val buf = new Array[Byte](8192)
-        var r = p.getInputStream.read(buf)
-        while (r >= 0) {
-          sb.synchronized { sb.append(new String(buf, 0, r, "UTF-8")) }
-          r = p.getInputStream.read(buf)
-        }
-      })
-      drain.setDaemon(true); drain.start()
-      p
-    }
-    def tailOf(part: String): String =
-      outputs.get(part).synchronized {
-        outputs.get(part).takeRight(3000).toString }
+    def launch(part: String, n: Int) =
+      ChildJvm.start(Seq(dir, "occ-loop", part, n.toString))
     val n = 6
     // THREE writers: two on the seeded partitions, one creating a new
     // leaf mid-race — deeper consecutive-loss chains through the
@@ -385,9 +357,9 @@ class MergeOccSpec extends SparkSpec {
     val a = launch("en", n)
     val b = launch("de", n)
     val c = launch("fr", n)
-    assert(a.waitFor() === 0, s"writer A must exit clean:\n${tailOf("en")}")
-    assert(b.waitFor() === 0, s"writer B must exit clean:\n${tailOf("de")}")
-    assert(c.waitFor() === 0, s"writer C must exit clean:\n${tailOf("fr")}")
+    assert(a.waitFor() === 0, s"writer A must exit clean:\n${a.tail}")
+    assert(b.waitFor() === 0, s"writer B must exit clean:\n${b.tail}")
+    assert(c.waitFor() === 0, s"writer C must exit clean:\n${c.tail}")
     // every batch of both writers landed: the seed rows plus n inserts
     // per writer, and one commit per merge so the version counts them
     val got = Merge.readSnapshot(spark, dir)
@@ -411,43 +383,13 @@ class MergeOccSpec extends SparkSpec {
     // walk-then-stat hardening must hold against a concurrent deleter.
     val dir = tmp("occ-vacuum") + "/snap"
     seed(dir)
-    val outputs = new java.util.concurrent.ConcurrentHashMap[String, StringBuilder]()
-    def launch(tag: String, extra: Seq[String]): Process = {
-      val addOpens = Seq("java.lang", "java.lang.invoke",
-        "java.lang.reflect", "java.io", "java.net", "java.nio",
-        "java.util", "java.util.concurrent",
-        "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-        "sun.security.action", "sun.util.calendar").flatMap(p =>
-        Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-      val cmd = Seq("java", "-XX:+IgnoreUnrecognizedVMOptions") ++
-        addOpens ++ Seq("-Xmx2g", "-cp", sys.props("java.class.path"),
-        "graft.tools.CrashWriter", dir) ++ extra
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectErrorStream(true)
-      val p = pb.start()
-      val sb = new StringBuilder
-      outputs.put(tag, sb)
-      val drain = new Thread(() => {
-        val buf = new Array[Byte](8192)
-        var r = p.getInputStream.read(buf)
-        while (r >= 0) {
-          sb.synchronized { sb.append(new String(buf, 0, r, "UTF-8")) }
-          r = p.getInputStream.read(buf)
-        }
-      })
-      drain.setDaemon(true); drain.start()
-      p
-    }
-    def tailOf(tag: String): String =
-      outputs.get(tag).synchronized {
-        outputs.get(tag).takeRight(3000).toString }
     val n = 5
-    val a = launch("en", Seq("occ-loop", "en", n.toString))
-    val b = launch("de", Seq("occ-loop", "de", n.toString))
-    val v = launch("vac", Seq("vacuum-loop", "40"))
-    assert(a.waitFor() === 0, s"writer A must exit clean:\n${tailOf("en")}")
-    assert(b.waitFor() === 0, s"writer B must exit clean:\n${tailOf("de")}")
-    assert(v.waitFor() === 0, s"vacuum must exit clean:\n${tailOf("vac")}")
+    val a = ChildJvm.start(Seq(dir, "occ-loop", "en", n.toString))
+    val b = ChildJvm.start(Seq(dir, "occ-loop", "de", n.toString))
+    val v = ChildJvm.start(Seq(dir, "vacuum-loop", "40"))
+    assert(a.waitFor() === 0, s"writer A must exit clean:\n${a.tail}")
+    assert(b.waitFor() === 0, s"writer B must exit clean:\n${b.tail}")
+    assert(v.waitFor() === 0, s"vacuum must exit clean:\n${v.tail}")
     val got = Merge.readSnapshot(spark, dir)
       .select("name", "lang").as[(String, String)].collect()
     assert(got.length === 2 + 2 * n)

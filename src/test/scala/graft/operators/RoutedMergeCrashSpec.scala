@@ -1,142 +1,37 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
+import graft.CrashPoint
+import graft.CrashPoint.Call
 
-import graft.SparkSpec
+/** mergeColdShards (shards 0 and 1 of 3) at every crash window
+  * ([[RebalanceCrashSpec]]), including the merge's own POST-RENAME
+  * window: after shard=2 renames into shard=1's freed slot, shard=1
+  * holds the moved shard's ONLY copy (the staging has the merged
+  * pair's items, not the last shard's), so a resume that re-deleted it
+  * would lose it for good; the stage-time `last_built` marker tells
+  * "source absent because the rename happened" from "never existed". */
+class RoutedMergeCrashSpec extends RebalanceCrashSpec("merge", "q138",
+    shardsBefore = 3, shardsAfter = 2) {
 
-/** mergeColdShards death-window coverage with REAL process deaths —
-  * the parity item SplitCrashSpec set the standard for: every window
-  * between the merge's point of no return (the staged `meta` marker)
-  * and its final staging delete is driven by a separate JVM that
-  * halt(137)s there (graft.tools.CrashWriter merge-* modes), INCLUDING
-  * the merge-specific POST-RENAME window — after shard=(sh-1) renames
-  * into the freed slot, shard=hi holds the moved shard's ONLY copy
-  * (the staging has the merged pair's items, not the last shard's),
-  * and a resume that re-deleted it would be permanent loss; the
-  * stage-time `last_built` marker is what disambiguates "source
-  * absent because the rename happened" from "never existed". In every
-  * window: reads fail loudly, mutations refuse to run over the staged
-  * merge, and resumeMergeColdShards restores the q138 invariant —
-  * exhaustive routed search ≡ brute force over the FULL corpus. */
-class RoutedMergeCrashSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/store"
-
-  private lazy val fixture = graft.tools.CrashWriter.splitFixture(spark)
-  private lazy val queries = fixture.filter(col("vec_id") < 6)
-  private lazy val truth = Similarity.bruteForceTopK(fixture, queries, 5)
-    .as[(Long, Long, Double, Int)].collect().toSet
-
-  private def buildStore(dir: String): Int =
-    Similarity.buildRoutedIvfStore(fixture, dir, shards = 3, nlist = 2,
-      dim = 8, superIters = 3)
-
-  private def exhaustive(dir: String, nShards: Int) =
-    Similarity.searchRoutedIvfStore(spark, queries, dir, k = 5,
-      nprobe = 2, routeShards = nShards)
-      .as[(Long, Long, Double, Int)].collect().toSet
-
-  private def runCrashWriter(dir: String, mode: String): Int = {
-    val addOpens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-      "java.io", "java.net", "java.nio", "java.util",
-      "java.util.concurrent", "java.util.concurrent.atomic",
-      "sun.nio.ch", "sun.nio.cs", "sun.security.action",
-      "sun.util.calendar").flatMap(p =>
-      Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val cmd = Seq("java", "-XX:+IgnoreUnrecognizedVMOptions") ++
-      addOpens ++ Seq("-Xmx2g", "-cp", sys.props("java.class.path"),
-      "graft.tools.CrashWriter", dir, mode)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    val p = pb.start()
-    val drain = new Thread(() => {
-      val buf = new Array[Byte](8192)
-      while (p.getInputStream.read(buf) >= 0) ()
-    })
-    drain.setDaemon(true); drain.start()
-    p.waitFor()
+  protected def namedWindows(w: Seq[Call]): Seq[(String, Call)] = {
+    def after(c: Call) = w(w.indexOf(c) + 1)
+    val loDelete = CrashPoint.find(w, "delete", "/store/shard=0")
+    Seq(
+      // items and supers staged, the meta marker not yet begun
+      "staging" -> CrashPoint.find(w, "mkdirs", "/_merge_staging/meta/_temporary"),
+      // records invalidated, no shard dir deleted yet
+      "postinvalidate" -> loDelete,
+      // shard=0 deleted: the staging holds the only copy of its vectors
+      "midrefile" -> after(loDelete),
+      // both merged dirs gone and shard=2 renamed into shard=1's slot
+      "postrename" -> after(CrashPoint.find(w, "rename", "/store/shard=2")),
+      // every slice re-filed, the records not yet restored
+      "prerestore" -> CrashPoint.find(w, "mkdirs", "/store/super_centroids/_temporary"))
   }
 
-  private def assertLoudAndBlocked(dir: String): Unit = {
-    val e = intercept[IllegalArgumentException] {
-      Similarity.searchRoutedIvfStore(spark, queries, dir, k = 5)
-    }
-    assert(e.getMessage.contains("super-quantizer") ||
-      e.getMessage.contains("no sharding record"))
-    val a = intercept[IllegalArgumentException] {
-      Similarity.appendToRoutedIvfStore(spark,
-        Seq((9999L, Seq.fill(8)(0.5))).toDF("vec_id", "embedding"), dir)
-    }
-    assert(a.getMessage.contains("staged merge"))
-    val m = intercept[IllegalArgumentException] {
-      Similarity.mergeColdShards(spark, dir)
-    }
-    assert(m.getMessage.contains("staged merge"))
-  }
+  protected def resume(dir: String): Int =
+    Similarity.resumeMergeColdShards(spark, dir)
 
-  private def assertRecovered(dir: String): Unit = {
-    assert(Similarity.resumeMergeColdShards(spark, dir) === 2)
-    assert(!new java.io.File(dir + "/_merge_staging").exists(),
-      "success must reclaim the staging")
-    // the q138 invariant: exhaustive routed search over the 2
-    // remaining shards ≡ brute force over the FULL corpus — nothing
-    // lost, duplicated, or re-deleted across the death and resume
-    assert(exhaustive(dir, 2) === truth)
-    // a normal routed store again: appends work
-    Similarity.appendToRoutedIvfStore(spark,
-      Seq((9999L, fixture.filter(col("vec_id") === 0)
-        .select("embedding").as[Seq[Double]].head())
-      ).toDF("vec_id", "embedding"), dir)
-    val aug = Similarity.searchRoutedIvfStore(spark,
-        fixture.filter(col("vec_id") === 0), dir, k = 201, nprobe = 2,
-        routeShards = 2)
-      .select("item_id").as[Long].collect().toSet
-    assert(aug.contains(9999L))
-  }
-
-  for (mode <- Seq("merge-die-postinvalidate", "merge-die-midrefile",
-      "merge-die-postrename", "merge-die-prerestore")) {
-    test(s"REAL process death ($mode): reads loud, mutations refused, resume restores the q138 invariant") {
-      val dir = tmp(mode)
-      buildStore(dir)
-      assert(runCrashWriter(dir, mode) === 137)
-      assert(new java.io.File(dir + "/_merge_staging/meta").exists(),
-        "the death window is past the point of no return — the " +
-          "staging (the recovery copy) must survive the dead JVM")
-      assertLoudAndBlocked(dir)
-      assertRecovered(dir)
-    }
-  }
-
-  test("REAL process death before the point of no return: store intact, resume cleans the debris, merge re-runs") {
-    val dir = tmp("merge-die-staging")
-    buildStore(dir)
-    assert(exhaustive(dir, 3) === truth)
-    assert(runCrashWriter(dir, "merge-die-staging") === 137)
-    assert(new java.io.File(dir + "/_merge_staging").exists() &&
-      !new java.io.File(dir + "/_merge_staging/meta").exists())
-    // the store was never touched: reads are normal even with the
-    // incomplete staging present
-    assert(exhaustive(dir, 3) === truth)
-    val e = intercept[IllegalStateException] {
-      Similarity.resumeMergeColdShards(spark, dir)
-    }
-    assert(e.getMessage.contains("intact"))
-    assert(!new java.io.File(dir + "/_merge_staging").exists(),
-      "resume must remove the incomplete staging debris")
-    assert(Similarity.mergeColdShards(spark, dir, a = 0, b = 1,
-      nlist = 2) === 2)
-    assert(exhaustive(dir, 2) === truth)
-  }
-
-  test("resume with no staged merge is loud, not a silent no-op") {
-    val dir = tmp("merge-noresume")
-    buildStore(dir)
-    val e = intercept[IllegalArgumentException] {
-      Similarity.resumeMergeColdShards(spark, dir)
-    }
-    assert(e.getMessage.contains("no staged merge"))
-  }
+  protected def rerun(dir: String): Int =
+    Similarity.mergeColdShards(spark, dir, a = 0, b = 1, nlist = 2)
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{CrashPoint, SparkSpec}
 
 /** UPSERT/replacement for the directory signature stores — the
   * mutable-id remedy the [[Dedup.mutatedRedeliveries]] audit points
@@ -18,6 +18,7 @@ import graft.SparkSpec
   * its draw-family gate intact. */
 class SigUpsertSpec extends SparkSpec {
   import spark.implicits._
+  CrashPoint.install(spark)
 
   private val docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog and runs far away home"),
@@ -449,19 +450,27 @@ class SigUpsertSpec extends SparkSpec {
       val target = byFile.head
       val witness = byFile(1)
       // the state a death between reclaimFromTable's append and its
-      // file deletes leaves behind: the affected file's NON-target
-      // rows exist twice (original file + appended survivor copy)
-      val survivorCopy = spark.table(sigs)
-        .withColumn("_f", input_file_name())
-        .filter(col("id").isin(byFile: _*) && col("id") =!= target)
-        .drop("_f").localCheckpoint(true)
-      survivorCopy.write.mode("append").format("parquet")
-        .bucketBy(8, "id").sortBy("id").saveAsTable(sigs)
-      assert(spark.table(sigs).filter(col("id") === witness).count() === 2,
-        "precondition: the crash window duplicates the witness row")
-      // the re-run: tombstone + targeted reclaim of the same target
+      // file deletes leaves behind: the real reclaim of the target,
+      // killed at the sigs leg's first delete of an original — the
+      // affected file's NON-target rows then exist twice (original
+      // file + appended survivor copy)
       Dedup.deleteSignaturesBucketed(spark,
         Seq(target).toDF("doc_id"), table)
+      val wh = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+      val sigsDir = CrashPoint.relocate(spark, sigs)
+      val store = new CrashPoint.Fixture(sigsDir,
+        CrashPoint.relocate(spark, s"${table}_bands"), s"$wh/${table}__dlog")
+      def reclaim() = Dedup.reclaimSignatureTombstonesBucketed(spark,
+        Seq(target).toDF("doc_id"), table)
+      val firstDelete = CrashPoint.windows(store.rehearse(reclaim()))
+        .find(c => c.kind == "delete" && c.path.startsWith(sigsDir + "/part-")).get
+      Seq(sigs, s"${table}_bands").foreach(spark.catalog.refreshTable)
+      assert(CrashPoint.crashAt(spark, firstDelete)(reclaim()).isFailure)
+      Seq(sigs, s"${table}_bands").foreach(spark.catalog.refreshTable)
+      assert(spark.table(sigs).filter(col("id") === witness).count() === 2,
+        "precondition: the crash window duplicates the witness row")
+      // the re-run of the same targeted reclaim
       assert(Dedup.reclaimSignatureTombstonesBucketed(spark,
         Seq(target).toDF("doc_id"), table) === 1L)
       assert(spark.table(sigs).filter(col("id") === target).count() === 0,
@@ -472,7 +481,10 @@ class SigUpsertSpec extends SparkSpec {
       assert(spark.table(sigs).groupBy("id").count()
         .filter(col("count") > 1).count() === 0)
     } finally Seq(s"${table}_sigs", s"${table}_bands", s"${table}_deleted")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      .foreach { t =>
+        CrashPoint.unrelocate(spark, t)
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+      }
   }
 
   test("bucketed reclaim with mismatched band params falls back to the full-scan location and stays correct") {

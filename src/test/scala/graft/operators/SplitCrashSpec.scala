@@ -1,210 +1,48 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions._
+import graft.CrashPoint
+import graft.CrashPoint.Call
 
-import graft.SparkSpec
+/** splitHotShard at every crash window ([[RebalanceCrashSpec]]), plus
+  * one caught failure: a create failure at the record restore
+  * (fail-once) must not delete the staging, which then holds the only
+  * copy of the hot shard's vectors (the r12 advice regression). */
+class SplitCrashSpec extends RebalanceCrashSpec("split", "q135",
+    shardsBefore = 2, shardsAfter = 3) {
 
-/** One-shot create-failure injection under a path fragment: the first
-  * file CREATED under a path containing the armed fragment throws
-  * IOException (a full disk / lost executor at exactly that write),
-  * then the fs behaves normally — the recovery path must run clean on
-  * the very same scheme. */
-object FlakySplitFs {
-  @volatile var failUnder: Option[String] = None
-}
-class FlakySplitFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getScheme: String = "flakysplit"
-  override def getUri: java.net.URI = java.net.URI.create("flakysplit:///")
-  private def fire(f: Path): Unit = FlakySplitFs.failUnder match {
-    case Some(frag) if f.toString.contains(frag) =>
-      FlakySplitFs.failUnder = None
-      throw new java.io.IOException(s"injected create failure: $f")
-    case _ =>
-  }
-  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
-      replication: Short, blockSize: Long,
-      progress: org.apache.hadoop.util.Progressable)
-      : org.apache.hadoop.fs.FSDataOutputStream = {
-    fire(f)
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-  }
-  override def create(f: Path,
-      permission: org.apache.hadoop.fs.permission.FsPermission,
-      overwrite: Boolean, bufferSize: Int, replication: Short,
-      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
-      : org.apache.hadoop.fs.FSDataOutputStream = {
-    fire(f)
-    super.create(f, permission, overwrite, bufferSize, replication,
-      blockSize, progress)
-  }
-}
-
-/** splitHotShard death-window coverage — the MERGE protocol's
-  * real-process discipline applied to the store family's newest
-  * destructive mutation. Every window between the split's point of no
-  * return (the staged `meta` marker) and its final staging delete is
-  * driven by a REAL JVM that halt(137)s there (graft.tools.CrashWriter
-  * split-* modes), plus one CAUGHT-failure window (injected create
-  * failure) — the r12 advice's exact finding: a caught exception used
-  * to delete the staging from a finally block while the staging held
-  * the ONLY copy of the hot shard's vectors. In every window the spec
-  * asserts the same recovery contract: reads fail loudly (never a
-  * silently smaller corpus), mutations refuse to run over the staged
-  * split, and resumeSplitHotShard lands the store in the exact
-  * post-split state — exhaustive routed search ≡ brute force over the
-  * full corpus (the q135 invariant). */
-class SplitCrashSpec extends SparkSpec {
-  import spark.implicits._
-
-  spark.sparkContext.hadoopConfiguration
-    .set("fs.flakysplit.impl", classOf[FlakySplitFs].getName)
-
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/store"
-
-  private lazy val fixture = graft.tools.CrashWriter.splitFixture(spark)
-  private lazy val queries = fixture.filter(col("vec_id") < 6)
-  private lazy val truth = Similarity.bruteForceTopK(fixture, queries, 5)
-    .as[(Long, Long, Double, Int)].collect().toSet
-
-  private def buildStore(dir: String): Int =
-    Similarity.buildRoutedIvfStore(fixture, dir, shards = 2, nlist = 2,
-      dim = 8, superIters = 3)
-
-  private def exhaustive(dir: String, nShards: Int): Set[(Long, Long, Double, Int)] =
-    Similarity.searchRoutedIvfStore(spark, queries, dir, k = 5,
-      nprobe = 2, routeShards = nShards)
-      .as[(Long, Long, Double, Int)].collect().toSet
-
-  /** run CrashWriter in a REAL separate JVM (halt(137) = genuinely dead
-    * process — no shutdown hooks, no finally blocks). */
-  private def runCrashWriter(dir: String, mode: String): Int = {
-    val addOpens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-      "java.io", "java.net", "java.nio", "java.util",
-      "java.util.concurrent", "java.util.concurrent.atomic",
-      "sun.nio.ch", "sun.nio.cs", "sun.security.action",
-      "sun.util.calendar").flatMap(p =>
-      Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val cmd = Seq("java", "-XX:+IgnoreUnrecognizedVMOptions") ++
-      addOpens ++ Seq("-Xmx2g", "-cp", sys.props("java.class.path"),
-      "graft.tools.CrashWriter", dir, mode)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    val p = pb.start()
-    val drain = new Thread(() => {
-      val buf = new Array[Byte](8192)
-      while (p.getInputStream.read(buf) >= 0) ()
-    })
-    drain.setDaemon(true); drain.start()
-    p.waitFor()
+  protected def namedWindows(w: Seq[Call]): Seq[(String, Call)] = {
+    val hotDelete = w.find(c => c.kind == "delete" &&
+      c.path.matches(".*/store/shard=[0-9]+")).get
+    Seq(
+      // items and supers staged, the meta marker not yet begun
+      "staging" -> CrashPoint.find(w, "mkdirs", "/_split_staging/meta/_temporary"),
+      // records invalidated, the hot dir not yet deleted
+      "postinvalidate" -> hotDelete,
+      // the hot dir deleted: the staging holds the ONLY copy
+      "midrefile" -> w(w.indexOf(hotDelete) + 1),
+      // every slice re-filed, the records not yet restored
+      "prerestore" -> CrashPoint.find(w, "mkdirs", "/store/super_centroids/_temporary"))
   }
 
-  private def assertLoudAndBlocked(dir: String): Unit = {
-    // reads fail loudly on the invalidated records — never a routed
-    // search over a silently partial corpus
-    val e = intercept[IllegalArgumentException] {
-      Similarity.searchRoutedIvfStore(spark, queries, dir, k = 5)
-    }
-    assert(e.getMessage.contains("super-quantizer") ||
-      e.getMessage.contains("no sharding record"))
-    // mutations refuse to run over the staged split: resuming later
-    // rewinds the shard dirs to the staged assignment, so anything
-    // appended in between would be silently dropped
-    val a = intercept[IllegalArgumentException] {
-      Similarity.appendToRoutedIvfStore(spark,
-        Seq((9999L, Seq.fill(8)(0.5))).toDF("vec_id", "embedding"), dir)
-    }
-    assert(a.getMessage.contains("staged split"))
-    val s = intercept[IllegalArgumentException] {
-      Similarity.splitHotShard(spark, dir)
-    }
-    assert(s.getMessage.contains("staged split"))
-  }
+  protected def resume(dir: String): Int =
+    Similarity.resumeSplitHotShard(spark, dir)
 
-  private def assertRecovered(dir: String): Unit = {
-    val newSh = Similarity.resumeSplitHotShard(spark, dir)
-    assert(newSh === 3)
-    assert(!new java.io.File(
-      dir.stripPrefix("flakysplit:") + "/_split_staging").exists(),
-      "success must reclaim the staging")
-    // the q135 invariant: post-recovery exhaustive routed search is
-    // bit-for-bit the brute-force top-k over the FULL corpus — no
-    // vector was lost in the crash
-    assert(exhaustive(dir, 3) === truth)
-    // the store is a normal routed store again: append + re-split work
-    Similarity.appendToRoutedIvfStore(spark,
-      Seq((9999L, fixture.filter(col("vec_id") === 0)
-        .select("embedding").as[Seq[Double]].head())
-      ).toDF("vec_id", "embedding"), dir)
-    val aug = Similarity.searchRoutedIvfStore(spark,
-        fixture.filter(col("vec_id") === 0), dir, k = 201, nprobe = 2,
-        routeShards = 3)
-      .select("item_id").as[Long].collect().toSet
-    assert(aug.contains(9999L))
-  }
-
-  for (mode <- Seq("split-die-postinvalidate", "split-die-midrefile",
-      "split-die-prerestore")) {
-    test(s"REAL process death ($mode): reads loud, mutations refused, resume restores the q135 invariant") {
-      val dir = tmp(mode)
-      buildStore(dir)
-      assert(runCrashWriter(dir, mode) === 137)
-      assert(new java.io.File(dir + "/_split_staging/meta").exists(),
-        "the death window is past the point of no return — the " +
-          "staging (the recovery copy) must survive the dead JVM")
-      assertLoudAndBlocked(dir)
-      assertRecovered(dir)
-    }
-  }
-
-  test("REAL process death before the point of no return: store intact, resume cleans the debris, split re-runs") {
-    val dir = tmp("split-die-staging")
-    buildStore(dir)
-    val pre = exhaustive(dir, 2)
-    assert(pre === truth) // exhaustive routed search is exact pre-split
-    assert(runCrashWriter(dir, "split-die-staging") === 137)
-    assert(new java.io.File(dir + "/_split_staging").exists() &&
-      !new java.io.File(dir + "/_split_staging/meta").exists())
-    // the store was never touched: reads are normal even with the
-    // incomplete staging present
-    assert(exhaustive(dir, 2) === truth)
-    val e = intercept[IllegalStateException] {
-      Similarity.resumeSplitHotShard(spark, dir)
-    }
-    assert(e.getMessage.contains("intact"))
-    assert(!new java.io.File(dir + "/_split_staging").exists(),
-      "resume must remove the incomplete staging debris")
-    // the documented next action: just re-run the split
-    assert(Similarity.splitHotShard(spark, dir, splitIters = 4,
-      nlist = 2) === 3)
-    assert(exhaustive(dir, 3) === truth)
-  }
-
-  test("resume with no staged split is loud, not a silent no-op") {
-    val dir = tmp("split-noresume")
-    buildStore(dir)
-    val e = intercept[IllegalArgumentException] {
-      Similarity.resumeSplitHotShard(spark, dir)
-    }
-    assert(e.getMessage.contains("no staged split"))
-  }
+  protected def rerun(dir: String): Int =
+    Similarity.splitHotShard(spark, dir, splitIters = 4, nlist = 2)
 
   test("CAUGHT failure mid-mutation (injected create failure at the record restore): staging survives as the recovery copy — the r12 advice regression") {
-    val base = tmp("split-flaky")
-    val dir = "flakysplit:" + base
-    buildStore(dir)
-    // arm: the FIRST file created under super_centroids dies — the
+    // the FIRST file created under super_centroids fails — the
     // restore-last step, after the hot dir is already deleted. Before
     // the fix, splitHotShard's finally block deleted the staging here:
     // a CAUGHT exception was more destructive than a hard crash.
-    FlakySplitFs.failUnder = Some("/super_centroids/")
-    intercept[Exception] { Similarity.splitHotShard(spark, dir) }
-    FlakySplitFs.failUnder = None
-    assert(new java.io.File(base + "/_split_staging/meta").exists(),
+    val at = CrashPoint.find(calls, "create", "/store/super_centroids/")
+    store.restore()
+    assert(CrashPoint.failOnce(spark, at)(run(dir)).isFailure)
+    assert(stagingDone,
       "a caught mid-mutation failure must leave the staging in place — " +
         "it holds the only copy of the hot shard's vectors")
-    assertLoudAndBlocked(dir)
-    assertRecovered(dir)
+    mutationsRefused()
+    resumed()
+    appendsAgain()
   }
 }

@@ -31,6 +31,19 @@ class ProfileSpec extends SparkSpec {
     } finally c.close()
   }
 
+  test("a job with no description is labelled by its result stage: one shuffle action run 5 times gets one label, its call site") {
+    val c = new Profile.Collector(spark)
+    try c.phase("shuffle") {
+      (1 to 5).foreach { _ =>
+        spark.sparkContext.parallelize(1 to 100, 4).map(i => (i % 7, i))
+          .reduceByKey(_ + _).collect()
+      }
+    } finally c.close()
+    val sites = c.take().head.sites
+    assert(sites.map(_._2) === Seq(5), sites)
+    assert(sites.head._1.startsWith("collect at ProfileSpec.scala"), sites)
+  }
+
   test("lifecycle:q142 leaves the catalog's table list and the warehouse as it found them") {
     def tables() = spark.catalog.listTables().collect().map(_.name).toSet
     val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
