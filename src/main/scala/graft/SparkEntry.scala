@@ -1979,12 +1979,11 @@ object SparkEntry {
         s"graft_sigstore_${Integer.toHexString(dir.hashCode)}_$jvmToken")
         .getAbsolutePath
       val docs = t(s, dir, "documents")
-      Dedup.buildSignatureStore(docs.filter(col("doc_id") % 3 =!= 0),
-        "doc_id", "text", store, numHashes = 64, shingleN = 5,
-        portable = true)
-      Dedup.minhashLshIncremental(s, docs.filter(col("doc_id") % 3 === 0),
-          "doc_id", "text", store, numHashes = 64, bands = 8,
-          shingleN = 5, threshold = 0.4, portable = true)
+      val sigs = Dedup.SigStore(Dedup.MinHash(portable = true),
+        Dedup.Dir(store))
+      sigs.build(docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text")
+      sigs.pairs(s, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
+          threshold = 0.4)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -2629,16 +2628,14 @@ object SparkEntry {
         .getAbsolutePath
       val docs = t(s, dir, "documents")
       val history = docs.filter(col("doc_id") % 3 =!= 0)
-      Dedup.buildSignatureStore(history, "doc_id", "text", store,
-        numHashes = 64, shingleN = 5, portable = true)
-      Dedup.deleteSignatures(s,
-        history.filter(col("doc_id") % 5 === 1).select("doc_id"), store)
-      Dedup.compactSignatureStoreDir(s, store)
-      Dedup.deleteSignatures(s,
-        history.filter(col("doc_id") % 7 === 2).select("doc_id"), store)
-      Dedup.minhashLshIncremental(s, docs.filter(col("doc_id") % 3 === 0),
-          "doc_id", "text", store, numHashes = 64, bands = 8,
-          shingleN = 5, threshold = 0.4, portable = true)
+      val sigs = Dedup.SigStore(Dedup.MinHash(portable = true),
+        Dedup.Dir(store))
+      sigs.build(history, "doc_id", "text")
+      sigs.delete(s, history.filter(col("doc_id") % 5 === 1).select("doc_id"))
+      sigs.compact(s)
+      sigs.delete(s, history.filter(col("doc_id") % 7 === 2).select("doc_id"))
+      sigs.pairs(s, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
+          threshold = 0.4)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -2719,19 +2716,17 @@ object SparkEntry {
         .getAbsolutePath
       val docs = t(s, dir, "documents")
       val history = docs.filter(col("doc_id") % 3 =!= 0)
-      Dedup.buildSignatureStore(history, "doc_id", "text", store,
-        numHashes = 64, shingleN = 5, portable = true)
-      Dedup.deleteSignatures(s,
-        history.filter(col("doc_id") % 7 === 2).select("doc_id"), store)
+      val sigs = Dedup.SigStore(Dedup.MinHash(portable = true),
+        Dedup.Dir(store))
+      sigs.build(history, "doc_id", "text")
+      sigs.delete(s, history.filter(col("doc_id") % 7 === 2).select("doc_id"))
       val mutated = history.filter(col("doc_id") % 5 === 1)
         .select(col("doc_id"),
           concat_ws(" ", reverse(split(col("text"), "\\s+")))
             .as("text"))
-      Dedup.upsertSignatures(s, mutated, "doc_id", "text", store,
-        numHashes = 64, shingleN = 5, portable = true)
-      Dedup.minhashLshIncremental(s, docs.filter(col("doc_id") % 3 === 0),
-          "doc_id", "text", store, numHashes = 64, bands = 8,
-          shingleN = 5, threshold = 0.4, portable = true)
+      sigs.upsert(s, mutated, "doc_id", "text")
+      sigs.pairs(s, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
+          threshold = 0.4)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -2742,7 +2737,7 @@ object SparkEntry {
     // pure functions of the text, so mutated store ≡ from-scratch
     // net-history exactly when every live id's stored signature and
     // band rows equal the net text's, and no live id exists outside
-    // the net set — auditSignatureStoreBucketed). Build on %3≠0
+    // the net set — SigStore.audit). Build on %3≠0
     // history, take %7=2 down (tombstones into the D/R op log), UPSERT
     // token-reversed %5=1 content (file-targeted reclaim through
     // Bucketing.reclaimFromTable, r15; the overlap REVIVES),
@@ -2754,31 +2749,28 @@ object SparkEntry {
         s"graft_sigupsb_${Integer.toHexString(dir.hashCode)}_$jvmToken"
       val docs = t(s, dir, "documents")
       val history = docs.filter(col("doc_id") % 3 =!= 0)
-      Dedup.buildSignatureStoreBucketed(history, "doc_id", "text",
-        table, buckets = 4, numHashes = 64, bands = 8, shingleN = 5)
-      Dedup.deleteSignaturesBucketed(s,
-        history.filter(col("doc_id") % 7 === 2).select("doc_id"), table)
+      val sigs = Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed(table, 4))
+      sigs.build(history, "doc_id", "text")
+      sigs.delete(s, history.filter(col("doc_id") % 7 === 2).select("doc_id"))
       val mutated = history.filter(col("doc_id") % 5 === 1)
         .select(col("doc_id"),
           concat_ws(" ", reverse(split(col("text"), "\\s+")))
             .as("text"))
-      Dedup.upsertSignaturesBucketed(s, mutated, "doc_id", "text",
-        table, buckets = 4, numHashes = 64, bands = 8, shingleN = 5)
+      sigs.upsert(s, mutated, "doc_id", "text")
       val net = history
         .filter(col("doc_id") % 7 =!= 2 || col("doc_id") % 5 === 1)
         .select(col("doc_id"),
           when(col("doc_id") % 5 === 1,
             concat_ws(" ", reverse(split(col("text"), "\\s+"))))
             .otherwise(col("text")).as("text"))
-      Dedup.auditSignatureStoreBucketed(s, net, "doc_id", "text",
-          table, numHashes = 64, bands = 8, shingleN = 5)
+      sigs.audit(s, net, "doc_id", "text")
         .select(col("id").as("doc_id"), col("sig_ok"), col("bands_ok"))
         .orderBy(col("doc_id"))
     }),
 
     // The BUCKETED store maintained by CDC OPS (round 15) — the scale
     // layout reaches stream parity with the dir stores: one
-    // applySigCdcBatchBucketed call dispatches I (the %3=0 docs,
+    // SigStore.applyCdc call dispatches I (the %3=0 docs,
     // admitted fresh), U (%5=1 of history, token-reversed — the
     // targeted file-level reclaim + revive path), D (%7=2 of history;
     // a D at a later seq beats the overlap's U — latest-op
@@ -2792,8 +2784,8 @@ object SparkEntry {
         s"graft_sigcdcb_${Integer.toHexString(dir.hashCode)}_$jvmToken"
       val docs = t(s, dir, "documents")
       val history = docs.filter(col("doc_id") % 3 =!= 0)
-      Dedup.buildSignatureStoreBucketed(history, "doc_id", "text",
-        table, buckets = 4, numHashes = 64, bands = 8, shingleN = 5)
+      val sigs = Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed(table, 4))
+      sigs.build(history, "doc_id", "text")
       val rev = concat_ws(" ", reverse(split(col("text"), "\\s+")))
       val b1 = docs.filter(col("doc_id") % 3 === 0)
           .select(col("doc_id"), col("text"), lit("I").as("op"),
@@ -2804,21 +2796,18 @@ object SparkEntry {
         .unionByName(history.filter(col("doc_id") % 7 === 2)
           .select(col("doc_id"), lit(null).cast("string").as("text"),
             lit("D").as("op"), lit(3L).as("seq")))
-      Dedup.applySigCdcBatchBucketed(s, b1, table, buckets = 4,
-        numHashes = 64, bands = 8, shingleN = 5)
+      sigs.applyCdc(s, b1)
       val b2 = history
         .filter(col("doc_id") % 7 === 2 && col("doc_id") % 5 === 3)
         .select(col("doc_id"), col("text"), lit("I").as("op"),
           lit(10L).as("seq"))
-      Dedup.applySigCdcBatchBucketed(s, b2, table, buckets = 4,
-        numHashes = 64, bands = 8, shingleN = 5)
+      sigs.applyCdc(s, b2)
       val net = docs
         .filter(col("doc_id") % 3 === 0 || col("doc_id") % 7 =!= 2)
         .select(col("doc_id"),
           when(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 === 1, rev)
             .otherwise(col("text")).as("text"))
-      Dedup.auditSignatureStoreBucketed(s, net, "doc_id", "text",
-          table, numHashes = 64, bands = 8, shingleN = 5)
+      sigs.audit(s, net, "doc_id", "text")
         .select(col("id").as("doc_id"), col("sig_ok"), col("bands_ok"))
         .orderBy(col("doc_id"))
     }),
@@ -2839,8 +2828,8 @@ object SparkEntry {
         s"graft_widecdcb_${Integer.toHexString(dir.hashCode)}_$jvmToken"
       val docs = t(s, dir, "documents")
       val history = docs.filter(col("doc_id") % 3 =!= 0)
-      Dedup.buildWideSimhashStoreBucketed(history, "doc_id", "text",
-        table, buckets = 4)
+      val sigs = Dedup.SigStore(Dedup.WideSimhash(), Dedup.Bucketed(table, 4))
+      sigs.build(history, "doc_id", "text")
       val rev = concat_ws(" ", reverse(split(col("text"), "\\s+")))
       val b1 = docs.filter(col("doc_id") % 3 === 0)
           .select(col("doc_id"), col("text"), lit("I").as("op"),
@@ -2851,19 +2840,18 @@ object SparkEntry {
         .unionByName(history.filter(col("doc_id") % 7 === 2)
           .select(col("doc_id"), lit(null).cast("string").as("text"),
             lit("D").as("op"), lit(3L).as("seq")))
-      Dedup.applyWideSimhashCdcBatchBucketed(s, b1, table, buckets = 4)
+      sigs.applyCdc(s, b1)
       val b2 = history
         .filter(col("doc_id") % 7 === 2 && col("doc_id") % 5 === 3)
         .select(col("doc_id"), col("text"), lit("I").as("op"),
           lit(10L).as("seq"))
-      Dedup.applyWideSimhashCdcBatchBucketed(s, b2, table, buckets = 4)
+      sigs.applyCdc(s, b2)
       val net = docs
         .filter(col("doc_id") % 3 === 0 || col("doc_id") % 7 =!= 2)
         .select(col("doc_id"),
           when(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 === 1, rev)
             .otherwise(col("text")).as("text"))
-      Dedup.auditWideSimhashStoreBucketed(s, net, "doc_id", "text",
-          table)
+      sigs.audit(s, net, "doc_id", "text")
         .select(col("id").as("doc_id"), col("sig_ok"))
         .orderBy(col("doc_id"))
     })

@@ -74,6 +74,7 @@ object BloomIndex {
     val missing = ZoneMap.dataFiles(spark, dataDir).filterNot(
       ZoneMap.normalizedKnown(spark, statsDir))
     if (missing.nonEmpty) {
+      ControlPlane.dropDeadJobOutput(spark, statsDir)
       statsFor(spark.read.option("basePath", dataDir)
         .parquet(missing: _*), cols, expectedItems)
         .repartition(1)

@@ -74,7 +74,7 @@ object Bucketing {
     * bucket, preserving its bucket/sort spec (read from the catalog, so
     * callers can't drift it). Every `mode("append")` into a bucketed
     * table adds up to one file per touched bucket per writing task —
-    * daily admission appends ([[Dedup.appendSignaturesBucketed]],
+    * daily admission appends ([[Dedup.SigStore.append]],
     * [[FingerprintIndex.appendBucketed]]) accrete small files that
     * tax every later scan's open/seek cost. One `repartition` on the
     * bucket columns puts each bucket's rows in exactly one task
@@ -253,7 +253,7 @@ object Bucketing {
     * location index was built to remove.
     *
     * Protocol — the directory store's move-in-then-delete
-    * ([[Dedup.reclaimSignatureTombstones]]), adapted to a catalog
+    * (the dir layout of [[Dedup.SigStore.reclaim]]), adapted to a catalog
     * table: locate the affected files (a [[prunedScan]] of only the
     * batch's buckets when the key set is known — O(batch) reads, the
     * r15 location lever; a narrow full scan otherwise; bounded
@@ -314,8 +314,8 @@ object Bucketing {
     // pass `bucketRows` naming EVERY bucket-column value the target's
     // rows can inhabit — an under-covering set would silently leave
     // rows standing, so callers that derive it from stored state must
-    // verify coverage first (see Dedup.reclaimSignatureTombstones
-    // Bucketed's ≥-bands check) or pass None for the full scan. The
+    // verify coverage first (see Dedup.SigStore's band hint and
+    // its ≥-bands check) or pass None for the full scan. The
     // pruned set also covers every debris copy of a survivor row (a
     // copy shares its row's bucket values by definition), so the
     // exceptAll heal below sees everything it needs.

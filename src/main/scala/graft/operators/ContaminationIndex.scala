@@ -28,7 +28,7 @@ import graft.functions.{TextFunctions => T}
  * n-gram strings, so a hit is a true n-gram overlap — the check's
  * semantics are those of q76 verbatim, and the DuckDB oracle replays
  * them end to end. Near-dup-style contamination (paraphrase) belongs to
- * the MinHash family ([[Dedup.minhashLshIncremental]]), not here.
+ * the MinHash family ([[Dedup.SigStore.pairs]]), not here.
  *
  * [[append]] folds NEW eval sets in with an anti-join — only unseen
  * shingles are written, so the index never holds duplicates and
@@ -54,7 +54,10 @@ object ContaminationIndex {
     // stage then append: the source of the append reads the index dir,
     // so materialize the delta first
     val staged = fresh.persist()
-    try { if (staged.count() > 0) staged.write.mode("append").parquet(indexDir) }
+    try if (staged.count() > 0) {
+      ControlPlane.dropDeadJobOutput(spark, indexDir)
+      staged.write.mode("append").parquet(indexDir)
+    }
     finally staged.unpersist()
   }
 

@@ -193,361 +193,618 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         round(col("__est"), 4).as("est_jaccard"))
 
-  /**
-   * Materialized MinHash signature store — the SCALING.md "at
-   * production scale the signature table is persisted once and reused"
-   * note as code, the [[FingerprintIndex]] discipline applied to
-   * NEAR-dup admission: [[buildSignatureStore]] pays the shingle +
-   * minhash scan once; [[minhashLshIncremental]] checks a day's batch
-   * for near-dups against all of history by banding the batch's
-   * signatures against the STORE's — history text is never re-read,
-   * and the band join's store side is the narrow (id, sig) table.
-   * [[appendSignatures]] folds the admitted batch in (append-only:
-   * signatures are pure functions of the text, so re-computation never
-   * disagrees; one anti join dedupes re-delivered ids).
-   */
-  def buildSignatureStore(df: DataFrame, idCol: String, textCol: String,
-      storeDir: String, numHashes: Int = 64, shingleN: Int = 5,
-      portable: Boolean = false): Unit =
-    minhashSignatures(df, idCol, textCol, numHashes, shingleN, portable)
-      .write.mode("overwrite").parquet(storeDir)
+  // ---- Signature stores ---------------------------------------------
 
-  def appendSignatures(spark: SparkSession, admitted: DataFrame,
-      idCol: String, textCol: String, storeDir: String,
-      numHashes: Int = 64, shingleN: Int = 5,
-      portable: Boolean = false): Unit = {
-    ControlPlane.dropDeadJobOutput(spark, storeDir)
-    // first anti: re-delivery (physical ids, so a tombstoned id's
-    // standing row is never doubled); second anti: takedown wins —
-    // a deleted id re-enters only after compaction reclaims it
-    minusDeletedSigs(spark,
-      minhashSignatures(admitted, idCol, textCol, numHashes, shingleN,
-        portable)
-        .join(spark.read.parquet(storeDir).select(col("id")), Seq("id"),
-          "left_anti"),
-      storeDir)
-      .write.mode("append").parquet(storeDir)
+  /** What a signature store's signature is. */
+  sealed trait SigKind {
+    def portable: Boolean
+    /** The signature table of `df`: `id` plus [[sigCols]]. */
+    private[Dedup] def signatures(df: DataFrame, idCol: String,
+        textCol: String): DataFrame
+    private[Dedup] def sigCols: Seq[String]
+    /** Candidate keys `(id, band, bucket)`: docs sharing a key are
+      * verified as a pair. */
+    private[Dedup] def index(sigs: DataFrame): DataFrame
+    /** Verified pairs of `cand` (id_a, id_b), `a` and `b` signatures. */
+    private[Dedup] def verify(cand: DataFrame, a: DataFrame, b: DataFrame,
+        threshold: Double): DataFrame
   }
 
-  // ---- Item-level delete for the signature stores (tombstones) -----
+  /** MinHash over character `shingleN`-grams, banded into `bands` LSH
+    * bands; pairs carry `est_jaccard`. `portable` selects the
+    * md5-derived hash the DuckDB oracle replays (dir layout only: its
+    * band key is an array, not a legal bucket column). */
+  final case class MinHash(numHashes: Int = 64, bands: Int = 8,
+      shingleN: Int = 5, portable: Boolean = false) extends SigKind {
+    private[Dedup] def signatures(df: DataFrame, idCol: String,
+        textCol: String): DataFrame =
+      minhashSignatures(df, idCol, textCol, numHashes, shingleN, portable)
+    private[Dedup] def sigCols = Seq("sig")
+    private[Dedup] def index(sigs: DataFrame): DataFrame =
+      bandedIndex(sigs, bands, bandRows(numHashes, bands), portable)
+    private[Dedup] def verify(cand: DataFrame, a: DataFrame, b: DataFrame,
+        threshold: Double): DataFrame =
+      verifyPairs(cand, a, b, numHashes, threshold)
+  }
 
-  /** `<storeDir>/_deleted` — the underscore keeps it invisible to the
-    * parquet reads of the signature table itself. */
-  private def deletedSigsPath(storeDir: String): String =
-    storeDir + "/_deleted"
+  /** The w = 128 SimHash ([[simhashSignatures128]]: two 64-bit draws,
+    * or two md5-derived 60-bit draws when `portable`), candidates by
+    * the `maxHamming + 1` pigeonhole chunks, pairs verified by summed
+    * popcount and carrying `hamming`. */
+  final case class WideSimhash(maxHamming: Int = 6,
+      portable: Boolean = false) extends SigKind {
+    private[Dedup] def signatures(df: DataFrame, idCol: String,
+        textCol: String): DataFrame =
+      simhashSignatures128(df, idCol, textCol, portable)
+    private[Dedup] def sigCols = Seq("sig0", "sig1")
+    private[Dedup] def index(sigs: DataFrame): DataFrame = {
+      val loBits = if (portable) 60 else 64
+      sigs.select(col("id"), posexplode(array(
+          simhashChunkBounds(2 * loBits, maxHamming).map {
+            case (start, width) => wideChunkKey(start, width, loBits) }: _*))
+        .as(Seq("band", "bucket")))
+    }
+    private[Dedup] def verify(cand: DataFrame, a: DataFrame, b: DataFrame,
+        threshold: Double): DataFrame =
+      cand
+        .join(a.select(col("id").as("id_a"), col("sig0").as("sig0_a"),
+          col("sig1").as("sig1_a")), "id_a")
+        .join(b.select(col("id").as("id_b"), col("sig0").as("sig0_b"),
+          col("sig1").as("sig1_b")), "id_b")
+        .select(col("id_a"), col("id_b"),
+          (bit_count(col("sig0_a").bitwiseXOR(col("sig0_b"))) +
+            bit_count(col("sig1_a").bitwiseXOR(col("sig1_b"))))
+            .cast("int").as("hamming"))
+        .filter(col("hamming") <= maxHamming)
+  }
 
-  /** The store's EFFECTIVE tombstone set — the shared append-only op
-    * log ([[TombstoneLog]]: D tombstones, R revives, latest seq per id
-    * wins; legacy one-column files read as (id, 0, D)) resolved per
-    * id, or None when nothing was ever deleted. */
-  private def readDeletedSigs(spark: SparkSession,
-      storeDir: String): Option[DataFrame] =
-    TombstoneLog.resolved(spark, deletedSigsPath(storeDir), "id")
+  /** Where a signature store lives. */
+  sealed trait SigLayout
 
-  /** Exclude tombstoned ids (broadcast anti — the tombstone side is
-    * takedown-sized, compaction reclaims it). */
-  private def minusDeletedSigs(spark: SparkSession, df: DataFrame,
-      storeDir: String): DataFrame =
-    readDeletedSigs(spark, storeDir) match {
-      case Some(d) => df.join(broadcast(d.select("id")), Seq("id"),
-        "left_anti")
-      case None => df
+  /** A parquet dir of `(id, sig…)` rows; tombstones in `<path>/_deleted`
+    * and, for wide SimHash, the draw record in `<path>/_wide_meta`
+    * (underscore dirs: invisible to the signature read). */
+  final case class Dir(path: String) extends SigLayout
+
+  /** Catalog tables written bucketed by their join keys, so admission
+    * shuffles only the batch: `<table>_sigs` by id, and for MinHash
+    * the inverted band index `<table>_bands` by (band, bucket). The
+    * tombstone log lives at `<warehouse>/<table>__dlog`, outside both
+    * table dirs (a compaction's drop and rename must never take it
+    * along), with a legacy D-only `<table>_deleted` table folded in;
+    * wide SimHash records its draws in `<table>_meta`. `buckets` is
+    * what build and append write; reads take the table's own. */
+  final case class Bucketed(table: String, buckets: Int) extends SigLayout
+
+  /** Why a [[SigStore]] refused a call. */
+  sealed trait SigRefusal
+  object SigRefusal {
+    /** The call's `portable` differs from the draws the store was built with. */
+    case object DrawMismatch extends SigRefusal
+    /** The draw record exists but is empty: the build died writing it. */
+    case object TornMeta extends SigRefusal
+    /** A CDC batch carries an op other than I, U or D. */
+    case object BadOp extends SigRefusal
+    /** A CDC insert or update carries no text. */
+    case object BodilessIU extends SigRefusal
+    /** Portable MinHash on the bucketed layout. */
+    case object PortableBucketed extends SigRefusal
+  }
+
+  final class SigStoreRefused(val store: SigStore, val reason: SigRefusal,
+      msg: String) extends IllegalArgumentException(msg)
+
+  /**
+   * A materialized signature store: history's signatures computed once
+   * so that admission bands a day's batch against the store instead
+   * of re-reading history text (the [[FingerprintIndex]] discipline
+   * for near-dups). Every lifecycle operation has one implementation;
+   * the kind supplies the signature, its candidate keys and the
+   * verify, the layout supplies where rows, tombstones and the draw
+   * record live and how files are located and rewritten.
+   *
+   * Deletes are tombstones in a [[TombstoneLog]] (D takes an id down,
+   * R re-opens it, latest seq wins): a deleted doc stops matching at
+   * once, and appends drop it (takedown wins over a late re-delivery)
+   * until [[reclaim]] removes its rows and re-opens it, as [[upsert]]
+   * does, or [[compact]] rewrites the store. Signatures are pure
+   * functions of the text, so every operation converges when re-run
+   * after a crash or replayed with the same batch: appends anti-join
+   * the stored ids, reclaims rewrite only files that still hold their
+   * targets, and R records land last. The hash parameters must match
+   * between the build and every later call; the wide SimHash draw
+   * family is recorded at build and checked ([[SigRefusal]]). One
+   * writer at a time, as for every store.
+   */
+  final case class SigStore(kind: SigKind, layout: SigLayout) {
+    (kind, layout) match {
+      case (m: MinHash, _: Bucketed) if m.portable =>
+        refuse(SigRefusal.PortableBucketed, "portable MinHash cannot be " +
+          "bucketed: its band key is an array, not a legal bucket column")
+      case _ =>
     }
 
-  /** The store's LIVE signature rows — what every admission compares
-    * against: a deleted doc stops being a duplicate source the moment
-    * its tombstone lands. */
-  private def liveSigs(spark: SparkSession, storeDir: String): DataFrame =
-    minusDeletedSigs(spark, spark.read.parquet(storeDir), storeDir)
+    private def refuse(reason: SigRefusal, msg: String): Nothing =
+      throw new SigStoreRefused(this, reason, s"$this: $msg")
 
-  /**
-   * Item-level delete for a directory signature store
-   * ([[buildSignatureStore]] MinHash or [[buildWideSimhashStore]]) —
-   * takedowns and dedup-driven removals without a store rebuild.
-   * Tombstones land in `<storeDir>/_deleted`; from that moment the
-   * deleted docs stop matching as near-dup sources in
-   * [[minhashLshIncremental]]/[[simhashWideIncremental]], re-delivered
-   * copies of them are treated as NEW docs (compared against the live
-   * store only), and appends drop the tombstoned ids (takedown wins —
-   * a late re-delivery of a taken-down doc must not resurrect it;
-   * compact first to genuinely re-admit one).
-   * [[compactSignatureStoreDir]] physically reclaims the rows and
-   * clears the tombstones. Idempotent: ids not stored (or already
-   * tombstoned) file nothing. Returns the number of new tombstones.
-   */
-  def deleteSignatures(spark: SparkSession, ids: DataFrame,
-      storeDir: String): Long = ControlPlane(spark, ids) { (spark, ids) =>
-    import org.apache.spark.storage.StorageLevel
-    TombstoneLog.maybeFold(spark, deletedSigsPath(storeDir), "id")
-    // one log read serves the dead-set AND the append's seq
-    val (ops, seq0) = TombstoneLog.snapshot(spark,
-      deletedSigsPath(storeDir), "id")
-    val want = ids.select(col(ids.columns.head).as("id")).distinct()
-      .join(spark.read.parquet(storeDir).select("id"), Seq("id"),
-        "left_semi")
-    val fresh = (ops match {
-      case Some(o) => want.join(o.filter(col("op") === "D").select("id"),
-        Seq("id"), "left_anti")
-      case None => want
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = fresh.count()
-      if (n > 0)
-        TombstoneLog.append(spark, fresh, deletedSigsPath(storeDir),
-          "id", "D", seq0)
-      n
-    } finally fresh.unpersist(blocking = false)
-  }
+    private def sigTableName(t: String) = s"${t}_sigs"
+    /** The bucketed layout's tables, bands first: appends write them in
+      * this order (see [[append]]). */
+    private def tables(t: String): Seq[String] = kind match {
+      case _: MinHash => Seq(s"${t}_bands", sigTableName(t))
+      case _: WideSimhash => Seq(sigTableName(t))
+    }
+    private def legacyDeleted(t: String) = s"${t}_deleted"
 
-  /**
-   * Targeted physical reclaim for a DIRECTORY signature store — the
-   * signature-side twin of `Similarity.reclaimTombstones`, and the
-   * UPSERT enabler: removes exactly the given tombstoned ids' rows and
-   * re-opens those ids, leaving every other standing tombstone (rows
-   * and all) for [[compactSignatureStoreDir]]. The store is a flat
-   * parquet dir (no list partitions), so the unit of rewrite is the
-   * FILE: the files holding target rows are found via
-   * `input_file_name`, their surviving rows are re-appended through a
-   * staging dir, the old files are deleted, and R records land last.
-   *
-   * The survivor write double-anti-joins: against the target (the rows
-   * being reclaimed) AND — by id — against the rows in every OTHER
-   * store file. The second anti is what makes a crashed run heal
-   * without duplicating innocent rows: if a previous attempt appended
-   * the survivors and died before deleting the old files, the re-run
-   * finds the survivor copies already present and re-appends nothing
-   * (signatures are pure functions of the text, so an id's rows are
-   * identical wherever they live — dropping by id is exact). Crash
-   * windows, in order: survivors staged only — store untouched;
-   * survivors appended, old files present — transient duplicates that
-   * every admission absorbs (id-keyed anti/semi joins, distinct'd
-   * pairs) and the re-run collapses; some old files deleted — the
-   * target's remaining rows stay tombstoned, reads correct; all
-   * deleted, R not yet appended — tombstones stand over nothing, the
-   * re-run lands the revive. `_wide_meta` (underscore dir) is never
-   * touched — the draw family is a property of the hash config, not
-   * of which rows live. Single-writer, like every store mutation.
-   * Returns the number of ids reclaimed.
-   */
-  def reclaimSignatureTombstones(spark: SparkSession, ids: DataFrame,
-      storeDir: String): Long = ControlPlane(spark, ids) { (spark, ids) =>
-    import org.apache.spark.storage.StorageLevel
-    TombstoneLog.maybeFold(spark, deletedSigsPath(storeDir), "id")
-    // one log read serves the dead-set AND the revive append's seq
-    val (ops, seq0) = TombstoneLog.snapshot(spark,
-      deletedSigsPath(storeDir), "id")
-    val dead = ops.map(_.filter(col("op") === "D").select("id"))
-      .getOrElse(return 0L)
-    val target = ids.select(col(ids.columns.head).as("id")).distinct()
-      .join(dead, Seq("id"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = target.count()
-      if (n == 0L) return 0L
-      val root = new org.apache.hadoop.fs.Path(storeDir)
+    private def sigTable(spark: SparkSession): DataFrame = layout match {
+      case Dir(p) => spark.read.parquet(p)
+      case Bucketed(t, _) => spark.table(sigTableName(t))
+    }
+
+    private def dlog(spark: SparkSession): String = layout match {
+      case Dir(p) => p + "/_deleted"
+      case Bucketed(t, _) =>
+        spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
+          s"/${t}__dlog"
+    }
+
+    /** The ids standing tombstoned, or None when nothing ever was. The
+      * bucketed layout folds legacy `<table>_deleted` rows in at seq -1,
+      * so any log record for the same id supersedes them. */
+    private def dead(spark: SparkSession): Option[DataFrame] = layout match {
+      case Dir(_) => TombstoneLog.resolved(spark, dlog(spark), "id")
+      case Bucketed(t, _) =>
+        val legacy =
+          if (spark.catalog.tableExists(legacyDeleted(t)))
+            Some(spark.table(legacyDeleted(t)).select("id")
+              .withColumn("seq", lit(-1L)).withColumn("op", lit("D")))
+          else None
+        (legacy ++ TombstoneLog.read(spark, dlog(spark), "id"))
+          .reduceOption(_.unionByName(_))
+          .map(_.groupBy("id")
+            .agg(max(struct(col("seq"), col("op"))).as("last"))
+            .filter(col("last.op") === "D").select("id"))
+    }
+
+    /** [[dead]] and the log's next seq, for a mutation that appends to
+      * the log. The dir layout takes both from one read of its log. */
+    private def tombstones(spark: SparkSession): (Option[DataFrame], Long) =
+      layout match {
+        case Dir(_) =>
+          val (ops, seq0) = TombstoneLog.snapshot(spark, dlog(spark), "id")
+          (ops.map(_.filter(col("op") === "D").select("id")), seq0)
+        case Bucketed(_, _) =>
+          val seq0 = TombstoneLog.nextSeq(spark, dlog(spark), "id")
+          (dead(spark), seq0)
+      }
+
+    /** `df` without tombstoned ids (broadcast: the tombstone side is
+      * takedown-sized, so the store side never re-shuffles). */
+    private def minusDead(spark: SparkSession, df: DataFrame): DataFrame =
+      dead(spark).fold(df)(d =>
+        df.join(broadcast(d.select("id")), Seq("id"), "left_anti"))
+
+    /** The live signature rows every admission compares against. */
+    private def live(spark: SparkSession): DataFrame =
+      minusDead(spark, sigTable(spark))
+
+    /** The stored ids among `ids`' (a one-column `id` frame). The
+      * bucketed layout reads only the ids' bucket files when that is
+      * selective ([[Bucketing.prunedScan]]'s guard). */
+    private def stored(spark: SparkSession, ids: DataFrame): DataFrame =
+      (layout match {
+        case Dir(_) => sigTable(spark)
+        case Bucketed(t, _) => Bucketing.prunedScan(spark, sigTableName(t), ids)
+      }).select("id")
+
+    private def requireMutable(spark: SparkSession, who: String): Unit =
+      if (layout.isInstanceOf[Bucketed])
+        Bucketing.requireStrictFileReads(spark, s"$this.$who")
+
+    /** Refuses a wide SimHash call whose draws differ from the build's:
+      * the two families are bit-incompatible, and every hamming
+      * distance would be meaningless. A store without a draw record
+      * (none built here) passes; an empty record is a torn build. */
+    private def requireDraws(spark: SparkSession, who: String): Unit =
+      kind match {
+        case w: WideSimhash =>
+          val recorded: Option[Option[org.apache.spark.sql.Row]] =
+            layout match {
+              case Dir(p) =>
+                val m = new org.apache.hadoop.fs.Path(p + "/_wide_meta")
+                if (!m.getFileSystem(spark.sparkContext.hadoopConfiguration)
+                    .exists(m)) None
+                else Some(try spark.read.parquet(m.toString).collect().headOption
+                  catch { case _: org.apache.spark.sql.AnalysisException => None })
+              case Bucketed(t, _) =>
+                if (!spark.catalog.tableExists(s"${t}_meta")) None
+                else Some(spark.table(s"${t}_meta").collect().headOption)
+            }
+          recorded.foreach { row =>
+            val built = row.getOrElse(refuse(SigRefusal.TornMeta,
+              s"$who: the draw record is torn or empty (a crashed meta " +
+                "write) — the draw family can no longer be verified; " +
+                "rebuild the store")).getAs[Boolean]("portable")
+            if (built != w.portable)
+              refuse(SigRefusal.DrawMismatch, s"$who: the store was built " +
+                s"with portable=$built but this call passes " +
+                s"portable=${w.portable} — the two draw families are " +
+                "bit-incompatible, so every hamming distance would be " +
+                "silently meaningless; pass the build's flag or rebuild " +
+                "the store")
+          }
+        case _: MinHash =>
+      }
+
+    /** Writes the store from `df`'s (idCol, textCol) rows, replacing
+      * any previous one. A rebuild starts a fresh lifecycle: standing
+      * tombstones describe the old store. */
+    def build(df: DataFrame, idCol: String, textCol: String): Unit = {
+      val spark = df.sparkSession
+      import spark.implicits._
+      val meta = Seq((kind.portable, if (kind.portable) 60 else 64))
+        .toDF("portable", "lo_bits").coalesce(1).write.mode("overwrite")
+      layout match {
+        case Dir(p) =>
+          // the overwrite takes the old `_deleted` log with it
+          kind.signatures(df, idCol, textCol).write.mode("overwrite").parquet(p)
+          if (kind.isInstanceOf[WideSimhash]) meta.parquet(p + "/_wide_meta")
+        case Bucketed(t, b) =>
+          require(b > 0, s"buckets must be > 0, got $b")
+          TombstoneLog.clear(spark, dlog(spark), "id")
+          spark.sql(s"DROP TABLE IF EXISTS ${legacyDeleted(t)}")
+          writeBucketed(kind.signatures(df, idCol, textCol), t, b, "overwrite")
+          // meta last: a build that dies first leaves no record, which
+          // passes the draw gate, never a record of the wrong family
+          if (kind.isInstanceOf[WideSimhash]) meta.saveAsTable(s"${t}_meta")
+      }
+    }
+
+    /** Writes `sigs` (and for MinHash its band index) into the bucketed
+      * tables, bands first. */
+    private def writeBucketed(sigs0: DataFrame, t: String, b: Int,
+        mode: String): Unit = {
+      // one signature pass feeds MinHash's two tables; a single-table
+      // write from a cached frame would cost one more job
+      val sigs =
+        if (tables(t).size > 1) sigs0.persist(StorageLevel.MEMORY_AND_DISK)
+        else sigs0
+      try tables(t).foreach { name =>
+        val (rows, keys) =
+          if (name == sigTableName(t)) (sigs, Seq("id"))
+          else (kind.index(sigs), Seq("band", "bucket"))
+        rows.write.mode(mode).format("parquet")
+          .bucketBy(b, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
+          .saveAsTable(name)
+      } finally sigs.unpersist()
+    }
+
+    /** Folds an admitted batch into the store. Ids already stored are
+      * skipped (a re-delivery), and so are tombstoned ids: takedown
+      * wins until a reclaim re-opens them. */
+    def append(spark: SparkSession, admitted: DataFrame, idCol: String,
+        textCol: String): Unit = {
+      requireDraws(spark, "append")
+      requireMutable(spark, "append")
+      val fresh = minusDead(spark, kind.signatures(admitted, idCol, textCol)
+        .join(stored(spark, admitted.select(col(idCol).as("id"))),
+          Seq("id"), "left_anti"))
+      layout match {
+        case Dir(p) =>
+          ControlPlane.dropDeadJobOutput(spark, p)
+          fresh.write.mode("append").parquet(p)
+        case Bucketed(t, b) =>
+          // bands before sigs, both ways load-bearing: a recompute of
+          // `fresh` after the sigs write would anti-join its own rows
+          // and append no bands; and a crash between the writes leaves
+          // band rows that a re-delivery duplicates (absorbed by the
+          // pairs' distinct), where the reverse order would leave the
+          // docs' band rows missing for good
+          tables(t).foreach(ControlPlane.dropDeadJobOutputOf(spark, _))
+          writeBucketed(fresh, t, b, "append")
+          // the inserts ran through `fresh`'s own session (in a
+          // foreachBatch, the stream's clone): refresh the caller's
+          // cached listings so a reader right after sees the rows
+          tables(t).foreach(spark.catalog.refreshTable)
+      }
+    }
+
+    /** Tombstones the stored ids among `ids`' first column; ids not
+      * stored or already down file nothing. Returns the number of new
+      * tombstones. */
+    def delete(spark: SparkSession, ids: DataFrame): Long =
+        ControlPlane(spark, ids) { (spark, ids) =>
+      requireMutable(spark, "delete")
+      TombstoneLog.maybeFold(spark, dlog(spark), "id")
+      val (dead, seq0) = tombstones(spark)
+      val want0 = ids.select(col(ids.columns.head).as("id")).distinct()
+      val want = want0.join(stored(spark, want0), Seq("id"), "left_semi")
+      val fresh = dead.fold(want)(d => want.join(d, Seq("id"), "left_anti"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val n = fresh.count()
+        if (n > 0) TombstoneLog.append(spark, fresh, dlog(spark), "id", "D", seq0)
+        n
+      } finally fresh.unpersist(blocking = false)
+    }
+
+    /**
+     * Removes the rows of the tombstoned ids among `ids`' first column
+     * and re-opens those ids, leaving every other tombstone standing
+     * for [[compact]]. Only files holding a target row are rewritten:
+     * their surviving rows are appended, then the files deleted, then
+     * R records land. A death anywhere leaves the tombstones standing
+     * over transient duplicates or missing rows, which reads correctly
+     * and which the re-run completes without duplicating survivors.
+     * Returns the number of ids reclaimed.
+     */
+    def reclaim(spark: SparkSession, ids: DataFrame): Long =
+        ControlPlane(spark, ids) { (spark, ids) =>
+      requireMutable(spark, "reclaim")
+      TombstoneLog.maybeFold(spark, dlog(spark), "id")
+      val (dead, seq0) = tombstones(spark)
+      val want = ids.select(col(ids.columns.head).as("id")).distinct()
+        .join(dead.getOrElse(return 0L), Seq("id"), "left_semi")
+      // the bucketed rewrite appends to and deletes files of the tables
+      // this plan reads: sever its lineage (batch-sized) first
+      val target = layout match {
+        case Dir(_) => want.persist(StorageLevel.MEMORY_AND_DISK)
+        case Bucketed(_, _) => want.localCheckpoint(true)
+      }
+      try {
+        val n = target.count()
+        if (n == 0L) return 0L
+        layout match {
+          case Dir(p) => reclaimFiles(spark, p, target)
+          case Bucketed(t, _) => kind match {
+            case m: MinHash =>
+              // the two legs touch one table each, and tombstones hide
+              // the ids throughout, so they run concurrently
+              val hint = bandHint(spark, t, m, target, n)
+              ControlPlane.par2(spark)(
+                Bucketing.reclaimFromTable(spark, s"${t}_bands", target, "id", hint),
+                Bucketing.reclaimFromTable(spark, sigTableName(t), target, "id"))
+            case _: WideSimhash =>
+              Bucketing.reclaimFromTable(spark, sigTableName(t), target, "id")
+          }
+        }
+        TombstoneLog.append(spark, target, dlog(spark), "id", "R", seq0)
+        n
+      } finally target.unpersist(blocking = false)
+    }
+
+    /** The dir layout's rewrite: the flat dir has no buckets, so the
+      * unit is the file. Survivors are anti-joined against the target
+      * AND, by id, against every other file: a re-run after a death
+      * between the move-in and the deletes finds its survivors already
+      * present and moves nothing twice. */
+    private def reclaimFiles(spark: SparkSession, p: String,
+        target: DataFrame): Unit = {
+      val root = new org.apache.hadoop.fs.Path(p)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val rows = spark.read.parquet(storeDir)
-        .withColumn("_f", input_file_name())
-      val affected = rows
-        .join(broadcast(target), Seq("id"), "left_semi")
+      val rows = spark.read.parquet(p).withColumn("_f", input_file_name())
+      val affected = rows.join(broadcast(target), Seq("id"), "left_semi")
         .select("_f").distinct()
         .collect().map(_.getString(0)) // bounded by the batch size
-      if (affected.nonEmpty) {
-        val staging = new org.apache.hadoop.fs.Path(
-          storeDir + "/_reclaim_staging")
-        val restIds = rows.filter(!col("_f").isin(affected: _*))
-          .select("id")
-        spark.read.parquet(affected: _*)
-          .join(broadcast(target), Seq("id"), "left_anti")
-          .join(restIds, Seq("id"), "left_anti")
-          .write.mode("overwrite").parquet(staging.toString)
-        fs.listStatus(staging)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .foreach { f =>
-            require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(
-              root, "reclaimed-" + f.getPath.getName)),
-              s"reclaimSignatureTombstones: could not move " +
-                s"${f.getPath} into $root")
-          }
-        affected.foreach(u =>
-          fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(u)),
-            false))
-        fs.delete(staging, true)
-      }
-      // rows physically gone — re-open the ids LAST (a death anywhere
-      // above leaves the tombstones standing, which reads correctly)
-      TombstoneLog.append(spark, target, deletedSigsPath(storeDir),
-        "id", "R", seq0)
-      n
-    } finally target.unpersist(blocking = false)
-  }
-
-  /**
-   * REPLACE a batch of documents in a MinHash directory store — the
-   * mutable-id remedy [[mutatedRedeliveries]] audits for: until now,
-   * content mutated under a reused id could only re-enter history via
-   * a whole-store compaction (delete's "compact first" contract).
-   * Three idempotent steps (see `Similarity.upsertIntoIvfStore` for
-   * the shared crash/semantics reasoning): tombstone the ids' standing
-   * rows, physically reclaim and re-open exactly those ids, then admit
-   * the NEW content's signatures. An upsert is an explicit replacement
-   * and so revives a previously taken-down id by design; plain
-   * re-delivered appends still drop tombstoned ids (takedown wins).
-   * After the upsert the new content participates in
-   * [[minhashLshIncremental]] as history — the store signature IS the
-   * new text's signature. `numHashes`/`shingleN`/`portable` must match
-   * the store build, as for every admission call.
-   */
-  def upsertSignatures(spark: SparkSession, batch: DataFrame,
-      idCol: String, textCol: String, storeDir: String,
-      numHashes: Int = 64, shingleN: Int = 5,
-      portable: Boolean = false): Unit =
-      ControlPlane(spark, batch) { (spark, batch) =>
-    val ids = batch.select(col(idCol).as("id"))
-    deleteSignatures(spark, ids, storeDir)
-    reclaimSignatureTombstones(spark, ids, storeDir)
-    appendSignatures(spark, batch, idCol, textCol, storeDir,
-      numHashes, shingleN, portable)
-  }
-
-  /** [[upsertSignatures]] for a [[buildWideSimhashStore]] dir — same
-    * protocol over the same dir layout ([[reclaimSignatureTombstones]]
-    * never touches `_wide_meta`: the draw family is a property of the
-    * hash config, not of which rows live), with the wide append's
-    * draw-family gate intact. */
-  def upsertWideSimhashSignatures(spark: SparkSession, batch: DataFrame,
-      idCol: String, textCol: String, storeDir: String,
-      portable: Boolean = false): Unit =
-      ControlPlane(spark, batch) { (spark, batch) =>
-    requireWideDraws(spark, storeDir, portable, "upsertWideSimhashSignatures")
-    val ids = batch.select(col(idCol).as("id"))
-    deleteSignatures(spark, ids, storeDir)
-    reclaimSignatureTombstones(spark, ids, storeDir)
-    appendWideSimhashSignatures(spark, batch, idCol, textCol, storeDir,
-      portable)
-  }
-
-  /**
-   * Physically reclaim a directory signature store's tombstoned rows.
-   * Rename-swap protocol, so the wide store's `_wide_meta` draw record
-   * is NEVER in a deleted-but-not-yet-rewritten state (a missing meta
-   * silently downgrades [[requireWideDraws]] to the documented
-   * contract — the one window this protocol refuses to open): the live
-   * rows land in a sibling staging dir together with a copy of the
-   * meta, then two renames swap it in. A crash before the first rename
-   * leaves the original store untouched (staging debris is reclaimed
-   * by the next run's preamble); between the renames the store dir is
-   * ABSENT — reads fail loudly with both copies intact on disk (rename
-   * `<storeDir>__compact` into place to finish by hand); after the
-   * second rename only superseded `__old` debris remains (reclaimed at
-   * the end and by the next run). Tombstones live inside the old dir,
-   * so the swap clears them atomically with the rewrite. Run from the
-   * maintenance writer, like every compaction in this repo.
-   */
-  def compactSignatureStoreDir(spark: SparkSession,
-      storeDir: String, fileThreshold: Int = 8): Unit =
-      ControlPlane(spark) { spark =>
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(storeDir + "__compact")
-    val old = new org.apache.hadoop.fs.Path(storeDir + "__old")
-    // preamble: debris of a previous crashed run
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    val standing = readDeletedSigs(spark, storeDir)
-      .exists(d => !d.isEmpty)
-    if (!standing) {
-      // nothing tombstoned — clear the op log of fully-revived churn
-      // (the supersede-first clear: a bare delete could falsely
-      // tombstone a revived id). But churn-heavy upsert traffic ALSO
-      // leaves reclaimed-* fragments and append debris with zero
-      // standing tombstones, so the rewrite-swap still runs once the
-      // store's committed data-file count passes `fileThreshold`
-      // (0 forces it) — otherwise fragmentation would grow unbounded
-      // between genuine takedowns.
-      TombstoneLog.clear(spark, deletedSigsPath(storeDir), "id")
-      val dataFiles = fs.listStatus(root)
-        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      if (dataFiles <= fileThreshold && fileThreshold > 0) return
+      if (affected.isEmpty) return
+      val staging = new org.apache.hadoop.fs.Path(p + "/_reclaim_staging")
+      spark.read.parquet(affected.toIndexedSeq: _*)
+        .join(broadcast(target), Seq("id"), "left_anti")
+        .join(rows.filter(!col("_f").isin(affected.toIndexedSeq: _*))
+          .select("id"), Seq("id"), "left_anti")
+        .write.mode("overwrite").parquet(staging.toString)
+      fs.listStatus(staging)
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        .foreach { f =>
+          require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(
+            root, "reclaimed-" + f.getPath.getName)),
+            s"$this.reclaim: could not move ${f.getPath} into $root")
+        }
+      affected.foreach(u =>
+        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(u)), false))
+      fs.delete(staging, true)
     }
-    liveSigs(spark, storeDir).write.mode("overwrite").parquet(tmp.toString)
-    val metaP = new org.apache.hadoop.fs.Path(storeDir + "/_wide_meta")
-    if (fs.exists(metaP))
-      spark.read.parquet(metaP.toString).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString + "/_wide_meta")
-    require(fs.rename(root, old),
-      s"compactSignatureStoreDir: could not rename $root aside")
-    require(fs.rename(tmp, root),
-      s"compactSignatureStoreDir: could not swap $tmp into place — " +
-        s"the store is at $old; rename it back (or $tmp in) to recover")
-    fs.delete(old, true)
+
+    /** The (band, bucket) keys of the targets' stored signatures, so the
+      * bands reclaim reads only their bucket files — or None for the
+      * full scan. The keys are a function of the stored sig and the
+      * kind's `numHashes`/`bands`; a mismatch with the build would name
+      * the wrong buckets and leave rows standing, so the keys are
+      * trusted only when every target's `bands` rows are found among
+      * them. When `2 × targets × bands` reaches the bucket count the
+      * prune could not pass [[Bucketing.prunedScan]]'s guard anyway,
+      * and the recompute is skipped. */
+    private def bandHint(spark: SparkSession, t: String, m: MinHash,
+        target: DataFrame, n: Long): Option[DataFrame] = {
+      val nBandBuckets = spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst
+          .TableIdentifier(s"${t}_bands"))
+        .bucketSpec.map(_.numBuckets).getOrElse(0)
+      if (n * m.bands * 2 >= nBandBuckets) return None
+      // checkpointed: the bands rewrite must not re-evaluate this
+      // against the files it mutates
+      val storedSigs = Bucketing.prunedScan(spark, sigTableName(t), target)
+        .join(broadcast(target), Seq("id"), "left_semi")
+        .select("id", "sig").localCheckpoint(true)
+      val bandKeys = m.index(storedSigs).select("band", "bucket")
+      val located = Bucketing.prunedScan(spark, s"${t}_bands", bandKeys)
+        .join(broadcast(target), Seq("id"), "left_semi")
+        .groupBy("id").agg(count(lit(1)).as("c"))
+      val short = storedSigs.select("id")
+        .join(located.filter(col("c") >= m.bands), Seq("id"), "left_anti")
+        .count()
+      if (short == 0L) Some(bandKeys) else None
+    }
+
+    /** Replaces the content of `batch`'s ids: tombstone, reclaim exactly
+      * those ids, admit the new text. An upsert is an explicit
+      * replacement, so it revives a taken-down id. */
+    def upsert(spark: SparkSession, batch: DataFrame, idCol: String,
+        textCol: String): Unit = ControlPlane(spark, batch) { (spark, batch) =>
+      requireDraws(spark, "upsert")
+      val ids = batch.select(col(idCol).as("id"))
+      delete(spark, ids)
+      reclaim(spark, ids)
+      append(spark, batch, idCol, textCol)
+    }
+
+    /** Applies one CDC micro-batch of (id, text, op, seq) rows, op ∈
+      * {I, U, D}: D tombstones, U replaces ([[upsert]]), I appends
+      * (takedown wins). See [[dispatchSigCdc]]. Returns the (inserted,
+      * updated, deleted) ids dispatched. */
+    def applyCdc(spark: SparkSession, batch: DataFrame,
+        idCol: String = "doc_id", textCol: String = "text",
+        opCol: String = "op", seqCol: String = "seq"): (Long, Long, Long) =
+      ControlPlane(spark, batch) { (spark, batch) =>
+        dispatchSigCdc(spark, batch, idCol, textCol, opCol, seqCol, this,
+          del = ids => delete(spark, ids),
+          reclaim = ids => reclaim(spark, ids),
+          append = rows => append(spark, rows, "doc_id", "text"),
+          // refuse before tombstoning the U ids the refusal protects;
+          // a takedown does not depend on the draws
+          gateIU = () => requireDraws(spark, "applyCdc"))
+      }
+
+    /**
+     * Near-dup pairs of `batch` against the live store AND within the
+     * batch: `id_a` is the earlier side (a store doc, or the lower
+     * batch id), `id_b` the new batch doc. Only batch docs the store
+     * has not admitted take part ([[restrictToNew]]): with a stored doc
+     * on the batch side, a re-delivery would meet its partner through
+     * both arms in opposite orientations, and dropping every `id_b`
+     * would then drop an admitted doc. So a fully re-delivered batch
+     * emits nothing. MinHash pairs carry `est_jaccard ≥ threshold`;
+     * wide SimHash pairs `hamming ≤ maxHamming`. The bucketed layout
+     * reads its stored keys in their bucket layout, so the plan's
+     * exchanges move batch-sized data only.
+     */
+    def pairs(spark: SparkSession, batch: DataFrame, idCol: String,
+        textCol: String, threshold: Double = 0.5): DataFrame = {
+      kind match {
+        case w: WideSimhash => require(w.maxHamming >= 1,
+          s"wide SimHash pairs need maxHamming >= 1 (got ${w.maxHamming}); " +
+            "radius 0 is exact-signature equality — use Dedup.exact")
+        case _: MinHash =>
+      }
+      requireDraws(spark, "pairs")
+      val ssig = live(spark)
+      val bsig = Caches.releaseAfterUse(restrictToNew(
+        kind.signatures(batch, idCol, textCol), ssig))
+      // a tombstoned doc's band rows still collide, but die at the
+      // verify against the live sigs
+      val sIdx = (kind, layout) match {
+        case (_: MinHash, Bucketed(t, _)) => spark.table(s"${t}_bands")
+        case _ => kind.index(ssig)
+      }
+      val bIdx = kind.index(bsig)
+      def cand(a: DataFrame, b: DataFrame) =
+        a.select(col("band"), col("bucket"), col("id").as("id_a"))
+          .join(b.select(col("band"), col("bucket"), col("id").as("id_b")),
+            Seq("band", "bucket"))
+      kind.verify(cand(sIdx, bIdx).select("id_a", "id_b").distinct(),
+          ssig, bsig, threshold)
+        .unionByName(kind.verify(cand(bIdx, bIdx)
+          .filter(col("id_a") < col("id_b")).select("id_a", "id_b")
+          .distinct(), bsig, bsig, threshold))
+        .distinct()
+    }
+
+    /** Checks the live store against the corpus it should equal: one
+      * row per expected doc with `sig_ok` (the live stored signature is
+      * the net text's) — and for MinHash `bands_ok` (its live band rows
+      * are that signature's) — plus an all-false row for any live id
+      * outside `expected`. A resurrected takedown, a lost or doubled
+      * replacement, stale band rows or old content under a mutated id
+      * each flip some row. */
+    def audit(spark: SparkSession, expected: DataFrame, idCol: String,
+        textCol: String): DataFrame = {
+      val net = kind.signatures(expected, idCol, textCol)
+      val liveSig = live(spark)
+      val sigCmp = net.select(col("id") +: kind.sigCols.map(c => col(c).as(s"n_$c")): _*)
+        .join(liveSig.select(col("id") +: kind.sigCols.map(c => col(c).as(s"s_$c")): _*),
+          Seq("id"), "full")
+        .select(col("id"), coalesce(kind.sigCols
+          .map(c => col(s"n_$c") === col(s"s_$c")).reduce(_ && _), lit(false))
+          .as("sig_ok"))
+      kind match {
+        case _: WideSimhash => sigCmp
+        case m: MinHash =>
+          val liveBands = layout match {
+            case Bucketed(t, _) => minusDead(spark, spark.table(s"${t}_bands"))
+            case Dir(_) => m.index(liveSig)
+          }
+          val bandCmp = m.index(net).select("id", "band", "bucket")
+            .withColumn("_e", lit(1))
+            .join(liveBands.select("id", "band", "bucket")
+              .withColumn("_s", lit(1)), Seq("id", "band", "bucket"), "full")
+            .groupBy("id")
+            .agg(min(col("_e").isNotNull && col("_s").isNotNull).as("bands_ok"))
+          sigCmp.join(bandCmp, Seq("id"), "full")
+            .select(col("id"), coalesce(col("sig_ok"), lit(false)).as("sig_ok"),
+              coalesce(col("bands_ok"), lit(false)).as("bands_ok"))
+      }
+    }
+
+    /**
+     * Removes every tombstoned row and clears the tombstones; also the
+     * small-file maintenance appends owe. The bucketed layout compacts
+     * each table to one file per bucket ([[Bucketing.compactTable]])
+     * and drops the tombstone record last (a death before that leaves
+     * tombstones over removed rows: correct, and re-run clean). The
+     * dir layout rewrites the live rows into `<path>__compact` with a
+     * copy of the draw record, then swaps it in by two renames, so the
+     * record is never absent from a standing store; between the
+     * renames the store is absent and reads fail loudly, with both
+     * copies on disk. With no standing tombstone the dir store rewrites
+     * only past 8 data files: churn leaves fragments with no tombstone
+     * left to trigger a rewrite. Run from the maintenance writer.
+     */
+    def compact(spark: SparkSession): Unit =
+        ControlPlane(spark) { spark =>
+      layout match {
+        case Bucketed(t, _) =>
+          val d = dead(spark).map((_, "id"))
+          tables(t).foreach(Bucketing.compactTable(spark, _, d))
+          if (d.isDefined) {
+            // legacy table first: the other order would let a legacy D
+            // resurface over an id the log had revived
+            spark.sql(s"DROP TABLE IF EXISTS ${legacyDeleted(t)}")
+            TombstoneLog.clear(spark, dlog(spark), "id")
+          }
+        case Dir(p) =>
+          val root = new org.apache.hadoop.fs.Path(p)
+          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val tmp = new org.apache.hadoop.fs.Path(p + "__compact")
+          val old = new org.apache.hadoop.fs.Path(p + "__old")
+          fs.delete(tmp, true) // debris of a crashed run
+          fs.delete(old, true)
+          if (!dead(spark).exists(d => !d.isEmpty)) {
+            // clear fully-revived churn from the log, then rewrite only
+            // for fragmentation
+            TombstoneLog.clear(spark, dlog(spark), "id")
+            val dataFiles = fs.listStatus(root)
+              .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+            if (dataFiles <= 8) return
+          }
+          live(spark).write.mode("overwrite").parquet(tmp.toString)
+          val metaP = new org.apache.hadoop.fs.Path(p + "/_wide_meta")
+          if (fs.exists(metaP))
+            spark.read.parquet(metaP.toString).coalesce(1)
+              .write.mode("overwrite").parquet(tmp.toString + "/_wide_meta")
+          require(fs.rename(root, old), s"$this.compact: could not rename $root aside")
+          require(fs.rename(tmp, root), s"$this.compact: could not swap " +
+            s"$tmp into place — the store is at $old; rename it back (or " +
+            s"$tmp in) to recover")
+          fs.delete(old, true)
+      }
+    }
   }
 
-  /** Near-dup pairs (est_jaccard ≥ threshold) of a new batch against
-    * the standing store AND within the batch itself — `id_a` is the
-    * earlier side (store doc, or the lower batch id), `id_b` the batch
-    * doc, the q91 admission orientation. `numHashes`/`bands`/`shingleN`
-    * must match the store's build parameters. */
-  def minhashLshIncremental(spark: SparkSession, batch: DataFrame,
-      idCol: String, textCol: String, storeDir: String,
-      numHashes: Int = 64, bands: Int = 8, shingleN: Int = 5,
-      threshold: Double = 0.5, portable: Boolean = false): DataFrame = {
-    val rows = bandRows(numHashes, bands)
-    // LIVE rows only: a deleted doc neither matches as a dup source
-    // nor re-deliveries anyone through restrictToNew (a re-delivered
-    // deleted id is a NEW doc against the live store)
-    val ssig = liveSigs(spark, storeDir)
-    val bsig = Caches.releaseAfterUse(restrictToNew(
-      minhashSignatures(batch, idCol, textCol, numHashes, shingleN, portable),
-      ssig))
-    val bBand = bandedIndex(bsig, bands, rows, portable)
-    val sBand = bandedIndex(ssig, bands, rows, portable)
-    incrementalPairs(bsig, ssig, bBand, sBand, numHashes, threshold)
-  }
-
-  /** Shared admission core: store-vs-batch and batch-vs-batch candidate
-    * pairs, verified and unioned. `bsig`/`bBand` must already be
-    * restricted to genuinely-NEW batch ids (see [[restrictToNew]]):
-    * with a store-member batch doc on the batch side, a re-delivered
-    * doc would meet its partner through both arms with OPPOSITE
-    * orientations — (a,b) from store-vs-batch and (b,a) from
-    * batch-vs-batch — which `distinct` cannot collapse, and the "drop
-    * id_b" admission policy would then drop BOTH docs, deleting an
-    * already-admitted history doc. With the restriction, every pair's
-    * id_b is a genuinely-new batch doc and id_a its earlier
-    * counterpart, and a fully re-delivered batch emits NOTHING — the
-    * idempotency a crashed-and-retried admission needs. */
-  private def incrementalPairs(bsig: DataFrame, ssig: DataFrame,
-      bBand: DataFrame, sBand: DataFrame, numHashes: Int,
-      threshold: Double): DataFrame = {
-    // store-vs-batch: the store id is always id_a (history precedes)
-    val candSB = sBand.select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(bBand.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .select("id_a", "id_b").distinct()
-    // batch-vs-batch among new docs: the usual canonical ordering
-    val candBB = bBand.select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(bBand.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    verifyPairs(candSB, ssig, bsig, numHashes, threshold)
-      .unionByName(verifyPairs(candBB, bsig, bsig, numHashes, threshold))
-      .distinct()
-  }
-
-  /** Batch signatures restricted to ids the store has NOT admitted —
-    * a re-delivered doc participates only through its store copy. One
-    * id-keyed anti join (store side pre-bucketed in the bucketed
-    * variant).
-    *
-    * This encodes the IMMUTABLE-ID contract: a batch doc whose id the
-    * store already holds is treated as a pure re-delivery and compared
-    * via its STORE signature — if the feed mutates content under a
-    * reused id, the new content never participates and recall silently
-    * degrades. Mutable-id feeds should run [[mutatedRedeliveries]] on
-    * each batch (an explicit, loud audit) rather than pay a
-    * signature-compare join inside every admission call. */
+  /** Batch signatures whose id the store has NOT admitted: a
+    * re-delivered doc takes part only through its stored copy. This is
+    * the immutable-id contract — content mutated under a reused id
+    * never takes part, so mutable-id feeds run [[mutatedRedeliveries]]
+    * on each batch, and replace content with [[SigStore.upsert]]. */
   private def restrictToNew(bsig: DataFrame, storeIds: DataFrame): DataFrame =
     bsig.join(storeIds.select("id"), Seq("id"), "left_anti")
 
@@ -572,330 +829,36 @@ object Dedup {
       .select(col("id"), col("sig_store"), col("sig_batch"))
   }
 
-  /**
-   * Bucketed signature store — [[buildSignatureStore]] with the
-   * [[Bucketing]] write-time-shuffle discipline applied to BOTH standing
-   * tables, closing the plain store's scale gap: there,
-   * [[minhashLshIncremental]] re-bands and re-shuffles ALL of history
-   * every daily batch; here both store-side layouts are paid once at
-   * build time and daily admission shuffles ONLY the day-sized batch:
-   *
-   *  - `<table>_sigs` (id, sig), `bucketBy(id)` — the verify join reads
-   *    the store pre-partitioned on id;
-   *  - `<table>_bands` (id, band, bucket), `bucketBy(band, bucket)` —
-   *    the candidate join reads the store's inverted band index
-   *    pre-partitioned on the collision key, no re-banding.
-   *
-   * xxhash64 band keys only (portable mode's bucket is an array — not a
-   * legal bucket column); `numHashes`/`bands`/`shingleN` must match
-   * between build, admission, and append. Bucket count ≈ store size /
-   * target partition (the [[Bucketing]] sizing note).
-   */
+  // The bucketed MinHash entry points the benchmark harness calls, as
+  // delegates to the store.
+
   def buildSignatureStoreBucketed(df: DataFrame, idCol: String,
       textCol: String, table: String, buckets: Int, numHashes: Int = 64,
-      bands: Int = 8, shingleN: Int = 5): Unit = {
-    val spark = df.sparkSession
-    // a rebuild starts a fresh lifecycle: standing tombstones (op log
-    // or legacy table) describe the OLD store and would silently hide
-    // rebuilt rows that share ids — same contract as buildIvfStore
-    TombstoneLog.clear(spark, bucketedDlogPath(spark, table), "id")
-    spark.sql(s"DROP TABLE IF EXISTS ${deletedTable(table)}")
-    val rows = bandRows(numHashes, bands)
-    val sigs = minhashSignatures(df, idCol, textCol, numHashes, shingleN,
-      portable = false).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      Bucketing.writeBucketed(sigs, s"${table}_sigs", "id", buckets)
-      bandedIndex(sigs, bands, rows, portable = false)
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "band", "bucket").sortBy("band", "bucket")
-        .saveAsTable(s"${table}_bands")
-    } finally sigs.unpersist()
-  }
+      bands: Int = 8, shingleN: Int = 5): Unit =
+    SigStore(MinHash(numHashes, bands, shingleN), Bucketed(table, buckets))
+      .build(df, idCol, textCol)
 
-  /** [[minhashLshIncremental]] against a [[buildSignatureStoreBucketed]]
-    * store: identical pair semantics, but both store-side scans reuse
-    * their write-time bucket layout — the plan's only exchanges move
-    * batch-sized data (spec-asserted in DedupSpec). */
   def minhashLshIncrementalBucketed(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, table: String, numHashes: Int = 64,
       bands: Int = 8, shingleN: Int = 5,
-      threshold: Double = 0.5): DataFrame = {
-    val rows = bandRows(numHashes, bands)
-    // LIVE rows only (see minhashLshIncremental): the tombstone anti
-    // join BROADCASTS, so the store side still never re-shuffles; a
-    // deleted doc's band rows can still produce candidates, but they
-    // die at the verify join against the live sigs
-    val ssig = minusDeletedBucketed(spark, spark.table(s"${table}_sigs"),
-      table)
-    val bsig = Caches.releaseAfterUse(restrictToNew(minhashSignatures(
-      batch, idCol, textCol, numHashes, shingleN, portable = false), ssig))
-    incrementalPairs(bsig, ssig,
-      bandedIndex(bsig, bands, rows, portable = false),
-      spark.table(s"${table}_bands"), numHashes, threshold)
-  }
+      threshold: Double = 0.5): DataFrame =
+    SigStore(MinHash(numHashes, bands, shingleN), Bucketed(table, 0))
+      .pairs(spark, batch, idCol, textCol, threshold)
 
-  private def deletedTable(table: String): String = s"${table}_deleted"
-
-  /** The bucketed store's D/R op log — a [[TombstoneLog]] at a
-    * warehouse-SIBLING path, not a catalog table: revive (the upsert
-    * enabler) needs latest-seq-wins resolution, and a catalog table
-    * can only be "rewritten" through a drop window in which an absent
-    * tombstone record silently reads as "nothing deleted" — the exact
-    * resurrection window the op log exists to close. The path is
-    * deliberately OUTSIDE both store tables' dirs (a
-    * [[Bucketing.compactTable]] drop+rename must never take the log
-    * with it). */
-  private def bucketedDlogPath(spark: SparkSession, table: String): String =
-    spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-      s"/${table}__dlog"
-
-  /** Effective tombstones of a bucketed store: the op log resolved
-    * per id, with any LEGACY `<table>_deleted` rows (the pre-r14
-    * D-only table) folded in at seq -1 — superseded by any log record
-    * for the same id, exactly the one-column-file grace the dir
-    * stores' logs give. */
-  private def readDeletedBucketed(spark: SparkSession,
-      table: String): Option[DataFrame] = {
-    val legacy =
-      if (spark.catalog.tableExists(deletedTable(table)))
-        Some(spark.table(deletedTable(table)).select("id")
-          .withColumn("seq", lit(-1L)).withColumn("op", lit("D")))
-      else None
-    val log = TombstoneLog.read(spark, bucketedDlogPath(spark, table), "id")
-    val all = (legacy, log) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
-    all.map(_.groupBy("id")
-        .agg(max(struct(col("seq"), col("op"))).as("last"))
-        .filter(col("last.op") === "D").select("id"))
-  }
-
-  private def minusDeletedBucketed(spark: SparkSession, df: DataFrame,
-      table: String): DataFrame =
-    readDeletedBucketed(spark, table) match {
-      case Some(d) => df.join(broadcast(d.select("id")), Seq("id"),
-        "left_anti")
-      case None => df
-    }
-
-  /** [[deleteSignatures]] for a [[buildSignatureStoreBucketed]] store:
-    * tombstones land in the store's op log (takedown-sized — never
-    * bucketed, always broadcast). Same contract: deleted docs stop
-    * matching immediately, appends drop them (takedown wins),
-    * [[compactSignatureStore]] physically reclaims both tables and
-    * clears the record, and [[upsertSignaturesBucketed]] re-admits a
-    * mutated id without the full compaction. Returns the new
-    * tombstone count. */
-  def deleteSignaturesBucketed(spark: SparkSession, ids: DataFrame,
-      table: String): Long = ControlPlane(spark, ids) { (spark, ids) =>
-    import org.apache.spark.storage.StorageLevel
-    Bucketing.requireStrictFileReads(spark, "deleteSignaturesBucketed")
-    val dlog = bucketedDlogPath(spark, table)
-    TombstoneLog.maybeFold(spark, dlog, "id")
-    val seq0 = TombstoneLog.nextSeq(spark, dlog, "id")
-    // existence check through the GUARDED bucket-pruned read (r16,
-    // SCALING.md "location crossover"): the narrow catalog scan was
-    // this path's last corpus-proportional term, and the 10M-doc ×
-    // 2048-bucket measurement the r15 verdict asked for shows the
-    // pruned location overtaking it from ~1M docs up (0.73 s vs
-    // 1.11 s at 1M×512 with a 100-id batch; 1.64 s vs 3.53 s at
-    // 10M×2048 with a 500-id batch — and the catalog term keeps
-    // growing with the corpus while the pruned term stays batch-
-    // proportional). prunedScan's selectivity guard separated win
-    // from loss at EVERY measured point, so the non-selective case
-    // (toy stores, huge batches) still reads the catalog's shared
-    // cached listing, now plus one batch-sized bucket-distinct job.
-    val want0 = ids.select(col(ids.columns.head).as("id")).distinct()
-    val want = want0
-      .join(Bucketing.prunedScan(spark, s"${table}_sigs", want0)
-        .select("id"), Seq("id"), "left_semi")
-    val fresh = (readDeletedBucketed(spark, table) match {
-      case Some(d) => want.join(d, Seq("id"), "left_anti")
-      case None => want
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = fresh.count()
-      if (n > 0)
-        TombstoneLog.append(spark, fresh, dlog, "id", "D", seq0)
-      n
-    } finally fresh.unpersist(blocking = false)
-  }
-
-  /** Targeted physical reclaim for a BUCKETED signature store — the
-    * [[reclaimSignatureTombstones]] twin, closing the upsert-parity
-    * gap: removes exactly the given tombstoned ids' rows from both
-    * standing tables and re-opens those ids, leaving every other
-    * tombstone standing. The rewrite is FILE-TARGETED
-    * ([[Bucketing.reclaimFromTable]] — the dir store's
-    * move-in-then-delete adapted to the catalog layout): only the
-    * bucket files holding the ids rewrite, so a CDC-cadence upsert
-    * pays O(batch × store/buckets) per call, not the O(store) a
-    * [[Bucketing.compactTable]] ride would charge every micro-batch
-    * (whole-table compaction stays where it belongs, on
-    * [[compactSignatureStore]]'s maintenance cadence). Bands first,
-    * sigs second — removal order is correctness-neutral here (the
-    * standing tombstones hide the ids throughout; orphan band rows
-    * die at the verify join), so the order just mirrors the append's.
-    * A death between or inside the rewrites heals on re-run (the
-    * helper's full-row debris heal); R records land LAST.
-    *
-    * LOCATION is bucket-pruned end to end (the r15 lever; the
-    * dedup-side twin of the ANN stores' AnnLocIndex, with the table
-    * layout itself as the index): the sigs side prunes by the ids
-    * directly (id IS its bucket key — no configuration to get wrong),
-    * and the bands side recomputes the targets' (band, bucket) keys
-    * from their STORED signatures — a pure function of sig +
-    * `numHashes`/`bands`, which therefore must match the store build,
-    * the same contract as every admission call. Because a mismatch
-    * would name the WRONG buckets and silently leave rows standing,
-    * the recompute is VERIFIED before it is trusted: admission writes
-    * bands before sigs, so every live-sig id must locate ≥ `bands`
-    * band rows inside the pruned set — a shortfall (mismatched
-    * params, or a torn reclaim mid-heal) falls back to the unpruned
-    * full-scan location, always correct. Returns ids reclaimed. */
-  def reclaimSignatureTombstonesBucketed(spark: SparkSession,
-      ids: DataFrame, table: String, numHashes: Int = 64,
-      bands: Int = 8): Long = ControlPlane(spark, ids) { (spark, ids) =>
-    import org.apache.spark.storage.StorageLevel
-    Bucketing.requireStrictFileReads(spark,
-      "reclaimSignatureTombstonesBucketed")
-    val rows = bandRows(numHashes, bands)
-    val dlog = bucketedDlogPath(spark, table)
-    TombstoneLog.maybeFold(spark, dlog, "id")
-    val seq0 = TombstoneLog.nextSeq(spark, dlog, "id")
-    val dead = readDeletedBucketed(spark, table).getOrElse(return 0L)
-    val target = ids.select(col(ids.columns.head).as("id")).distinct()
-      .join(dead, Seq("id"), "left_semi")
-      // the rewrites append to + delete files of the tables the plan
-      // reads — sever the lineage (batch-sized), or the R append's
-      // re-evaluation races the mutated relations
-      .localCheckpoint(true)
-    val n = target.count()
-    if (n == 0L) return 0L
-    // is a bands-side prune even possible? n×bands is an upper bound
-    // on the batch's distinct (band, bucket) keys — when twice that
-    // already reaches the bucket count, prunedScan's selectivity
-    // guard would reject the prune anyway, so skip the recompute and
-    // coverage jobs outright (they measured +15% on exactly the
-    // batch-≥-buckets regime they can't help)
-    val nBandBuckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst
-        .TableIdentifier(s"${table}_bands"))
-      .bucketSpec.map(_.numBuckets).getOrElse(0)
-    val bandHint = if (n * bands * 2 >= nBandBuckets) None else {
-      // the targets' stored sigs, read through the sigs table's
-      // buckets; checkpointed — the band rewrite below must not
-      // re-evaluate this against mutated files
-      val storedSigs = Bucketing
-        .prunedScan(spark, s"${table}_sigs", target)
-        .join(broadcast(target), Seq("id"), "left_semi")
-        .select("id", "sig").localCheckpoint(true)
-      val bandKeys = bandedIndex(storedSigs, bands, rows,
-        portable = false).select("band", "bucket")
-      // coverage check: ≥ bands located band rows per live-sig id, or
-      // the pruned location cannot be trusted (see scaladoc)
-      val located = Bucketing
-        .prunedScan(spark, s"${table}_bands", bandKeys)
-        .join(broadcast(target), Seq("id"), "left_semi")
-        .groupBy("id").agg(count(lit(1)).as("c"))
-      val short = storedSigs.select("id")
-        .join(located.filter(col("c") >= bands), Seq("id"), "left_anti")
-        .count()
-      if (short == 0L) Some(bandKeys) else None
-    }
-    // the two table reclaims run CONCURRENTLY (r16): removal order is
-    // correctness-neutral (scaladoc above — tombstones hide the ids
-    // throughout, orphan band rows die at the verify join), each leg
-    // touches only its own table, and the bandHint's stored-sig read
-    // is already eagerly checkpointed above, so the sigs rewrite
-    // cannot race it
-    ControlPlane.par2(spark)(
-      Bucketing.reclaimFromTable(spark, s"${table}_bands", target, "id",
-        bandHint),
-      Bucketing.reclaimFromTable(spark, s"${table}_sigs", target, "id"))
-    TombstoneLog.append(spark, target, dlog, "id", "R", seq0)
-    n
-  }
-
-  /** REPLACE a batch of documents in a BUCKETED MinHash store — the
-    * [[upsertSignatures]] twin over the [[buildSignatureStoreBucketed]]
-    * layout: tombstone the ids' standing rows, physically reclaim and
-    * re-open exactly those ids ([[reclaimSignatureTombstonesBucketed]]
-    * — other takedowns keep standing), then admit the NEW content's
-    * signatures through the bucketed append (both tables keep their
-    * write-time layout; the admission plan's exchanges stay
-    * batch-sized). Revives a previously taken-down id by design — an
-    * upsert is an explicit replacement; plain re-delivered appends
-    * still drop tombstoned ids. `numHashes`/`bands`/`shingleN` must
-    * match the store build, as for every admission call. */
-  def upsertSignaturesBucketed(spark: SparkSession, batch: DataFrame,
-      idCol: String, textCol: String, table: String, buckets: Int,
-      numHashes: Int = 64, bands: Int = 8,
-      shingleN: Int = 5): Unit = ControlPlane(spark, batch) { (spark, batch) =>
-    val ids = batch.select(col(idCol).as("id"))
-    deleteSignaturesBucketed(spark, ids, table)
-    reclaimSignatureTombstonesBucketed(spark, ids, table, numHashes,
-      bands)
-    appendSignaturesBucketed(spark, batch, idCol, textCol, table,
-      buckets, numHashes, bands, shingleN)
-  }
-
-  /**
-   * Apply one CDC micro-batch — (id, text, op, seq) rows, op ∈
-   * {I, U, D} — to a DIRECTORY signature store: the dedup-side twin of
-   * `Similarity.applyCdcBatch`, closing the loop from the reference's
-   * envelope stream to a maintained dedup history. The batch resolves
-   * to ONE terminal op per id (latest seq wins; same-seq ties D > U >
-   * I — conservative takedown-wins), then deletes tombstone
-   * ([[deleteSignatures]] — a re-delivered D files nothing), updates
-   * REPLACE ([[upsertSignatures]] — revives by design, the mutable-id
-   * remedy), inserts append ([[appendSignatures]] — tombstoned ids
-   * drop, takedown wins over a late re-delivered I). Replaying the
-   * whole batch converges: signatures are pure functions of the text.
-   * `numHashes`/`shingleN`/`portable` must match the store build.
-   * Returns (inserted, updated, deleted) ids DISPATCHED per lane.
-   */
-  def applySigCdcBatch(spark: SparkSession, batch: DataFrame,
-      storeDir: String, idCol: String = "doc_id",
-      textCol: String = "text", opCol: String = "op",
-      seqCol: String = "seq", numHashes: Int = 64, shingleN: Int = 5,
-      portable: Boolean = false): (Long, Long, Long) =
-    ControlPlane(spark, batch) { (spark, batch) =>
-    dispatchSigCdc(spark, batch, idCol, textCol, opCol, seqCol,
-      "applySigCdcBatch",
-      del = ids => deleteSignatures(spark, ids, storeDir),
-      reclaim = ids => reclaimSignatureTombstones(spark, ids, storeDir),
-      append = rows => appendSignatures(spark, rows, "doc_id", "text",
-        storeDir, numHashes, shingleN, portable))
-    }
-
-  /** [[applySigCdcBatch]] for a BUCKETED store
-    * ([[buildSignatureStoreBucketed]]) — the same terminal-op
-    * resolution and lane semantics over the write-time-bucketed
-    * layout, closing the CDC-parity gap the r14 upsert work left: the
-    * SCALE layout could until now only be maintained by out-of-band
-    * delete/upsert calls, not from the envelope stream. D→
-    * [[deleteSignaturesBucketed]], U→[[upsertSignaturesBucketed]]
-    * (revives by design), I→[[appendSignaturesBucketed]] (takedown
-    * wins). Replaying the whole batch converges: signatures are pure
-    * functions of the text. `buckets`/`numHashes`/`bands`/`shingleN`
-    * must match the store build. Returns (inserted, updated, deleted)
-    * ids dispatched per lane. */
   def applySigCdcBatchBucketed(spark: SparkSession, batch: DataFrame,
       table: String, buckets: Int, idCol: String = "doc_id",
       textCol: String = "text", opCol: String = "op",
       seqCol: String = "seq", numHashes: Int = 64, bands: Int = 8,
       shingleN: Int = 5): (Long, Long, Long) =
-    ControlPlane(spark, batch) { (spark, batch) =>
-    dispatchSigCdc(spark, batch, idCol, textCol, opCol, seqCol,
-      "applySigCdcBatchBucketed",
-      del = ids => deleteSignaturesBucketed(spark, ids, table),
-      reclaim = ids => reclaimSignatureTombstonesBucketed(spark, ids,
-        table, numHashes, bands),
-      append = rows => appendSignaturesBucketed(spark, rows, "doc_id",
-        "text", table, buckets, numHashes, bands, shingleN))
-    }
+    SigStore(MinHash(numHashes, bands, shingleN), Bucketed(table, buckets))
+      .applyCdc(spark, batch, idCol, textCol, opCol, seqCol)
+
+  def auditSignatureStoreBucketed(spark: SparkSession,
+      expected: DataFrame, idCol: String, textCol: String,
+      table: String, numHashes: Int = 64, bands: Int = 8,
+      shingleN: Int = 5): DataFrame =
+    SigStore(MinHash(numHashes, bands, shingleN), Bucketed(table, 0))
+      .audit(spark, expected, idCol, textCol)
 
   /** The shared CDC dispatch core: resolve ONE terminal op per id
     * (latest seq wins; same-seq ties D > U > I — conservative
@@ -932,16 +895,12 @@ object Dedup {
     * The op-log resolution is unchanged: D ids end at D, U ids at
     * R (their D and R now land one seq apart instead of two).
     * `gateIU` runs BEFORE any mutation when the batch carries I or U
-    * rows — the wide store's draw-family check used to run inside
-    * the upsert, i.e. after the D lane but before any U-id
-    * tombstoning; hoisting it keeps "refuse before mutating the ids
-    * the refusal protects" while the fused delete covers both lanes. */
+    * rows: the refusal comes before the fused delete tombstones the
+    * U ids it protects. */
   private def dispatchSigCdc(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, opCol: String, seqCol: String,
-      caller: String, del: DataFrame => Unit, reclaim: DataFrame => Unit,
-      append: DataFrame => Unit,
-      gateIU: () => Unit = () => ()): (Long, Long, Long) = {
-    import org.apache.spark.storage.StorageLevel
+      store: SigStore, del: DataFrame => Unit, reclaim: DataFrame => Unit,
+      append: DataFrame => Unit, gateIU: () => Unit): (Long, Long, Long) = {
     val rank = when(col("op") === "D", 2)
       .when(col("op") === "U", 1)
       .when(col("op") === "I", 0)
@@ -984,11 +943,13 @@ object Dedup {
         slice(sort_array(collect_set(
           when(isBodiless, col("doc_id").cast("string")))), 1, 20)
       ).head()
-      require(g.getLong(3) == 0L, s"$caller: ops must be I, U or " +
-        s"D — got ${g.getSeq[String](4).mkString(", ")}")
-      require(g.getLong(5) == 0L, s"$caller: I/U events must carry " +
-        "text (only D may be id-only) — null for ids " +
-        g.getSeq[String](6).mkString(", "))
+      if (g.getLong(3) != 0L)
+        throw new SigStoreRefused(store, SigRefusal.BadOp, s"$store.applyCdc: " +
+          s"ops must be I, U or D — got ${g.getSeq[String](4).mkString(", ")}")
+      if (g.getLong(5) != 0L)
+        throw new SigStoreRefused(store, SigRefusal.BodilessIU,
+          s"$store.applyCdc: I/U events must carry text (only D may be " +
+            s"id-only) — null for ids ${g.getSeq[String](6).mkString(", ")}")
       val (nI, nU, nD) = (g.getLong(0), g.getLong(1), g.getLong(2))
       if (nI + nU > 0) gateIU()
       if (nD + nU > 0)
@@ -1000,138 +961,6 @@ object Dedup {
           .select("doc_id", "text"))
       (nI, nU, nD)
     } finally last.unpersist(blocking = false)
-  }
-
-  /** AUDIT a bucketed signature store's EFFECTIVE state against the
-    * corpus it should equal — the net-history check the upsert
-    * lifecycle is accountable to (the q141 gate): signatures are pure
-    * functions of the text, so "the mutated store ≡ a from-scratch
-    * store over the net corpus" holds exactly when, per expected doc,
-    * the live stored signature equals the net text's signature AND
-    * the live band rows equal that signature's banded index — and no
-    * live id exists outside the expectation. Returns one (id, sig_ok,
-    * bands_ok) row per expected doc, PLUS a (false, false) row for
-    * any unexpected live id: a takedown that resurrects, a lost or
-    * doubled replacement, stale band rows from a torn reclaim, or
-    * old content kept under a mutated id each flip some row. Cost:
-    * one batch-side signature pass over `expected` + both store
-    * scans in their bucket layout. */
-  def auditSignatureStoreBucketed(spark: SparkSession,
-      expected: DataFrame, idCol: String, textCol: String,
-      table: String, numHashes: Int = 64, bands: Int = 8,
-      shingleN: Int = 5): DataFrame = {
-    val rows = bandRows(numHashes, bands)
-    val net = minhashSignatures(expected, idCol, textCol, numHashes,
-      shingleN, portable = false)
-    val netBands = bandedIndex(net, bands, rows, portable = false)
-    val liveSig = minusDeletedBucketed(spark,
-      spark.table(s"${table}_sigs"), table)
-    val liveBands = minusDeletedBucketed(spark,
-      spark.table(s"${table}_bands"), table)
-    val sigCmp = net.select(col("id"), col("sig").as("net_sig"))
-      .join(liveSig.select(col("id"), col("sig").as("st_sig")),
-        Seq("id"), "full")
-      .select(col("id"),
-        coalesce(col("net_sig") === col("st_sig"), lit(false))
-          .as("sig_ok"))
-    val bandCmp = netBands.select("id", "band", "bucket")
-      .withColumn("_e", lit(1))
-      .join(liveBands.select("id", "band", "bucket")
-        .withColumn("_s", lit(1)), Seq("id", "band", "bucket"), "full")
-      .groupBy("id")
-      .agg(min(col("_e").isNotNull && col("_s").isNotNull)
-        .as("bands_ok"))
-    sigCmp.join(bandCmp, Seq("id"), "full")
-      .select(col("id"), coalesce(col("sig_ok"), lit(false)).as("sig_ok"),
-        coalesce(col("bands_ok"), lit(false)).as("bands_ok"))
-  }
-
-  /** Fold a day's admitted batch into a bucketed store: one anti join on
-    * the narrow id column finds the genuinely new docs (re-delivery
-    * safe), then both tables append in their bucket layout — daily
-    * maintenance never rebuilds. Each append adds ≤1 file per touched
-    * bucket; compact on the usual small-file cadence. */
-  def appendSignaturesBucketed(spark: SparkSession, admitted: DataFrame,
-      idCol: String, textCol: String, table: String, buckets: Int,
-      numHashes: Int = 64, bands: Int = 8, shingleN: Int = 5): Unit = {
-    Bucketing.requireStrictFileReads(spark, "appendSignaturesBucketed")
-    val rows = bandRows(numHashes, bands)
-    // physical-id anti (re-delivery) + tombstone anti (takedown wins).
-    // The anti reads the GUARDED bucket-pruned file set (r16) — the
-    // same measured crossover as deleteSignaturesBucketed's existence
-    // check: the batch's ids name their own buckets, so on a big
-    // store the anti's store side shrinks from the corpus to
-    // O(batch × store/buckets) while the selectivity guard keeps the
-    // catalog scan for the non-selective case.
-    val fresh = minusDeletedBucketed(spark,
-        minhashSignatures(admitted, idCol, textCol, numHashes,
-          shingleN, portable = false)
-          .join(Bucketing.prunedScan(spark, s"${table}_sigs",
-              admitted.select(col(idCol).as("id"))).select(col("id")),
-            Seq("id"), "left_anti"),
-        table)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // bands BEFORE sigs, load-bearing both ways: (a) a cache-lost
-      // recompute of `fresh` after a sigs write must not see its own
-      // append — the pruned anti pins the listing-time file set, and
-      // the guard's catalog fallback resolves the pre-append relation,
-      // but only this order makes the property independent of which
-      // path the guard took (a bands write after the sigs append
-      // would otherwise recompute the anti against the already-
-      // appended sigs and append nothing — a silent candidate loss);
-      // (b) a crash between the writes leaves duplicate
-      // band rows on re-delivery, which the admission query's distinct
-      // absorbs, whereas the reverse order would leave PERMANENTLY
-      // missing band rows (sigs present ⇒ anti join drops the docs).
-      Seq("bands", "sigs").foreach(t =>
-        ControlPlane.dropDeadJobOutputOf(spark, s"${table}_$t"))
-      bandedIndex(fresh, bands, rows, portable = false)
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "band", "bucket").sortBy("band", "bucket")
-        .saveAsTable(s"${table}_bands")
-      fresh.write.mode("append").format("parquet")
-        .bucketBy(buckets, "id").sortBy("id").saveAsTable(s"${table}_sigs")
-      // make the appends visible to the CALLER's session explicitly
-      // (r16): the inserts execute through `fresh`'s OWN session — in
-      // a foreachBatch that is the stream's cloned session — and
-      // their post-write refresh lands there, not here. The old
-      // catalog-relation anti happened to keep this session's cached
-      // listing fresh as a side effect of its own resolution; with
-      // the bucket-pruned anti (direct file reads) nothing touches
-      // this session's relation cache, and a same-session reader
-      // right after the call (the audit, the spec's assertions) would
-      // read the pre-append listing — found by the streamed bucketed
-      // CDC spec the moment the anti was routed. Same lesson
-      // reclaimFromTable already encodes for the delete side.
-      spark.catalog.refreshTable(s"${table}_bands")
-      spark.catalog.refreshTable(s"${table}_sigs")
-    } finally fresh.unpersist()
-  }
-
-  /** Compact both of a bucketed signature store's standing tables back
-    * to one file per bucket ([[Bucketing.compactTable]]) — the
-    * small-file maintenance each [[appendSignaturesBucketed]] cadence
-    * eventually owes — AND physically reclaim any
-    * [[deleteSignaturesBucketed]] tombstones, dropping the tombstone
-    * table last (a crash between the rewrites and the drop leaves the
-    * tombstones standing over already-reclaimed rows — reads stay
-    * correct, a re-run completes the reclaim). Run from the
-    * maintenance writer, not concurrently with an admission append. */
-  def compactSignatureStore(spark: SparkSession, table: String): Unit =
-      ControlPlane(spark) { spark =>
-    val dead = readDeletedBucketed(spark, table).map((_, "id"))
-    Bucketing.compactTable(spark, s"${table}_bands", dead)
-    Bucketing.compactTable(spark, s"${table}_sigs", dead)
-    if (dead.isDefined) {
-      // legacy D-only table first, THEN the op log: the reverse order
-      // would open a window where a legacy D resurfaces over an id
-      // the log had revived (whose replacement rows are live) — this
-      // order's window only leaves log D's standing over rows the
-      // rewrites just removed, which reads correctly and re-runs clean
-      spark.sql(s"DROP TABLE IF EXISTS ${deletedTable(table)}")
-      TombstoneLog.clear(spark, bucketedDlogPath(spark, table), "id")
-    }
   }
 
   /**
@@ -1352,368 +1181,6 @@ object Dedup {
       .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
   }
 
-  /**
-   * Materialized WIDE-SimHash signature store — the
-   * [[buildSignatureStore]] discipline for the w = 128 path, making
-   * the measured 21-24× candidate-volume lever REACHABLE from the
-   * incremental/streaming admission seam instead of batch-only:
-   * [[buildWideSimhashStore]] pays the token + two-draw signature
-   * scan once into a narrow `(id, sig0, sig1)` table (16 bytes of
-   * signature per doc — history text is never re-read);
-   * [[simhashWideIncremental]] checks a day's batch against all of
-   * history through the pigeonhole chunk index;
-   * [[appendWideSimhashSignatures]] folds the admitted batch in with
-   * the same re-delivery-safe anti join. `maxHamming`/`portable` must
-   * match between build, admission, and append (the chunk layout and
-   * the draws are derived from them).
-   */
-  def buildWideSimhashStore(df: DataFrame, idCol: String, textCol: String,
-      storeDir: String, portable: Boolean = false): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    simhashSignatures128(df, idCol, textCol, portable)
-      .write.mode("overwrite").parquet(storeDir)
-    // persist WHICH draws built this store (underscore dir — parquet
-    // readers of the signature table skip it): portable (two
-    // md5-derived 60-bit draws) and production (xxhash64) signatures
-    // are bit-incompatible, and an admission call with the wrong flag
-    // would compute garbage hamming distances SILENTLY — the r12
-    // review finding on this seam (the scaladoc contract alone did
-    // not enforce it)
-    Seq((portable, if (portable) 60 else 64)).toDF("portable", "lo_bits")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(storeDir + "/_wide_meta")
-  }
-
-  /** Loud draw-compatibility gate for the wide store: `portable` must
-    * match the build's. Pre-meta stores (none in this repo) fall
-    * through to the documented contract. */
-  private def requireWideDraws(spark: SparkSession, storeDir: String,
-      portable: Boolean, who: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(storeDir + "/_wide_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      // a crash between the overwrite's delete and its commit can leave
-      // _wide_meta existing but empty/torn — that must read as "meta is
-      // torn, rebuild", not a NoSuchElementException/parquet error on
-      // every subsequent call
-      val built = (try {
-        spark.read.parquet(p.toString).collect().headOption
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException => None
-      }).getOrElse(throw new IllegalStateException(
-        s"$who: store $storeDir has a torn/empty _wide_meta (a crashed " +
-          "meta write) — the draw family can no longer be verified; " +
-          "rebuild the store")).getAs[Boolean]("portable")
-      require(built == portable,
-        s"$who: store $storeDir was built with portable=$built but this " +
-          s"call passes portable=$portable — the two draw families are " +
-          "bit-incompatible, so every hamming distance would be silently " +
-          "meaningless; pass the build's flag or rebuild the store")
-    }
-  }
-
-  def appendWideSimhashSignatures(spark: SparkSession, admitted: DataFrame,
-      idCol: String, textCol: String, storeDir: String,
-      portable: Boolean = false): Unit = {
-    requireWideDraws(spark, storeDir, portable, "appendWideSimhashSignatures")
-    ControlPlane.dropDeadJobOutput(spark, storeDir)
-    // physical-id anti (re-delivery) + tombstone anti (takedown wins)
-    // — see appendSignatures
-    minusDeletedSigs(spark,
-      simhashSignatures128(admitted, idCol, textCol, portable)
-        .join(spark.read.parquet(storeDir).select(col("id")),
-          Seq("id"), "left_anti"),
-      storeDir)
-      .write.mode("append").parquet(storeDir)
-  }
-
-  /** Near-dup pairs (hamming ≤ maxHamming on the w = 128/120
-    * signature) of a new batch against the standing
-    * [[buildWideSimhashStore]] AND within the batch — the
-    * [[minhashLshIncremental]] admission orientation (`id_a` = store
-    * doc or lower batch id, `id_b` = the genuinely-new batch doc), so
-    * [[graft.streaming.NearDupStream]]'s drop-id_b policy and
-    * re-delivery idempotency ([[restrictToNew]]: a re-delivered doc
-    * participates only through its store copy, a fully re-delivered
-    * batch emits NOTHING) carry over unchanged. Candidates share one
-    * of the `maxHamming + 1` spliced chunk keys — pigeonhole-complete
-    * against history exactly as within one batch, with the wide keys'
-    * n²/buckets advantage now applying to the store-vs-batch arm,
-    * where n is ALL of history. */
-  def simhashWideIncremental(spark: SparkSession, batch: DataFrame,
-      idCol: String, textCol: String, storeDir: String,
-      maxHamming: Int = 6, portable: Boolean = false): DataFrame = {
-    require(maxHamming >= 1,
-      s"simhashWideIncremental needs maxHamming >= 1 (got $maxHamming); " +
-        "radius 0 is exact-signature equality — use Dedup.exact")
-    requireWideDraws(spark, storeDir, portable, "simhashWideIncremental")
-    // LIVE rows only — see minhashLshIncremental
-    simhashWideIncrementalCore(batch, idCol, textCol,
-      liveSigs(spark, storeDir), maxHamming, portable)
-  }
-
-  /** The wide-incremental admission core over an explicit live store
-    * frame — shared by the dir ([[simhashWideIncremental]]) and
-    * bucketed ([[simhashWideIncrementalBucketed]]) layouts; the pair
-    * semantics are the layout-independent part. */
-  private def simhashWideIncrementalCore(batch: DataFrame,
-      idCol: String, textCol: String, ssig: DataFrame,
-      maxHamming: Int, portable: Boolean): DataFrame = {
-    val loBits = if (portable) 60 else 64
-    val bsig = Caches.releaseAfterUse(restrictToNew(
-      simhashSignatures128(batch, idCol, textCol, portable), ssig))
-    val chunkExprs = simhashChunkBounds(2 * loBits, maxHamming).map {
-      case (start, width) => wideChunkKey(start, width, loBits) }
-    def index(sig: DataFrame): DataFrame =
-      sig.select(col("id"),
-        posexplode(array(chunkExprs: _*)).as(Seq("chunk", "key")))
-    val bIdx = index(bsig)
-    val sIdx = index(ssig)
-    def verify(cand: DataFrame, sa: DataFrame, sb: DataFrame): DataFrame =
-      cand
-        .join(sa.select(col("id").as("id_a"), col("sig0").as("sig0_a"),
-          col("sig1").as("sig1_a")), "id_a")
-        .join(sb.select(col("id").as("id_b"), col("sig0").as("sig0_b"),
-          col("sig1").as("sig1_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          (bit_count(col("sig0_a").bitwiseXOR(col("sig0_b"))) +
-            bit_count(col("sig1_a").bitwiseXOR(col("sig1_b"))))
-            .cast("int").as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-    // store-vs-batch: history precedes, so the store id is id_a
-    val candSB = sIdx.select(col("chunk"), col("key"), col("id").as("id_a"))
-      .join(bIdx.select(col("chunk"), col("key"), col("id").as("id_b")),
-        Seq("chunk", "key"))
-      .select("id_a", "id_b").distinct()
-    // batch-vs-batch among new docs: canonical ordering
-    val candBB = bIdx.select(col("chunk"), col("key"), col("id").as("id_a"))
-      .join(bIdx.select(col("chunk"), col("key"), col("id").as("id_b")),
-        Seq("chunk", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    // the arms are disjoint (id_a is a store doc in one, a new doc in
-    // the other) and candidates are distinct per arm, so no final
-    // min-hamming grouping is needed
-    verify(candSB, ssig, bsig).unionByName(verify(candBB, bsig, bsig))
-  }
-
-  // ---- bucketed wide-SimHash store (r16) ------------------------------
-  //
-  // The w = 128 family's SCALE layout — the r15 verdict's open
-  // decision, resolved as CODE rather than a deferral because the
-  // wide store is precisely the store that exists FOR huge corpora
-  // (the 21-24× candidate-volume lever matters exactly when history
-  // is large), and its dir layout's only corpus-proportional mutation
-  // term — the reclaim's full-scan location of an id's rows — is the
-  // term the bucketed layout removes (id IS the bucket key, so
-  // Bucketing.prunedScan locates a CDC batch's files in O(batch)
-  // reads, and Bucketing.reclaimFromTable rewrites only those). The
-  // q141/q142 conventions transfer directly: the same D/R op log
-  // (deleteSignaturesBucketed works unchanged — it reads only
-  // `<table>_sigs` + the log), the same file-targeted reclaim, the
-  // same terminal-op CDC dispatch, and a net-state audit as the
-  // oracle surface. One structural simplification vs MinHash: there
-  // is NO bands table — the chunk keys are pure bit-slices of the
-  // stored signature, computed at query time — so the reclaim has no
-  // second table, no band-key recompute, and no coverage check.
-
-  private def wideMetaTable(table: String): String = s"${table}_meta"
-
-  /** [[requireWideDraws]] for the bucketed layout: the draw family
-    * lives in a one-row catalog table (`<table>_meta`) instead of the
-    * dir store's `_wide_meta` file. A missing table falls through to
-    * the documented contract (pre-meta grace, matching the dir
-    * store); an EMPTY one is a torn rebuild — refuse, rebuild. */
-  private def requireWideDrawsBucketed(spark: SparkSession,
-      table: String, portable: Boolean, who: String): Unit =
-    if (spark.catalog.tableExists(wideMetaTable(table))) {
-      val built = spark.table(wideMetaTable(table)).collect().headOption
-        .getOrElse(throw new IllegalStateException(
-          s"$who: store $table has an empty ${wideMetaTable(table)} " +
-            "(a torn rebuild) — the draw family can no longer be " +
-            "verified; rebuild the store"))
-        .getAs[Boolean]("portable")
-      require(built == portable,
-        s"$who: store $table was built with portable=$built but this " +
-          s"call passes portable=$portable — the two draw families " +
-          "are bit-incompatible, so every hamming distance would be " +
-          "silently meaningless; pass the build's flag or rebuild")
-    }
-
-  /** [[buildWideSimhashStore]] on the write-time-bucketed catalog
-    * layout: `(id, sig0, sig1)` lands bucketed+sorted by id into
-    * `<table>_sigs` (16 signature bytes per doc — mutation scans and
-    * admission antis read a narrow bucketed table, never the text),
-    * and the draw family pins itself in `<table>_meta`. A rebuild
-    * starts a fresh lifecycle (op log + legacy tombstones cleared,
-    * same contract as [[buildSignatureStoreBucketed]]). */
-  def buildWideSimhashStoreBucketed(df: DataFrame, idCol: String,
-      textCol: String, table: String, buckets: Int,
-      portable: Boolean = false): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    TombstoneLog.clear(spark, bucketedDlogPath(spark, table), "id")
-    spark.sql(s"DROP TABLE IF EXISTS ${deletedTable(table)}")
-    Bucketing.writeBucketed(
-      simhashSignatures128(df, idCol, textCol, portable),
-      s"${table}_sigs", "id", buckets)
-    // meta LAST: a build that dies before this point leaves either no
-    // store or a sigs table with no meta — and a missing meta reads
-    // as the documented-contract grace, never as the WRONG family
-    Seq((portable, if (portable) 60 else 64)).toDF("portable", "lo_bits")
-      .coalesce(1).write.mode("overwrite")
-      .saveAsTable(wideMetaTable(table))
-  }
-
-  /** Targeted physical reclaim for the bucketed WIDE store — the
-    * [[reclaimSignatureTombstonesBucketed]] protocol minus the bands
-    * side (no second table, no band-key recompute, no coverage
-    * check): the tombstoned ids' rows leave `<table>_sigs` through
-    * [[Bucketing.reclaimFromTable]] (id is the bucket key, so
-    * location prunes directly), then R records re-open the ids.
-    * Returns ids reclaimed. */
-  def reclaimWideSimhashTombstonesBucketed(spark: SparkSession,
-      ids: DataFrame, table: String): Long =
-      ControlPlane(spark, ids) { (spark, ids) =>
-    Bucketing.requireStrictFileReads(spark,
-      "reclaimWideSimhashTombstonesBucketed")
-    val dlog = bucketedDlogPath(spark, table)
-    TombstoneLog.maybeFold(spark, dlog, "id")
-    val seq0 = TombstoneLog.nextSeq(spark, dlog, "id")
-    val dead = readDeletedBucketed(spark, table).getOrElse(return 0L)
-    val target = ids.select(col(ids.columns.head).as("id")).distinct()
-      .join(dead, Seq("id"), "left_semi")
-      .localCheckpoint(true) // the rewrite mutates the table the plan reads
-    val n = target.count()
-    if (n == 0L) return 0L
-    Bucketing.reclaimFromTable(spark, s"${table}_sigs", target, "id")
-    TombstoneLog.append(spark, target, dlog, "id", "R", seq0)
-    n
-  }
-
-  /** [[appendWideSimhashSignatures]] for the bucketed layout: one
-    * narrow anti join on the catalog table (re-delivery safe) + the
-    * tombstone anti (takedown wins), then the admitted signatures
-    * append in the write-time bucket layout — ≤1 new file per touched
-    * bucket, compaction owed on the usual cadence
-    * ([[compactWideSimhashStoreBucketed]]). */
-  def appendWideSimhashSignaturesBucketed(spark: SparkSession,
-      admitted: DataFrame, idCol: String, textCol: String,
-      table: String, buckets: Int, portable: Boolean = false): Unit = {
-    requireWideDrawsBucketed(spark, table, portable,
-      "appendWideSimhashSignaturesBucketed")
-    Bucketing.requireStrictFileReads(spark,
-      "appendWideSimhashSignaturesBucketed")
-    ControlPlane.dropDeadJobOutputOf(spark, s"${table}_sigs")
-    // guarded bucket-pruned anti — the r16 location crossover, same
-    // as appendSignaturesBucketed
-    minusDeletedBucketed(spark,
-        simhashSignatures128(admitted, idCol, textCol, portable)
-          .join(Bucketing.prunedScan(spark, s"${table}_sigs",
-              admitted.select(col(idCol).as("id"))).select(col("id")),
-            Seq("id"), "left_anti"),
-        table)
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "id").sortBy("id")
-      .saveAsTable(s"${table}_sigs")
-    // explicit caller-session visibility — see appendSignaturesBucketed
-    spark.catalog.refreshTable(s"${table}_sigs")
-  }
-
-  /** REPLACE a batch in the bucketed wide store — tombstone, reclaim
-    * exactly those ids' files, re-admit the new content (revives a
-    * taken-down id by design; see [[upsertSignaturesBucketed]]). */
-  def upsertWideSimhashSignaturesBucketed(spark: SparkSession,
-      batch: DataFrame, idCol: String, textCol: String, table: String,
-      buckets: Int, portable: Boolean = false): Unit =
-      ControlPlane(spark, batch) { (spark, batch) =>
-    requireWideDrawsBucketed(spark, table, portable,
-      "upsertWideSimhashSignaturesBucketed")
-    val ids = batch.select(col(idCol).as("id"))
-    deleteSignaturesBucketed(spark, ids, table)
-    reclaimWideSimhashTombstonesBucketed(spark, ids, table)
-    appendWideSimhashSignaturesBucketed(spark, batch, idCol, textCol,
-      table, buckets, portable)
-  }
-
-  /** [[applySigCdcBatchBucketed]] for the bucketed WIDE store: the
-    * same terminal-op dispatch core (one-action gates, raw-batch op
-    * gate) over the wide lanes. Returns (inserted, updated, deleted)
-    * ids dispatched per lane. */
-  def applyWideSimhashCdcBatchBucketed(spark: SparkSession,
-      batch: DataFrame, table: String, buckets: Int,
-      idCol: String = "doc_id", textCol: String = "text",
-      opCol: String = "op", seqCol: String = "seq",
-      portable: Boolean = false): (Long, Long, Long) =
-    ControlPlane(spark, batch) { (spark, batch) =>
-    dispatchSigCdc(spark, batch, idCol, textCol, opCol, seqCol,
-      "applyWideSimhashCdcBatchBucketed",
-      del = ids => deleteSignaturesBucketed(spark, ids, table),
-      reclaim = ids =>
-        reclaimWideSimhashTombstonesBucketed(spark, ids, table),
-      append = rows => appendWideSimhashSignaturesBucketed(spark, rows,
-        "doc_id", "text", table, buckets, portable),
-      // the upsert's draw-family refusal, hoisted ahead of the fused
-      // delete (see dispatchSigCdc: refuse before tombstoning the U
-      // ids the refusal protects). D-only batches stay ungated — a
-      // takedown's validity does not depend on the hash config.
-      gateIU = () => requireWideDrawsBucketed(spark, table, portable,
-        "applyWideSimhashCdcBatchBucketed"))
-    }
-
-  /** [[simhashWideIncremental]] against the bucketed store: identical
-    * pair semantics; the store side reads its write-time bucket
-    * layout and the tombstone anti broadcasts (batch-sized). */
-  def simhashWideIncrementalBucketed(spark: SparkSession,
-      batch: DataFrame, idCol: String, textCol: String, table: String,
-      maxHamming: Int = 6, portable: Boolean = false): DataFrame = {
-    require(maxHamming >= 1,
-      s"simhashWideIncrementalBucketed needs maxHamming >= 1 (got " +
-        s"$maxHamming); radius 0 is exact-signature equality — use " +
-        "Dedup.exact")
-    requireWideDrawsBucketed(spark, table, portable,
-      "simhashWideIncrementalBucketed")
-    simhashWideIncrementalCore(batch, idCol, textCol,
-      minusDeletedBucketed(spark, spark.table(s"${table}_sigs"), table),
-      maxHamming, portable)
-  }
-
-  /** AUDIT the bucketed wide store's effective state against the
-    * corpus it should equal — the q141 convention minus the bands leg
-    * (signatures are pure functions of the text; there is no second
-    * table): one (id, sig_ok) row per expected doc, sig_ok ⇔ the live
-    * stored (sig0, sig1) equals the net text's, PLUS a false row for
-    * any unexpected live id. */
-  def auditWideSimhashStoreBucketed(spark: SparkSession,
-      expected: DataFrame, idCol: String, textCol: String,
-      table: String, portable: Boolean = false): DataFrame = {
-    val net = simhashSignatures128(expected, idCol, textCol, portable)
-    val live = minusDeletedBucketed(spark,
-      spark.table(s"${table}_sigs"), table)
-    net.select(col("id"), col("sig0").as("n0"), col("sig1").as("n1"))
-      .join(live.select(col("id"), col("sig0").as("s0"),
-        col("sig1").as("s1")), Seq("id"), "full")
-      .select(col("id"),
-        coalesce(col("n0") === col("s0") && col("n1") === col("s1"),
-          lit(false)).as("sig_ok"))
-  }
-
-  /** Small-file + tombstone maintenance for the bucketed wide store:
-    * compact `<table>_sigs` to one file per bucket, physically
-    * reclaim standing tombstones, clear the record — the
-    * [[compactSignatureStore]] contract minus the bands table.
-    * `<table>_meta` is untouched: the draw family is a property of
-    * the hash config, not of which rows live. */
-  def compactWideSimhashStoreBucketed(spark: SparkSession,
-      table: String): Unit = ControlPlane(spark) { spark =>
-    val dead = readDeletedBucketed(spark, table).map((_, "id"))
-    Bucketing.compactTable(spark, s"${table}_sigs", dead)
-    if (dead.isDefined) {
-      spark.sql(s"DROP TABLE IF EXISTS ${deletedTable(table)}")
-      TombstoneLog.clear(spark, bucketedDlogPath(spark, table), "id")
-    }
-  }
 
   /** Pre-verify candidate volume of the two banding widths on the
     * same corpus — the measurement behind the w = 128 scale claim

@@ -95,6 +95,7 @@ object DeletionVectors {
         "(mergeWholeManifest folds tombstones; partition-scoped merges " +
         "cannot). Send deletes as op='D' change rows through " +
         "mergePartitioned instead")
+    ControlPlane.dropDeadJobOutput(spark, tombDir(dir).toString)
     keys.select(col(keyCol)).distinct()
       .withColumn("__asof", lit(liveVersion(spark, dir)))
       .write.mode("append").parquet(tombDir(dir).toString)

@@ -62,6 +62,7 @@ object FingerprintIndex {
     stagedDelta(fingerprints(admitted, idCol, textCol, ngram)
       .select("fp").distinct()
       .join(spark.read.parquet(indexDir), Seq("fp"), "left_anti")) { d =>
+      ControlPlane.dropDeadJobOutput(spark, indexDir)
       d.write.mode("append").parquet(indexDir)
     }
 
@@ -121,6 +122,7 @@ object FingerprintIndex {
     stagedDelta(fingerprints(admitted, idCol, textCol, ngram)
       .select("fp").distinct()
       .join(spark.table(indexTable), Seq("fp"), "left_anti")) { d =>
+      ControlPlane.dropDeadJobOutputOf(spark, indexTable)
       d.write.mode("append").format("parquet")
         .bucketBy(buckets, "fp").sortBy("fp")
         .saveAsTable(indexTable)

@@ -125,6 +125,7 @@ object ZoneMap {
           else null
         })
       }
+      ControlPlane.dropDeadJobOutput(spark, statsDir)
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
         .write.mode("append").parquet(statsDir)
     }
@@ -160,6 +161,7 @@ object ZoneMap {
     val missing = dataFiles(spark, dataDir).filterNot(
       normalizedKnown(spark, statsDir))
     if (missing.nonEmpty) {
+      ControlPlane.dropDeadJobOutput(spark, statsDir)
       statsFor(spark.read.option("basePath", dataDir)
         .parquet(missing: _*), cols)
         .repartition(1)

@@ -47,6 +47,7 @@ object DriftMonitorStream {
         if (!batch.isEmpty) {
           RollupStream.foldBatch(spark, batch, batchId, storeDir, spec,
             token)
+          graft.operators.ControlPlane.dropDeadJobOutput(spark, alertDir)
           Drift.psiFromStates(
               Rollup.read(spark, storeDir), Rollup.read(spark, baselineDir),
               keys, h)

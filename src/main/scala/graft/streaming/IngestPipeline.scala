@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.model.DmsEnvelope
-import graft.operators.{Constraints, ControlPlane, Merge, Rollup, StreamSplitter}
+import graft.operators.{Constraints, ControlPlane, Dedup, Merge, Rollup, StreamSplitter}
 
 /**
  * The reference's END-TO-END story as ONE continuous pipeline
@@ -37,7 +37,7 @@ import graft.operators.{Constraints, ControlPlane, Merge, Rollup, StreamSplitter
  *  5. optional STORE-MAINTENANCE lanes (r14): the same clean envelopes
  *     keep a searchable ANN store and a dedup signature history
  *     current — I/U/D dispatch through `applyCdcBatch` /
- *     `applySigCdcBatch`, takedowns and replacements included — so
+ *     `SigStore.applyCdc`, takedowns and replacements included — so
  *     the reference's S2→S6 chain maintains the training-data stores
  *     in the SAME single pass per micro-batch.
  *
@@ -88,29 +88,15 @@ object IngestPipeline {
       table: String = "embeddings", idField: String = "vec_id",
       vecField: String = "embedding", compactEvery: Int = 0)
 
-  /** A dedup HISTORY (directory signature store) maintained the same
-    * way: this table's I/U/D events dispatch through
-    * [[graft.operators.Dedup.applySigCdcBatch]] — inserts admit,
-    * updates replace the content whose signature is the store row
-    * (the mutable-id remedy), deletes tombstone. The hash config must
-    * match the store build. */
-  final case class SignatureStoreLane(storeDir: String,
+  /** A dedup HISTORY maintained the same way: this table's I/U/D
+    * events dispatch through [[graft.operators.Dedup.SigStore.applyCdc]]
+    * against `store`, of either layout — inserts admit, updates
+    * replace the content whose signature is the store row (the
+    * mutable-id remedy), deletes tombstone. The store's kind must
+    * match its build. */
+  final case class SignatureStoreLane(store: Dedup.SigStore,
       table: String = "documents", idField: String = "doc_id",
-      textField: String = "text", numHashes: Int = 64,
-      shingleN: Int = 5, portable: Boolean = false,
-      compactEvery: Int = 0)
-
-  /** [[SignatureStoreLane]] against a BUCKETED store
-    * ([[graft.operators.Dedup.buildSignatureStoreBucketed]]) — the
-    * scale layout maintained from the same stream: this table's I/U/D
-    * events dispatch through
-    * [[graft.operators.Dedup.applySigCdcBatchBucketed]].
-    * `storeTable`/`buckets`/hash config must match the store build. */
-  final case class BucketedSignatureStoreLane(storeTable: String,
-      buckets: Int, table: String = "documents",
-      idField: String = "doc_id", textField: String = "text",
-      numHashes: Int = 64, bands: Int = 8, shingleN: Int = 5,
-      compactEvery: Int = 0)
+      textField: String = "text", compactEvery: Int = 0)
 
   final case class Config(
       landingDir: String,
@@ -138,8 +124,7 @@ object IngestPipeline {
         * because the bridges' raise_error guard would otherwise fail
         * the batch on every retry and wedge the stream. */
       vectorStores: Seq[VectorStoreLane] = Nil,
-      signatureStores: Seq[SignatureStoreLane] = Nil,
-      bucketedSignatureStores: Seq[BucketedSignatureStoreLane] = Nil)
+      signatureStores: Seq[SignatureStoreLane] = Nil)
 
   /** Per-batch instrumentation; the stage millis decompose `millis`
     * into the sinks (landing+quarantine writes, the one-job per-table
@@ -219,11 +204,7 @@ object IngestPipeline {
               v.vecField))) ++
           cfg.signatureStores.map(sg => (s"payload_parse:${sg.table}",
             NearDupStream.malformedPayload(sg.table, sg.idField,
-              sg.textField))) ++
-          cfg.bucketedSignatureStores.map(sg =>
-            (s"payload_parse:${sg.table}",
-              NearDupStream.malformedPayload(sg.table, sg.idField,
-                sg.textField)))
+              sg.textField)))
         // the batch fans out to 3+ sinks — persist the parsed+flagged
         // form once; every consumer below is a narrow filter over it
         val envFlagged = Constraints.flagRows(
@@ -243,6 +224,8 @@ object IngestPipeline {
           val bad = flagged.filter(size(col("violated")) > 0)
           // 2. contract-gated landing (Firehose analog + quarantine)
           val tLand0 = System.nanoTime()
+          Seq(cfg.landingDir, cfg.quarantineDir)
+            .foreach(ControlPlane.dropDeadJobOutput(spark, _))
           clean.drop("event_ts")
             .write.mode(org.apache.spark.sql.SaveMode.Append)
             .option("compression", "gzip")
@@ -306,7 +289,7 @@ object IngestPipeline {
           // 5. store-maintenance lanes (r14): the same clean envelopes
           // keep the ANN and dedup stores current — serial, each store
           // family is single-writer; replay-safe by each core's own
-          // protocol (see applyCdcBatch / applySigCdcBatch), so the
+          // protocol (see applyCdcBatch / SigStore.applyCdc), so the
           // idempotentBatch residual window re-applies harmlessly
           val tStore0 = System.nanoTime()
           cfg.vectorStores.foreach { v =>
@@ -319,15 +302,7 @@ object IngestPipeline {
             NearDupStream.ingestCdcBatch(spark,
               NearDupStream.cdcEventsFromEnvelopes(clean, sg.table,
                 sg.idField, sg.textField),
-              batchId, sg.storeDir, sg.numHashes, sg.shingleN,
-              sg.portable, sg.compactEvery)
-          }
-          cfg.bucketedSignatureStores.foreach { sg =>
-            NearDupStream.ingestCdcBatchBucketed(spark,
-              NearDupStream.cdcEventsFromEnvelopes(clean, sg.table,
-                sg.idField, sg.textField),
-              batchId, sg.storeTable, sg.buckets, sg.numHashes,
-              sg.bands, sg.shingleN, sg.compactEvery)
+              batchId, sg.store, sg.compactEvery)
           }
           val tStore = (System.nanoTime() - tStore0) / 1000000
           onBatch(BatchMetric(batchId,

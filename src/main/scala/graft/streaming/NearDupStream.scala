@@ -11,7 +11,7 @@ import graft.operators.Dedup
  * running pipeline — each micro-batch of documents is checked for
  * near-duplicates against ALL of history by banding its MinHash
  * signatures against the materialized signature store
- * ([[graft.operators.Dedup.minhashLshIncremental]]; history text is
+ * ([[graft.operators.Dedup.SigStore.pairs]]; history text is
  * never re-read), and only the surviving documents join the corpus.
  * The streaming form of the reference pipeline's continuous-ingest
  * posture (`/root/reference/README.md:63-75` lands a continuous stream
@@ -37,7 +37,7 @@ import graft.operators.Dedup
  *     (batch ids restarting at 0) from clobbering a previous run's
  *     output;
  *  4. the admitted docs' signatures fold into the store
- *     ([[graft.operators.Dedup.appendSignatures]] — its anti join on
+ *     ([[graft.operators.Dedup.SigStore.append]] — its anti join on
  *     the stored ids makes the append re-delivery-safe too).
  *
  * Crash anywhere between 3 and 4 re-runs the batch: signatures are
@@ -47,21 +47,24 @@ import graft.operators.Dedup
  * is filtered there ([[graft.operators.Dedup]]'s `id_a =!= id_b`
  * guard) — admission never flips across re-deliveries.
  *
- * At 100 TB use [[admitBucketed]]: both standing store tables reuse
- * their write-time bucket layout, so each micro-batch shuffles only
+ * At 100 TB use a [[graft.operators.Dedup.Bucketed]] store: its
+ * standing tables reuse their write-time bucket layout, so each micro-batch shuffles only
  * batch-sized data (the DedupSpec one-exchange plan assertion).
  */
 object NearDupStream {
 
-  /** Continuous admission against a [[graft.operators.Dedup.buildSignatureStore]]
-    * directory store. `docs` is a streaming DataFrame carrying `idCol`
-    * + `textCol` (+ any payload columns, which ride through to
-    * `admittedDir` untouched). */
-  def admit(docs: DataFrame, idCol: String, textCol: String,
-      storeDir: String, admittedDir: String, pairsDir: String,
-      checkpoint: String, numHashes: Int = 64, bands: Int = 8,
-      shingleN: Int = 5, threshold: Double = 0.5,
-      portable: Boolean = false,
+  /** Continuous admission against a signature store built with
+    * [[graft.operators.Dedup.SigStore.build]]. `docs` is a streaming
+    * DataFrame carrying `idCol` + `textCol` (+ any payload columns,
+    * which ride through to `admittedDir` untouched). The store's kind
+    * is the dedup criterion: MinHash for shingle-set overlap
+    * (`est_jaccard ≥ threshold`), wide SimHash for a hamming radius
+    * (format and boilerplate near-dups), whose chunk keys keep the
+    * store-vs-batch candidates at a measured 21-24× lower volume than
+    * w = 64 banding. */
+  def admit(docs: DataFrame, store: Dedup.SigStore, idCol: String,
+      textCol: String, admittedDir: String, pairsDir: String,
+      checkpoint: String, threshold: Double = 0.5,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val spark = docs.sparkSession
     docs.writeStream
@@ -72,70 +75,8 @@ object NearDupStream {
         admitBatch(spark, batch, batchId,
           RollupStream.appToken(spark, checkpoint), idCol, textCol,
           admittedDir, pairsDir,
-          b => Dedup.minhashLshIncremental(spark, b, idCol, textCol,
-            storeDir, numHashes, bands, shingleN, threshold, portable),
-          a => Dedup.appendSignatures(spark, a, idCol, textCol, storeDir,
-            numHashes, shingleN, portable))
-      }
-      .start()
-  }
-
-  /** [[admit]] against a [[graft.operators.Dedup.buildSignatureStoreBucketed]]
-    * store (metastore table pair) — identical admission semantics, the
-    * store side never re-shuffles. */
-  def admitBucketed(docs: DataFrame, idCol: String, textCol: String,
-      table: String, buckets: Int, admittedDir: String, pairsDir: String,
-      checkpoint: String, numHashes: Int = 64, bands: Int = 8,
-      shingleN: Int = 5, threshold: Double = 0.5,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(spark, batch, batchId,
-          RollupStream.appToken(spark, checkpoint), idCol, textCol,
-          admittedDir, pairsDir,
-          b => Dedup.minhashLshIncrementalBucketed(spark, b, idCol,
-            textCol, table, numHashes, bands, shingleN, threshold),
-          a => Dedup.appendSignaturesBucketed(spark, a, idCol, textCol,
-            table, buckets, numHashes, bands, shingleN))
-      }
-      .start()
-  }
-
-  /** [[admit]] with the WIDE (w = 128) SimHash gate instead of MinHash
-    * banding — identical admission protocol (same per-batch overwrite
-    * dirs, same drop-id_b policy, same re-delivery convergence), with
-    * the pairs arm swapped for
-    * [[graft.operators.Dedup.simhashWideIncremental]] against a
-    * [[graft.operators.Dedup.buildWideSimhashStore]] signature store.
-    * Choose it when the dedup criterion is hamming-radius similarity
-    * (format/boilerplate near-dups) rather than Jaccard: the spliced
-    * wide chunk keys keep the store-vs-batch candidate arm at the
-    * measured 21-24× lower volume than w = 64 banding, and the
-    * standing store holds 16 signature bytes per doc vs numHashes
-    * ints. MinHash banding ([[admit]]) remains the default admission
-    * workhorse where the criterion is shingle-set overlap. */
-  def admitWideSimhash(docs: DataFrame, idCol: String, textCol: String,
-      storeDir: String, admittedDir: String, pairsDir: String,
-      checkpoint: String, maxHamming: Int = 6,
-      portable: Boolean = false,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(spark, batch, batchId,
-          RollupStream.appToken(spark, checkpoint), idCol, textCol,
-          admittedDir, pairsDir,
-          b => Dedup.simhashWideIncremental(spark, b, idCol, textCol,
-            storeDir, maxHamming, portable),
-          a => Dedup.appendWideSimhashSignatures(spark, a, idCol, textCol,
-            storeDir, portable))
+          b => store.pairs(spark, b, idCol, textCol, threshold),
+          a => store.append(spark, a, idCol, textCol))
       }
       .start()
   }
@@ -180,7 +121,7 @@ object NearDupStream {
 
   /**
    * Bridge from the reference pipeline's CDC envelope stream to
-   * [[graft.operators.Dedup.applySigCdcBatch]]'s event rows — the
+   * [[graft.operators.Dedup.SigStore.applyCdc]]'s event rows — the
    * dedup-side twin of [[AnnIngestStream.cdcEventsFromEnvelopes]]:
    * keeps this `table`'s DATA records, parses the payload to
    * (doc_id, text), maps `load`/`insert` → I, `update` → U, `delete`
@@ -256,20 +197,18 @@ object NearDupStream {
    * CDC-op-aware signature-store maintenance — the dedup twin of
    * [[AnnIngestStream.ingestCdc]]: `events` carries (doc_id, text,
    * op, seq) rows and each micro-batch applies
-   * [[graft.operators.Dedup.applySigCdcBatch]] against a DIRECTORY
-   * store — inserts admit as history (takedown wins over a late
-   * re-delivered I), updates REPLACE the content whose signature IS
-   * the store row (the mutable-id remedy, revives by design), deletes
-   * tombstone. `compactEvery` bounds both file fragmentation and the
-   * op log's churn growth ([[graft.operators.Dedup
-   * .compactSignatureStoreDir]] — which r14 also rewrites on
-   * file-count fragmentation alone). Replay-safe: signatures are pure
-   * functions of the text. `onBatch` surfaces the per-batch
-   * (inserted, updated, deleted) dispatch counts.
+   * [[graft.operators.Dedup.SigStore.applyCdc]] — inserts admit as
+   * history (takedown wins over a late re-delivered I), updates
+   * REPLACE the content whose signature IS the store row (the
+   * mutable-id remedy, revives by design), deletes tombstone.
+   * `compactEvery` runs [[graft.operators.Dedup.SigStore.compact]],
+   * bounding file fragmentation and the tombstone log's churn.
+   * Replay-safe: signatures are pure functions of the text. `onBatch`
+   * surfaces the per-batch (inserted, updated, deleted) dispatch
+   * counts.
    */
-  def ingestCdc(events: DataFrame, storeDir: String, checkpoint: String,
-      numHashes: Int = 64, shingleN: Int = 5, portable: Boolean = false,
-      compactEvery: Int = 0,
+  def ingestCdc(events: DataFrame, store: Dedup.SigStore,
+      checkpoint: String, compactEvery: Int = 0,
       onBatch: (Long, (Long, Long, Long)) => Unit = (_, _) => (),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val spark = events.sparkSession
@@ -278,60 +217,18 @@ object NearDupStream {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestCdcBatch(spark, batch, batchId, storeDir, numHashes,
-          shingleN, portable, compactEvery, onBatch)
+        ingestCdcBatch(spark, batch, batchId, store, compactEvery, onBatch)
       }
       .start()
   }
 
   private[streaming] def ingestCdcBatch(spark: SparkSession,
-      batch: DataFrame, batchId: Long, storeDir: String,
-      numHashes: Int = 64, shingleN: Int = 5, portable: Boolean = false,
+      batch: DataFrame, batchId: Long, store: Dedup.SigStore,
       compactEvery: Int = 0,
       onBatch: (Long, (Long, Long, Long)) => Unit = (_, _) => ()): Unit = {
     if (batch.isEmpty) return
-    onBatch(batchId, Dedup.applySigCdcBatch(spark, batch, storeDir,
-      numHashes = numHashes, shingleN = shingleN, portable = portable))
+    onBatch(batchId, store.applyCdc(spark, batch))
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-      Dedup.compactSignatureStoreDir(spark, storeDir)
-  }
-
-  /** [[ingestCdc]] against a BUCKETED signature store
-    * ([[graft.operators.Dedup.buildSignatureStoreBucketed]]) — the
-    * stream maintaining the SCALE layout: each micro-batch applies
-    * [[graft.operators.Dedup.applySigCdcBatchBucketed]], and
-    * `compactEvery` runs [[graft.operators.Dedup
-    * .compactSignatureStore]] (whole-table compaction + physical
-    * tombstone reclaim — the maintenance cadence the file-targeted
-    * per-batch reclaim deliberately leaves the small-file debt to).
-    * `buckets`/`numHashes`/`bands`/`shingleN` must match the build. */
-  def ingestCdcBucketed(events: DataFrame, table: String, buckets: Int,
-      checkpoint: String, numHashes: Int = 64, bands: Int = 8,
-      shingleN: Int = 5, compactEvery: Int = 0,
-      onBatch: (Long, (Long, Long, Long)) => Unit = (_, _) => (),
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = events.sparkSession
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestCdcBatchBucketed(spark, batch, batchId, table, buckets,
-          numHashes, bands, shingleN, compactEvery, onBatch)
-      }
-      .start()
-  }
-
-  private[streaming] def ingestCdcBatchBucketed(spark: SparkSession,
-      batch: DataFrame, batchId: Long, table: String, buckets: Int,
-      numHashes: Int = 64, bands: Int = 8, shingleN: Int = 5,
-      compactEvery: Int = 0,
-      onBatch: (Long, (Long, Long, Long)) => Unit = (_, _) => ()): Unit = {
-    if (batch.isEmpty) return
-    onBatch(batchId, Dedup.applySigCdcBatchBucketed(spark, batch,
-      table, buckets, numHashes = numHashes, bands = bands,
-      shingleN = shingleN))
-    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-      Dedup.compactSignatureStore(spark, table)
+      store.compact(spark)
   }
 }

@@ -47,6 +47,7 @@ object StreamingDemux {
         (batch: DataFrame, _: Long) =>
           val bad = batch.filter(col("env").isNull || col("env.metadata").isNull ||
             col("env.metadata.`table-name`").isNull)
+          graft.operators.ControlPlane.dropDeadJobOutput(batch.sparkSession, errorDir)
           bad.select(col("value")).write
             .mode(org.apache.spark.sql.SaveMode.Append).text(errorDir)
           val good = batch.filter(col("env").isNotNull &&
@@ -138,6 +139,8 @@ object StreamingDemux {
       .foreachBatch(idempotentBatch(checkpoint + "/graft_commits") {
         (batch: DataFrame, _: Long) =>
           val (clean, bad) = graft.operators.Constraints.split(batch, checks)
+          Seq(landingDir, quarantineDir).foreach(
+            graft.operators.ControlPlane.dropDeadJobOutput(batch.sparkSession, _))
           clean.write.mode(org.apache.spark.sql.SaveMode.Append)
             .option("compression", "gzip")
             .partitionBy("ingest_date").json(landingDir)

@@ -36,6 +36,10 @@ object CrashWriter {
 
   /** The bucketed signature store [[ops]]`("sig-reclaim")` reclaims. */
   val sigTable = "sigrc"
+  val sigStore: graft.operators.Dedup.SigStore = {
+    import graft.operators.Dedup._
+    SigStore(MinHash(bands = 4), Bucketed(sigTable, 8))
+  }
 
   /** The ids the sig-reclaim op reclaims (tombstoned by the fixture). */
   val sigTargets: Seq[Long] = Seq(0L, 4L, 9L)
@@ -60,8 +64,7 @@ object CrashWriter {
     },
     "sig-reclaim" -> { (spark, _) =>
       import spark.implicits._
-      graft.operators.Dedup.reclaimSignatureTombstonesBucketed(spark,
-        sigTargets.toDF("doc_id"), sigTable, numHashes = 64, bands = 4)
+      sigStore.reclaim(spark, sigTargets.toDF("doc_id"))
       ()
     })
 

@@ -61,7 +61,7 @@ object PipelineDemo {
     val nTables = args.lift(2).map(_.toInt).getOrElse(1)
     // 0 = no store lanes; 1 = dir-store lanes (r14); 2 = the SCALE
     // dedup layout — the signature lane runs against a BUCKETED store
-    // (r15: IngestPipeline.BucketedSignatureStoreLane)
+    // (r15: a SignatureStoreLane over a bucketed store)
     val storesMode = args.lift(3).map(_.toInt).getOrElse(0)
     require(storesMode >= 0 && storesMode <= 2, s"withStores in 0..2, got $storesMode")
     val withStores = storesMode >= 1
@@ -165,6 +165,10 @@ object PipelineDemo {
     val annDir = s"$root/annstore"
     val sigDir = s"$root/sigstore"
     val sigTable = "pipedemo_sig"
+    // the dir store bands its probe finer than the bucketed one
+    val sigStore = { import graft.operators.Dedup._
+      if (bucketedSig) SigStore(MinHash(), Bucketed(sigTable, 8))
+      else SigStore(MinHash(bands = 16), Dir(sigDir)) }
     if (withStores) {
       graft.operators.Similarity.buildIvfStore(
         (0 until nBaseVec).map(i => (i.toLong, vecOf(i)))
@@ -186,12 +190,8 @@ object PipelineDemo {
             pth.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .delete(pth, true)
           }
-        graft.operators.Dedup.buildSignatureStoreBucketed(baseDocs,
-          "doc_id", "text", sigTable, buckets = 8, numHashes = 64,
-          bands = 8, shingleN = 5)
-      } else
-        graft.operators.Dedup.buildSignatureStore(baseDocs,
-          "doc_id", "text", sigDir, numHashes = 64, shingleN = 5)
+      }
+      sigStore.build(baseDocs, "doc_id", "text")
     }
     val cfg = IngestPipeline.Config(
       landingDir = s"$root/landing",
@@ -211,11 +211,8 @@ object PipelineDemo {
       checkpoint = s"$root/ckpt",
       vectorStores = if (withStores)
         Seq(IngestPipeline.VectorStoreLane(annDir)) else Nil,
-      signatureStores = if (withStores && !bucketedSig)
-        Seq(IngestPipeline.SignatureStoreLane(sigDir)) else Nil,
-      bucketedSignatureStores = if (bucketedSig)
-        Seq(IngestPipeline.BucketedSignatureStoreLane(sigTable,
-          buckets = 8)) else Nil)
+      signatureStores = if (withStores)
+        Seq(IngestPipeline.SignatureStoreLane(sigStore)) else Nil)
 
     val raw = spark.readStream.format("graft-kinesis-sim")
       .option("path", backlog.toString)
@@ -327,9 +324,7 @@ object PipelineDemo {
       // content of every live id matches the net text…
       val mutatedOk =
         if (bucketedSig) {
-          val audit = De.auditSignatureStoreBucketed(spark, netDocs,
-            "doc_id", "text", sigTable, numHashes = 64, bands = 8,
-            shingleN = 5)
+          val audit = sigStore.audit(spark, netDocs, "doc_id", "text")
           audit.count() == netDocs.count() &&
             audit.filter(!col("sig_ok") || !col("bands_ok")).count() == 0
         } else De.mutatedRedeliveries(netDocs, "doc_id", "text",
@@ -341,13 +336,8 @@ object PipelineDemo {
       val probe = Seq(
         (9000001L, textOf(delId.toInt) + " tail"),
         (9000002L, dIns(insId) + " tail")).toDF("doc_id", "text")
-      val pairs = (if (bucketedSig)
-          De.minhashLshIncrementalBucketed(spark, probe, "doc_id",
-            "text", sigTable, numHashes = 64, bands = 8, shingleN = 5,
-            threshold = 0.4)
-        else De.minhashLshIncremental(spark, probe, "doc_id",
-          "text", sigDir, numHashes = 64, bands = 16, shingleN = 5,
-          threshold = 0.4))
+      val pairs = sigStore.pairs(spark, probe, "doc_id", "text",
+          threshold = 0.4)
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       annOk && mutatedOk && !pairs.exists(_._1 == delId) &&

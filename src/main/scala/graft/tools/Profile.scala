@@ -260,9 +260,9 @@ object Profile {
       table: String): Unit = {
     val docs = graft.sources.Tables.load(spark, dir, "documents")
     val history = docs.filter(col("doc_id") % 3 =!= 0)
+    val sigs = Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed(table, 4))
     c.phase("buildSignatureStoreBucketed") {
-      Dedup.buildSignatureStoreBucketed(history, "doc_id", "text",
-        table, buckets = 4, numHashes = 64, bands = 8, shingleN = 5)
+      sigs.build(history, "doc_id", "text")
     }
     val rev = concat_ws(" ", reverse(split(col("text"), "\\s+")))
     val b1 = docs.filter(col("doc_id") % 3 === 0)
@@ -275,16 +275,14 @@ object Profile {
         .select(col("doc_id"), lit(null).cast("string").as("text"),
           lit("D").as("op"), lit(3L).as("seq")))
     c.phase("applySigCdcBatch b1") {
-      Dedup.applySigCdcBatchBucketed(spark, b1, table, buckets = 4,
-        numHashes = 64, bands = 8, shingleN = 5)
+      sigs.applyCdc(spark, b1)
     }
     val b2 = history
       .filter(col("doc_id") % 7 === 2 && col("doc_id") % 5 === 3)
       .select(col("doc_id"), col("text"), lit("I").as("op"),
         lit(10L).as("seq"))
     c.phase("applySigCdcBatch b2") {
-      Dedup.applySigCdcBatchBucketed(spark, b2, table, buckets = 4,
-        numHashes = 64, bands = 8, shingleN = 5)
+      sigs.applyCdc(spark, b2)
     }
     val net = docs
       .filter(col("doc_id") % 3 === 0 || col("doc_id") % 7 =!= 2)
@@ -292,8 +290,7 @@ object Profile {
         when(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 === 1, rev)
           .otherwise(col("text")).as("text"))
     c.phase("auditSignatureStoreBucketed") {
-      Dedup.auditSignatureStoreBucketed(spark, net, "doc_id", "text",
-          table, numHashes = 64, bands = 8, shingleN = 5)
+      sigs.audit(spark, net, "doc_id", "text")
         .select(col("id").as("doc_id"), col("sig_ok"), col("bands_ok"))
         .orderBy(col("doc_id"))
         .write.format("noop").mode("overwrite").save()

@@ -215,18 +215,18 @@ class BucketingSpec extends SparkSpec {
     // anything (so even a nonexistent table name never reaches I/O)
     spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
     try {
+      val noStore = Dedup.SigStore(Dedup.MinHash(),
+        Dedup.Bucketed("no_such_store", 4))
       val calls: Seq[(String, () => Any)] = Seq(
         ("compactTable", () => Bucketing.compactTable(spark, "bkt_orders")),
         ("reclaimFromTable", () => Bucketing.reclaimFromTable(spark,
           "bkt_orders", Seq(1L).toDF("o_custkey"), "o_custkey")),
-        ("deleteSignaturesBucketed", () => Dedup.deleteSignaturesBucketed(
-          spark, Seq(1L).toDF("id"), "no_such_store")),
-        ("appendSignaturesBucketed", () => Dedup.appendSignaturesBucketed(
-          spark, Seq((1L, "x")).toDF("doc_id", "text"),
-          "doc_id", "text", "no_such_store", buckets = 4)),
-        ("reclaimSignatureTombstonesBucketed",
-          () => Dedup.reclaimSignatureTombstonesBucketed(spark,
-            Seq(1L).toDF("id"), "no_such_store")))
+        ("SigStore.delete", () => noStore.delete(
+          spark, Seq(1L).toDF("id"))),
+        ("SigStore.append", () => noStore.append(
+          spark, Seq((1L, "x")).toDF("doc_id", "text"), "doc_id", "text")),
+        ("SigStore.reclaim",
+          () => noStore.reclaim(spark, Seq(1L).toDF("id"))))
       calls.foreach { case (name, f) =>
         val e = intercept[IllegalArgumentException](f())
         assert(e.getMessage.contains("ignoreMissingFiles"),
@@ -284,19 +284,20 @@ class BucketingSpec extends SparkSpec {
       "sig_compact", buckets = 4)
     try {
       // two daily appends accrete files in both standing tables
-      Dedup.appendSignaturesBucketed(spark,
+      val store = Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed("sig_compact", 4))
+      store.append(spark,
         (201L to 230L).map(i => (i, htext(i))).toDF("doc_id", "text"),
-        "doc_id", "text", "sig_compact", buckets = 4)
-      Dedup.appendSignaturesBucketed(spark,
+        "doc_id", "text")
+      store.append(spark,
         (301L to 330L).map(i => (i, htext(i))).toDF("doc_id", "text"),
-        "doc_id", "text", "sig_compact", buckets = 4)
+        "doc_id", "text")
       val batch = Seq((9001L, htext(42L)), (9002L, htext(210L)))
         .toDF("doc_id", "text")
       val before = Dedup.minhashLshIncrementalBucketed(spark, batch,
         "doc_id", "text", "sig_compact")
         .as[(Long, Long, Double)].collect().toSet
       assert(before.map(p => (p._1, p._2)) === Set((42L, 9001L), (210L, 9002L)))
-      Dedup.compactSignatureStore(spark, "sig_compact")
+      store.compact(spark)
       def nFiles(t: String): Int = {
         val loc = java.net.URI.create(spark.sessionState.catalog
           .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))

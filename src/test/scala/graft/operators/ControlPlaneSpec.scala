@@ -56,12 +56,11 @@ class ControlPlaneSpec extends SparkSpec {
       buckets = 4, numHashes = 64, bands = 8, shingleN = 5)
     try {
       val sigs = s"${table}_sigs"
-      assert(Dedup.deleteSignaturesBucketed(spark, Seq(3L).toDF("doc_id"),
-        table) === 1L)
+      val store = Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed(table, 4))
+      assert(store.delete(spark, Seq(3L).toDF("doc_id")) === 1L)
       // resolves (and caches) the caller's relation and its listing
       assert(spark.table(sigs).count() === 8L)
-      assert(Dedup.reclaimSignatureTombstonesBucketed(spark,
-        Seq(3L).toDF("doc_id"), table, numHashes = 64, bands = 8) === 1L)
+      assert(store.reclaim(spark, Seq(3L).toDF("doc_id")) === 1L)
       assert(spark.table(sigs).count() === 7L)
       assert(spark.table(sigs).filter(col("id") === 3L).isEmpty)
     } finally drop()

@@ -35,23 +35,18 @@ class DedupDeleteSpec extends SparkSpec {
 
   test("minhash dir store: delete stops matching, re-delivered deleted id is NEW, append drops it, compaction reclaims + re-opens") {
     val dir = tmpDir("sigdel")
-    Dedup.buildSignatureStore(docs, "doc_id", "text", dir,
-      numHashes = 64, shingleN = 5)
+    val store = Dedup.SigStore(Dedup.MinHash(bands = 16), Dedup.Dir(dir))
+    store.build(docs, "doc_id", "text")
     // pre-delete: the batch's doc 10 is flagged against store doc 0
-    val before = Dedup.minhashLshIncremental(spark, batch, "doc_id",
-        "text", dir, numHashes = 64, bands = 16, shingleN = 5,
-        threshold = 0.5)
+    val before = store.pairs(spark, batch, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(before.contains((0L, 10L)))
     // delete doc 0; idempotent (re-delivered takedown files nothing)
-    assert(Dedup.deleteSignatures(spark, Seq(0L).toDF("doc_id"), dir)
+    assert(store.delete(spark, Seq(0L).toDF("doc_id"))
       === 1L)
-    assert(Dedup.deleteSignatures(spark,
-      Seq(0L, 999L).toDF("doc_id"), dir) === 0L)
+    assert(store.delete(spark, Seq(0L, 999L).toDF("doc_id")) === 0L)
     // doc 0 no longer matches as a source
-    val after = Dedup.minhashLshIncremental(spark, batch, "doc_id",
-        "text", dir, numHashes = 64, bands = 16, shingleN = 5,
-        threshold = 0.5)
+    val after = store.pairs(spark, batch, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(!after.exists(p => p._1 == 0L || p._2 == 0L))
     // a re-delivered copy of the DELETED id is a new doc: it pairs
@@ -60,63 +55,54 @@ class DedupDeleteSpec extends SparkSpec {
       (0L, "the quick brown fox jumps over the lazy dog and runs far away home"),
       (20L, "the quick brown fox jumps over the lazy dog and runs far away home")
     ).toDF("doc_id", "text")
-    val rd = Dedup.minhashLshIncremental(spark, redelivered, "doc_id",
-        "text", dir, numHashes = 64, bands = 16, shingleN = 5,
-        threshold = 0.5)
+    val rd = store.pairs(spark, redelivered, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(rd.contains((0L, 20L)),
       "a re-delivered deleted id participates as a NEW doc")
     // takedown wins: appending the deleted id is a no-op (its physical
     // row is not doubled and it stays excluded)
-    Dedup.appendSignatures(spark, redelivered, "doc_id", "text", dir,
-      numHashes = 64, shingleN = 5)
+    store.append(spark, redelivered, "doc_id", "text")
     assert(spark.read.parquet(dir).filter(col("id") === 0).count() === 1)
-    val stillGone = Dedup.minhashLshIncremental(spark, batch, "doc_id",
-        "text", dir, numHashes = 64, bands = 16, shingleN = 5,
-        threshold = 0.5)
+    val stillGone = store.pairs(spark, batch, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(!stillGone.exists(p => p._1 == 0L || p._2 == 0L))
     // 20 DID land (genuinely new)
     assert(spark.read.parquet(dir).filter(col("id") === 20).count() === 1)
     // compaction physically reclaims and clears the tombstones
-    Dedup.compactSignatureStoreDir(spark, dir)
+    store.compact(spark)
     assert(spark.read.parquet(dir).filter(col("id") === 0).count() === 0)
     assert(!new java.io.File(dir + "/_deleted").exists())
     // the id is re-opened: a fresh append admits it again
-    Dedup.appendSignatures(spark, docs.filter(col("doc_id") === 0),
-      "doc_id", "text", dir, numHashes = 64, shingleN = 5)
+    store.append(spark, docs.filter(col("doc_id") === 0), "doc_id", "text")
     assert(spark.read.parquet(dir).filter(col("id") === 0).count() === 1)
   }
 
   test("wide simhash store: delete excludes, compaction preserves the _wide_meta draw record (the silent-downgrade window)") {
     val dir = tmpDir("widedel")
-    Dedup.buildWideSimhashStore(docs, "doc_id", "text", dir,
-      portable = false)
-    assert(Dedup.deleteSignatures(spark, Seq(0L).toDF("doc_id"), dir)
+    val store = Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(dir))
+    store.build(docs, "doc_id", "text")
+    assert(store.delete(spark, Seq(0L).toDF("doc_id"))
       === 1L)
-    val pairs = Dedup.simhashWideIncremental(spark,
-        docs.filter(col("doc_id") === 0)
-          .select(col("doc_id") + 100 as "doc_id", col("text")),
-        "doc_id", "text", dir, maxHamming = 6)
+    val pairs = store.pairs(spark, docs.filter(col("doc_id") === 0)
+          .select(col("doc_id") + 100 as "doc_id", col("text")), "doc_id", "text")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(!pairs.exists(p => p._1 == 0L),
       "a deleted doc must not match as a wide-simhash source")
-    Dedup.compactSignatureStoreDir(spark, dir)
+    store.compact(spark)
     assert(spark.read.parquet(dir).filter(col("id") === 0).count() === 0)
     assert(new java.io.File(dir + "/_wide_meta").exists(),
       "compaction must carry the draw record through the swap")
     // the draw gate still enforces after compaction: the wrong flag
     // is refused loudly, the right one works
-    val e = intercept[IllegalArgumentException] {
-      Dedup.simhashWideIncremental(spark, batch, "doc_id", "text", dir,
-        maxHamming = 6, portable = true)
+    val e = intercept[Dedup.SigStoreRefused] {
+      Dedup.SigStore(Dedup.WideSimhash(portable = true), Dedup.Dir(dir))
+        .pairs(spark, batch, "doc_id", "text")
     }
-    assert(e.getMessage.contains("portable"))
-    Dedup.simhashWideIncremental(spark, batch, "doc_id", "text", dir,
-      maxHamming = 6)
+    assert(e.reason === Dedup.SigRefusal.DrawMismatch)
+    store.pairs(spark, batch, "doc_id", "text")
     // compaction with no tombstones is a no-op (store untouched)
     val filesBefore = new java.io.File(dir).listFiles().map(_.getName).toSet
-    Dedup.compactSignatureStoreDir(spark, dir)
+    store.compact(spark)
     assert(new java.io.File(dir).listFiles().map(_.getName).toSet ===
       filesBefore)
   }
@@ -125,39 +111,29 @@ class DedupDeleteSpec extends SparkSpec {
     val table = "sigdel_bucketed"
     Seq(s"${table}_sigs", s"${table}_bands", s"${table}_deleted")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    Dedup.buildSignatureStoreBucketed(docs, "doc_id", "text", table,
-      buckets = 4, numHashes = 64, bands = 16, shingleN = 5)
-    val before = Dedup.minhashLshIncrementalBucketed(spark, batch,
-        "doc_id", "text", table, numHashes = 64, bands = 16,
-        shingleN = 5, threshold = 0.5)
+    val store = Dedup.SigStore(Dedup.MinHash(bands = 16), Dedup.Bucketed(table, 4))
+    store.build(docs, "doc_id", "text")
+    val before = store.pairs(spark, batch, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(before.contains((0L, 10L)))
-    assert(Dedup.deleteSignaturesBucketed(spark,
-      Seq(0L).toDF("doc_id"), table) === 1L)
-    assert(Dedup.deleteSignaturesBucketed(spark,
-      Seq(0L).toDF("doc_id"), table) === 0L)
-    val after = Dedup.minhashLshIncrementalBucketed(spark, batch,
-        "doc_id", "text", table, numHashes = 64, bands = 16,
-        shingleN = 5, threshold = 0.5)
+    assert(store.delete(spark, Seq(0L).toDF("doc_id")) === 1L)
+    assert(store.delete(spark, Seq(0L).toDF("doc_id")) === 0L)
+    val after = store.pairs(spark, batch, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(!after.exists(p => p._1 == 0L || p._2 == 0L))
     // append of the tombstoned id is dropped
-    Dedup.appendSignaturesBucketed(spark,
-      docs.filter(col("doc_id") === 0), "doc_id", "text", table,
-      buckets = 4, numHashes = 64, bands = 16, shingleN = 5)
+    store.append(spark, docs.filter(col("doc_id") === 0), "doc_id", "text")
     assert(spark.table(s"${table}_sigs").filter(col("id") === 0)
       .count() === 1)
     // compaction: rows reclaimed from BOTH tables, tombstone table
     // dropped, bucket layout intact (the admission plan still works)
-    Dedup.compactSignatureStore(spark, table)
+    store.compact(spark)
     assert(spark.table(s"${table}_sigs").filter(col("id") === 0)
       .count() === 0)
     assert(spark.table(s"${table}_bands").filter(col("id") === 0)
       .count() === 0)
     assert(!spark.catalog.tableExists(s"${table}_deleted"))
-    val again = Dedup.minhashLshIncrementalBucketed(spark, batch,
-        "doc_id", "text", table, numHashes = 64, bands = 16,
-        shingleN = 5, threshold = 0.5)
+    val again = store.pairs(spark, batch, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(!again.exists(p => p._1 == 0L || p._2 == 0L))
     Seq(s"${table}_sigs", s"${table}_bands")

@@ -300,8 +300,9 @@ class DedupSpec extends SparkSpec {
       (11L, "some fresh text with its very own words in it"),
       (12L, "some fresh text with its very own words in it") // dups batch 11
     ).toDF("doc_id", "text")
-    Dedup.buildSignatureStore(history, "doc_id", "text", dir)
-    val inc = Dedup.minhashLshIncremental(spark, batch, "doc_id", "text", dir)
+    val store = Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(dir))
+    store.build(history, "doc_id", "text")
+    val inc = store.pairs(spark, batch, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
     // ground truth: the full-corpus run, restricted to pairs touching a
     // batch id, re-oriented so the batch doc is id_b
@@ -317,8 +318,8 @@ class DedupSpec extends SparkSpec {
     // old behavior emitted each pair in BOTH orientations via the two
     // arms, and a drop-id_b admission would have deleted an
     // already-admitted history doc.)
-    Dedup.appendSignatures(spark, batch, "doc_id", "text", dir)
-    val redelivered = Dedup.minhashLshIncremental(spark, batch, "doc_id", "text", dir)
+    store.append(spark, batch, "doc_id", "text")
+    val redelivered = store.pairs(spark, batch, "doc_id", "text")
       .as[(Long, Long, Double)].collect()
     assert(redelivered.isEmpty)
     // a HALF re-delivered batch (one admitted doc, one new near-dup of
@@ -328,7 +329,7 @@ class DedupSpec extends SparkSpec {
       (11L, "some fresh text with its very own words in it"),      // admitted
       (13L, "some fresh text with its very own words in it"))       // new
       .toDF("doc_id", "text")
-    val got = Dedup.minhashLshIncremental(spark, half, "doc_id", "text", dir)
+    val got = store.pairs(spark, half, "doc_id", "text")
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
     assert(got === Set((11L, 13L), (12L, 13L)))
     // mutable-id audit (r6 advice): a re-delivered id with MUTATED
@@ -361,8 +362,9 @@ class DedupSpec extends SparkSpec {
     try {
       // ground truth: the plain (directory) store on identical data
       val dir = java.nio.file.Files.createTempDirectory("sigplain").toString + "/sigs"
-      Dedup.buildSignatureStore(history, "doc_id", "text", dir)
-      val plain = Dedup.minhashLshIncremental(spark, batch, "doc_id", "text", dir)
+      val store = Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(dir))
+      store.build(history, "doc_id", "text")
+      val plain = store.pairs(spark, batch, "doc_id", "text")
       val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
@@ -385,12 +387,11 @@ class DedupSpec extends SparkSpec {
         assert(ex < exPlain, s"bucketed=$ex plain=$exPlain")
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
       // append the admitted batch; tomorrow's re-delivery sees it as history
-      Dedup.appendSignaturesBucketed(spark, batch, "doc_id", "text",
-        "sig_store_bkt", buckets = 8)
+      val bkt = Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed("sig_store_bkt", 8))
+      bkt.append(spark, batch, "doc_id", "text")
       val n1 = spark.table("sig_store_bkt_sigs").count()
       // re-append is anti-joined: nothing added
-      Dedup.appendSignaturesBucketed(spark, batch, "doc_id", "text",
-        "sig_store_bkt", buckets = 8)
+      bkt.append(spark, batch, "doc_id", "text")
       assert(spark.table("sig_store_bkt_sigs").count() === n1)
       val day2 = Seq((2001L, "a genuinely new batch document with fresh content"))
         .toDF("doc_id", "text")

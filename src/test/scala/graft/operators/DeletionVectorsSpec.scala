@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{CrashPoint, SparkSpec}
 
 /** Merge-on-read deletes: a delete writes only keys, reads subtract
   * them, compact folds them in physically — and the visible row set is
@@ -47,6 +47,28 @@ class DeletionVectorsSpec extends SparkSpec {
     assert(DeletionVectors.pendingDeletes(spark, dir) === 0L)
     assert(DeletionVectors.read(spark, dir, "k")
       .select("k").as[Long].collect().toSet === want)
+  }
+
+  test("a delete retried after a death inside its job commit lands each tombstone once") {
+    CrashPoint.install(spark)
+    val dir = tmp("dv-deadjob")
+    initSnap(dir)
+    def deleteTwoKeys(): Unit = DeletionVectors.delete(spark,
+      CrashPoint.uri(dir), Seq(3L, 8L).toDF("k"), "k")
+    // the job commit's first rename out of `_temporary`: the task
+    // output is committed there, none of it published yet
+    val commit = CrashPoint.windows(new CrashPoint.Fixture(dir)
+        .rehearse(deleteTwoKeys()))
+      .find(c => c.kind == "rename" && c.to.exists(!_.contains("/_temporary")))
+      .getOrElse(fail("no job-commit rename recorded"))
+    assert(CrashPoint.crashAt(spark, commit)(deleteTwoKeys()).isFailure)
+    deleteTwoKeys()
+    val dups = spark.read.parquet(dir + "/_tombstones")
+      .groupBy("k").count().filter(col("count") > 1)
+    assert(dups.isEmpty, "the dead job's committed task output was " +
+      "published by the retry's job commit")
+    assert(DeletionVectors.read(spark, dir, "k").select("k").as[Long]
+      .collect().toSet === (1L to 20L).filterNot(Set(3L, 8L)).toSet)
   }
 
   test("stale tombstones after a crashed compact are a no-op") {

@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Randomized net-state equivalence for the bucketed signature store's
-  * mutation lifecycle: under RANDOM corpus sizes, bucket counts, band
+/** Randomized net-state equivalence for the signature stores'
+  * mutation lifecycle, on all four stores (MinHash or wide SimHash,
+  * dir or bucketed): under RANDOM corpus sizes, bucket counts, band
   * configs, write-task layouts, takedown sets and replacement sets,
   * a build + delete + upsert sequence must leave the store EXACTLY
-  * equal to the net corpus — every live id's stored sig AND band rows
-  * equal the net text's (the q141/q142 audit), no resurrections, no
-  * duplicate physical rows. This is the property form of the r15
+  * equal to the net corpus — every live id's stored sig (and MinHash
+  * band rows) equal the net text's (the q141/q142 audit), no
+  * resurrections, no duplicate physical rows. This is the property form of the r15
   * file-targeted-reclaim work: the deterministic specs pin the known
   * layouts (the 4-bands-over-8-buckets always-misses shape that
   * caught the key-level-heal bug); the generator walks the layout
@@ -42,22 +43,15 @@ object SigLifecycleProperties extends Properties("sigLifecycle") {
   property("build + delete + upsert ≡ net corpus on random layouts and batches") =
     Prop.forAll(caseGen) { c =>
       import spark.implicits._
+      import Dedup._
       val table = "sigprop"
-      Seq(s"${table}_sigs", s"${table}_bands", s"${table}_deleted")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      def dropTables(): Unit =
+        Seq("_sigs", "_bands", "_meta", "_deleted")
+          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $table$t"))
+      val dir = java.nio.file.Files.createTempDirectory("sigprop")
+        .toString + "/store"
       val docs = (0L until c.nDocs.toLong).map(i => (i, txt(i)))
         .toDF("doc_id", "text").repartition(c.parts)
-      Dedup.buildSignatureStoreBucketed(docs, "doc_id", "text", table,
-        buckets = c.buckets, numHashes = 64, bands = c.bands,
-        shingleN = 5)
-      if (c.delIds.nonEmpty)
-        Dedup.deleteSignaturesBucketed(spark,
-          c.delIds.toSeq.toDF("doc_id"), table)
-      if (c.upIds.nonEmpty)
-        Dedup.upsertSignaturesBucketed(spark,
-          c.upIds.toSeq.map(i => (i, rev(txt(i)))).toDF("doc_id", "text"),
-          "doc_id", "text", table, buckets = c.buckets, numHashes = 64,
-          bands = c.bands, shingleN = 5)
       // net: deletes stay down unless upserted (upsert revives);
       // upserted ids carry the reversed text
       val live = (0L until c.nDocs.toLong)
@@ -65,19 +59,34 @@ object SigLifecycleProperties extends Properties("sigLifecycle") {
       val net = live.map(i =>
           (i, if (c.upIds.contains(i)) rev(txt(i)) else txt(i)))
         .toDF("doc_id", "text")
-      val audit = Dedup.auditSignatureStoreBucketed(spark, net,
-        "doc_id", "text", table, numHashes = 64, bands = c.bands,
-        shingleN = 5)
-      val auditRows = audit.count()
-      val badRows = audit.filter(!col("sig_ok") || !col("bands_ok")).count()
-      val dupSigs = spark.table(s"${table}_sigs").groupBy("id").count()
-        .filter(col("count") > 1).count()
-      Seq(s"${table}_sigs", s"${table}_bands", s"${table}_deleted")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      Prop(auditRows == live.size.toLong) :|
-          s"audit rows $auditRows != ${live.size}" &&
-        Prop(badRows == 0L) :|
-          s"$badRows live ids mismatch the net corpus" &&
-        Prop(dupSigs == 0L) :| s"$dupSigs duplicated sig rows"
+      val minhash = MinHash(numHashes = 64, bands = c.bands, shingleN = 5)
+      Seq(SigStore(minhash, Dir(dir)), SigStore(WideSimhash(), Dir(dir)),
+          SigStore(minhash, Bucketed(table, c.buckets)),
+          SigStore(WideSimhash(), Bucketed(table, c.buckets)))
+        .map { store =>
+          dropTables()
+          store.build(docs, "doc_id", "text")
+          if (c.delIds.nonEmpty)
+            store.delete(spark, c.delIds.toSeq.toDF("doc_id"))
+          if (c.upIds.nonEmpty)
+            store.upsert(spark, c.upIds.toSeq.map(i => (i, rev(txt(i))))
+              .toDF("doc_id", "text"), "doc_id", "text")
+          val audit = store.audit(spark, net, "doc_id", "text")
+          val auditRows = audit.count()
+          val badRows = audit.filter(audit.columns.filter(_.endsWith("_ok"))
+            .map(c => !col(c)).reduce(_ || _)).count()
+          val stored = store.layout match {
+            case Dir(p) => spark.read.parquet(p)
+            case Bucketed(t, _) => spark.table(s"${t}_sigs")
+          }
+          val dupSigs = stored.groupBy("id").count()
+            .filter(col("count") > 1).count()
+          dropTables()
+          Prop(auditRows == live.size.toLong) :|
+              s"$store: audit rows $auditRows != ${live.size}" &&
+            Prop(badRows == 0L) :|
+              s"$store: $badRows live ids mismatch the net corpus" &&
+            Prop(dupSigs == 0L) :| s"$store: $dupSigs duplicated sig rows"
+        }.reduce(_ && _)
     }
 }

@@ -9,7 +9,7 @@ import graft.tools.CrashWriter
 
 /** The bucketed signature store's file-targeted reclaim
   * (`Bucketing.reclaimFromTable` under
-  * `Dedup.reclaimSignatureTombstonesBucketed`) killed at every crash
+  * `Dedup.SigStore.reclaim` on the bucketed layout) killed at every crash
   * window ([[CrashPoint]]). The protocol is append-then-delete per
   * table, the two tables' legs running concurrently, then the R
   * records' append to the op log; both tables and the log (at
@@ -43,8 +43,8 @@ class SigReclaimCrashSpec extends SparkSpec {
     Dedup.buildSignatureStoreBucketed(CrashFixtures.sigFixture(spark),
       "doc_id", "text", table, buckets = 8, numHashes = 64, bands = 4,
       shingleN = 5)
-    Dedup.deleteSignaturesBucketed(spark,
-      CrashWriter.sigTargets.toDF("doc_id"), table)
+    Dedup.SigStore(Dedup.MinHash(bands = 4), Dedup.Bucketed(table, 8))
+      .delete(spark, CrashWriter.sigTargets.toDF("doc_id"))
     val Seq(sigsDir, bandsDir) = Seq(sigs, bands).map(CrashPoint.relocate(spark, _))
     val store = new CrashPoint.Fixture(sigsDir, bandsDir, dlog)
     val calls = store.rehearse(reclaim())
@@ -79,9 +79,8 @@ class SigReclaimCrashSpec extends SparkSpec {
   private def healed(): Unit = {
     Seq(sigs, bands).foreach(spark.catalog.refreshTable)
     val n = tombstoned()
-    assert(Dedup.reclaimSignatureTombstonesBucketed(spark,
-      CrashWriter.sigTargets.toDF("doc_id"), table, numHashes = 64,
-      bands = 4) === n)
+    assert(Dedup.SigStore(Dedup.MinHash(bands = 4), Dedup.Bucketed(table, 8))
+      .reclaim(spark, CrashWriter.sigTargets.toDF("doc_id")) === n)
     assert(tombstoned() === 0L)
     val audit = Dedup.auditSignatureStoreBucketed(spark, net, "doc_id",
       "text", table, numHashes = 64, bands = 4, shingleN = 5)

@@ -7,11 +7,11 @@ import graft.{CrashPoint, SparkSpec}
   * mutable-id remedy the [[Dedup.mutatedRedeliveries]] audit points
   * at: content mutated under a reused id previously could only
   * re-enter history via a whole-store compaction. Pins the contract:
-  * [[Dedup.reclaimSignatureTombstones]] removes exactly the given
+  * [[Dedup.SigStore.reclaim]] removes exactly the given
   * tombstoned ids' rows (file-granular, double-anti-joined so a
   * crashed-and-rerun reclaim never duplicates innocent rows) and
   * re-opens the ids through the shared [[TombstoneLog]];
-  * [[Dedup.upsertSignatures]] = delete → targeted reclaim → admit the
+  * [[Dedup.SigStore.upsert]] = delete → targeted reclaim → admit the
   * NEW content, after which the store signature IS the new text's
   * signature — the old content stops matching, the new content
   * matches as history; the wide-SimHash twin keeps `_wide_meta` and
@@ -31,14 +31,14 @@ class SigUpsertSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory(prefix).toString + "/store"
 
   private def pairs(dir: String, batch: org.apache.spark.sql.DataFrame) =
-    Dedup.minhashLshIncremental(spark, batch, "doc_id", "text", dir,
-        numHashes = 64, bands = 16, shingleN = 5, threshold = 0.5)
+    Dedup.SigStore(Dedup.MinHash(bands = 16), Dedup.Dir(dir))
+      .pairs(spark, batch, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
 
   test("minhash dir store: upsert swaps which content matches as history; audit comes back clean; physical row stays single") {
     val dir = tmpDir("sigups")
-    Dedup.buildSignatureStore(docs, "doc_id", "text", dir,
-      numHashes = 64, shingleN = 5)
+    val store = Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(dir))
+    store.build(docs, "doc_id", "text")
     // a probe batch near-dupping doc 0's ORIGINAL text and doc 1's
     // FUTURE (replacement) text
     val probe = Seq(
@@ -57,8 +57,7 @@ class SigUpsertSpec extends SparkSpec {
         spark.read.parquet(dir), numHashes = 64, shingleN = 5)
       .select("id").as[Long].collect().toSet
     assert(audited === Set(0L, 1L))
-    Dedup.upsertSignatures(spark, mutated, "doc_id", "text", dir,
-      numHashes = 64, shingleN = 5)
+    store.upsert(spark, mutated, "doc_id", "text")
     // exactly one physical row per id — the replacement superseded
     val counts = spark.read.parquet(dir).groupBy("id").count()
       .filter(col("count") > 1).count()
@@ -74,8 +73,7 @@ class SigUpsertSpec extends SparkSpec {
       spark.read.parquet(dir), numHashes = 64,
       shingleN = 5).isEmpty)
     // re-running the upsert (a replayed batch) converges
-    Dedup.upsertSignatures(spark, mutated, "doc_id", "text", dir,
-      numHashes = 64, shingleN = 5)
+    store.upsert(spark, mutated, "doc_id", "text")
     assert(spark.read.parquet(dir).groupBy("id").count()
       .filter(col("count") > 1).count() === 0L)
     assert(pairs(dir, probe) === after)
@@ -83,21 +81,18 @@ class SigUpsertSpec extends SparkSpec {
 
   test("targeted signature reclaim: reclaimed id re-opens, the other tombstone keeps standing — and keeps its physical row") {
     val dir = tmpDir("sigreclaim")
-    Dedup.buildSignatureStore(docs, "doc_id", "text", dir,
-      numHashes = 64, shingleN = 5)
-    Dedup.deleteSignatures(spark, Seq(0L, 2L).toDF("doc_id"), dir)
-    assert(Dedup.reclaimSignatureTombstones(spark,
-      Seq(0L).toDF("doc_id"), dir) === 1L)
+    val store = Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(dir))
+    store.build(docs, "doc_id", "text")
+    store.delete(spark, Seq(0L, 2L).toDF("doc_id"))
+    assert(store.reclaim(spark, Seq(0L).toDF("doc_id")) === 1L)
     // nothing standing for 0 → nothing to reclaim twice
-    assert(Dedup.reclaimSignatureTombstones(spark,
-      Seq(0L).toDF("doc_id"), dir) === 0L)
+    assert(store.reclaim(spark, Seq(0L).toDF("doc_id")) === 0L)
     val stored = spark.read.parquet(dir).select("id")
       .as[Long].collect().toSet
     assert(!stored.contains(0L), "reclaimed row not removed")
     assert(stored.contains(2L), "the OTHER tombstoned id lost its row")
     // 0 re-admits via the ordinary append; 2 still drops (takedown)
-    Dedup.appendSignatures(spark, docs.filter(col("doc_id").isin(0L, 2L)),
-      "doc_id", "text", dir, numHashes = 64, shingleN = 5)
+    store.append(spark, docs.filter(col("doc_id").isin(0L, 2L)), "doc_id", "text")
     val after = spark.read.parquet(dir).select("id")
       .as[Long].collect().toSeq
     assert(after.count(_ == 0L) === 1)
@@ -110,44 +105,43 @@ class SigUpsertSpec extends SparkSpec {
 
   test("wide simhash store: upsert keeps _wide_meta and the draw gate; new content matches, old stops") {
     val dir = tmpDir("sigupsw")
-    Dedup.buildWideSimhashStore(docs, "doc_id", "text", dir,
-      portable = true)
+    val store = Dedup.SigStore(Dedup.WideSimhash(portable = true), Dedup.Dir(dir))
+    store.build(docs, "doc_id", "text")
     val probeOld = Seq(
       (10L, "the quick brown fox jumps over the lazy dog and runs far away house")
     ).toDF("doc_id", "text")
     def widePairs(b: org.apache.spark.sql.DataFrame) =
-      Dedup.simhashWideIncremental(spark, b, "doc_id", "text", dir,
-          maxHamming = 16, portable = true)
+      Dedup.SigStore(Dedup.WideSimhash(maxHamming = 16, portable = true), Dedup.Dir(dir))
+        .pairs(spark, b, "doc_id", "text")
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(widePairs(probeOld).contains((0L, 10L)))
     val mutated = Seq(
       (0L, "entirely new content that no longer resembles the fox sentence at all")
     ).toDF("doc_id", "text")
-    Dedup.upsertWideSimhashSignatures(spark, mutated, "doc_id", "text",
-      dir, portable = true)
+    store.upsert(spark, mutated, "doc_id", "text")
     assert(!widePairs(probeOld).exists(p => p._1 == 0L || p._2 == 0L))
     // the meta survived the reclaim and the gate is still loud on a
     // mismatched draw family
-    val e = intercept[IllegalArgumentException] {
-      Dedup.upsertWideSimhashSignatures(spark, mutated, "doc_id",
-        "text", dir, portable = false)
+    val e = intercept[Dedup.SigStoreRefused] {
+      Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(dir)).upsert(spark, mutated, "doc_id", "text")
     }
-    assert(e.getMessage.contains("draw"))
+    assert(e.reason === Dedup.SigRefusal.DrawMismatch)
   }
 
   test("bucketed wide store: CDC lifecycle over the file-targeted reclaim — admission parity with the dir twin, takedown wins a late I, audit clean through compaction, draw gate loud") {
     val table = "wideb_spec"
     val dir = tmpDir("widebdir")
+    val twin = Dedup.SigStore(Dedup.WideSimhash(maxHamming = 16, portable = true),
+      Dedup.Dir(dir))
+    val bkt = Dedup.SigStore(Dedup.WideSimhash(maxHamming = 16, portable = true),
+      Dedup.Bucketed(table, 4))
     Seq(s"${table}_sigs", s"${table}_meta", s"${table}_deleted")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     try {
-      Dedup.buildWideSimhashStoreBucketed(docs, "doc_id", "text",
-        table, buckets = 4, portable = true)
-      Dedup.buildWideSimhashStore(docs, "doc_id", "text", dir,
-        portable = true)
+      bkt.build(docs, "doc_id", "text")
+      twin.build(docs, "doc_id", "text")
       def wpairs(b: org.apache.spark.sql.DataFrame) =
-        Dedup.simhashWideIncrementalBucketed(spark, b, "doc_id",
-            "text", table, maxHamming = 16, portable = true)
+        bkt.pairs(spark, b, "doc_id", "text")
           .select("id_a", "id_b", "hamming")
           .as[(Long, Long, Int)].collect().toSet
       val probe = Seq(
@@ -156,8 +150,7 @@ class SigUpsertSpec extends SparkSpec {
       ).toDF("doc_id", "text")
       // admission parity: same pairs AND hamming as the dir twin
       assert(wpairs(probe) ===
-        Dedup.simhashWideIncremental(spark, probe, "doc_id", "text",
-            dir, maxHamming = 16, portable = true)
+        twin.pairs(spark, probe, "doc_id", "text")
           .select("id_a", "id_b", "hamming")
           .as[(Long, Long, Int)].collect().toSet)
       assert(wpairs(probe).exists(p => p._1 == 0L && p._2 == 10L))
@@ -167,14 +160,12 @@ class SigUpsertSpec extends SparkSpec {
         (0L, "entirely new content that no longer resembles the fox sentence at all", "U", 2L),
         (2L, null.asInstanceOf[String], "D", 3L))
         .toDF("doc_id", "text", "op", "seq")
-      assert(Dedup.applyWideSimhashCdcBatchBucketed(spark, b1, table,
-        buckets = 4, portable = true) === ((1L, 1L, 1L)))
+      assert(bkt.applyCdc(spark, b1) === ((1L, 1L, 1L)))
       // late re-delivered I of the taken-down id: must stay down
       val b2 = Seq((2L,
         "another fully distinct document mentioning parquet bucketing layouts",
         "I", 10L)).toDF("doc_id", "text", "op", "seq")
-      Dedup.applyWideSimhashCdcBatchBucketed(spark, b2, table,
-        buckets = 4, portable = true)
+      bkt.applyCdc(spark, b2)
       val net = Seq(
         (0L, "entirely new content that no longer resembles the fox sentence at all"),
         (1L, "completely unrelated text about spark catalyst optimizer internals"),
@@ -182,8 +173,7 @@ class SigUpsertSpec extends SparkSpec {
         (4L, "a brand new document arriving through the stream with fresh words")
       ).toDF("doc_id", "text")
       def auditNet(tag: String): Unit = {
-        val a = Dedup.auditWideSimhashStoreBucketed(spark, net,
-          "doc_id", "text", table, portable = true)
+        val a = bkt.audit(spark, net, "doc_id", "text")
         assert(a.count() === 4L, tag)
         assert(a.filter(!col("sig_ok")).count() === 0L, tag)
       }
@@ -194,15 +184,15 @@ class SigUpsertSpec extends SparkSpec {
       assert(!after.exists(p => p._1 == 2L || p._2 == 2L))
       // compaction physically reclaims and clears the record; the
       // meta (and its gate) survive — audit still clean after
-      Dedup.compactWideSimhashStoreBucketed(spark, table)
+      bkt.compact(spark)
       auditNet("post-compaction state")
       assert(spark.table(s"${table}_sigs").filter(col("id") === 2)
         .count() === 0, "compaction must remove the tombstoned row")
-      val e = intercept[IllegalArgumentException] {
-        Dedup.appendWideSimhashSignaturesBucketed(spark, net, "doc_id",
-          "text", table, buckets = 4, portable = false)
+      val e = intercept[Dedup.SigStoreRefused] {
+        Dedup.SigStore(Dedup.WideSimhash(), Dedup.Bucketed(table, 4))
+          .append(spark, net, "doc_id", "text")
       }
-      assert(e.getMessage.contains("portable=true"))
+      assert(e.reason === Dedup.SigRefusal.DrawMismatch)
     } finally Seq(s"${table}_sigs", s"${table}_meta",
       s"${table}_deleted")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -276,15 +266,13 @@ class SigUpsertSpec extends SparkSpec {
 
   test("bucketed store: upsert swaps history, targeted reclaim keeps other tombstones, admission plan stays batch-only-exchange") {
     val table = "sigups_bucketed"
+    val store = Dedup.SigStore(Dedup.MinHash(bands = 16), Dedup.Bucketed(table, 4))
     Seq(s"${table}_sigs", s"${table}_bands", s"${table}_deleted")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    Dedup.buildSignatureStoreBucketed(docs, "doc_id", "text", table,
-      buckets = 4, numHashes = 64, bands = 16, shingleN = 5)
+    store.build(docs, "doc_id", "text")
     try {
       def bpairs(b: org.apache.spark.sql.DataFrame) =
-        Dedup.minhashLshIncrementalBucketed(spark, b, "doc_id", "text",
-            table, numHashes = 64, bands = 16, shingleN = 5,
-            threshold = 0.5)
+        store.pairs(spark, b, "doc_id", "text", threshold = 0.5)
           .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       val probe = Seq(
         (10L, "the quick brown fox jumps over the lazy cat and runs far away home"),
@@ -294,13 +282,12 @@ class SigUpsertSpec extends SparkSpec {
       assert(before.contains((0L, 10L)) && !before.exists(_._1 == 1L))
       // a separate standing takedown that must SURVIVE the upsert —
       // the targeted-reclaim discriminator
-      Dedup.deleteSignaturesBucketed(spark, Seq(2L).toDF("doc_id"), table)
+      store.delete(spark, Seq(2L).toDF("doc_id"))
       val mutated = Seq(
         (0L, "entirely new content that no longer resembles the fox sentence at all"),
         (1L, "galaxies collide slowly over billions of patient dark years out here")
       ).toDF("doc_id", "text")
-      Dedup.upsertSignaturesBucketed(spark, mutated, "doc_id", "text",
-        table, buckets = 4, numHashes = 64, bands = 16, shingleN = 5)
+      store.upsert(spark, mutated, "doc_id", "text")
       // exactly one physical sig row per upserted id — the
       // replacement superseded, not doubled
       assert(spark.table(s"${table}_sigs").filter(col("id") === 0)
@@ -327,11 +314,9 @@ class SigUpsertSpec extends SparkSpec {
         (3L, "yet another independent sentence about stream checkpoints and state")
       ).toDF("doc_id", "text")
       val dir = tmpDir("signet")
-      Dedup.buildSignatureStore(net, "doc_id", "text", dir,
-        numHashes = 64, shingleN = 5)
-      val fromScratch = Dedup.minhashLshIncremental(spark, probe,
-          "doc_id", "text", dir, numHashes = 64, bands = 16,
-          shingleN = 5, threshold = 0.5)
+      val scratch = Dedup.SigStore(Dedup.MinHash(bands = 16), Dedup.Dir(dir))
+      scratch.build(net, "doc_id", "text")
+      val fromScratch = scratch.pairs(spark, probe, "doc_id", "text", threshold = 0.5)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(after === fromScratch,
         "upserted bucketed store must admit exactly like a from-scratch net-history store")
@@ -341,15 +326,11 @@ class SigUpsertSpec extends SparkSpec {
         "10485760")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
-        val inc = Dedup.minhashLshIncrementalBucketed(spark, probe,
-          "doc_id", "text", table, numHashes = 64, bands = 16,
-          shingleN = 5, threshold = 0.5)
+        val inc = store.pairs(spark, probe, "doc_id", "text", threshold = 0.5)
         val p = inc.queryExecution.executedPlan.toString
         assert("Bucketed: true".r.findAllIn(p).size >= 2,
           s"store scans must reuse the bucket layout after upsert:\n$p")
-        val plain = Dedup.minhashLshIncremental(spark, probe, "doc_id",
-          "text", dir, numHashes = 64, bands = 16, shingleN = 5,
-          threshold = 0.5)
+        val plain = scratch.pairs(spark, probe, "doc_id", "text", threshold = 0.5)
         val ex = p.linesIterator.count(_.contains("Exchange hashpartitioning"))
         val exPlain = plain.queryExecution.executedPlan.toString
           .linesIterator.count(_.contains("Exchange hashpartitioning"))
@@ -357,16 +338,13 @@ class SigUpsertSpec extends SparkSpec {
       } finally
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
       // replayed upsert converges; full compaction then reclaims 2
-      Dedup.upsertSignaturesBucketed(spark, mutated, "doc_id", "text",
-        table, buckets = 4, numHashes = 64, bands = 16, shingleN = 5)
+      store.upsert(spark, mutated, "doc_id", "text")
       assert(bpairs(probe) === after)
-      Dedup.compactSignatureStore(spark, table)
+      store.compact(spark)
       assert(spark.table(s"${table}_sigs").filter(col("id") === 2)
         .count() === 0)
       // post-compaction: 2 re-admits via the ordinary append
-      Dedup.appendSignaturesBucketed(spark,
-        docs.filter(col("doc_id") === 2), "doc_id", "text", table,
-        buckets = 4, numHashes = 64, bands = 16, shingleN = 5)
+      store.append(spark, docs.filter(col("doc_id") === 2), "doc_id", "text")
       assert(spark.table(s"${table}_sigs").filter(col("id") === 2)
         .count() === 1)
     } finally Seq(s"${table}_sigs", s"${table}_bands", s"${table}_deleted")
@@ -409,11 +387,9 @@ class SigUpsertSpec extends SparkSpec {
       // --- file-targeted: only doc 0's bucket file rewrites ---
       val affected0 = filesOf(0L)
       val before = files()
-      Dedup.upsertSignaturesBucketed(spark,
-        Seq((0L, "totally new replacement content mentioning nothing " +
-          "from the original corpus at all")).toDF("doc_id", "text"),
-        "doc_id", "text", table, buckets = 8, numHashes = 64,
-        bands = 4, shingleN = 5)
+      Dedup.SigStore(Dedup.MinHash(bands = 4), Dedup.Bucketed(table, 8))
+        .upsert(spark, Seq((0L, "totally new replacement content mentioning nothing " +
+          "from the original corpus at all")).toDF("doc_id", "text"), "doc_id", "text")
       val after = files()
       before.filterNot { case (n, _) => affected0.contains(n) }
         .foreach { case (n, stamp) =>
@@ -454,15 +430,15 @@ class SigUpsertSpec extends SparkSpec {
       // killed at the sigs leg's first delete of an original — the
       // affected file's NON-target rows then exist twice (original
       // file + appended survivor copy)
-      Dedup.deleteSignaturesBucketed(spark,
-        Seq(target).toDF("doc_id"), table)
+      Dedup.SigStore(Dedup.MinHash(bands = 4), Dedup.Bucketed(table, 8))
+        .delete(spark, Seq(target).toDF("doc_id"))
       val wh = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
       val sigsDir = CrashPoint.relocate(spark, sigs)
       val store = new CrashPoint.Fixture(sigsDir,
         CrashPoint.relocate(spark, s"${table}_bands"), s"$wh/${table}__dlog")
-      def reclaim() = Dedup.reclaimSignatureTombstonesBucketed(spark,
-        Seq(target).toDF("doc_id"), table)
+      def reclaim() = Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed(table, 8))
+        .reclaim(spark, Seq(target).toDF("doc_id"))
       val firstDelete = CrashPoint.windows(store.rehearse(reclaim()))
         .find(c => c.kind == "delete" && c.path.startsWith(sigsDir + "/part-")).get
       Seq(sigs, s"${table}_bands").foreach(spark.catalog.refreshTable)
@@ -471,8 +447,8 @@ class SigUpsertSpec extends SparkSpec {
       assert(spark.table(sigs).filter(col("id") === witness).count() === 2,
         "precondition: the crash window duplicates the witness row")
       // the re-run of the same targeted reclaim
-      assert(Dedup.reclaimSignatureTombstonesBucketed(spark,
-        Seq(target).toDF("doc_id"), table) === 1L)
+      assert(Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed(table, 8))
+        .reclaim(spark, Seq(target).toDF("doc_id")) === 1L)
       assert(spark.table(sigs).filter(col("id") === target).count() === 0,
         "the target's rows must be physically gone")
       assert(spark.table(sigs).filter(col("id") === witness).count() === 1,
@@ -498,13 +474,14 @@ class SigUpsertSpec extends SparkSpec {
     Dedup.buildSignatureStoreBucketed(many, "doc_id", "text", table,
       buckets = 8, numHashes = 64, bands = 4, shingleN = 5)
     try {
-      Dedup.deleteSignaturesBucketed(spark, Seq(5L).toDF("doc_id"), table)
+      Dedup.SigStore(Dedup.MinHash(bands = 4), Dedup.Bucketed(table, 8))
+        .delete(spark, Seq(5L).toDF("doc_id"))
       // bands=8 against a bands=4 build: the recomputed (band, bucket)
       // keys name the WRONG buckets, the ≥-bands coverage check trips,
       // and the reclaim must fall back to the unpruned location — the
       // rows still physically reclaim, nothing is silently left
-      assert(Dedup.reclaimSignatureTombstonesBucketed(spark,
-        Seq(5L).toDF("doc_id"), table, numHashes = 64, bands = 8) === 1L)
+      assert(Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed(table, 8))
+        .reclaim(spark, Seq(5L).toDF("doc_id")) === 1L)
       assert(spark.table(s"${table}_sigs").filter(col("id") === 5)
         .count() === 0, "sig row must be physically gone")
       assert(spark.table(s"${table}_bands").filter(col("id") === 5)
@@ -543,8 +520,8 @@ class SigUpsertSpec extends SparkSpec {
       val mutated = Seq(
         (0L, "the quick brown fox jumps over the lazy dog and runs far away home")
       ).toDF("doc_id", "text")
-      Dedup.upsertSignaturesBucketed(spark, mutated, "doc_id", "text",
-        table, buckets = 4, numHashes = 64, bands = 16, shingleN = 5)
+      Dedup.SigStore(Dedup.MinHash(bands = 16), Dedup.Bucketed(table, 4))
+        .upsert(spark, mutated, "doc_id", "text")
       assert(bpairs().contains((0L, 10L)),
         "the op-log revive must supersede the legacy D")
       // doc 2's legacy takedown still stands
@@ -556,7 +533,7 @@ class SigUpsertSpec extends SparkSpec {
           shingleN = 5, threshold = 0.5)
         .select("id_a").as[Long].collect().toSet.contains(2L))
       // full compaction drops BOTH records
-      Dedup.compactSignatureStore(spark, table)
+      Dedup.SigStore(Dedup.MinHash(bands = 16), Dedup.Bucketed(table, 4)).compact(spark)
       assert(!spark.catalog.tableExists(s"${table}_deleted"))
       assert(spark.table(s"${table}_sigs").filter(col("id") === 2)
         .count() === 0)

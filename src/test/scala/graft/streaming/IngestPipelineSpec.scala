@@ -364,8 +364,7 @@ class IngestPipelineSpec extends SparkSpec {
     S.buildIvfStore(baseVecs, annDir, nlist = 4, dim = 8)
     val baseDocs = (0 until 6).map(i => (i.toLong, textOf(i)))
       .toDF("doc_id", "text")
-    D.buildSignatureStore(baseDocs, "doc_id", "text", sigDir,
-      numHashes = 64, shingleN = 5)
+    D.SigStore(D.MinHash(), D.Dir(sigDir)).build(baseDocs, "doc_id", "text")
 
     // the CDC tail: inserts, replacements (reversed vectors / mutated
     // text under reused ids), takedowns — and a LATE RE-DELIVERED
@@ -403,7 +402,8 @@ class IngestPipelineSpec extends SparkSpec {
       opsRollupDir = s"$root/ops",
       checkpoint = s"$root/ckpt",
       vectorStores = Seq(IngestPipeline.VectorStoreLane(annDir)),
-      signatureStores = Seq(IngestPipeline.SignatureStoreLane(sigDir)))
+      signatureStores = Seq(IngestPipeline.SignatureStoreLane(
+        D.SigStore(D.MinHash(), D.Dir(sigDir)))))
     def runOnce(): Unit = {
       val raw = spark.readStream.format("graft-kinesis-sim")
         .option("path", backlog.toString).option("shards", "2")
@@ -449,16 +449,15 @@ class IngestPipelineSpec extends SparkSpec {
       (i.toLong, t)
     }).toDF("doc_id", "text")
     val scratch = Files.createTempDirectory("signet").toString + "/store"
-    D.buildSignatureStore(netDocs, "doc_id", "text", scratch,
-      numHashes = 64, shingleN = 5)
+    D.SigStore(D.MinHash(), D.Dir(scratch)).build(netDocs, "doc_id", "text")
     val probe = Seq(
       (100L, textOf(6) + " tail"), // near-dups the streamed insert
       (101L, "completely replaced content for doc one with marker zzy"),
       (102L, textOf(3) + " tail")  // near-dups ONLY the deleted doc
     ).toDF("doc_id", "text")
     def pairsOf(dir: String) =
-      D.minhashLshIncremental(spark, probe, "doc_id", "text", dir,
-          numHashes = 64, bands = 16, shingleN = 5, threshold = 0.4)
+      D.SigStore(D.MinHash(bands = 16), D.Dir(dir))
+        .pairs(spark, probe, "doc_id", "text", threshold = 0.4)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val livePairs = pairsOf(sigDir)
     assert(livePairs === pairsOf(scratch),
@@ -526,8 +525,8 @@ class IngestPipelineSpec extends SparkSpec {
           "dms_sample", "person", personSchema, "ID")),
         opsRollupDir = s"$root/ops",
         checkpoint = s"$root/ckpt",
-        bucketedSignatureStores = Seq(
-          IngestPipeline.BucketedSignatureStoreLane(table, buckets = 4)))
+        signatureStores = Seq(IngestPipeline.SignatureStoreLane(
+          D.SigStore(D.MinHash(), D.Bucketed(table, 4)))))
       def runOnce(checkpoint: String): Unit = {
         val raw = spark.readStream.format("graft-kinesis-sim")
           .option("path", backlog.toString).option("shards", "2")
@@ -588,9 +587,8 @@ class IngestPipelineSpec extends SparkSpec {
     val sigDir = s"$root/sigstore"
     S.buildIvfStore((0 until 20).map(i => (i.toLong, vecOf(i)))
       .toDF("vec_id", "embedding"), annDir, nlist = 2, dim = 8)
-    D.buildSignatureStore((0 until 4).map(i => (i.toLong, textOf(i)))
-      .toDF("doc_id", "text"), "doc_id", "text", sigDir,
-      numHashes = 64, shingleN = 5)
+    D.SigStore(D.MinHash(), D.Dir(sigDir)).build((0 until 4).map(i => (i.toLong, textOf(i)))
+      .toDF("doc_id", "text"), "doc_id", "text")
 
     // poison shapes that all PASS the envelope contract (data is
     // non-null) but cannot legally enter a store lane — before the
@@ -632,7 +630,8 @@ class IngestPipelineSpec extends SparkSpec {
       opsRollupDir = s"$root/ops",
       checkpoint = s"$root/ckpt",
       vectorStores = Seq(IngestPipeline.VectorStoreLane(annDir)),
-      signatureStores = Seq(IngestPipeline.SignatureStoreLane(sigDir)))
+      signatureStores = Seq(IngestPipeline.SignatureStoreLane(
+        D.SigStore(D.MinHash(), D.Dir(sigDir)))))
     val raw = spark.readStream.format("graft-kinesis-sim")
       .option("path", backlog.toString).option("shards", "1")
       .option("keyRegex", "\"(?:vec_id|doc_id|ID)\": (-?[0-9]+)")
@@ -659,9 +658,8 @@ class IngestPipelineSpec extends SparkSpec {
       nprobe = 2).select("item_id").as[Long].collect().toSet
     assert(stored.contains(20L) && !stored.contains(7L))
     val probe = Seq((100L, textOf(4) + " tail")).toDF("doc_id", "text")
-    assert(D.minhashLshIncremental(spark, probe, "doc_id", "text",
-        sigDir, numHashes = 64, bands = 16, shingleN = 5,
-        threshold = 0.4)
+    assert(D.SigStore(D.MinHash(bands = 16), D.Dir(sigDir))
+      .pairs(spark, probe, "doc_id", "text", threshold = 0.4)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       .contains((4L, 100L)))
     assert(IngestPipeline.readSnapshot(spark, cfg, "person")

@@ -37,11 +37,12 @@ class NearDupStreamSpec extends SparkSpec {
     val store = tmp("nds-store") + "/sigs"
     val admitted = tmp("nds-admitted")
     val pairs = tmp("nds-pairs")
-    Dedup.buildSignatureStore(history.toDF("doc_id", "text"),
-      "doc_id", "text", store)
+    Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(store))
+      .build(history.toDF("doc_id", "text"), "doc_id", "text")
     val mem = MemoryStream[(Long, String)]
     val q = NearDupStream.admit(mem.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", store, admitted, pairs,
+      Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(store)), "doc_id", "text",
+      admitted, pairs,
       checkpoint = tmp("nds-ckpt"),
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     mem.addData(batch1: _*)
@@ -64,16 +65,15 @@ class NearDupStreamSpec extends SparkSpec {
 
     // ground truth: the batch-mode daily job run twice on a fresh store
     val store2 = tmp("nds-store2") + "/sigs"
-    Dedup.buildSignatureStore(history.toDF("doc_id", "text"),
-      "doc_id", "text", store2)
+    Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(store2))
+      .build(history.toDF("doc_id", "text"), "doc_id", "text")
     val expected = Seq(batch1, batch2).flatMap { b =>
       val df = b.toDF("doc_id", "text")
-      val p = Dedup.minhashLshIncremental(spark, df, "doc_id", "text", store2)
+      val p = Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(store2)).pairs(spark, df, "doc_id", "text")
         .as[(Long, Long, Double)].collect().toSeq
       val rejected = p.map(_._2).toSet
-      Dedup.appendSignatures(spark,
-        df.filter(!col("doc_id").isin(rejected.toSeq: _*)),
-        "doc_id", "text", store2)
+      Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(store2))
+        .append(spark, df.filter(!col("doc_id").isin(rejected.toSeq: _*)), "doc_id", "text")
       p
     }.toSet
     assert(spark.read.parquet(pairs)
@@ -87,12 +87,12 @@ class NearDupStreamSpec extends SparkSpec {
     val store = tmp("nds-redeliver") + "/sigs"
     val admitted = tmp("nds-redeliver-adm")
     val pairs = tmp("nds-redeliver-pairs")
-    Dedup.buildSignatureStore(history.toDF("doc_id", "text"),
-      "doc_id", "text", store)
+    Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(store))
+      .build(history.toDF("doc_id", "text"), "doc_id", "text")
     def deliver(): Unit = NearDupStream.admitBatch(spark,
       batch1.toDF("doc_id", "text"), 0L, "t0", "doc_id", "text", admitted, pairs,
-      b => Dedup.minhashLshIncremental(spark, b, "doc_id", "text", store),
-      a => Dedup.appendSignatures(spark, a, "doc_id", "text", store))
+      b => Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(store)).pairs(spark, b, "doc_id", "text"),
+      a => Dedup.SigStore(Dedup.MinHash(), Dedup.Dir(store)).append(spark, a, "doc_id", "text"))
     deliver()
     val fed1 = spark.read.parquet(admitted).select("doc_id").as[Long].collect().toSet
     val log1 = spark.read.parquet(pairs).select("id_a", "id_b")
@@ -117,8 +117,9 @@ class NearDupStreamSpec extends SparkSpec {
       "doc_id", "text", "nds_bkt_store", buckets = 4)
     try {
       val mem = MemoryStream[(Long, String)]
-      val q = NearDupStream.admitBucketed(mem.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", "nds_bkt_store", buckets = 4, admitted, pairs,
+      val q = NearDupStream.admit(mem.toDF().toDF("doc_id", "text"),
+        Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed("nds_bkt_store", 4)),
+        "doc_id", "text", admitted, pairs,
         checkpoint = tmp("nds-bkt-ckpt"),
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
       mem.addData(batch1: _*)
@@ -144,8 +145,8 @@ class NearDupStreamSpec extends SparkSpec {
     def txt(i: Long) = s"bucketed cdc document $i with its own " +
       s"words rho$i sigma$i tau$i upsilon$i phi$i chi$i psi$i"
     val base = (0L until 10L).map(i => (i, txt(i))).toDF("doc_id", "text")
-    Dedup.buildSignatureStoreBucketed(base, "doc_id", "text", table,
-      buckets = 4, numHashes = 64, bands = 8, shingleN = 5)
+    val store = Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed(table, 4))
+    store.build(base, "doc_id", "text")
     try {
       // b1: insert 10/11; REPLACE 3 (reversed tokens); delete 5 and 7;
       // a same-seq D/I tie on 8 (takedown must win the tie)
@@ -165,10 +166,9 @@ class NearDupStreamSpec extends SparkSpec {
       val counts = scala.collection.mutable.ArrayBuffer
         .empty[(Long, (Long, Long, Long))]
       val mem = MemoryStream[(Long, String, String, Long)]
-      val q = NearDupStream.ingestCdcBucketed(
-        mem.toDF().toDF("doc_id", "text", "op", "seq"), table,
-        buckets = 4, checkpoint = tmp("nds-bktcdc-ckpt"),
-        numHashes = 64, bands = 8, shingleN = 5,
+      val q = NearDupStream.ingestCdc(
+        mem.toDF().toDF("doc_id", "text", "op", "seq"), store,
+        checkpoint = tmp("nds-bktcdc-ckpt"),
         onBatch = (id, c) => counts += ((id, c)),
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
       mem.addData(b1: _*)
@@ -198,40 +198,32 @@ class NearDupStreamSpec extends SparkSpec {
       // replay the LAST batch in full (the streaming residual window —
       // tombstones still STAND, which is exactly what makes the
       // replayed late-I of 5 drop again): net state unchanged
-      NearDupStream.ingestCdcBatchBucketed(spark,
-        b2.toDF("doc_id", "text", "op", "seq"), 1L, table, buckets = 4,
-        numHashes = 64, bands = 8, shingleN = 5)
+      NearDupStream.ingestCdcBatch(spark,
+        b2.toDF("doc_id", "text", "op", "seq"), 1L, store)
       auditNet("a replayed batch must converge while tombstones stand")
       // maintenance compaction: physical reclaim + op-log clear keeps
       // the net state (and from here a NEW I of 5 would legitimately
       // re-admit — the documented "compaction re-opens ids" contract,
       // which is why replay convergence is checked BEFORE this)
-      Dedup.compactSignatureStore(spark, table)
+      Dedup.SigStore(Dedup.MinHash(), Dedup.Bucketed(table, 4)).compact(spark)
       auditNet("post-compaction state must still equal the net corpus")
       // the body gate (r15): a partial-payload U (null text) must
       // refuse BY ID, not reclaim the old row and admit the signature
       // of null — only D may be id-only
-      val e = intercept[IllegalArgumentException] {
-        Dedup.applySigCdcBatchBucketed(spark,
-          Seq((3L, null.asInstanceOf[String], "U", 20L))
-            .toDF("doc_id", "text", "op", "seq"),
-          table, buckets = 4, numHashes = 64, bands = 8, shingleN = 5)
+      val e = intercept[Dedup.SigStoreRefused] {
+        store.applyCdc(spark, Seq((3L, null.asInstanceOf[String], "U", 20L))
+          .toDF("doc_id", "text", "op", "seq"))
       }
-      assert(e.getMessage.contains("must carry text") &&
-        e.getMessage.contains("3"))
+      assert(e.reason === Dedup.SigRefusal.BodilessIU)
       auditNet("a refused bodiless update must leave the store untouched")
       // the op gate sees the RAW batch (r16): an unknown op superseded
       // by a later legit op for the same id must still refuse —
       // terminal-op resolution must not mask producer corruption
-      val e2 = intercept[IllegalArgumentException] {
-        Dedup.applySigCdcBatchBucketed(spark,
-          Seq((4L, "some text", "REINDEX", 21L),
-              (4L, rev(txt(4)), "U", 22L))
-            .toDF("doc_id", "text", "op", "seq"),
-          table, buckets = 4, numHashes = 64, bands = 8, shingleN = 5)
+      val e2 = intercept[Dedup.SigStoreRefused] {
+        store.applyCdc(spark, Seq((4L, "some text", "REINDEX", 21L),
+            (4L, rev(txt(4)), "U", 22L)).toDF("doc_id", "text", "op", "seq"))
       }
-      assert(e2.getMessage.contains("ops must be I, U or D") &&
-        e2.getMessage.contains("REINDEX"))
+      assert(e2.reason === Dedup.SigRefusal.BadOp)
       auditNet("a refused superseded-bad-op batch must leave the store untouched")
     } finally Seq(s"${table}_sigs", s"${table}_bands", s"${table}_deleted")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -251,9 +243,9 @@ class NearDupStreamSpec extends SparkSpec {
     val day1 = newRows.toDF("doc_id", "text")
     val newIds = newRows.map(_._1).toSet
     val store = tmp("widesim") + "/sigs"
-    Dedup.buildWideSimhashStore(day0, "doc_id", "text", store)
-    val inc = Dedup.simhashWideIncremental(spark, day1, "doc_id", "text",
-        store, maxHamming = 6)
+    Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(store)).build(day0, "doc_id", "text")
+    val inc = Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(store))
+      .pairs(spark, day1, "doc_id", "text")
       .as[(Long, Long, Int)].collect().toSet
     // the admission orientation: id_b is always the genuinely-new doc
     assert(inc.nonEmpty)
@@ -274,13 +266,13 @@ class NearDupStreamSpec extends SparkSpec {
     assert(inc.contains((101L, 102L, 0)))
     // fold the batch in; a full re-delivery then emits NOTHING (the
     // idempotency the streaming admission's crash story needs)
-    Dedup.appendWideSimhashSignatures(spark, day1, "doc_id", "text", store)
-    assert(Dedup.simhashWideIncremental(spark, day1, "doc_id", "text",
-      store, maxHamming = 6).count() === 0L)
+    Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(store)).append(spark, day1, "doc_id", "text")
+    assert(Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(store))
+      .pairs(spark, day1, "doc_id", "text").count() === 0L)
     // store ids folded exactly once
     assert(spark.read.parquet(store).select("id").as[Long].collect().toSet
       === (0L until 12L).toSet ++ newIds)
-    Dedup.appendWideSimhashSignatures(spark, day1, "doc_id", "text", store)
+    Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(store)).append(spark, day1, "doc_id", "text")
     assert(spark.read.parquet(store).count() === 17L)
   }
 
@@ -293,26 +285,22 @@ class NearDupStreamSpec extends SparkSpec {
     val docs = (0 until 6).map(i => (i.toLong, s"alpha bravo token$i"))
       .toDF("doc_id", "text")
     val store = tmp("widemeta") + "/sigs"
-    Dedup.buildWideSimhashStore(docs, "doc_id", "text", store,
-      portable = true)
-    val e1 = intercept[IllegalArgumentException] {
-      Dedup.simhashWideIncremental(spark,
-        Seq((100L, "zulu yankee")).toDF("doc_id", "text"),
-        "doc_id", "text", store, maxHamming = 6, portable = false)
+    Dedup.SigStore(Dedup.WideSimhash(portable = true), Dedup.Dir(store))
+      .build(docs, "doc_id", "text")
+    val e1 = intercept[Dedup.SigStoreRefused] {
+      Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(store))
+        .pairs(spark, Seq((100L, "zulu yankee")).toDF("doc_id", "text"), "doc_id", "text")
     }
-    assert(e1.getMessage.contains("portable=true") &&
-      e1.getMessage.contains("bit-incompatible"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      Dedup.appendWideSimhashSignatures(spark,
-        Seq((100L, "zulu yankee")).toDF("doc_id", "text"),
-        "doc_id", "text", store, portable = false)
+    assert(e1.reason === Dedup.SigRefusal.DrawMismatch, e1.getMessage)
+    val e2 = intercept[Dedup.SigStoreRefused] {
+      Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(store))
+        .append(spark, Seq((100L, "zulu yankee")).toDF("doc_id", "text"), "doc_id", "text")
     }
-    assert(e2.getMessage.contains("bit-incompatible"))
+    assert(e2.reason === Dedup.SigRefusal.DrawMismatch)
     // matching draws pass, and the meta dir is invisible to the
     // signature-table read (underscore-prefixed)
-    Dedup.appendWideSimhashSignatures(spark,
-      Seq((100L, "zulu yankee")).toDF("doc_id", "text"),
-      "doc_id", "text", store, portable = true)
+    Dedup.SigStore(Dedup.WideSimhash(portable = true), Dedup.Dir(store))
+      .append(spark, Seq((100L, "zulu yankee")).toDF("doc_id", "text"), "doc_id", "text")
     assert(spark.read.parquet(store).columns.toSet ===
       Set("id", "sig0", "sig1"))
     assert(spark.read.parquet(store).count() === 7)
@@ -331,20 +319,19 @@ class NearDupStreamSpec extends SparkSpec {
       (103L, base(3) + " extra"),
       (104L, "completely different text with its own tokens entirely now"))
     val store = tmp("widesim-e2e") + "/sigs"
-    Dedup.buildWideSimhashStore(day0, "doc_id", "text", store)
+    Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(store)).build(day0, "doc_id", "text")
     // expected drops derived from the operator itself (orientation is
     // already pinned by the previous test)
-    val dropped = Dedup.simhashWideIncremental(spark,
-        newRows.toDF("doc_id", "text"), "doc_id", "text", store,
-        maxHamming = 6)
+    val dropped = Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(store))
+      .pairs(spark, newRows.toDF("doc_id", "text"), "doc_id", "text")
       .select("id_b").as[Long].collect().toSet
     val admittedDir = tmp("widesim-adm")
     val pairsDir = tmp("widesim-pairs")
     val mem = MemoryStream[(Long, String)]
-    val q = NearDupStream.admitWideSimhash(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", store,
-      admittedDir, pairsDir, checkpoint = tmp("widesim-ckpt"),
-      maxHamming = 6,
+    val q = NearDupStream.admit(mem.toDF().toDF("doc_id", "text"),
+      Dedup.SigStore(Dedup.WideSimhash(), Dedup.Dir(store)),
+      "doc_id", "text", admittedDir, pairsDir,
+      checkpoint = tmp("widesim-ckpt"),
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     mem.addData(newRows: _*)
     q.processAllAvailable()
